@@ -1099,13 +1099,11 @@ object ScaleProbe {
       publishOne("batch_zzz", spark.range(1).selectExpr("-1L AS event_id",
         s"timestamp_millis(${winStart + 2L * 86400000}) AS ts", "-1L AS user_id",
         "'zzz_sentinel' AS event_type", "0D AS value"), now - 60000)
-      val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val (t, stateEntries) = try {
+      val (t, stateEntries) = try graft.core.GraftSession.withConf(spark,
+          graft.streaming.ReplayHarness.RocksDB) { s =>
         val tDrain = time {
-          import spark.implicits._
-          val in = spark.readStream.schema(hot.schema)
+          import s.implicits._
+          val in = s.readStream.schema(hot.schema)
             .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
           val q = so.shardedWindowTopKTWS(in.as[so.Event], shards = shards)
             .writeStream.outputMode("append")
@@ -1123,7 +1121,7 @@ object ScaleProbe {
         // shard stores. A fixture-derived constant here would stay green
         // even if the operator's state actually grew O(rows).
         val measured = (0 to 1).view.map { op =>
-          try spark.read.format("statestore").option("path", ckpt)
+          try s.read.format("statestore").option("path", ckpt)
             .option("operatorId", op.toString)
             .option("stateVarName", "shard_type_counts")
             .option("batchId", "0").load().count()
@@ -1132,13 +1130,7 @@ object ScaleProbe {
           .getOrElse(sys.error("hotkey rung: stage-1 MapState unreadable " +
             "from either chained operator — bounded-state evidence lost"))
         (tDrain, measured)
-      } finally {
-        prevProvider match {
-          case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-      }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
       require(stateEntries == nItems,
         s"hotkey rung: measured state entries $stateEntries != distinct items " +
           s"$nItems — per-item counters are not the only state held")
@@ -1170,10 +1162,10 @@ object ScaleProbe {
         }
         base
       }
-      def drain(base: java.nio.file.Path): Double = time {
+      def drain(s: SparkSession, base: java.nio.file.Path): Double = time {
         val lake = base.resolve("lake").toString
-        val schema = spark.read.parquet(lake).schema
-        val q = spark.readStream.schema(schema)
+        val schema = s.read.parquet(lake).schema
+        val q = s.readStream.schema(schema)
           .option("maxFileAge", "100000d").parquet(lake)
           .withWatermark("ts", "25 hours")
           .dropDuplicatesWithinWatermark("event_id")
@@ -1186,24 +1178,21 @@ object ScaleProbe {
           .start()
         q.awaitTermination()
       }
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val out = try {
+      graft.core.GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "4") { s =>
         val quiet = layLake()
-        drain(quiet) // attach
-        val tQuiet = drain(quiet) // drain #2, nothing new
+        drain(s, quiet) // attach
+        val tQuiet = drain(s, quiet) // drain #2, nothing new
         val swept = layLake()
-        drain(swept) // attach
+        drain(s, swept) // attach
         val n = graft.streaming.LakeSink.compactPartitions(
-          spark, swept.resolve("lake").toString, 1L << 30, minFiles = 2).size
-        val tSwept = drain(swept) // drain #2, EVERY leaf re-delivered
+          s, swept.resolve("lake").toString, 1L << 30, minFiles = 2).size
+        val tSwept = drain(s, swept) // drain #2, EVERY leaf re-delivered
         org.apache.commons.io.FileUtils.deleteQuietly(quiet.toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(swept.toFile)
         System.err.println(f"[scale] livecompact rows=$nRows%8d leaves=$n%3d  " +
           f"drain2(quiet)=$tQuiet%6.2f s  drain2(rewritten)=$tSwept%6.2f s")
         Seq(("quiet", tQuiet), ("rewritten", tSwept))
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      out
+      }
     }
 
     // e7 materialization rung: the SAME bm25 pipeline with the inverted
@@ -1236,41 +1225,6 @@ object ScaleProbe {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(matDir))
       System.err.println(f"[scale] e7mat $k%2dx  local=$tLocal%6.2f s  parquet=$tParquet%6.2f s")
       (k, Seq(("local", tLocal), ("parquet", tParquet)))
-    }
-
-    // argmin-shape rung: r17 rewrote every internal nearest-centroid top-1
-    // pick from row_number window → min_by partial+final aggregate; at
-    // sf0.1 the e8–e16 consumers read flat-to-noisy (VERDICT r17 item 6),
-    // so the claim needs a larger rung. This times the two shapes of the
-    // SAME pq encode in isolation (N×8 sub-vector rows, each scored
-    // against 16 codebook entries = 128 scored rows/vector pre-argmin) on
-    // multiplied corpora, and REQUIRES bit-equal winners — the rewrite's
-    // correctness invariant, re-proved at every rung. Both arms share one
-    // pinned codebook and get an untimed warmup (e7mat's discipline).
-    val argminR = (if (phase == "all" || phase == "argmin") Seq(1, 4, 16)
-      else Seq.empty[Int]).map { k =>
-      val vecs = vecsTimes(spark, dir, k).cache()
-      vecs.count()
-      val sim = graft.operators.SimilarityOps
-      val cb = sim.pqCodebooks(vecs).localCheckpoint()
-      sim.pqEncode(vecs, cb).write.format("noop").mode("overwrite").save()
-      sim.pqEncodeWindowShape(vecs, cb).write.format("noop").mode("overwrite").save()
-      val tAgg = time {
-        sim.pqEncode(vecs, cb).write.format("noop").mode("overwrite").save()
-      }
-      val tWin = time {
-        sim.pqEncodeWindowShape(vecs, cb).write.format("noop").mode("overwrite").save()
-      }
-      val disagree = sim.pqEncode(vecs, cb).withColumnRenamed("cid", "c_agg")
-        .join(sim.pqEncodeWindowShape(vecs, cb).withColumnRenamed("cid", "c_win"),
-          Seq("vec_id", "s"))
-        .filter(col("c_agg") =!= col("c_win")).count()
-      require(disagree == 0,
-        s"argmin rung: min_by and window shapes disagree on $disagree codes")
-      vecs.unpersist()
-      System.gc()
-      System.err.println(f"[scale] argmin $k%2dx  min_by=$tAgg%6.2f s  window=$tWin%6.2f s")
-      (k, Seq(("minby", tAgg), ("window", tWin)))
     }
 
     val json = (results.map { case (k, steps) =>
@@ -1326,9 +1280,6 @@ object ScaleProbe {
     } ++ e7Mat.map { case (k, vals) =>
       vals.map { case (n, v) => s""""$n":$v""" }
         .mkString(s""""e7mat_${k}x":{""", ",", "}")
-    } ++ argminR.map { case (k, vals) =>
-      vals.map { case (n, v) => s""""$n":$v""" }
-        .mkString(s""""argmin_${k}x":{""", ",", "}")
     }).mkString("{\"metric\":\"scale_ladder\",", ",", "}")
     println(json)
     spark.stop()

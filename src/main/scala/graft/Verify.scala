@@ -5,13 +5,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query names (local iteration only;
-    // the driver always passes two args = run everything)
-    val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    // optional third arg: comma-separated query-name prefixes, as Bench
+    // takes them (local iteration only; with two args everything runs)
+    val only: Option[Seq[String]] = args.lift(2).map(_.split(",").toSeq)
     val spark = graft.core.GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

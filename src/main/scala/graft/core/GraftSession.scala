@@ -61,7 +61,25 @@ object GraftSession {
     */
   private[graft] def hasSpillHeadroom(p: java.nio.file.Path): Boolean =
     try java.nio.file.Files.getFileStore(p).getUsableSpace >= ShmMinFreeBytes
-    catch { case _: java.io.IOException => false }
+    catch { case scala.util.control.NonFatal(_) => false }
+
+  /** Runs `body` on an isolated child of `spark` whose SQL conf is every
+    * modifiable runtime setting of the caller plus `overrides`. The child
+    * shares the SparkContext, cache and catalog but owns its SQLConf, so an
+    * override never leaks into a query running concurrently on `spark`
+    * and nothing needs restoring afterwards. A stream started from the
+    * child plans every micro-batch under the child's conf; static frames
+    * of the caller may still be joined into it. (A child that starts a
+    * stream leaves its small, empty query-listener bus registered on the
+    * shared SparkContext — Spark never unregisters it.)
+    */
+  def withConf[T](spark: SparkSession, overrides: (String, String)*)(
+      body: SparkSession => T): T = {
+    val child = spark.newSession()
+    (spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) } ++ overrides)
+      .foreach { case (k, v) => child.conf.set(k, v) }
+    body(child)
+  }
 
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession

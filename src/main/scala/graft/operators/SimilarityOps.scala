@@ -870,21 +870,6 @@ object SimilarityOps {
   def pqEncode(embs: DataFrame, cb: DataFrame): DataFrame =
     pqAssign(pqSub(embs), cb)
 
-  /** The r16 top-1 WINDOW shape of [[pqEncode]] — kept ONLY as the
-    * ScaleProbe `argmin` rung's contrast arm, so the min_by-vs-window
-    * claim is measured old-vs-new at multiplied N instead of asserted.
-    * No query path uses it.
-    */
-  private[graft] def pqEncodeWindowShape(embs: DataFrame, cb: DataFrame): DataFrame = {
-    val sub = pqSub(embs)
-    val w = Window.partitionBy(col("vec_id"), col("s"))
-      .orderBy(col("dist2"), col("cid"))
-    sub.join(broadcast(cb), Seq("s"))
-      .selectExpr("vec_id", "s", "cid", "sq + csq - 2 * vec_dot(sub, cent) AS dist2")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select("vec_id", "s", "cid")
-  }
-
   /** Per-subspace PQ codebooks `(s, cid, cent, csq)`: deterministic seeds
     * (the 16 lowest vec_ids' sub-vectors) + ONE unrolled Lloyd round with
     * float-cast means — exactly c3's k-means discipline applied
@@ -2059,13 +2044,8 @@ object SimilarityOps {
       // otherwise read from its own output path
       .localCheckpoint()
     try {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try rewritten.write.mode("overwrite").partitionBy("cell").parquet(codesDir)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      rewritten.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell").parquet(codesDir)
       // a dirty cell masked down to ZERO rows appears nowhere in the write,
       // so dynamic overwrite leaves its stale files — drop such leaves
       // explicitly (an emptied inverted list is a deleted directory)

@@ -240,10 +240,7 @@ object LakeSink {
     * to either the local core count or one date distribution.
     */
   private def stagedLeafShape(dated: DataFrame): DataFrame =
-    // SPARK_GRAFT_LAKE_WRITE_SHAPE=legacy restores the un-distributed write
-    // (the measurement control arm; production default is the hash shape)
-    if (sys.env.get("SPARK_GRAFT_LAKE_WRITE_SHAPE").contains("legacy")) dated
-    else dated.hint("rebalance", col("event_date"))
+    dated.hint("rebalance", col("event_date"))
 
   private[graft] def hasStatefulOperator(batch: DataFrame): Boolean = {
     val roots = batch.queryExecution.executedPlan.collectLeaves().collect {

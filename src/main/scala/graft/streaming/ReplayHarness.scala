@@ -4,9 +4,12 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DateType, StructType}
+
+import graft.core.{GraftSession, Tables}
 
 /** Replays the batch `events` fixture through a genuinely STREAMING plan —
   * file-stream source, micro-batches, state store, watermarks — under
@@ -84,6 +87,121 @@ object ReplayHarness {
     */
   val SentinelType = "__flush__"
 
+  /** The state-store provider override for the RocksDB-only operators. */
+  private[graft] val RocksDB: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** `body` on an isolated session ([[GraftSession.withConf]]) at the
+    * replay shuffle width plus `overrides`. State-store instances (and
+    * their per-batch commit fsyncs) scale with shuffle partitions, and
+    * stateful streaming disables AQE coalescing — so replay batches of a
+    * few thousand rows would pay 32 store commits per operator per batch
+    * for nothing (measured: a stream-stream join batch costs ~2 s at 32
+    * partitions vs ~0.5 s at 4). Four is plenty of parallelism for the
+    * replay volume; the partition count is pinned into the checkpoint at
+    * query start, so this only affects the harness's own queries — a
+    * production deployment of the same operators would size this to its
+    * key cardinality, not to the replay's.
+    */
+  private def isolated[T](spark: SparkSession, overrides: (String, String)*)(
+      body: SparkSession => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    GraftSession.withConf(spark,
+      (key -> math.min(4, spark.conf.get(key).toInt).toString) +: overrides: _*)(body)
+  }
+
+  /** A file stream over `dir` that feeds one staged file per micro-batch,
+    * in modification-time order.
+    */
+  private def fileStream(s: SparkSession, schema: StructType, dir: Path): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.toString)
+
+  /** Starts `stream` (AvailableNow) into an IDEMPOTENT per-batch sink: one
+    * `b<id>` sub-directory of `outDir` per batch id, overwritten on
+    * re-execution — a micro-batch replayed after a task retry or a
+    * restart-from-checkpoint lands on the same path instead of appending
+    * duplicates (blind append would turn any replay into a false
+    * 'streaming machinery broke' hash mismatch). The write keeps the
+    * batch's OWN partitioning (one small file per state partition): the
+    * r17 coalesce(1) made the single write task compute all of the
+    * stateful operator's partitions — and commit their state stores —
+    * SERIALLY (guide §1.2: the sink job was measured at 80-95% of
+    * addBatch; see OPTIMIZATION_r18.md). Batch output is a row SET (the
+    * driver sorts before hashing), so per-batch file count is not
+    * observable in any result. `enrich` maps each batch before the write.
+    */
+  private def startBatchDirSink(stream: DataFrame, outputMode: String, ckpt: Path,
+      outDir: Path, enrich: (DataFrame, Long) => DataFrame = (b, _) => b): StreamingQuery =
+    stream.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        enrich(batch, batchId).write.mode("overwrite")
+          .parquet(outDir.resolve(s"b$batchId").toString)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** The union of [[startBatchDirSink]]'s `b<id>` dirs on `spark`, read
+    * lazily with `recursiveFileLookup` (the dirs are not key=value
+    * partitions) — or an empty frame when no batch landed.
+    */
+  private def readBatchDirs(spark: SparkSession, outDir: Path, schema: StructType): DataFrame =
+    if (Files.exists(outDir))
+      spark.read.schema(schema).option("recursiveFileLookup", "true")
+        .parquet(outDir.toString)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** Collects the row-bounded `df` (a census), reclaims the RAM-backed
+    * scratch tree `base`, and rebuilds the rows on the caller's `spark` —
+    * a lazy read would hold a fixture-sized tmpfs tree alive per run and
+    * accumulate across a long session.
+    */
+  private def pinned(spark: SparkSession, base: Path)(df: DataFrame): DataFrame = {
+    val rows = df.collect().toIndexedSeq
+    val schema = df.schema
+    cleanupScratch(base)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+  }
+
+  /** (min, max) of `ts` in epoch ms: two scalar aggregates to the driver. */
+  private def tsBoundsMs(events: DataFrame): (Long, Long) = {
+    val r = events.agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts")))).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The time-range replay cut: `events` tagged with an int `__chunk` —
+    * by default the equal-width time range of `ts` over `chunks` chunks
+    * (deterministic and order-preserving; `rule` overrides it with any
+    * (minMs, maxMs) => column) — and the SENTINEL rows: one per
+    * `sentinelTypes` entry (user_id = −1), 2 days past the real max ts —
+    * far beyond any 6 h window + 30 min gap + 10 min watermark delay.
+    */
+  private def timeRangeCut(events: DataFrame, chunks: Int, sentinelTypes: Seq[String],
+      rule: Option[(Long, Long) => Column] = None): (DataFrame, DataFrame) = {
+    val (minTs, maxTs) = tsBoundsMs(events)
+    val span = math.max(1L, maxTs - minTs + 1)
+    val chunk = rule.map(_(minTs, maxTs)).getOrElse(least(lit(chunks - 1),
+      floor(((unix_millis(col("ts")) - minTs) * chunks).cast("double") / span)))
+    val sentinelTs = new java.sql.Timestamp(maxTs + 2L * 24 * 3600 * 1000)
+    val session = events.sparkSession
+    import session.implicits._
+    val sentinel = sentinelTypes.zipWithIndex.map { case (t, i) =>
+      (-(i + 1).toLong, sentinelTs, -1L, t, 0.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .select(events.columns.map(col).toSeq: _*)
+    (events.withColumn("__chunk", chunk.cast("int")), sentinel)
+  }
+
+  /** Drops a replay's stream input (`in/`) and checkpoint (`ckpt/`) — the
+    * parts of its RAM-backed scratch the result never reads.
+    */
+  private def reclaimStreamState(base: Path): Unit = {
+    deleteRecursively(base.resolve("in"))
+    deleteRecursively(base.resolve("ckpt"))
+  }
+
   /** When `killAfterBatches = Some(n)`, the replay is split into a real
     * CHECKPOINT-RESTART cycle: the first query instance is stopped once ≥ n
     * micro-batches have committed (mid-stream, with input files still
@@ -105,122 +223,47 @@ object ReplayHarness {
       prep: DataFrame => DataFrame = identity,
       requireRocksDB: Boolean = false,
       killAfterBatches: Option[Int] = None,
-      chunkBy: Option[(Long, Long) => org.apache.spark.sql.Column] = None,
+      chunkBy: Option[(Long, Long) => Column] = None,
       sinkEnrich: Option[(DataFrame, Long) => DataFrame] = None)(
       transform: DataFrame => DataFrame): DataFrame = {
-    val events = prep(graft.core.Tables.load(spark, sfDir, "events"))
+    val events = prep(Tables.load(spark, sfDir, "events"))
     // RAM-backed scratch when available: replay cost is dominated by
     // per-partition state-store delta fsyncs on the checkpoint — /dev/shm
     // removes the disk from a verification harness that needs no durability
     val base = scratchDir("graft_replay_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val outDir = base.resolve("out")
-    val ckpt = base.resolve("ckpt").toString
 
-    // equal-width time-range chunk id — deterministic and order-preserving.
-    // `chunkBy` overrides the rule with an arbitrary (minMs, maxMs) => int
-    // column: chunk id == micro-batch arrival order, so a rule that puts
-    // old-timestamp rows in a HIGH chunk id deliberately makes them LATE
-    // (they arrive after earlier chunks advanced the watermark) — the only
-    // way to put the watermark's drop path itself under the oracle (st12);
-    // the default rule can never produce a late row by construction.
-    val bounds = events.agg(min(col("ts")), max(col("ts"))).collect().head
-    val (minTs, maxTs) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
-    val span = math.max(1L, maxTs - minTs + 1)
-    val withChunk = chunkBy match {
-      case Some(rule) => events.withColumn("__chunk", rule(minTs, maxTs).cast("int"))
-      case None => events.withColumn("__chunk",
-        least(lit(chunks - 1),
-          floor(((unix_millis(col("ts")) - minTs) * chunks).cast("double") / span)).cast("int"))
-    }
-
-    val now = System.currentTimeMillis()
-    // sentinel rows: one per requested type, 2 days past the real max ts —
-    // far beyond any 6 h window + 30 min gap + 10 min watermark delay
-    val sentinelTs = new java.sql.Timestamp(maxTs + 2L * 24 * 3600 * 1000)
-    import spark.implicits._
-    val sentinelStage = base.resolve("stage_sentinel")
+    // `chunkBy` overrides the equal-width time-range rule with an arbitrary
+    // (minMs, maxMs) => int column: chunk id == micro-batch arrival order,
+    // so a rule that puts old-timestamp rows in a HIGH chunk id
+    // deliberately makes them LATE (they arrive after earlier chunks
+    // advanced the watermark) — the only way to put the watermark's drop
+    // path itself under the oracle (st12); the default rule can never
+    // produce a late row by construction.
+    val (withChunk, sentinel) = timeRangeCut(events, chunks, sentinelTypes, chunkBy)
     // The chunk + sentinel staging writes are independent tiny jobs whose
-    // wall is per-job fixed cost, not data — run them CONCURRENTLY from a
-    // driver pool (guide §2.6: actions are only sequential because the
-    // driver calls them sequentially) and publish afterwards. Each file's
-    // CONTENT is byte-identical to the sequential version (same filter,
-    // same coalesce(1) plan per chunk), and arrival order is fixed by the
-    // explicit mtimes publish() stamps, so replay semantics are unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(chunks + 1)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val staged = (0 until chunks).map { i =>
-        scala.concurrent.Future {
-          val stage = base.resolve(s"stage_$i")
-          withChunk.filter(col("__chunk") === i).drop("__chunk")
-            .coalesce(1).write.parquet(stage.toString)
-        }
-      } :+ scala.concurrent.Future {
-        sentinelTypes.zipWithIndex.map { case (t, i) =>
-          (-(i + 1).toLong, sentinelTs, -1L, t, 0.0, "{}")
-        }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .select(events.columns.map(col).toSeq: _*)
-          .coalesce(1).write.parquet(sentinelStage.toString)
+    // wall is per-job fixed cost, not data — staged CONCURRENTLY and
+    // published afterwards, the sentinel last (highest mtime)
+    val now = System.currentTimeMillis()
+    val publishChunk = stagedChunkPublisher(withChunk, base, streamDir, chunks,
+      i => now - (if (i < chunks) chunks + 2 - i else 1) * 60000L, Some(sentinel))
+    (0 to chunks).foreach(publishChunk)
+
+    val outSchema = try isolated(spark, (if (requireRocksDB) Seq(RocksDB) else Nil): _*) { s =>
+      val transformed = transform(fileStream(s, events.schema, streamDir))
+      // `sinkEnrich` runs INSIDE foreachBatch on the materialized micro-batch
+      // with its batch id — the production per-batch dimension-refresh pattern
+      // (st13): the closure may re-read side data per batch, which a streaming
+      // plan transform cannot express. It must be schema-stable across batch
+      // ids; the output schema is derived by applying it to an empty batch.
+      val outSchema = sinkEnrich match {
+        case Some(f) => f(s.createDataFrame(
+          s.sparkContext.emptyRDD[Row], transformed.schema), 0L).schema
+        case None => transformed.schema
       }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(staged),
-        scala.concurrent.duration.Duration(10, "min"))
-    } finally pool.shutdown()
-    (0 until chunks).foreach { i =>
-      publish(base.resolve(s"stage_$i"), streamDir, f"batch_$i%03d",
-        now - (chunks + 2 - i) * 60000L)
-    }
-    publish(sentinelStage, streamDir, "batch_zzz_sentinel", now - 60000L)
-
-    val in = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val transformed = transform(in)
-    // `sinkEnrich` runs INSIDE foreachBatch on the materialized micro-batch
-    // with its batch id — the production per-batch dimension-refresh pattern
-    // (st13): the closure may re-read side data per batch, which a streaming
-    // plan transform cannot express. It must be schema-stable across batch
-    // ids; the output schema is derived by applying it to an empty batch.
-    val outSchema = sinkEnrich match {
-      case Some(f) => f(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], transformed.schema), 0L).schema
-      case None => transformed.schema
-    }
-
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    if (requireRocksDB)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // State-store instances (and their per-batch commit fsyncs) scale with
-    // shuffle partitions, and stateful streaming disables AQE coalescing —
-    // so replay batches of a few thousand rows would pay 32 store commits
-    // per operator per batch for nothing (measured: a stream-stream join
-    // batch costs ~2 s at 32 partitions vs ~0.5 s at 4). Four is plenty of
-    // parallelism for the replay volume; the partition count is pinned into
-    // the checkpoint at query start, so this only affects the harness's own
-    // query — a production deployment of the same operators would size this
-    // to its key cardinality, not to the replay's.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      def startQuery() = transformed.writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // IDEMPOTENT sink: one sub-directory per batch id, overwritten on
-          // re-execution — a micro-batch replayed after a task retry or a
-          // restart-from-checkpoint lands on the same path instead of
-          // appending duplicates (blind append would turn any replay into a
-          // false 'streaming machinery broke' hash mismatch). The write
-          // keeps the batch's OWN partitioning (one small file per state
-          // partition): the r17 coalesce(1) made the single write task
-          // compute all of the stateful operator's partitions — and commit
-          // their state stores — SERIALLY (guide §1.2: the sink job was
-          // measured at 80-95% of addBatch; see OPTIMIZATION_r18.md).
-          // Batch output is a row SET (the driver sorts before hashing),
-          // so per-batch file count is not observable in any result.
+      def startQuery() = startBatchDirSink(transformed, outputMode, base.resolve("ckpt"), outDir,
+        (batch, batchId) => {
           val enriched = sinkEnrich.map(f => f(batch, batchId)).getOrElse(batch)
           // the read-back path trusts the empty-batch schema probe above;
           // enforce the documented schema-stability convention at runtime so
@@ -237,17 +280,8 @@ object ReplayHarness {
           if (got != want) throw new IllegalStateException(
             s"sinkEnrich output schema for batch $batchId diverged from the " +
               s"empty-batch probe: got ${got.mkString(",")} want ${want.mkString(",")}")
-          val t0 = System.nanoTime()
-          enriched.write.mode("overwrite")
-            .parquet(outDir.resolve(s"b$batchId").toString)
-          // addBatch = state commits + this sink job; print the sink half so
-          // the floor can be attributed (guide §1 — measure before touching)
-          if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-            System.err.println(f"[replay] sinkWrite batch=$batchId " +
-              f"ms=${(System.nanoTime() - t0) / 1e6}%.0f")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+          enriched
+        })
 
       val q = killAfterBatches match {
         case Some(n) =>
@@ -267,45 +301,21 @@ object ReplayHarness {
         case None => startQuery()
       }
       q.awaitTermination()
-      if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[replay] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"ms=${p.durationMs} states=${p.stateOperators.map(s => s.numRowsTotal).mkString(",")}")
-        }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      if (requireRocksDB) prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      // the scratch lives in RAM (/dev/shm): drop everything the returned
-      // DataFrame no longer needs (inputs, checkpoint state, staging) so
-      // repeated replays in one long session don't accumulate; only out/
-      // must survive — the result is read lazily from it
-      deleteRecursively(streamDir)
-      deleteRecursively(base.resolve("ckpt"))
-    }
+      outSchema
+    } finally reclaimStreamState(base)
 
-    // recursiveFileLookup reads the per-batch sub-directories WITHOUT
-    // partition discovery (the b<id> dirs are not key=value partitions).
     // COMPLETE mode re-emits the entire result every micro-batch, so the
     // sunk dirs are successive whole-result snapshots — the result is the
     // HIGHEST batch id's dir alone, not the union (which would multi-count
     // every window once per batch that re-emitted it).
-    if (Files.exists(outDir)) {
-      if (outputMode == "complete") {
-        val listing = Files.list(outDir)
-        val last =
-          try listing.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.matches("b\\d+")).maxBy(_.drop(1).toLong)
-          finally listing.close()
-        spark.read.schema(outSchema).parquet(outDir.resolve(last).toString)
-      } else
-        spark.read.schema(outSchema).option("recursiveFileLookup", "true")
-          .parquet(outDir.toString)
-    } else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    if (outputMode == "complete" && Files.exists(outDir)) {
+      val listing = Files.list(outDir)
+      val last =
+        try listing.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.matches("b\\d+")).maxBy(_.drop(1).toLong)
+        finally listing.close()
+      spark.read.schema(outSchema).parquet(outDir.resolve(last).toString)
+    } else readBatchDirs(spark, outDir, outSchema)
   }
 
   /** Two-phase STATE-SCHEMA-EVOLUTION replay: phase 1 publishes the first
@@ -346,114 +356,44 @@ object ReplayHarness {
       prep: DataFrame => DataFrame = identity)(
       transform1: DataFrame => DataFrame)(
       transform2: DataFrame => DataFrame): DataFrame = {
-    val events = prep(graft.core.Tables.load(spark, sfDir, "events"))
+    val events = prep(Tables.load(spark, sfDir, "events"))
     val base = scratchDir("graft_evolve_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val outDir = base.resolve("out")
-    val ckpt = base.resolve("ckpt").toString
 
-    // replayEvents' equal-width time-range chunk rule, verbatim — the
-    // phase boundary (chunk >= phase1Chunks) is thereby a pure function
-    // of ts, which is what lets the oracle SQL reproduce which events the
-    // EVOLVED processor saw
-    val bounds = events.agg(min(col("ts")), max(col("ts"))).collect().head
-    val (minTs, maxTs) = (bounds.getTimestamp(0).getTime, bounds.getTimestamp(1).getTime)
-    val span = math.max(1L, maxTs - minTs + 1)
-    val withChunk = events.withColumn("__chunk",
-      least(lit(chunks - 1),
-        floor(((unix_millis(col("ts")) - minTs) * chunks).cast("double") / span)).cast("int"))
+    // replayEvents' cut, verbatim — the phase boundary (chunk >=
+    // phase1Chunks) is thereby a pure function of ts, which is what lets
+    // the oracle SQL reproduce which events the EVOLVED processor saw. The
+    // sentinel is staged with the chunks (its write overlaps the phase-1
+    // drain) and published after phase 2's chunks.
+    val (withChunk, sentinel) = timeRangeCut(events, chunks, sentinelTypes)
     val now = System.currentTimeMillis()
-    val publishChunk: Int => Unit =
-      stagedChunkPublisher(withChunk, base, streamDir, chunks,
-        i => now - (chunks + 2 - i) * 60000L)
-    // pre-stage the sentinel too (pure function of maxTs + the schema):
-    // its write overlaps the phase-1 drain instead of serializing between
-    // the two query instances; published after phase-2's chunks as before
-    val sentinelStaged: Option[scala.concurrent.Future[Unit]] =
-      if (sentinelTypes.isEmpty) None
-      else Some {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        val f = {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          scala.concurrent.Future {
-            val sentinelTs = new java.sql.Timestamp(maxTs + 2L * 24 * 3600 * 1000)
-            import spark.implicits._
-            sentinelTypes.zipWithIndex.map { case (t, i) =>
-              (-(i + 1).toLong, sentinelTs, -1L, t, 0.0, "{}")
-            }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-              .select(events.columns.map(col).toSeq: _*)
-              .coalesce(1).write.parquet(base.resolve("stage_sentinel").toString)
-          }
-        }
-        pool.shutdown()
-        f
-      }
+    val publishChunk = stagedChunkPublisher(withChunk, base, streamDir, chunks,
+      i => now - (if (i < chunks) chunks + 2 - i else 1) * 60000L,
+      Some(sentinel).filter(_ => sentinelTypes.nonEmpty))
 
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevEncoding = spark.conf.getOption("spark.sql.streaming.stateStore.encodingFormat")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Avro encoding is what enables TWS state-schema RESOLUTION (st26),
     // but Spark rejects it for non-TWS stateful operators (join, agg) —
     // so it is opt-in per query, not harness-global
-    stateEncoding.foreach(
-      spark.conf.set("spark.sql.streaming.stateStore.encodingFormat", _))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-    try {
-      def runPhase(tr: DataFrame => DataFrame): org.apache.spark.sql.types.StructType = {
-        val in = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        val transformed = tr(in)
-        val expect = transformed.schema
-        val q = transformed.writeStream
-          .outputMode(outputMode)
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batch's own partitioning — no coalesce(1): see replayEvents
-            batch.write.mode("overwrite")
-              .parquet(outDir.resolve(s"b$batchId").toString)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        expect
+    val encoding = stateEncoding.map("spark.sql.streaming.stateStore.encodingFormat" -> _)
+    val schema2 = try isolated(spark, RocksDB +: encoding.toSeq: _*) { s =>
+      def runPhase(tr: DataFrame => DataFrame): StructType = {
+        val transformed = tr(fileStream(s, events.schema, streamDir))
+        startBatchDirSink(transformed, outputMode, base.resolve("ckpt"), outDir)
+          .awaitTermination()
+        transformed.schema
       }
       (0 until phase1Chunks).foreach(publishChunk)
       runPhase(transform1)
       System.err.println(s"[replay] phase 1 drained ($phase1Chunks chunks); " +
         "restarting from checkpoint")
       (phase1Chunks until chunks).foreach(publishChunk)
-      // replayEvents' sentinel convention: one row per requested type,
-      // 2 days past the real max ts, published with the HIGHEST mod time
-      // so the restarted instance processes it last and the watermark
-      // flushes every state row before the query stops (pre-staged above,
-      // concurrent with phase 1)
-      sentinelStaged.foreach { staged =>
-        scala.concurrent.Await.result(staged,
-          scala.concurrent.duration.Duration(10, "min"))
-        publish(base.resolve("stage_sentinel"), streamDir,
-          "batch_zzz_sentinel", now - 60000L)
-      }
-      val schema2 = runPhase(transform2)
-      if (Files.exists(outDir))
-        spark.read.schema(schema2).option("recursiveFileLookup", "true")
-          .parquet(outDir.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema2)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      restore("spark.sql.streaming.stateStore.providerClass", prevProvider)
-      restore("spark.sql.streaming.stateStore.encodingFormat", prevEncoding)
-      deleteRecursively(streamDir)
-      deleteRecursively(base.resolve("ckpt"))
-    }
+      // published LAST so the restarted instance processes it last and the
+      // watermark flushes every state row before the query stops
+      if (sentinelTypes.nonEmpty) publishChunk(chunks)
+      runPhase(transform2)
+    } finally reclaimStreamState(base)
+    readBatchDirs(spark, outDir, schema2)
   }
 
   /** Replays the batch `documents` fixture through a streaming plan — the
@@ -471,11 +411,10 @@ object ReplayHarness {
     */
   def replayDocs(spark: SparkSession, sfDir: String, chunks: Int = 4)(
       transform: DataFrame => DataFrame): DataFrame = {
-    val docs = graft.core.Tables.load(spark, sfDir, "documents")
+    val docs = Tables.load(spark, sfDir, "documents")
     val base = scratchDir("graft_docreplay_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val outDir = base.resolve("out")
-    val ckpt = base.resolve("ckpt").toString
 
     val fp = md5(concat_ws(" ", array_sort(array_distinct(split(col("text"), " ")))))
     val withChunk = docs.withColumn("__chunk",
@@ -484,39 +423,18 @@ object ReplayHarness {
           .partitionBy(fp).orderBy(col("doc_id"))) - 1).cast("int"))
 
     val now = System.currentTimeMillis()
-    val publishChunk: Int => Unit =
+    val publishChunk =
       stagedChunkPublisher(withChunk, base, streamDir, chunks,
         i => now - (chunks + 1 - i) * 60000L)
     (0 until chunks).foreach(publishChunk)
 
-    val in = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    val transformed = transform(in)
-    val outSchema = transformed.schema
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      val q = transformed.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch's own partitioning — no coalesce(1): see replayEvents
-          batch.write.mode("overwrite")
-            .parquet(outDir.resolve(s"b$batchId").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(streamDir)
-      deleteRecursively(base.resolve("ckpt"))
-    }
-    if (Files.exists(outDir))
-      spark.read.schema(outSchema).option("recursiveFileLookup", "true")
-        .parquet(outDir.toString)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
+    val outSchema = try isolated(spark) { s =>
+      val transformed = transform(fileStream(s, docs.schema, streamDir))
+      startBatchDirSink(transformed, "append", base.resolve("ckpt"), outDir)
+        .awaitTermination()
+      transformed.schema
+    } finally reclaimStreamState(base)
+    readBatchDirs(spark, outDir, outSchema)
   }
 
   /** st32's harness: the events fixture replayed through a streaming
@@ -540,11 +458,7 @@ object ReplayHarness {
     * partitioned layout, and the compaction rewrites that ran mid-stream
     * (`compactEvery`) all inside the hash.
     *
-    * Chunk rule: `event_id % chunks` (NOT time range) — the transform is
-    * stateless so no watermark determinism is needed, and id-interleaving
-    * makes every micro-batch touch every `event_date` leaf, so leaves
-    * accumulate one file per batch and the compaction sweeps genuinely
-    * merge multi-file partitions instead of skipping single-file ones.
+    * Chunk rule and phase sequence: [[CrashScenario]].
     *
     * Returns `finish` applied to the lake read back via partition discovery
     * (`event_date` as a partition column — the f4-style pruned read shape
@@ -574,95 +488,19 @@ object ReplayHarness {
       finish: DataFrame => DataFrame = identity,
       crashSinkAt: Option[(Long, String)] = None)(
       transform: DataFrame => DataFrame): DataFrame = {
-    require(phase1Chunks > 0 && phase1Chunks < chunks,
-      "need a non-empty phase on both sides of the restart")
-    val events = graft.core.Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_lake_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
     val lakeDir = base.resolve("lake").toString
-    val ckpt = base.resolve("ckpt")
-
-    val withChunk = events.withColumn("__chunk",
-      pmod(col("event_id"), lit(chunks)).cast("int"))
-    val now = System.currentTimeMillis()
-    val publishChunk: Int => Unit =
-      stagedChunkPublisher(withChunk, base, streamDir, chunks,
-        i => now - (chunks + 2 - i) * 60000L)
-
+    val crash = new CrashScenario("lake", crashSinkAt)
     // small target size so the mid-stream sweeps really rewrite leaves at
     // fixture scale; production would keep the 128 MiB default
-    val crashFired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val injector: (Long, String) => Unit = crashSinkAt match {
-      case Some((b, p)) => (bid, point) =>
-        if (bid == b && point == p && crashFired.compareAndSet(false, true))
-          throw new RuntimeException(
-            s"injected lake crash at '$point' of batch $bid")
-      case None => (_, _) => ()
-    }
     val sink = LakeSink.datePartitioned(lakeDir, tsCol = "ts",
       compactEvery = compactEvery, targetFileBytes = 512L << 10,
-      minFilesToCompact = 2, faultInjector = injector)
-    val invoked = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      def runPhase(expectInjectedCrash: Boolean = false): Unit = {
-        val in = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        val q = transform(in).writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            invoked.add(batchId); sink(batch, batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        def injected(t: Throwable): Boolean = t != null &&
-          (String.valueOf(t.getMessage).contains("injected lake crash") ||
-            injected(t.getCause))
-        try q.awaitTermination()
-        catch {
-          case e: Throwable if expectInjectedCrash && injected(e) =>
-            System.err.println("[lake] injected mid-sink crash fired; " +
-              "next run must recover via rollback-then-commit")
-        }
-      }
-      (0 until phase1Chunks).foreach(publishChunk)
-      crashSinkAt match {
-        case Some((b, _)) =>
-          runPhase(expectInjectedCrash = true)
-          require(crashFired.get,
-            s"injected crash for batch $b never fired — point unreachable, " +
-              "the crash-window replay is untested")
-          invoked.clear()
-          runPhase() // recovery: replays batch b via rollback + staged commit
-          require(invoked.contains(java.lang.Long.valueOf(b)),
-            s"restart did not re-invoke the sink for crashed batch $b")
-        case None => runPhase()
-      }
-      // the crash window: drop the engine's LAST batch-commit record while
-      // the sink's data + ledger marker stay — offsets/<N> without
-      // commits/<N> is what recovery re-executes
-      val replayedId = dropLastCommitRecord(ckpt)
-      System.err.println(s"[lake] dropped commit record $replayedId; " +
-        "restarting from checkpoint (recovery must replay it)")
-      invoked.clear()
-      (phase1Chunks until chunks).foreach(publishChunk)
-      runPhase()
-      require(invoked.contains(java.lang.Long.valueOf(replayedId)),
-        s"restart did not re-invoke the sink for uncommitted batch $replayedId — " +
-          "Spark's foreachBatch recovery contract changed; the ledger path is untested")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(streamDir)
-      deleteRecursively(ckpt)
+      minFilesToCompact = 2, faultInjector = crash.inject)
+    isolated(spark) { s =>
+      crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
+        transform)(sink)
     }
-    val result = finish(spark.read.parquet(lakeDir))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    pinned(spark, base)(finish(spark.read.parquet(lakeDir)))
   }
 
   /** st46's harness: ONE micro-batch stream fanned into TWO ledgered lake
@@ -688,88 +526,120 @@ object ReplayHarness {
       phase1Chunks: Int = 3,
       crashBetweenSinksAt: Long = 1L,
       finish: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    require(phase1Chunks > 0 && phase1Chunks < chunks,
-      "need a non-empty phase on both sides of the restart")
-    val events = graft.core.Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_fanout_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
     val lakeA = base.resolve("lake_raw").toString
     val lakeB = base.resolve("lake_derived").toString
-    val ckpt = base.resolve("ckpt")
-
-    val withChunk = events.withColumn("__chunk",
-      pmod(col("event_id"), lit(chunks)).cast("int"))
-    val now = System.currentTimeMillis()
-    val publishChunk: Int => Unit =
-      stagedChunkPublisher(withChunk, base, streamDir, chunks,
-        i => now - (chunks + 2 - i) * 60000L)
-
     val sinkA = LakeSink.datePartitioned(lakeA, tsCol = "ts",
       compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
     val sinkB = LakeSink.datePartitioned(lakeB, tsCol = "ts",
       compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    val crashFired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val invoked = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      def runPhase(expectInjectedCrash: Boolean = false): Unit = {
-        val in = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        val q = in.select("event_id", "ts", "user_id", "event_type", "value")
-          .writeStream
+    // recovery of the between-sinks crash: A's ledger skips the batch, B
+    // commits it; the dropped commit record at the phase boundary (st32's
+    // engine-crash window) must then be a skip in BOTH ledgers
+    val crash = new CrashScenario("fanout", Some((crashBetweenSinksAt, "between-sinks")))
+    isolated(spark) { s =>
+      crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
+        _.select("event_id", "ts", "user_id", "event_type", "value")) {
+        (batch, batchId) =>
+          sinkA(batch, batchId)
+          crash.inject(batchId, "between-sinks")
+          sinkB(batch.filter(col("event_type") === "click"), batchId)
+      }
+    }
+    pinned(spark, base)(finish(spark.read.parquet(lakeA), spark.read.parquet(lakeB)))
+  }
+
+  /** The crash-restart scenario shared by the ledgered-sink replays (st32/
+    * st39 [[replayEventsToLake]], st46 [[replayEventsFanOut]], st51
+    * [[replayOccTail]]). The events are cut by `event_id % chunks` (NOT
+    * time range — the streams are stateless so no watermark determinism is
+    * needed, and id-interleaving makes every micro-batch touch every
+    * `event_date` leaf, so leaves accumulate one file per batch and the
+    * compaction sweeps genuinely merge multi-file partitions). [[run]]
+    * drives one checkpointed AvailableNow stream, one file per micro-batch:
+    *
+    *   1. phase 1 publishes `phase1Chunks` chunks; with `crashAt =
+    *      Some((b, point))` the first run dies from the fault [[inject]]
+    *      throws ONCE at that point of batch b, and the restart must
+    *      re-invoke batch b (recovery through the sink's own protocol);
+    *   2. `between` runs at the phase boundary; with `dropCommit` the
+    *      checkpoint's LAST commit record is then deleted
+    *      ([[dropLastCommitRecord]] — the engine-crash window);
+    *   3. phase 2 publishes the rest, and its run must re-invoke the
+    *      dropped batch.
+    *
+    * Every "must re-invoke" is a `require`: the ledgers lean on Spark's
+    * foreachBatch recovery contract, so a change in it fails loudly here
+    * instead of leaving the recovery path silently untested.
+    */
+  private final class CrashScenario(tag: String, crashAt: Option[(Long, String)]) {
+    private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    private val invoked = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
+    private val marker = s"injected $tag crash"
+
+    /** The fault hook: throws once, at `crashAt`. */
+    def inject(batchId: Long, point: String): Unit =
+      if (crashAt.contains((batchId, point)) && fired.compareAndSet(false, true))
+        throw new RuntimeException(s"$marker at '$point' of batch $batchId")
+
+    def run(s: SparkSession, base: Path, events: DataFrame, chunks: Int,
+        phase1Chunks: Int, transform: DataFrame => DataFrame = identity,
+        dropCommit: Boolean = true, between: () => Unit = () => ())(
+        body: (DataFrame, Long) => Unit): Unit = {
+      require(phase1Chunks > 0 && phase1Chunks < chunks,
+        "need a non-empty phase on both sides of the restart")
+      val streamDir = Files.createDirectory(base.resolve("in"))
+      val ckpt = base.resolve("ckpt")
+      val now = System.currentTimeMillis()
+      val publishChunk = stagedChunkPublisher(
+        events.withColumn("__chunk", pmod(col("event_id"), lit(chunks)).cast("int")),
+        base, streamDir, chunks, i => now - (chunks + 2 - i) * 60000L)
+      def drain(expectCrash: Boolean = false): Unit = {
+        val q = transform(fileStream(s, events.schema, streamDir)).writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            invoked.add(batchId)
-            sinkA(batch, batchId)
-            if (batchId == crashBetweenSinksAt && crashFired.compareAndSet(false, true))
-              throw new RuntimeException(
-                s"injected fan-out crash between sinks at batch $batchId")
-            sinkB(batch.filter(col("event_type") === "click"), batchId)
+            invoked.add(batchId); body(batch, batchId)
           }
           .trigger(Trigger.AvailableNow())
           .start()
         def injected(t: Throwable): Boolean = t != null &&
-          (String.valueOf(t.getMessage).contains("injected fan-out crash") ||
-            injected(t.getCause))
+          (String.valueOf(t.getMessage).contains(marker) || injected(t.getCause))
         try q.awaitTermination()
         catch {
-          case e: Throwable if expectInjectedCrash && injected(e) =>
-            System.err.println("[fanout] injected between-sinks crash fired; " +
-              "recovery must commit the batch into sink B only")
+          case e: Throwable if expectCrash && injected(e) =>
+            System.err.println(s"[$tag] $marker fired; restarting from checkpoint")
         }
       }
-      (0 until phase1Chunks).foreach(publishChunk)
-      runPhase(expectInjectedCrash = true)
-      require(crashFired.get,
-        s"injected between-sinks crash for batch $crashBetweenSinksAt never " +
-          "fired — the fan-out's hard window is untested")
-      invoked.clear()
-      runPhase() // recovery: A's ledger skips the batch, B commits it
-      require(invoked.contains(java.lang.Long.valueOf(crashBetweenSinksAt)),
-        s"restart did not re-invoke the fan-out for crashed batch $crashBetweenSinksAt")
-      // st32's engine-crash window on top: both sinks committed, engine
-      // commit record dropped — BOTH ledgers must turn the replay into a skip
-      val replayedId = dropLastCommitRecord(ckpt)
-      System.err.println(s"[fanout] dropped commit record $replayedId; " +
-        "both sinks must skip its replay")
-      invoked.clear()
-      (phase1Chunks until chunks).foreach(publishChunk)
-      runPhase()
-      require(invoked.contains(java.lang.Long.valueOf(replayedId)),
-        s"restart did not re-invoke the fan-out for uncommitted batch $replayedId")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(streamDir)
-      deleteRecursively(ckpt)
+      def requireReinvoked(batchId: Long, what: String): Unit =
+        require(invoked.contains(batchId),
+          s"restart did not re-invoke the sink for $what batch $batchId — " +
+            "Spark's foreachBatch recovery contract changed; the recovery path is untested")
+      try {
+        (0 until phase1Chunks).foreach(publishChunk)
+        crashAt match {
+          case Some((b, point)) =>
+            drain(expectCrash = true)
+            require(fired.get, s"$marker at '$point' of batch $b never fired — " +
+              "point unreachable, the crash window is untested")
+            invoked.clear()
+            drain()
+            requireReinvoked(b, "crashed")
+          case None => drain()
+        }
+        between()
+        val dropped = if (!dropCommit) None else {
+          val id = dropLastCommitRecord(ckpt)
+          System.err.println(s"[$tag] dropped commit record $id; " +
+            "restarting from checkpoint (recovery must replay it)")
+          Some(id)
+        }
+        invoked.clear()
+        (phase1Chunks until chunks).foreach(publishChunk)
+        drain()
+        dropped.foreach(requireReinvoked(_, "uncommitted"))
+      } finally reclaimStreamState(base)
     }
-    val result = finish(spark.read.parquet(lakeA), spark.read.parquet(lakeB))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
   }
 
   /** st47's harness: a REPLICA table maintained purely from the source
@@ -831,7 +701,7 @@ object ReplayHarness {
       spark: SparkSession,
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_cdcapply_")
     val src = base.resolve("source").toString
     val dst = base.resolve("replica").toString
@@ -867,11 +737,7 @@ object ReplayHarness {
     applyRange(2L, 3L)
     applyRange(3L, 4L)  // the late append
 
-    val result = finish(sink.readLake(spark, dst))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    pinned(spark, base)(finish(sink.readLake(spark, dst)))
   }
 
   /** st48's harness: INCREMENTAL VIEW MAINTENANCE — a downstream AGGREGATE
@@ -909,7 +775,7 @@ object ReplayHarness {
       spark: SparkSession,
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_ivm_")
     val src = base.resolve("source").toString
     val dst = base.resolve("aggregate").toString
@@ -970,13 +836,9 @@ object ReplayHarness {
     require(last.select("applied_to").distinct().collect()
       .map(_.getLong(0)).toSeq == Seq(5L), "watermark column drifted")
 
-    val result = finish(last.select(
+    pinned(spark, base)(finish(last.select(
       col("event_date"), col("event_type"), col("n"),
-      col("total_value"), col("id_checksum")))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+      col("total_value"), col("id_checksum"))))
   }
 
   /** st49's harness: SCD TYPE-2 DIMENSION maintenance from a CDC stream —
@@ -1013,7 +875,7 @@ object ReplayHarness {
       spark: SparkSession,
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_scd2_")
     val dim = base.resolve("dim").toString
     val sink = LakeSink
@@ -1067,11 +929,7 @@ object ReplayHarness {
     applyBatch(batches(2))
     applyBatch(batches(3))
 
-    val result = finish(sink.readLake(spark, dim))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    pinned(spark, base)(finish(sink.readLake(spark, dim)))
   }
 
   /** st50's harness: DOWNSTREAM RESYNC ACROSS A SOURCE RESTORE — the
@@ -1096,7 +954,7 @@ object ReplayHarness {
       spark: SparkSession,
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_resync_")
     val src = base.resolve("source").toString
     def replica(v: Int) = base.resolve(s"replica_v$v").toString
@@ -1146,11 +1004,7 @@ object ReplayHarness {
       sink.tailCommits(spark, src, 4L, 5L).select(dataCols: _*),
       commitId = Some(1L))
 
-    val result = finish(sink.readLake(spark, replica(2)))
-    val rows = result.collect().toIndexedSeq
-    val schema = result.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    pinned(spark, base)(finish(sink.readLake(spark, replica(2))))
   }
 
   /** The engine-crash simulation shared by the lake replays: delete the
@@ -1281,7 +1135,7 @@ object ReplayHarness {
       sfDir: String,
       segmentChunks: Int = 2,
       liveCompaction: Boolean = false): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_b2g_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val bronzeDir = base.resolve("bronze").toString
@@ -1289,9 +1143,7 @@ object ReplayHarness {
     val ckptB = base.resolve("ckpt_bronze")
     val ckptS = base.resolve("ckpt_silver")
 
-    val Array(minMs, maxMs) = events
-      .agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-      .collect()(0).toSeq.map(v => v.asInstanceOf[Long]).toArray
+    val (minMs, maxMs) = tsBoundsMs(events)
     val midMs = (minMs + maxMs) / 2
     val now = System.currentTimeMillis()
     // stage BOTH segments' chunk files concurrently up front (guide §2.6 —
@@ -1322,27 +1174,18 @@ object ReplayHarness {
       publish(base.resolve(s"stage_${seg}_$i"), streamDir,
         f"batch_$published%03d", now + published * 1000L)
     }
-    val bronzeSchema = org.apache.spark.sql.types.StructType(
-      events.select("event_id", "ts", "user_id", "event_type", "value")
-        .schema.fields)
+    val bronzeSchema =
+      events.select("event_id", "ts", "user_id", "event_type", "value").schema
+    val ignoreMissing =
+      if (liveCompaction) Seq("spark.sql.files.ignoreMissingFiles" -> "true") else Nil
 
-    def runBronze(sink: (DataFrame, Long) => Unit): Unit = {
-      val q = spark.readStream.schema(bronzeSchema)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckptB.toString)
-        .foreachBatch(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     // bronze data files get mod times from their date leaf so the silver
     // tail reads them in event-time order; idempotent over already-read
     // files (the source tracks paths, not times)
     def stampBronzeByDate(): Unit = {
       val root = java.nio.file.Paths.get(bronzeDir)
-      val s = Files.walk(root)
-      try s.iterator().asScala.foreach { f =>
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.foreach { f =>
         val leaf = f.getParent
         if (Files.isRegularFile(f) && leaf != null &&
             leaf.getFileName.toString.startsWith("event_date=")) {
@@ -1351,14 +1194,18 @@ object ReplayHarness {
           Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
             .fromMillis(day.toEpochDay * 86400000L))
         }
-      } finally s.close()
+      } finally walk.close()
     }
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    val prevIgnoreMissing = spark.conf.get("spark.sql.files.ignoreMissingFiles")
-    if (liveCompaction) spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
-    try {
+    isolated(spark, ignoreMissing: _*) { s =>
+      def runBronze(sink: (DataFrame, Long) => Unit): Unit = {
+        val q = fileStream(s, bronzeSchema, streamDir)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckptB.toString)
+          .foreachBatch(sink)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
       // ---- bronze segment 1 ----
       // compact-before-tail mode: the sweep lands during lay-down, before
       // the tail attaches. Live mode: lay down FRAGMENTED and let the
@@ -1374,13 +1221,11 @@ object ReplayHarness {
       // ---- silver drain #1 over the compacted segment-1 lake ----
       stampBronzeByDate()
       // the tail re-discovers event_date from the Hive leaves (st36's shape)
-      val bronzeReadSchema = org.apache.spark.sql.types.StructType(
-        bronzeSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "event_date", org.apache.spark.sql.types.DateType))
+      val bronzeReadSchema = bronzeSchema.add("event_date", DateType)
       val silverSink = LakeSink.datePartitioned(silverDir, tsCol = "ts",
         compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
       def runSilver(): Unit = {
-        val in = spark.readStream.schema(bronzeReadSchema)
+        val in = s.readStream.schema(bronzeReadSchema)
           .option("maxFilesPerTrigger", "5")
           .option("maxFileAge", "100000d") // date-derived stamps are "old"
           .parquet(bronzeDir)
@@ -1407,7 +1252,7 @@ object ReplayHarness {
       // rewritten under new names, so the next drain re-lists and
       // re-delivers the whole leaf; the hardened silver hop must shed it
       def sweepBronze(): Unit = {
-        val done = LakeSink.compactPartitions(spark, bronzeDir,
+        val done = LakeSink.compactPartitions(s, bronzeDir,
           targetFileBytes = 512L << 10, minFiles = 2)
         System.err.println(s"[b2g] live-compacted ${done.size} tailed bronze leaves")
         stampBronzeByDate() // rewrites carry fresh mod times; restore date order
@@ -1417,7 +1262,7 @@ object ReplayHarness {
 
       // ---- bronze segment 2 + sentinel: compaction OFF (tail attached) ----
       (0 until segmentChunks).foreach(publishChunk(1, _))
-      val sentinel = spark.range(1).selectExpr("-1L AS event_id",
+      val sentinel = s.range(1).selectExpr("-1L AS event_id",
         s"timestamp_millis(${maxMs + 40L * 86400000}) AS ts",
         "-1L AS user_id", s"'$SentinelType' AS event_type", "0D AS value")
       val sentStage = base.resolve("stage_sentinel")
@@ -1449,28 +1294,22 @@ object ReplayHarness {
 
       // ---- gold: batch census over the silver lake ----
       // collect() pins the k-row census to the driver so the scratch tree
-      // can be reclaimed in finally. The date travels as a STRING across
+      // can be reclaimed before returning. The date travels as a STRING across
       // the collect: decoding a DateType to java.sql.Date goes through
       // DateTimeUtils.toJavaDate → sun.util.calendar, which is
       // module-sealed on Java 17 unless the JVM was launched with
       // --add-opens (plain `java -cp` isn't). Cast back after re-create —
       // the string→date cast runs entirely inside Catalyst.
-      val gold = spark.read.parquet(silverDir)
+      val gold = s.read.parquet(silverDir)
         .groupBy(col("event_date"), col("event_type"))
         .agg(count(lit(1)).as("n_windows"), sum(col("n")).as("n_events"),
           round(sum(col("sv")), 2).as("total_value"),
           sum(col("ck")).as("id_checksum"))
         .withColumn("event_date", col("event_date").cast("string"))
-      val rows = gold.collect().toIndexedSeq
-      val schema = gold.schema
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+      pinned(spark, base)(gold)
         .withColumn("event_date", col("event_date").cast("date"))
         .select("event_date", "event_type", "n_windows", "n_events",
           "total_value", "id_checksum")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.files.ignoreMissingFiles", prevIgnoreMissing)
-      cleanupScratch(base)
     }
   }
 
@@ -1504,16 +1343,13 @@ object ReplayHarness {
     * under channel='legacy', pinned (scratch reclaimed before returning).
     */
   def replaySourceEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     val base = scratchDir("graft_srcevolve_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val outDir = base.resolve("out")
-    val ckpt = base.resolve("ckpt").toString
 
-    val Array(minMs, maxMs) = events
-      .agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-      .collect()(0).toSeq.map(v => v.asInstanceOf[Long]).toArray
+    val (minMs, maxMs) = tsBoundsMs(events)
     val midMs = (minMs + maxMs) / 2
     // the evolved column, a pure function of pre-existing fields so the
     // oracle can reproduce it: which ingest channel a v2 row came from
@@ -1548,26 +1384,12 @@ object ReplayHarness {
 
     val schema1 = half1.schema
     val schema2 = half2.schema // = schema1 + channel
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      def drain(schema: org.apache.spark.sql.types.StructType): Unit = {
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+    try isolated(spark) { s =>
+      def drain(schema: StructType): Unit =
+        startBatchDirSink(fileStream(s, schema, streamDir)
           .withWatermark("ts", "25 hours")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // batch's own partitioning — no coalesce(1): see replayEvents
-            batch.write.mode("overwrite")
-              .parquet(outDir.resolve(s"b$batchId").toString)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .dropDuplicatesWithinWatermark("event_id"),
+          "append", base.resolve("ckpt"), outDir).awaitTermination()
       // pre-stage all of phase 2 so its jobs overlap the phase-1 drain:
       // every staged frame is a pure function of the fixture, and nothing
       // reaches streamDir until the post-drain publishStaged calls
@@ -1606,22 +1428,15 @@ object ReplayHarness {
       drain(schema2)
     } finally {
       stagePool.shutdown()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(streamDir)
-      deleteRecursively(base.resolve("ckpt"))
+      reclaimStreamState(base)
     }
     // gold census under the union schema: phase-1 batch files lack
     // `channel` and null-fill — surfaced as the 'legacy' bucket
-    val gold = spark.read.schema(schema2)
-      .option("recursiveFileLookup", "true").parquet(outDir.toString)
+    pinned(spark, base)(readBatchDirs(spark, outDir, schema2)
       .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = gold.collect().toIndexedSeq
-    val schema = gold.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+        sum(col("event_id")).as("id_checksum")))
   }
 
   /** st44: STREAMING TAIL FROM A SNAPSHOT — the lake-consumer bootstrap
@@ -1654,13 +1469,13 @@ object ReplayHarness {
     *     or a missed append each shift a (date, type, phase) cell.
     */
   def replayTailFromSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     val base = scratchDir("graft_snaptail_")
     val lakeDir = base.resolve("lake").toString
     val snapDir = base.resolve("snap").toString
     val tailOut = base.resolve("tail")
-    val ckpt = base.resolve("ckpt").toString
+    val ckpt = base.resolve("ckpt")
     val horizon = 3L
 
     // bronze: batches 0..5 through the production sink, one sweep at the
@@ -1678,31 +1493,18 @@ object ReplayHarness {
       .write.parquet(snapDir)
 
     // TAIL: file-stream the live lake, serving only post-horizon lineage
-    val schema = org.apache.spark.sql.types.StructType(events.schema.fields :+
-      org.apache.spark.sql.types.StructField("event_date",
-        org.apache.spark.sql.types.DateType))
-    def drain(): Unit = {
-      val in = spark.readStream.schema(schema)
+    val schema = events.schema.add("event_date", DateType)
+    def drain(): Unit =
+      startBatchDirSink(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "7").parquet(lakeDir)
-      val q = in
         .filter(regexp_extract(input_file_name(), "/g[bc](\\d+)-", 1)
           .cast("long") > horizon)
-        .select("event_id", "event_date", "event_type", "value")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch's own partitioning — no coalesce(1): see replayEvents
-          batch.write.mode("overwrite")
-            .parquet(tailOut.resolve(s"b$batchId").toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .select("event_id", "event_date", "event_type", "value"),
+        "append", ckpt, tailOut).awaitTermination()
     drain()
     // transition-batch crash: the engine committed the sink-side effect
     // but lost its commit record — recovery must replay it idempotently
-    val replayedId = dropLastCommitRecord(java.nio.file.Paths.get(ckpt))
+    val replayedId = dropLastCommitRecord(ckpt)
     require(replayedId > 0,
       s"tail drained in a single micro-batch ($replayedId) — the replay probe needs a longer tail")
     // two more commits land before the restart (a fresh sink generation;
@@ -1715,18 +1517,13 @@ object ReplayHarness {
       "tail across the replay + two new commits")
     drain()
 
-    val census = spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
-      .unionByName(spark.read.schema(
-          org.apache.spark.sql.types.StructType(schema.filter(f => f.name != "ts" && f.name != "user_id")))
-        .option("recursiveFileLookup", "true").parquet(tailOut.toString)
+    pinned(spark, base)(spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
+      .unionByName(readBatchDirs(spark, tailOut,
+          StructType(schema.filter(f => f.name != "ts" && f.name != "user_id")))
         .withColumn("phase", lit("tail")))
       .groupBy(col("event_date"), col("event_type"), col("phase"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    val outSchema = census.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), outSchema)
+        sum(col("event_id")).as("id_checksum")))
   }
 
   /** st45: LEDGER-DRIVEN INCREMENTAL TAIL — st44's stated 100 TB upgrade
@@ -1755,7 +1552,7 @@ object ReplayHarness {
     * re-delivered, double-consumed, or dropped batch shifts a cell.
     */
   def replayLedgerTail(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     val base = scratchDir("graft_ledgertail_")
     val lakeDir = base.resolve("lake").toString
@@ -1823,7 +1620,8 @@ object ReplayHarness {
     }
     require(consume() == ((5L, 7L)), "post-sweep appends not tailed")
 
-    val census = spark.read.parquet(silver.resolve("snapshot").toString)
+    pinned(spark, base)(spark.read
+      .parquet(silver.resolve("snapshot").toString)
       .withColumn("phase", lit("snapshot"))
       .unionByName(spark.read
         .parquet(silver.resolve("range_3_5").toString,
@@ -1831,11 +1629,7 @@ object ReplayHarness {
         .withColumn("phase", lit("tail")))
       .groupBy(col("event_date"), col("event_type"), col("phase"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    val outSchema = census.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), outSchema)
+        sum(col("event_id")).as("id_checksum")))
   }
 
   /** Scratch trees not yet reclaimed by [[cleanupScratch]] — reaped at JVM
@@ -1898,20 +1692,15 @@ object ReplayHarness {
     * the hash.
     */
   def stateStoreIntrospect(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
+    val events = Tables.load(spark, sfDir, "events")
     val base = scratchDir("graft_stateread_")
     val streamDir = Files.createDirectory(base.resolve("in"))
     val ckpt = base.resolve("ckpt").toString
-    val Array(minMs, maxMs) = events
-      .agg(unix_millis(min(col("ts"))), unix_millis(max(col("ts"))))
-      .collect()(0).toSeq.map(v => v.asInstanceOf[Long]).toArray
+    val (minMs, maxMs) = tsBoundsMs(events)
     val midMs = (minMs + maxMs) / 2
     val half = events.filter(unix_millis(col("ts")) < midMs)
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
+    isolated(spark) { s =>
       val now = System.currentTimeMillis()
       (0 until 2).foreach { i =>
         val stage = base.resolve(s"stage_$i")
@@ -1919,8 +1708,7 @@ object ReplayHarness {
           .coalesce(1).write.parquet(stage.toString)
         publish(stage, streamDir, f"batch_$i%03d", now - (4 - i) * 60000L)
       }
-      val q = spark.readStream.schema(half.schema)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+      val q = fileStream(s, half.schema, streamDir)
         .withWatermark("ts", "25 hours")
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
@@ -1933,18 +1721,13 @@ object ReplayHarness {
       // the store as a relation: key = (window, event_type), value = the
       // partial agg buffer. Timestamps travel as strings across the pinning
       // collect (same module-opens hazard class as the b2g gold census)
-      val state = spark.read.format("statestore").option("path", ckpt).load()
+      val state = s.read.format("statestore").option("path", ckpt).load()
         .selectExpr("CAST(key.window.start AS STRING) AS window_start",
           "key.event_type AS event_type", "value.count AS n",
           "round(value.sum, 2) AS sv")
-      val rows = state.collect().toIndexedSeq
-      val schema = state.schema
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+      pinned(spark, base)(state)
         .withColumn("window_start", col("window_start").cast("timestamp"))
         .select("window_start", "event_type", "n", "sv")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      cleanupScratch(base)
     }
   }
 
@@ -1956,11 +1739,6 @@ object ReplayHarness {
       finally s.close()
     }
 
-  /** Move the single part file of a staged write into the stream directory
-    * under a stable name with an explicit modification time — the file
-    * stream source orders same-batch candidates by mod time, so ascending
-    * stamps give deterministic chunk-per-micro-batch replay.
-    */
   /** st51's harness: the ingest tail as an OPTIMISTIC writer — a real
     * micro-batch stream whose foreachBatch commits through
     * [[LakeSink.appendBatchOcc]] (writerId `tail`, dedupKey = the engine
@@ -1985,117 +1763,82 @@ object ReplayHarness {
     */
   def replayOccTail(spark: SparkSession, sfDir: String, chunks: Int = 6,
       phase1Chunks: Int = 3): DataFrame = {
-    val events = graft.core.Tables.load(spark, sfDir, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
     val base = scratchDir("graft_occtail_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
     val lakeDir = base.resolve("lake").toString
-    val ckpt = base.resolve("ckpt")
-    val withChunk = events.withColumn("__chunk",
-      pmod(col("event_id"), lit(chunks)).cast("int"))
-    val now = System.currentTimeMillis()
-    val publishChunk: Int => Unit =
-      stagedChunkPublisher(withChunk, base, streamDir, chunks,
-        i => now - (chunks + 2 - i) * 60000L)
-    val crashFired = new java.util.concurrent.atomic.AtomicBoolean(false)
     val committedIds =
       new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(4, prevShuffle.toInt).toString)
-    try {
-      def runPhase(expectInjectedCrash: Boolean = false): Unit = {
-        val in = spark.readStream.schema(events.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-        val q = in.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val id = LakeSink.appendBatchOcc(spark, lakeDir, batch,
-              writerId = "tail", dedupKey = Some(s"b$batchId"))
-            committedIds.put(batchId, id)
-            if (batchId == 1L && crashFired.compareAndSet(false, true))
-              throw new RuntimeException("injected post-commit crash at batch 1")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        def injected(t: Throwable): Boolean = t != null &&
-          (String.valueOf(t.getMessage).contains("injected post-commit crash") ||
-            injected(t.getCause))
-        try q.awaitTermination()
-        catch {
-          case e: Throwable if expectInjectedCrash && injected(e) =>
-            System.err.println("[occtail] post-commit crash fired; the " +
-              "replayed batch must short-circuit off its dedup marker")
-        }
-      }
-      (0 until phase1Chunks).foreach(publishChunk)
-      runPhase(expectInjectedCrash = true)
-      require(crashFired.get, "injected post-commit crash never fired")
-      runPhase() // the replay of batch 1 must dedup, not double-append
-      require(Option(committedIds.get(1L)).map(_.longValue).contains(1L),
-        s"replayed batch 1 landed at ${committedIds.get(1L)} — the dedupKey " +
-          "did not short-circuit")
+    // the replay of batch 1 must dedup off its marker, not double-append
+    val crash = new CrashScenario("occtail", Some((1L, "post-commit")))
+    // the events are loaded on the isolated session: the between-phase
+    // merge builds its inputs from them, so its jobs plan under the same
+    // conf as the stream's
+    isolated(spark) { s =>
+      val events = Tables.load(s, sfDir, "events")
+        .select("event_id", "ts", "user_id", "event_type", "value")
       // an independent merge job between tail batches: its own exclusive
       // epoch, its own ledger slot — the tail resumes right past it
-      val inPhase1 = pmod(col("event_id"), lit(chunks)) < phase1Chunks
-      val m = LakeSink.mergeInto(spark, lakeDir,
-        events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 7)
-          .withColumn("event_type", lit("updated"))
-          .withColumn("value", col("value") + 1000.0),
-        "event_id",
-        events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 3)
-          .select("event_id", "ts"))
-      require(m.commitId == phase1Chunks.toLong,
-        s"merge expected commit $phase1Chunks, got ${m.commitId}")
-      (phase1Chunks until chunks).foreach(publishChunk)
-      runPhase()
-      require(Option(committedIds.get(chunks - 1L)).map(_.longValue)
-          .contains(chunks.toLong),
-        s"tail did not resume past the merge: last batch landed at " +
-          s"${committedIds.get(chunks - 1L)}, expected $chunks")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(streamDir)
-      deleteRecursively(ckpt)
+      def mergeBetweenPhases(): Unit = {
+        require(Option(committedIds.get(1L)).map(_.longValue).contains(1L),
+          s"replayed batch 1 landed at ${committedIds.get(1L)} — the dedupKey " +
+            "did not short-circuit")
+        val inPhase1 = pmod(col("event_id"), lit(chunks)) < phase1Chunks
+        val m = LakeSink.mergeInto(s, lakeDir,
+          events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 7)
+            .withColumn("event_type", lit("updated"))
+            .withColumn("value", col("value") + 1000.0),
+          "event_id",
+          events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 3)
+            .select("event_id", "ts"))
+        require(m.commitId == phase1Chunks.toLong,
+          s"merge expected commit $phase1Chunks, got ${m.commitId}")
+      }
+      crash.run(s, base, events, chunks, phase1Chunks, dropCommit = false,
+        between = mergeBetweenPhases) { (batch, batchId) =>
+        committedIds.put(batchId, LakeSink.appendBatchOcc(s, lakeDir, batch,
+          writerId = "tail", dedupKey = Some(s"b$batchId")))
+        crash.inject(batchId, "post-commit")
+      }
     }
-    val out = LakeSink.readLake(spark, lakeDir)
+    require(Option(committedIds.get(chunks - 1L)).map(_.longValue)
+        .contains(chunks.toLong),
+      s"tail did not resume past the merge: last batch landed at " +
+        s"${committedIds.get(chunks - 1L)}, expected $chunks")
+    pinned(spark, base)(LakeSink.readLake(spark, lakeDir)
       .groupBy(col("event_date"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = out.collect().toIndexedSeq
-    val schema = out.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+        sum(col("event_id")).as("id_checksum")))
   }
 
-  /** Concurrent chunk staging for the multi-phase harnesses (guide §2.6):
-    * fire one tiny staging write per chunk on a driver pool IMMEDIATELY —
-    * each lands in a private `stage_<i>` dir, invisible to the stream
-    * until the returned publisher moves it into `streamDir` with its
-    * explicit mtime — so later phases' staging overlaps the earlier
-    * phases' micro-batches instead of serializing between query
-    * instances. Per-file CONTENT is identical to the sequential version
-    * (same per-chunk filter + coalesce(1) plan), and arrival order is
-    * fixed by the published mtimes, so replay semantics are unchanged.
+  /** Concurrent chunk staging (guide §2.6): fire one tiny staging write
+    * per chunk — plus the `sentinel` rows, if any, as chunk `chunks` — on a
+    * driver pool IMMEDIATELY. Each lands in a private `stage_<i>` dir,
+    * invisible to the stream until the returned publisher moves it into
+    * `streamDir` with its explicit mtime, so later phases' staging overlaps
+    * the earlier phases' micro-batches instead of serializing between query
+    * instances. Per-file CONTENT is identical to a sequential write (same
+    * per-chunk filter + coalesce(1) plan), and arrival order is fixed by
+    * the published mtimes, so replay semantics are unchanged.
     *
-    * The returned function publishes chunk `i`, awaiting its staging
-    * write if still in flight.
+    * The returned function publishes chunk `i` (the sentinel as
+    * `batch_zzz_sentinel`), awaiting its staging write if still in flight.
     */
   private def stagedChunkPublisher(
       withChunk: DataFrame,
       base: Path,
       streamDir: Path,
       chunks: Int,
-      mtimeOf: Int => Long): Int => Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(chunks)
+      mtimeOf: Int => Long,
+      sentinel: Option[DataFrame] = None): Int => Unit = {
+    val frames = (0 until chunks).map(i =>
+      withChunk.filter(col("__chunk") === i).drop("__chunk")) ++ sentinel
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
     val staged = {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
-      (0 until chunks).map { i =>
+      frames.zipWithIndex.map { case (df, i) =>
         scala.concurrent.Future {
-          withChunk.filter(col("__chunk") === i).drop("__chunk")
-            .coalesce(1).write.parquet(base.resolve(s"stage_$i").toString)
+          df.coalesce(1).write.parquet(base.resolve(s"stage_$i").toString)
         }
       }
     }
@@ -2103,10 +1846,16 @@ object ReplayHarness {
     (i: Int) => {
       scala.concurrent.Await.result(staged(i),
         scala.concurrent.duration.Duration(10, "min"))
-      publish(base.resolve(s"stage_$i"), streamDir, f"batch_$i%03d", mtimeOf(i))
+      publish(base.resolve(s"stage_$i"), streamDir,
+        if (i < chunks) f"batch_$i%03d" else "batch_zzz_sentinel", mtimeOf(i))
     }
   }
 
+  /** Move the single part file of a staged write into the stream directory
+    * under a stable name with an explicit modification time — the file
+    * stream source orders same-batch candidates by mod time, so ascending
+    * stamps give deterministic chunk-per-micro-batch replay.
+    */
   private def publish(stage: Path, streamDir: Path, name: String, modTime: Long): Unit = {
     val listing = Files.list(stage)
     val part =
@@ -2119,3 +1868,4 @@ object ReplayHarness {
     deleteRecursively(stage) // staging markers (_SUCCESS etc.) — RAM-backed
   }
 }
+

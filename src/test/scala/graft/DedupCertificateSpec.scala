@@ -44,6 +44,15 @@ class DedupCertificateSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("d14 certificate holds on an empty corpus instead of aborting") {
+    val dir = GraftTestSpark.tmpDir("graft_d14_empty_")
+    try {
+      graft.core.Tables.load(spark, GraftTestSpark.sf, "documents").limit(0)
+        .write.parquet(s"$dir/documents.parquet")
+      assert(DedupOps.d14.fn(spark, dir).collect().isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("d14 split-straddle invariant is structural: no source on both sides") {
     val docs = graft.core.Tables.load(spark, GraftTestSpark.sf, "documents")
     val straddlers = docs

@@ -779,6 +779,28 @@ class StreamingOpsSpec extends AnyFunSuite {
       s"first snapshot must be a strict subset of the final one: $snaps")
   }
 
+  test("replays run on an isolated session: the caller's conf is never mutated") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try {
+      // (caller's value, micro-batch session's value), sampled mid-stream
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      graft.streaming.ReplayHarness.replayEvents(spark, GraftTestSpark.sf, "append",
+        sinkEnrich = Some((b, _) => {
+          seen.add((spark.conf.get(key), b.sparkSession.conf.get(key))); b
+        }))(_.select("event_id", "ts", "user_id", "event_type", "value")).count()
+      import scala.jdk.CollectionConverters._
+      assert(!seen.isEmpty && seen.asScala.forall(_ == (("8", "4"))),
+        s"expected the caller at 8 and the replay at 4 partitions, saw ${seen.asScala.toSet}")
+      intercept[IllegalStateException] {
+        graft.streaming.ReplayHarness.replayEvents(spark, GraftTestSpark.sf, "append")(
+          _ => throw new IllegalStateException("transform failed"))
+      }
+      assert(spark.conf.get(key) === "8", "a failed replay leaked its conf into the caller")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("st15 dedup eviction: late copies discarded, evicted keys re-emitted, live keys deduped") {
     import org.apache.spark.sql.functions._
     val streamed = graft.streaming.StreamingQueries.st15.fn(spark, GraftTestSpark.sf)
