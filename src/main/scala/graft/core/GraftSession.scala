@@ -81,12 +81,29 @@ object GraftSession {
     body(child)
   }
 
+  /** The `file:` filesystem for both Hadoop APIs: [[ForklessLocalFileSystem]]
+    * (FileSystem) and [[ForklessLocalFs]] (FileContext). Without the native
+    * libhadoop, which this engine does not ship, the stock local classes fork
+    * a `chmod` for every file and directory they create and a `readlink` for
+    * every checkpoint rename: about 35 processes per micro-batch of the
+    * paper's ingest pipeline (955 `chmod` and 816 `readlink` in one untraced
+    * perfbench `profile_ingest` run on 4 vCPUs), which held `walCommit` and
+    * `commitOffsets` at about 31 ms each per batch. That covers the offset
+    * and commit logs, state-store deltas, parquet appends and their
+    * committer, and every lake marker and manifest. A later
+    * `.config("spark.hadoop.fs.file.impl", ...)` on the builder still wins.
+    */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForklessLocalFs].getName)
+
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName("graft")
       .withExtensions(new graft.functions.GraftExtensions)
+      .config(LocalFsConf)
       .config("spark.local.dir", localDir)
       // Per-job commit-protocol overhead: the streaming replay sinks run one
       // tiny write job per micro-batch, so the protocol's fixed costs are a
