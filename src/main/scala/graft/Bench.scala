@@ -35,6 +35,9 @@ import org.apache.spark.sql.SparkSession
   *     registered query missing from it is listed in `ref_missing` — a
   *     query added after the recording (round 5's q60 was benched against
   *     nothing) is flagged loudly instead of silently skipping the gate.
+  *   - failure defense: a query that throws is recorded as -1 and cannot
+  *     enter any total, so it is listed under `failed` and the run exits
+  *     non-zero — a total that silently lacks a query is not a result.
   *   - the artifact splits `batch_total` from `streaming_replay_total`:
   *     st* rows replay fixed per-micro-batch machinery (state-store commits
   *     + WAL, constant in data size — see ReplayHarness scaladoc), so
@@ -111,6 +114,15 @@ object Bench {
     */
   def suspectGate(refTime: Double): Double =
     if (refTime >= 0.3) 2 * refTime else 3 * refTime + 0.5
+
+  /** Queries whose measurement threw (recorded as a negative time), by
+    * name. They cannot be part of `value` or `batch_total`, so the run
+    * lists them under `failed` and exits non-zero instead of reporting a
+    * total that silently lacks them.
+    */
+  def failedQueries(times: Seq[(String, Double)]): Seq[String] =
+    times.collect { case (name, t) if t < 0 => name }.sorted
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional arg: comma-separated query-name prefixes to run (iteration aid).
@@ -145,7 +157,9 @@ object Bench {
         val t = try {
           runOnce(fn) // warmup
           math.min(runOnce(fn), runOnce(fn))
-        } catch { case _: Throwable => -1.0 }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e"); -1.0
+        }
         // Inter-query hygiene: round 1's q24-q28 ran 13-54 s in the full bench
         // but 0.3-0.9 s in isolation — heap/GC debris from the (then) 494 s d4
         // poisoned later queries. A forced GC lets Spark's ContextCleaner drop
@@ -221,6 +235,7 @@ object Bench {
         // [first-pass time, re-measure time]; min is what `queries` reports
         s""""$n":[$t1,$t2]"""
     }.mkString("{", ",", "}")
+    val failed = failedQueries(adjudicated.map(a => a.name -> a.best))
     val gaps = refGaps(results.map(_._1), ref)
     if (gaps.nonEmpty)
       System.err.println(s"[bench] WARNING: no bench_ref entry for ${gaps.mkString(", ")} — " +
@@ -230,7 +245,7 @@ object Bench {
       s""""parallelism":$par}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""batch_total":$batchTotal,"streaming_replay_total":$streamingTotal,""" +
-      s""""queries":$qs,"contended":${strArr(adjudicated.filter(_.contended).map(_.name))},""" +
+      s""""queries":$qs,"failed":${strArr(failed)},"contended":${strArr(adjudicated.filter(_.contended).map(_.name))},""" +
       s""""still_slow":${strArr(adjudicated.filter(_.stillSlow).map(_.name))},""" +
       s""""remeasured":$remeasuredJson,"ref_missing":${strArr(gaps)},""" +
       s""""calibration":$calibJson,"sf":"$sfDir"}"""
@@ -240,5 +255,9 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, to_date}
+import org.apache.spark.sql.types.{DateType, StructType}
 
 import graft.core.Layout
 
@@ -117,8 +119,7 @@ object LakeSink {
     var epoch = -1L // unacquired until the instance's first batch
     (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val root = new Path(lakeDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (root, fs) = lakeFs(spark, lakeDir)
       if (epoch < 0) {
         epoch = acquireWriterEpoch(fs, root)
         // restart recovery: re-scope the sweep to everything committed
@@ -130,8 +131,7 @@ object LakeSink {
             dirty.toSeq.sorted.mkString(", "))
       }
       checkWriterFence(fs, root, epoch)
-      val marker = new Path(new Path(root, "_graft_commits"), batchId.toString)
-      val staging = new Path(new Path(root, StagingRoot), s"b$batchId")
+      val marker = markerPath(root, batchId)
       if (fs.exists(marker)) {
         // restart-from-checkpoint replay of an already-committed batch:
         // the ledger makes the WRITE a no-op (this exact path is what keeps
@@ -155,47 +155,30 @@ object LakeSink {
             "stateless — skipping the replay re-read")
         // A crash between marker and staging cleanup leaves the staged
         // copy behind — reclaim it here, where the marker proves it stale
-        fs.delete(staging, true)
+        fs.delete(stagingDir(root, batchId), true)
         System.err.println(s"[lake] batch $batchId already committed, skipping write")
       } else {
         // schema validation + registration before any data movement (see
         // [[registerSchemaIfWidened]]): a narrowing batch dies loudly with
         // the lake untouched — a poison batch, but a visible one
         registerSchemaIfWidened(fs, root, batchId, batch.schema)
-        // STAGE: materialize the batch invisibly (underscore root), already
-        // in its Hive leaf shape. mode=overwrite makes a replay of a
-        // half-staged crash self-healing.
-        val dated = batch.withColumn("event_date", to_date(col(tsCol)))
-        stagedLeafShape(dated).write.partitionBy("event_date").mode("overwrite")
-          .parquet(staging.toString)
-        faultInjector(batchId, "staged")
-        // COMMIT: roll back any crashed attempt's files, rename staged
-        // files into the leaves under per-batch deterministic names, and
-        // only then write the marker — the leaf listing doubles as the
-        // dirty-set bookkeeping (a null event time stages under Hive's
-        // default-partition leaf, which this records by its real name).
-        // Re-validate the fence at the two visibility edges: the first
-        // rename-in (data becomes readable) and the marker write (the
-        // batch becomes "committed" to every replay decision after it)
-        checkWriterFence(fs, root, epoch)
-        val committed = commitStaged(fs, root, staging, batchId, faultInjector)
+        // STAGE + COMMIT ([[stageAndCommit]]); the committed leaf list
+        // doubles as the dirty-set bookkeeping (a null event time stages
+        // under Hive's default-partition leaf, which this records by its
+        // real name)
+        val committed = stageAndCommit(fs, root, batch, tsCol, batchId, epoch,
+          statsCols, () => faultInjector(batchId, "staged"),
+          leaf => faultInjector(batchId, s"committed:$leaf"))
         dirty ++= committed
-        // zone maps for the files just renamed in (footer reads only) —
-        // before the marker, so a crash here replays both idempotently
-        if (statsCols.nonEmpty) writeFileStats(fs,
-          spark.sparkContext.hadoopConfiguration, root, batchId.toString,
-          committed.flatMap { l =>
-            fs.listStatus(new Path(root, l)).toSeq
-              .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$batchId-"))
-              .map(f => l -> f.getPath)
-          }, statsCols)
+        // the second visibility edge: the marker makes the batch
+        // "committed" to every replay decision after it
         checkWriterFence(fs, root, epoch)
         faultInjector(batchId, "pre-marker")
         // the marker IS the commit point, written create-no-overwrite (the
         // atomic commit exchange — see [[writeCommitMarker]]); its CONTENT
         // is the committed leaf list a successor's dirty-set rebuild reads
         writeCommitMarker(fs, marker, batchId, committed)
-        fs.delete(staging, true)
+        fs.delete(stagingDir(root, batchId), true)
       }
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
         checkWriterFence(fs, root, epoch)
@@ -204,28 +187,12 @@ object LakeSink {
           statsCols = statsCols)
         // horizon AFTER the sweep completes: a crash in between re-sweeps
         // (idempotent) rather than silently skipping the lost leaves
-        writeSmallFile(fs,
-          new Path(new Path(root, "_graft_commits"), SweepHorizonFile),
+        writeSmallFile(fs, new Path(ledgerDir(root), SweepHorizonFile),
           batchId.toString)
         dirty.clear()
       }
   }
 
-  /** Whether the micro-batch carries state-store work (window agg, dedup,
-    * join state, transformWithState, …) — the condition under which a
-    * committed-batch replay must still be materialized so every store
-    * partition loads and commits. The foreachBatch DataFrame is NOT the
-    * incremental plan (Spark hands an RDDScanExec over the incremental
-    * execution's output RDD), so the stateful operators are only visible
-    * in that RDD's DEPENDENCY LINEAGE: walk it for the state-store RDDs
-    * (`BaseStateStoreRDD` for aggs/dedup/arbitrary state,
-    * `StateStoreAwareZipPartitionsRDD` for stream-stream joins — matched
-    * by name so one trait move in Spark can't silently flip the detector
-    * to a false NEGATIVE... a miss here aborts the replay loudly with
-    * STATE_STORE_COMMIT_VALIDATION_FAILED rather than corrupting data). A
-    * batch whose leaves are not RDD handoffs was built by a direct batch
-    * caller (backfill) — no streaming state by construction.
-    */
   /** Staged-write layout: hash-distribute the batch by its partition key
     * before the partitioned write (guide §6 — the Iceberg
     * `write.distribution-mode=hash` / REBALANCE-before-write shape).
@@ -242,6 +209,21 @@ object LakeSink {
   private def stagedLeafShape(dated: DataFrame): DataFrame =
     dated.hint("rebalance", col("event_date"))
 
+  /** Whether the micro-batch carries state-store work (window agg, dedup,
+    * join state, transformWithState, …) — the condition under which a
+    * committed-batch replay must still be materialized so every store
+    * partition loads and commits. The foreachBatch DataFrame is NOT the
+    * incremental plan (Spark hands an RDDScanExec over the incremental
+    * execution's output RDD), so the stateful operators are only visible
+    * in that RDD's DEPENDENCY LINEAGE: walk it for the state-store RDDs
+    * (`BaseStateStoreRDD` for aggs/dedup/arbitrary state,
+    * `StateStoreAwareZipPartitionsRDD` for stream-stream joins — matched
+    * by name so one trait move in Spark can't silently flip the detector
+    * to a false NEGATIVE... a miss here aborts the replay loudly with
+    * STATE_STORE_COMMIT_VALIDATION_FAILED rather than corrupting data). A
+    * batch whose leaves are not RDD handoffs was built by a direct batch
+    * caller (backfill) — no streaming state by construction.
+    */
   private[graft] def hasStatefulOperator(batch: DataFrame): Boolean = {
     val roots = batch.queryExecution.executedPlan.collectLeaves().collect {
       case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd
@@ -261,19 +243,62 @@ object LakeSink {
 
   private val WriterRoot = "_graft_writer"
   private val SweepHorizonFile = "_sweep_horizon"
+  private val LedgerRoot = "_graft_commits"
+  private val StagingRoot = "_staging"
+  private val TmpRoot = "_compact_tmp"
+  private val LeafPrefix = "event_date="
+
+  /** The lake root and the filesystem it lives on. */
+  private def lakeFs(spark: SparkSession, lakeDir: String): (Path, FileSystem) = {
+    val root = new Path(lakeDir)
+    (root, root.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  private def ledgerDir(root: Path): Path = new Path(root, LedgerRoot)
+  private def markerPath(root: Path, id: Long): Path = new Path(ledgerDir(root), id.toString)
+  private def stagingDir(root: Path, b: Long): Path =
+    new Path(new Path(root, StagingRoot), s"b$b")
+
+  /** Children of `dir` named by a plain number (ledger ids, writer epochs,
+    * history and deletion-vector generations, change records), in numeric
+    * order; empty when `dir` does not exist.
+    */
+  private def numbered(fs: FileSystem, dir: Path): Seq[(Long, FileStatus)] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
+      .filter(_.getPath.getName.forall(_.isDigit))
+      .map(s => s.getPath.getName.toLong -> s).sortBy(_._1)
+
+  /** Committed ids: the numeric marker files of `_graft_commits`, ascending. */
+  private def ledgerIds(fs: FileSystem, root: Path): Seq[Long] =
+    numbered(fs, ledgerDir(root)).collect { case (id, s) if s.isFile => id }
+
+  /** Retained `_graft_history/<B>` generations, ascending by horizon. */
+  private def historyGens(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    numbered(fs, new Path(root, HistoryRoot))
+      .collect { case (b, s) if s.isDirectory => b -> s.getPath }
+
+  /** The `event_date=` leaf directories directly under `dir` (the root, a
+    * history generation, a staging or sweep directory), by name.
+    */
+  private def leafDirs(fs: FileSystem, dir: Path): Seq[Path] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(LeafPrefix))
+      .map(_.getPath).sortBy(_.getName)
+
+  /** The parquet data files directly under `dir`, by name. */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
 
   /** Highest claimed writer epoch (0 when none). The listing is a single
     * LIST of a directory holding O(writer generations) tiny files —
     * bounded by [[vacuum]]'s pruning, not by stream lifetime.
     */
-  private def maxWriterEpoch(fs: org.apache.hadoop.fs.FileSystem, root: Path): Long = {
-    val dir = new Path(root, WriterRoot)
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.nonEmpty &&
-        s.getPath.getName.forall(_.isDigit))
-      .map(_.getPath.getName.toLong).foldLeft(0L)(math.max)
-  }
+  private def maxWriterEpoch(fs: FileSystem, root: Path): Long =
+    numbered(fs, new Path(root, WriterRoot))
+      .collect { case (e, s) if s.isFile => e }.foldLeft(0L)(math.max)
 
   /** Claim the next writer epoch with create-no-overwrite (atomic on HDFS
     * and object stores with conditional put; best-effort on raw local FS).
@@ -281,7 +306,7 @@ object LakeSink {
     * the next number — the LOSER of the overall fence is decided by
     * [[checkWriterFence]] at every later mutation, not here.
     */
-  private def acquireWriterEpoch(fs: org.apache.hadoop.fs.FileSystem, root: Path): Long = {
+  private def acquireWriterEpoch(fs: FileSystem, root: Path): Long = {
     val dir = new Path(root, WriterRoot)
     fs.mkdirs(dir)
     var e = maxWriterEpoch(fs, root) + 1
@@ -302,22 +327,29 @@ object LakeSink {
     * turn the moment the restarted stream claims its own). Pass the result
     * as `fenceEpoch`.
     */
-  def claimWriterEpoch(
-      spark: org.apache.spark.sql.SparkSession, lakeDir: String): Long = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def claimWriterEpoch(spark: SparkSession, lakeDir: String): Long = {
+    val (root, fs) = lakeFs(spark, lakeDir)
     acquireWriterEpoch(fs, root)
   }
 
   /** Fail loudly if a newer writer has claimed this lake. */
-  private def checkWriterFence(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, epoch: Long): Unit = {
+  private def checkWriterFence(fs: FileSystem, root: Path, epoch: Long): Unit = {
     val m = maxWriterEpoch(fs, root)
     if (m > epoch) throw new IllegalStateException(
       s"writer fenced: this sink holds epoch $epoch but epoch $m has been " +
         s"claimed for $root — a newer instance owns the lake; refusing to " +
         "interleave commits (zombie driver after a failover, or two jobs " +
         "configured onto one lakeDir)")
+  }
+
+  /** The epoch a one-shot verb writes under — the caller's claim, or a
+    * fresh one acquired here (fencing out a paused stream writer: the verb
+    * IS the writer while it runs) — validated before anything moves.
+    */
+  private def verbEpoch(fs: FileSystem, root: Path, fenceEpoch: Option[Long]): Long = {
+    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
+    checkWriterFence(fs, root, epoch)
+    epoch
   }
 
   /** Rebuild the sweep scope a crashed writer lost: union of the leaf
@@ -330,26 +362,20 @@ object LakeSink {
     * `minFilesToCompact` gate keeps the over-sweep a cheap listing pass on
     * leaves that turn out clean.
     */
-  private def rebuildDirtySet(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Set[String] = {
-    val ledger = new Path(root, "_graft_commits")
-    if (!fs.exists(ledger)) return Set.empty
+  private def rebuildDirtySet(fs: FileSystem, root: Path): Set[String] = {
+    val ids = ledgerIds(fs, root)
+    if (ids.isEmpty) return Set.empty
     val horizon = {
-      val p = new Path(ledger, SweepHorizonFile)
+      val p = new Path(ledgerDir(root), SweepHorizonFile)
       if (!fs.exists(p)) -1L
       else try readSmallFile(fs, p).trim.toLong
       catch { case scala.util.control.NonFatal(_) => -1L } // torn write: over-sweep, never skip
     }
-    val markers = fs.listStatus(ledger).toSeq
-      .filter(s => s.isFile && s.getPath.getName.nonEmpty &&
-        s.getPath.getName.forall(_.isDigit) && s.getPath.getName.toLong > horizon)
-    val perMarker = markers.map(s => readMarkerLeaves(fs, s.getPath))
+    val perMarker = ids.filter(_ > horizon).map(id => readMarkerLeaves(fs, markerPath(root, id)))
     if (perMarker.exists(_.isEmpty)) {
-      System.err.println(s"[lake] torn commit marker under $ledger — " +
+      System.err.println(s"[lake] torn commit marker under ${ledgerDir(root)} — " +
         "over-approximating the rebuilt dirty set to every live leaf")
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-        .map(_.getPath.getName).toSet
+      leafDirs(fs, root).map(_.getName).toSet
     } else perMarker.flatMap(_.get).toSet
   }
 
@@ -360,24 +386,6 @@ object LakeSink {
     */
   private[streaming] val MarkerEnd = "#end"
 
-  /** THE COMMIT EXCHANGE: the batch becomes committed exactly when its
-    * ledger marker is CREATED, and creation is create-no-overwrite — the
-    * same atomic FS primitive the writer fence uses, here closing the
-    * fence's residual check-then-act window: two writers that both passed
-    * their last fence validation and raced one batch's commit cannot both
-    * win; the loser's create throws and this sink dies LOUDLY instead of
-    * double-marking. Data stays exactly-once regardless of who wins:
-    * deterministic replay gives both writers identical rows under identical
-    * `gb<batchId>-*` names, so the surviving files are the winner's and the
-    * loser renamed equivalent content over them before losing the exchange.
-    *
-    * A crash mid-content-write leaves an EXISTING marker with a truncated
-    * leaf list — the batch is genuinely committed (every rename preceded
-    * the marker), but the dirty-set bookkeeping would silently shrink;
-    * [[MarkerEnd]] makes that torn state detectable and
-    * [[rebuildDirtySet]] over-approximates it to every live leaf rather
-    * than under-sweeping.
-    */
   /** First line of a MERGE commit's marker: the commit's files are leaf
     * REWRITES (`gc<id>`), not appends — consumers that serve appends by
     * lineage name ([[tailCommits]]) must treat it as a boundary, not
@@ -423,8 +431,26 @@ object LakeSink {
     */
   private[streaming] val MarkerOcc = "#occ"
 
+  /** THE COMMIT EXCHANGE: the batch becomes committed exactly when its
+    * ledger marker is CREATED, and creation is create-no-overwrite — the
+    * same atomic FS primitive the writer fence uses, here closing the
+    * fence's residual check-then-act window: two writers that both passed
+    * their last fence validation and raced one batch's commit cannot both
+    * win; the loser's create throws and this sink dies LOUDLY instead of
+    * double-marking. Data stays exactly-once regardless of who wins:
+    * deterministic replay gives both writers identical rows under identical
+    * `gb<batchId>-*` names, so the surviving files are the winner's and the
+    * loser renamed equivalent content over them before losing the exchange.
+    *
+    * A crash mid-content-write leaves an EXISTING marker with a truncated
+    * leaf list — the batch is genuinely committed (every rename preceded
+    * the marker), but the dirty-set bookkeeping would silently shrink;
+    * [[MarkerEnd]] makes that torn state detectable and
+    * [[rebuildDirtySet]] over-approximates it to every live leaf rather
+    * than under-sweeping.
+    */
   private def writeCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem, marker: Path, batchId: Long,
+      fs: FileSystem, marker: Path, batchId: Long,
       leaves: Seq[String], markerTag: Option[String] = None): Unit = {
     val out =
       try fs.create(marker, false)
@@ -439,49 +465,38 @@ object LakeSink {
     finally out.close()
   }
 
-  /** A committed marker's leaf list, or None when the content is torn (no
-    * [[MarkerEnd]] sentinel — a crash interrupted the content write after
-    * the atomic create won the exchange).
+  /** The non-empty lines of a [[MarkerEnd]]-terminated file (commit marker,
+    * stats sidecar, deletion-vector target manifest) before its sentinel,
+    * or None when the content is torn — a crash interrupted the write, so
+    * completeness is proven by the sentinel, never by existence.
     */
-  private def readMarkerLeaves(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[Seq[String]] = {
+  private def readSealed(fs: FileSystem, p: Path): Option[Seq[String]] = {
     val lines = readSmallFile(fs, p).split('\n').toSeq
-    if (lines.lastOption.contains(MarkerEnd))
-      Some(lines.dropRight(1).filter(l => l.nonEmpty && !l.startsWith("#")))
+    if (lines.lastOption.contains(MarkerEnd)) Some(lines.dropRight(1).filter(_.nonEmpty))
     else None
   }
 
-  /** Whether a commit marker classifies its commit as a rewrite (merge).
-    * Readable even off most torn markers — the tag is the first line.
+  /** A committed marker's leaf list (its tag line dropped), or None when
+    * the content is torn.
     */
-  private def isRewriteMarker(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
-    readSmallFile(fs, p).split('\n').headOption.contains(MarkerRewrite)
-
-  /** Whether a commit marker classifies its commit as a deletion-vector
-    * commit. Same first-line discipline as [[isRewriteMarker]].
-    */
-  private def isDvMarker(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
-    readSmallFile(fs, p).split('\n').headOption.contains(MarkerDv)
+  private def readMarkerLeaves(fs: FileSystem, p: Path): Option[Seq[String]] =
+    readSealed(fs, p).map(_.filterNot(_.startsWith("#")))
 
   /** The commit marker's first-line tag, if any — readable even off most
     * torn markers (the tag is written first; [[MarkerEnd]] alone means an
     * untagged empty-leaf-list marker, not a tag).
     */
-  private def markerTagOf(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
+  private def markerTagOf(fs: FileSystem, p: Path): Option[String] =
     readSmallFile(fs, p).split('\n').headOption
       .filter(l => l.startsWith("#") && l != MarkerEnd)
 
-  private def writeSmallFile(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path, content: String): Unit = {
+  private def writeSmallFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+  private def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -492,49 +507,76 @@ object LakeSink {
     } finally in.close()
   }
 
-  private val StagingRoot = "_staging"
-
   /** The staged-commit step: for each leaf the staged batch holds, delete
-    * the `gb<batchId>-*` files a CRASHED attempt of this same batch may
-    * have left in the target (the rollback that makes the commit
-    * idempotent), then rename the staged files in under deterministic
-    * per-batch names. Returns the committed leaf names (the dirty set).
-    * Correctness leans on Spark's deterministic-replay contract: a
-    * replayed batch carries the same rows, so the leaves it stages are a
-    * superset of any crashed attempt's — rollback by batch-id prefix in
-    * exactly those leaves reaches every orphan.
+    * the `<lineage>*` files a CRASHED attempt of this same batch may have
+    * left in the target (the rollback that makes the commit idempotent),
+    * then rename the staged files in under deterministic per-batch names
+    * `<lineage>p<k>.snappy.parquet` (`gb<batchId>-` for the single-writer
+    * verbs, `gb<id>-w<writerId>-` for [[appendBatchOcc]]). Returns each
+    * committed leaf name with the files renamed into it. Correctness leans
+    * on Spark's deterministic-replay contract: a replayed batch carries the
+    * same rows, so the leaves it stages are a superset of any crashed
+    * attempt's — rollback by lineage prefix in exactly those leaves reaches
+    * every orphan. `onCommitted(leaf)` fires once a leaf's renames are done.
     */
   private def commitStaged(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       root: Path,
       staging: Path,
-      batchId: Long,
-      faultInjector: (Long, String) => Unit): Seq[String] = {
-    val leaves =
-      if (!fs.exists(staging)) Seq.empty
-      else fs.listStatus(staging).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .map(_.getPath).sortBy(_.getName.toString)
+      lineage: String,
+      onCommitted: String => Unit = _ => ()): Seq[(String, Seq[Path])] = {
+    val leaves = if (!fs.exists(staging)) Seq.empty else leafDirs(fs, staging)
     leaves.map { sLeaf =>
       val target = new Path(root, sLeaf.getName)
       fs.mkdirs(target)
       fs.listStatus(target)
-        .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$batchId-"))
+        .filter(f => f.isFile && f.getPath.getName.startsWith(lineage))
         .foreach { f =>
           System.err.println(s"[lake] rolling back crashed-attempt file ${f.getPath.getName}")
           fs.delete(f.getPath, false)
         }
-      val parts = fs.listStatus(sLeaf).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName.toString)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        val dst = new Path(target, s"gb$batchId-p$i.snappy.parquet")
+      val placed = parquetFiles(fs, sLeaf).zipWithIndex.map { case (f, i) =>
+        val dst = new Path(target, s"${lineage}p$i.snappy.parquet")
         require(fs.rename(f.getPath, dst),
           s"staged commit rename failed: ${f.getPath} -> $dst")
+        dst
       }
-      faultInjector(batchId, s"committed:${sLeaf.getName}")
-      sLeaf.getName
+      onCommitted(sLeaf.getName)
+      sLeaf.getName -> placed
     }
+  }
+
+  /** The staged APPEND commit every single-writer append verb shares
+    * ([[datePartitioned]], [[appendBatch]], [[mergeInto]]'s inserts):
+    * STAGE the rows invisibly under `_staging/b<b>` (underscore root)
+    * already in their Hive leaf shape — mode=overwrite makes a replay of a
+    * half-staged crash self-healing — then re-validate the fence at the
+    * first visibility edge, [[commitStaged]] under `gb<b>-` lineage, and
+    * record zone maps for exactly the files just renamed in (footer reads
+    * only; before the caller's marker, so a crash here replays both
+    * idempotently). Returns the committed leaves. The caller owns schema
+    * registration, the second fence check, the marker and the staging
+    * cleanup.
+    */
+  private def stageAndCommit(
+      fs: FileSystem,
+      root: Path,
+      rows: DataFrame,
+      tsCol: String,
+      b: Long,
+      epoch: Long,
+      statsCols: Seq[String],
+      onStaged: () => Unit = () => (),
+      onCommitted: String => Unit = _ => ()): Seq[String] = {
+    stagedLeafShape(rows.withColumn("event_date", to_date(col(tsCol))))
+      .write.partitionBy("event_date").mode("overwrite")
+      .parquet(stagingDir(root, b).toString)
+    onStaged()
+    checkWriterFence(fs, root, epoch)
+    val committed = commitStaged(fs, root, stagingDir(root, b), s"gb$b-", onCommitted)
+    writeFileStats(fs, rows.sparkSession.sparkContext.hadoopConfiguration, root,
+      b.toString, committed.flatMap { case (l, fl) => fl.map(l -> _) }, statsCols)
+    committed.map(_._1)
   }
 
   /** Retention VACUUM — the third lifecycle verb after append and compact:
@@ -593,15 +635,14 @@ object LakeSink {
   val OccReapGraceMs: Long = 15L * 60 * 1000
 
   def vacuum(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       before: java.time.LocalDate,
       ledgerKeep: Long = 1000L,
       fenceEpoch: Option[Long] = None,
       occReapGraceMs: Long = OccReapGraceMs): (Seq[String], Int) = {
     val occReapHorizon = System.currentTimeMillis() - occReapGraceMs
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     if (!fs.exists(root)) return (Seq.empty, 0)
     requireNotClone(fs, root, "vacuum")
     fenceEpoch.foreach(e => checkWriterFence(fs, root, e))
@@ -610,28 +651,27 @@ object LakeSink {
     recoverSweeps(fs, root)
     fenceEpoch.foreach(e => checkWriterFence(fs, root, e))
     def expired(leafName: String): Boolean = {
-      val d = leafName.stripPrefix("event_date=")
+      val d = leafName.stripPrefix(LeafPrefix)
       try java.time.LocalDate.parse(d).isBefore(before)
       catch { case _: java.time.format.DateTimeParseException => false }
     }
-    val dropped = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      .filter(s => expired(s.getPath.getName))
-      .map { s =>
-        fs.delete(s.getPath, true)
-        System.err.println(s"[lake] vacuumed ${s.getPath.getName}")
-        s.getPath.getName
-      }
-    val ledger = new Path(root, "_graft_commits")
+    val dropped = leafDirs(fs, root).filter(l => expired(l.getName)).map { l =>
+      fs.delete(l, true)
+      System.err.println(s"[lake] vacuumed ${l.getName}")
+      l.getName
+    }
+    // ONE ledger listing serves every ledger-bounded step below (no step
+    // before the marker pruning adds or removes a marker)
+    val ids = ledgerIds(fs, root)
     // reclaim staged batches whose marker landed but whose cleanup crashed
     // (BEFORE marker pruning — the marker is the proof of staleness; an
     // unmarkered staging dir belongs to a batch the engine will replay and
     // is left for that replay's overwrite)
     val stagingRoot = new Path(root, StagingRoot)
+    val marked = ids.map(_.toString).toSet
     if (fs.exists(stagingRoot)) fs.listStatus(stagingRoot).foreach { s =>
       val id = s.getPath.getName.stripPrefix("b")
-      if (id.nonEmpty && id.forall(_.isDigit) &&
-          fs.exists(new Path(ledger, id))) {
+      if (id.nonEmpty && id.forall(_.isDigit) && marked(id)) {
         System.err.println(s"[lake] reclaiming committed staging ${s.getPath.getName}")
         fs.delete(s.getPath, true)
       } else if (s.getPath.getName.startsWith("occ-") &&
@@ -657,41 +697,35 @@ object LakeSink {
     // BELOW the ledger's retained floor are also exempt — their markers
     // were legitimately pruned by an earlier vacuum, so marker absence
     // there proves nothing (reaping them would destroy committed rows).
-    val ledgerFloor: Option[Long] = {
-      val ids = if (!fs.exists(ledger)) Seq.empty else fs.listStatus(ledger).toSeq
-        .filter(s => s.isFile && s.getPath.getName.nonEmpty &&
-          s.getPath.getName.forall(_.isDigit))
-        .map(_.getPath.getName.toLong)
-      if (ids.isEmpty) None else Some(ids.min)
-    }
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      .foreach { leaf =>
-        fs.listStatus(leaf.getPath)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("gb") &&
-            f.getPath.getName.contains("-w"))
-          .foreach { f =>
-            val n = f.getPath.getName
-            val id = n.stripPrefix("gb").takeWhile(_.isDigit)
-            val wid = n.drop(2 + id.length).stripPrefix("-w").takeWhile(_ != '-')
-            val committed = id.nonEmpty && {
-              val m = new Path(ledger, id)
-              fs.exists(m) && (markerTagOf(fs, m) match {
-                case Some(tag) =>
-                  val words = tag.split(' ')
-                  words.headOption.contains(MarkerOcc) && words.lift(1).contains(wid)
-                case None => false
-              })
-            }
-            val aboveFloor =
-              id.nonEmpty && ledgerFloor.exists(floor => id.toLong >= floor)
-            val agedOut = f.getModificationTime < occReapHorizon
-            if (!committed && wid.nonEmpty && aboveFloor && agedOut) {
-              System.err.println(s"[lake] reclaiming uncommitted OCC leftover $n")
-              fs.delete(f.getPath, false)
-            }
+    // Marker presence is probed live, not off the listing above: such a
+    // writer may land its marker while this pass runs.
+    val ledgerFloor: Option[Long] = ids.headOption
+    leafDirs(fs, root).foreach { leaf =>
+      fs.listStatus(leaf)
+        .filter(f => f.isFile && f.getPath.getName.startsWith("gb") &&
+          f.getPath.getName.contains("-w"))
+        .foreach { f =>
+          val n = f.getPath.getName
+          val id = n.stripPrefix("gb").takeWhile(_.isDigit)
+          val wid = n.drop(2 + id.length).stripPrefix("-w").takeWhile(_ != '-')
+          val committed = id.nonEmpty && {
+            val m = new Path(ledgerDir(root), id)
+            fs.exists(m) && (markerTagOf(fs, m) match {
+              case Some(tag) =>
+                val words = tag.split(' ')
+                words.headOption.contains(MarkerOcc) && words.lift(1).contains(wid)
+              case None => false
+            })
           }
-      }
+          val aboveFloor =
+            id.nonEmpty && ledgerFloor.exists(floor => id.toLong >= floor)
+          val agedOut = f.getModificationTime < occReapHorizon
+          if (!committed && wid.nonEmpty && aboveFloor && agedOut) {
+            System.err.println(s"[lake] reclaiming uncommitted OCC leftover $n")
+            fs.delete(f.getPath, false)
+          }
+        }
+    }
     // time-travel history: pre-sweep generations serve snapshots older
     // than a compaction horizon ([[readAsOf]]) — retention-expired leaves
     // inside them fall with the live leaf, and whole generations below
@@ -699,106 +733,62 @@ object LakeSink {
     // no retained marker can name a batch that deep; an emptied
     // generation directory is removed outright. This is the vacuum
     // window: after it, readAsOf fails loudly for the pruned range.
-    val histRoot = new Path(root, HistoryRoot)
-    if (fs.exists(histRoot)) {
-      val markerMax = {
-        val ids = if (!fs.exists(ledger)) Seq.empty else fs.listStatus(ledger).toSeq
-          .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-          .map(_.getPath.getName.toLong)
-        if (ids.isEmpty) Long.MinValue else ids.max
+    val markerMax = ids.lastOption.getOrElse(Long.MinValue)
+    val retainedGens: Seq[Path] = historyGens(fs, root).flatMap { case (horizon, g) =>
+      if (markerMax != Long.MinValue && horizon < markerMax - ledgerKeep) {
+        fs.delete(g, true)
+        System.err.println(s"[lake] vacuumed history generation $horizon")
+        None
+      } else {
+        leafDirs(fs, g).filter(l => expired(l.getName)).foreach(fs.delete(_, true))
+        if (fs.listStatus(g).isEmpty) { fs.delete(g, true); None } else Some(g)
       }
-      fs.listStatus(histRoot)
-        .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-        .foreach { g =>
-          val horizon = g.getPath.getName.toLong
-          if (markerMax != Long.MinValue && horizon < markerMax - ledgerKeep) {
-            fs.delete(g.getPath, true)
-            System.err.println(s"[lake] vacuumed history generation $horizon")
-          } else {
-            fs.listStatus(g.getPath)
-              .filter(l => l.isDirectory && expired(l.getPath.getName))
-              .foreach(l => fs.delete(l.getPath, true))
-            if (fs.listStatus(g.getPath).isEmpty) fs.delete(g.getPath, true)
-          }
-        }
     }
     // writer-epoch ledger: only the MAX epoch is ever consulted by the
     // fence, so every lower token is dead weight — keep the top one
-    val writerDir = new Path(root, WriterRoot)
-    if (fs.exists(writerDir)) {
-      val epochs = fs.listStatus(writerDir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-      if (epochs.size > 1) {
-        val top = epochs.map(_.getPath.getName.toLong).max
-        epochs.filter(_.getPath.getName.toLong < top)
-          .foreach(s => fs.delete(s.getPath, false))
-      }
-    }
-    val prunedMarkers = if (!fs.exists(ledger)) 0
-    else {
-      val ids = fs.listStatus(ledger).toSeq
-        .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-      // empty-ledger guard: Long.MinValue - ledgerKeep would WRAP to a huge
-      // positive horizon; harmless while only the filter below consumes it,
-      // but any second consumer (logging, metrics) would act on the corrupt
-      // value — make the empty case an explicit no-prune horizon instead
-      val horizon =
-        if (ids.isEmpty) Long.MinValue
-        else ids.map(_.getPath.getName.toLong).max - ledgerKeep
-      val old = ids.filter(_.getPath.getName.toLong < horizon)
-      old.foreach(s => fs.delete(s.getPath, false))
-      // change records ride the same retention bound as their markers: a
-      // change record whose marker is gone is unservable ([[tailChanges]]
-      // requires the marker) — dead weight either way
-      val cdcDir = new Path(root, CdcRoot)
-      if (fs.exists(cdcDir)) fs.listStatus(cdcDir)
-        .filter(s => s.getPath.getName.forall(_.isDigit) &&
-          s.getPath.getName.toLong < horizon)
-        .foreach(s => fs.delete(s.getPath, true))
-      old.size
-    }
+    val epochs = numbered(fs, new Path(root, WriterRoot)).filter(_._2.isFile)
+    if (epochs.size > 1) epochs.init.foreach(e => fs.delete(e._2.getPath, false))
+    // empty-ledger guard: Long.MinValue - ledgerKeep would WRAP to a huge
+    // positive horizon; harmless while only the filter below consumes it,
+    // but any second consumer (logging, metrics) would act on the corrupt
+    // value — make the empty case an explicit no-prune horizon instead
+    val ledgerHorizon = if (ids.isEmpty) Long.MinValue else markerMax - ledgerKeep
+    val (old, keptIds) = ids.partition(_ < ledgerHorizon)
+    old.foreach(id => fs.delete(markerPath(root, id), false))
+    // change records ride the same retention bound as their markers: a
+    // change record whose marker is gone is unservable ([[tailChanges]]
+    // requires the marker) — dead weight either way
+    numbered(fs, new Path(root, CdcRoot)).filter(_._1 < ledgerHorizon)
+      .foreach(c => fs.delete(c._2.getPath, true))
+    val prunedMarkers = old.size
     // deletion-vector generations: LIVE-LOAD-BEARING until every file they
     // reference is gone (a DV on a never-compacted leaf keeps its rows
     // hidden forever — pruning it would UN-delete them), so the bound is
     // target liveness, not marker age: a generation is dead only when none
     // of its `_targets` exists under the root or any RETAINED history
-    // generation (checked AFTER the history pruning above, so the retained
-    // set is final). A generation with no readable manifest is kept —
+    // generation (after the history pruning above, so the retained set is
+    // final). A generation with no readable manifest is kept —
     // conservative, like every advisory sidecar here. Stale `.tmp` stages
     // whose generation (or marker) landed are reaped like staging dirs.
     val dvRoot = new Path(root, DvRoot)
-    if (fs.exists(dvRoot)) {
-      val retainedGens: Seq[String] =
-        if (!fs.exists(histRoot)) Seq.empty
-        else fs.listStatus(histRoot).toSeq
-          .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-          .map(_.getPath.getName)
-      fs.listStatus(dvRoot).foreach { g =>
-        val name = g.getPath.getName
-        if (name.startsWith(".tmp")) {
-          val id = name.stripPrefix(".tmp")
-          if (id.nonEmpty && id.forall(_.isDigit) &&
-              (fs.exists(new Path(dvRoot, id)) || fs.exists(new Path(ledger, id))))
+    val keptMarked = keptIds.map(_.toString).toSet
+    if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { g =>
+      val name = g.getPath.getName
+      if (name.startsWith(".tmp")) {
+        val id = name.stripPrefix(".tmp")
+        if (id.nonEmpty && id.forall(_.isDigit) &&
+            (fs.exists(new Path(dvRoot, id)) || keptMarked(id)))
+          fs.delete(g.getPath, true)
+      } else if (name.nonEmpty && name.forall(_.isDigit)) {
+        val manifest = new Path(g.getPath, DvTargetsFile)
+        val targets = if (!fs.exists(manifest)) None else readSealed(fs, manifest)
+        targets.foreach { ts =>
+          val liveSomewhere = ts.exists { t =>
+            fs.exists(new Path(root, t)) || retainedGens.exists(h => fs.exists(new Path(h, t)))
+          }
+          if (!liveSomewhere) {
             fs.delete(g.getPath, true)
-        } else if (name.nonEmpty && name.forall(_.isDigit)) {
-          val manifest = new Path(g.getPath, DvTargetsFile)
-          val targets: Option[Seq[String]] =
-            if (!fs.exists(manifest)) None
-            else {
-              val lines = readSmallFile(fs, manifest).split('\n').toSeq
-              if (lines.lastOption.contains(MarkerEnd))
-                Some(lines.dropRight(1).filter(_.nonEmpty))
-              else None
-            }
-          targets.foreach { ts =>
-            val liveSomewhere = ts.exists { t =>
-              fs.exists(new Path(root, t)) ||
-                retainedGens.exists(h => fs.exists(new Path(new Path(histRoot, h), t)))
-            }
-            if (!liveSomewhere) {
-              fs.delete(g.getPath, true)
-              System.err.println(s"[lake] vacuumed dead deletion-vector generation $name")
-            }
+            System.err.println(s"[lake] vacuumed dead deletion-vector generation $name")
           }
         }
       }
@@ -806,28 +796,8 @@ object LakeSink {
     // fold the zone-map sidecars: one file per write accumulates exactly
     // like the ledger, but stats for OLD data stay VALUABLE (they are what
     // prunes the long tail at read time), so the bound is consolidation,
-    // not deletion — merge every sidecar into one, dropping entries whose
-    // files no longer exist (retention-dropped, compaction-rewritten,
-    // merge-rewritten). A crash mid-fold leaves either the old sidecars
-    // (fold lost, retried next vacuum) or a torn merged file readers skip
-    // — pruning degrades to scanning, never to wrong results.
-    val statsDir = new Path(root, StatsRoot)
-    if (fs.exists(statsDir)) {
-      val sidecars = fs.listStatus(statsDir).toSeq.filter(_.isFile).map(_.getPath)
-      if (sidecars.size > 1) {
-        val live = statsLines(fs, root).filter { l =>
-          l.split('\t') match {
-            case Array(key, _, _, _) => fs.exists(new Path(root, key))
-            case _ => false
-          }
-        }.distinct
-        writeSmallFile(fs, new Path(statsDir, "folded"),
-          (live :+ MarkerEnd).mkString("\n"))
-        sidecars.filter(_.getName != "folded").foreach(p => fs.delete(p, false))
-        System.err.println(s"[lake] folded ${sidecars.size} stats sidecars " +
-          s"into one (${live.size} live entries)")
-      }
-    }
+    // not deletion
+    foldStats(fs, root, minSidecars = 2)
     (dropped, prunedMarkers)
   }
 
@@ -880,11 +850,10 @@ object LakeSink {
     * remains the job of the WRITE paths (every sweep and vacuum).
     */
   def readAsOf(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       asOf: Long): DataFrame = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "time travel (readAsOf)")
 
@@ -896,9 +865,7 @@ object LakeSink {
     // files of one directory filtered to lineage <= asOf; Left(horizon) if
     // a rewrite beyond asOf makes this directory's content unservable
     def serveDir(dir: Path, leafName: String): Either[Long, Seq[String]] = {
-      val fstats = fs.listStatus(dir).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName.toString)
+      val fstats = parquetFiles(fs, dir)
       val over = fstats.flatMap { f =>
         val n = f.getPath.getName
         if (n.startsWith("gc") && lineageId(n, "gc", leafName) > asOf)
@@ -923,20 +890,13 @@ object LakeSink {
     // old child whose target exists is a stale orphan for the next sweep's
     // healing, not for this reader)
     def childLeafNames(dir: Path): Seq[String] =
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .map(_.getPath.getName)
+      if (!fs.exists(dir)) Seq.empty else leafDirs(fs, dir).map(_.getName)
     // ONE listing per history generation, answered from memory after —
     // retainedGens/fromHistory per-leaf fs.exists probes were
     // O(leaves x generations) metadata RPCs per snapshot read, expensive
     // on object stores for lakes with long restore/compaction history
     val genLeaves: Map[Long, Set[String]] =
-      if (!fs.exists(histRoot)) Map.empty
-      else fs.listStatus(histRoot).toSeq
-        .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-        .map(g => g.getPath.getName.toLong -> childLeafNames(g.getPath).toSet)
-        .toMap
+      historyGens(fs, root).map { case (b, g) => b -> childLeafNames(g).toSet }.toMap
     // generations that retain this leaf beyond asOf, if any — empty both
     // when the leaf was never swept and when it exists only at or before
     // asOf-era history
@@ -974,7 +934,7 @@ object LakeSink {
       def hist = fromHistory(leafName)
       val candidates = Seq(
         (new Path(root, leafName), leafName),
-        (new Path(new Path(root, "_compact_tmp"), leafName), s"_compact_tmp/$leafName"),
+        (new Path(new Path(root, TmpRoot), leafName), s"$TmpRoot/$leafName"),
         (new Path(new Path(root, OldRoot), leafName), s"$OldRoot/$leafName"))
       candidates.find(c => fs.exists(c._1)) match {
         case Some((dir, tag)) => tagged(dir, tag, leafName).getOrElse(hist)
@@ -993,7 +953,7 @@ object LakeSink {
     // generation, where pre-restore snapshots must still find it
     val histLeafNames: Seq[String] = genLeaves.values.flatten.toSeq
     val files = (childLeafNames(root) ++
-        childLeafNames(new Path(root, "_compact_tmp")) ++
+        childLeafNames(new Path(root, TmpRoot)) ++
         childLeafNames(new Path(root, OldRoot)) ++ histLeafNames)
       .distinct.sorted
       .flatMap(serveLeaf)
@@ -1039,33 +999,18 @@ object LakeSink {
     * per range so a crash between the two replays harmlessly.
     */
   def tailCommits(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       fromExclusive: Long,
       toInclusive: Long): DataFrame = {
     require(fromExclusive <= toInclusive,
       s"empty tail range ($fromExclusive, $toInclusive]")
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledger = new Path(root, "_graft_commits")
-    require(fs.exists(ledger), s"no commit ledger under $lakeDir — " +
+    val (root, fs) = lakeFs(spark, lakeDir)
+    require(fs.exists(ledgerDir(root)), s"no commit ledger under $lakeDir — " +
       "ledger tailing needs a LakeSink-written lake")
-    val histRoot = new Path(root, HistoryRoot)
-    val horizons: Seq[Long] =
-      if (!fs.exists(histRoot)) Seq.empty
-      else fs.listStatus(histRoot).toSeq
-        .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-        .map(_.getPath.getName.toLong).sorted
-    def allLeafNames: Seq[String] = {
-      val live = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-        .map(_.getPath.getName)
-      val hist = horizons.flatMap { b =>
-        fs.listStatus(new Path(histRoot, b.toString)).toSeq
-          .filter(_.isDirectory).map(_.getPath.getName)
-      }
-      (live ++ hist).distinct
-    }
+    val gens = historyGens(fs, root)
+    def allLeafNames: Seq[String] =
+      (leafDirs(fs, root) ++ gens.flatMap(g => leafDirs(fs, g._2))).map(_.getName).distinct
     // (mount, file) pairs for one batch's files in one leaf: live leaf when
     // the batch is past every sweep horizon, else the smallest stored
     // generation >= the batch id (which holds the leaf's state just before
@@ -1077,28 +1022,24 @@ object LakeSink {
         if (!fs.exists(dir)) Seq.empty
         else fs.listStatus(dir).toSeq
           .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$batchId-"))
-          .sortBy(_.getPath.getName.toString)
+          .sortBy(_.getPath.getName)
           .map(f => dir.getParent.toString -> f.getPath.toString)
       // the leaf's OWN sweep history (scoped sweeps rewrite only some
       // leaves per horizon): gb<id> lives in the smallest of ITS stored
       // horizons >= id — earlier leaf sweeps merged only batches < id, so
       // that generation still carries the file
-      val servingGen = horizons
-        .filter(b => fs.exists(new Path(new Path(histRoot, b.toString), leafName)))
-        .find(_ >= batchId)
-      val served = servingGen match {
-        case None => gbFiles(new Path(root, leafName))
-        case Some(b) => gbFiles(new Path(new Path(histRoot, b.toString), leafName))
-      }
+      val servingGen = gens.find { case (b, g) =>
+        b >= batchId && fs.exists(new Path(g, leafName)) }
+      val served = gbFiles(servingGen.fold(new Path(root, leafName))(g => new Path(g._2, leafName)))
       if (served.isEmpty && strict) throw new IllegalStateException(
         s"ledger tail lost batch $batchId in $leafName: its files are in " +
-          s"neither the live leaf nor the ${servingGen.fold("(no)")(b => s"horizon-$b")} " +
+          s"neither the live leaf nor the ${servingGen.fold("(no)")(g => s"horizon-${g._1}")} " +
           "generation — the retaining generation has been vacuumed; " +
           "incremental tails reach exactly as far back as the retained history")
       served
     }
     val files = ((fromExclusive + 1) to toInclusive).flatMap { id =>
-      val marker = new Path(ledger, id.toString)
+      val marker = markerPath(root, id)
       require(fs.exists(marker), s"ledger tail lost batch $id: its commit " +
         "marker has been pruned — tail before vacuum's ledgerKeep horizon passes")
       // a MERGE commit is a semantics boundary, not data to tail: its
@@ -1109,7 +1050,8 @@ object LakeSink {
       // classify; a torn merge marker that lost its first line degrades
       // to over-listing the commit's appends — the same over-approximation
       // any torn marker gets.)
-      if (isRewriteMarker(fs, marker)) throw new IllegalStateException(
+      val tag = markerTagOf(fs, marker)
+      if (tag.contains(MarkerRewrite)) throw new IllegalStateException(
         s"commit $id is a REWRITE commit (merge) — the incremental tail " +
           "serves append commits only; row-level merge changes have no " +
           s"change feed here. Consume a fresh snapshot via readAsOf($id) " +
@@ -1117,7 +1059,7 @@ object LakeSink {
       // a deletion-vector commit carries NO files: silently serving its
       // (empty) appends would drop the deletes from the consumer's view —
       // the same boundary contract as a merge
-      if (isDvMarker(fs, marker)) throw new IllegalStateException(
+      if (tag.contains(MarkerDv)) throw new IllegalStateException(
         s"commit $id is a DELETION-VECTOR commit — it adds no rows and its " +
           "deletes cannot be expressed as an append tail. Consume it " +
           s"through tailChanges (recordChanges = true at delete time) or a " +
@@ -1160,21 +1102,19 @@ object LakeSink {
     * The caller owns the high-water mark exactly as for [[tailCommits]].
     */
   def tailChanges(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       fromExclusive: Long,
       toInclusive: Long): DataFrame = {
     require(fromExclusive <= toInclusive,
       s"empty change range ($fromExclusive, $toInclusive]")
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ledger = new Path(root, "_graft_commits")
-    require(fs.exists(ledger), s"no commit ledger under $lakeDir")
+    val (root, fs) = lakeFs(spark, lakeDir)
+    require(fs.exists(ledgerDir(root)), s"no commit ledger under $lakeDir")
     val perCommit = ((fromExclusive + 1) to toInclusive).map { id =>
-      val marker = new Path(ledger, id.toString)
+      val marker = markerPath(root, id)
       require(fs.exists(marker), s"change tail lost batch $id: its commit " +
         "marker has been pruned — tail before vacuum's ledgerKeep horizon passes")
-      if (isRewriteMarker(fs, marker) || isDvMarker(fs, marker)) {
+      if (markerTagOf(fs, marker).exists(t => t == MarkerRewrite || t == MarkerDv)) {
         val cdcDir = new Path(new Path(root, CdcRoot), id.toString)
         if (!fs.exists(cdcDir)) throw new IllegalStateException(
           s"commit $id is a merge/delete with NO change record — it ran " +
@@ -1229,7 +1169,7 @@ object LakeSink {
     * callers leave the no-op.
     */
   def compactPartitions(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       targetFileBytes: Long,
       minFiles: Int,
@@ -1244,11 +1184,9 @@ object LakeSink {
       "clusterBy and zorderBy are alternative layouts for one rewrite — pick one")
     require(zorderBy.isEmpty || zorderBy.size == 2,
       s"zorderBy interleaves exactly two numeric columns, got $zorderBy")
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     if (!fs.exists(root)) return Seq.empty
     requireNotClone(fs, root, "compaction")
-    val tmpRoot = new Path(root, "_compact_tmp")
     fenceEpoch.foreach(e => checkWriterFence(fs, root, e))
     // heal BEFORE enumerating: the leaf listing (and the scoped path's
     // fs.exists probes) must see restored leaves, not their absence
@@ -1261,16 +1199,7 @@ object LakeSink {
     // without a commit ledger (plain parquet appends) has no lineage to
     // stamp; its rewrites keep their part-* names and stay outside the
     // time-travel contract.
-    val asOfHorizon: Option[Long] = {
-      val ledger = new Path(root, "_graft_commits")
-      if (!fs.exists(ledger)) None
-      else {
-        val ids = fs.listStatus(ledger).toSeq
-          .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-          .map(_.getPath.getName.toLong)
-        if (ids.isEmpty) None else Some(ids.max)
-      }
-    }
+    val asOfHorizon: Option[Long] = ledgerIds(fs, root).lastOption
     // committed deletion vectors MATERIALIZE here: the rewrite filters the
     // DV'd rows out and lays down fresh `gc<B>` names the old entries can
     // no longer match — the sidecar becomes dead weight for the live view
@@ -1280,16 +1209,14 @@ object LakeSink {
     // calls, no root enumeration; full sweep lists the table once
     val leaves: Seq[Path] = only match {
       case Some(names) => names.toSeq.sorted.map(new Path(root, _)).filter(fs.exists)
-      case None => fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-        .map(_.getPath).sortBy(_.getName.toString)
+      case None => leafDirs(fs, root)
     }
     def compactOne(leaf: Path): Option[(String, Int, Int)] = {
-      val before = fs.listStatus(leaf)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      val files = parquetFiles(fs, leaf)
+      val before = files.size
       if (before < minFiles) None
       else {
-        val tmp = new Path(tmpRoot, leaf.getName)
+        val tmp = new Path(new Path(root, TmpRoot), leaf.getName)
         // the leaf's files carry no event_date column (partitionBy strips
         // it), so a plain rewrite within the same leaf round-trips exactly.
         // `clusterBy` range-partitions + sorts the rewrite (Layout's
@@ -1307,8 +1234,7 @@ object LakeSink {
             Layout.compactParquet(spark, leaf.toString, tmp.toString,
               targetFileBytes, clusterBy, transform = dvT)
           else {
-            val bytes = Layout.dataBytes(spark, leaf.toString)
-            val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+            val n = rewriteFileCount(files, targetFileBytes)
             Layout.zorderParquet(spark, leaf.toString, tmp.toString,
               zorderBy.head, zorderBy(1), n, transform = dvT)
             n
@@ -1321,46 +1247,76 @@ object LakeSink {
         fenceEpoch.foreach(e => checkWriterFence(fs, root, e))
         asOfHorizon match {
           case Some(b) =>
-            lineageStampedSwap(fs, root, leaf, tmp, b,
-              statsCols = statsCols,
-              conf = spark.sparkContext.hadoopConfiguration)
-          case None =>
-            // no ledger, no lineage, no history: crash-safe swap via the
-            // ORIGINAL renamed aside before the rewrite renames in and
-            // deleted only LAST — at no instant is the rewrite the
-            // partition's only copy (a delete-then-rename swap has a
-            // window where the sole copy lives in _compact_tmp, which
-            // vacuum would then reap as orphaned)
-            val old = new Path(new Path(root, OldRoot), leaf.getName)
-            fs.mkdirs(old.getParent)
-            fs.delete(old, true) // stale leftover from a recovered crash
-            require(fs.rename(leaf, old), s"compaction swap failed renaming $leaf aside")
-            require(fs.rename(tmp, leaf), s"compaction swap failed for $leaf")
-            fs.delete(old, true)
+            lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
+              root, leaf, tmp, b, statsCols)
+          // no ledger, no lineage, no history: swap without retention
+          case None => swapAside(fs, root, leaf, tmp, "compaction")
         }
         System.err.println(
           s"[lake] compacted ${leaf.getName}: $before -> $after files")
         Some((leaf.getName, before, after))
       }
     }
-    if (leaves.size <= 1 || maxConcurrency <= 1) leaves.flatMap(compactOne)
+    fanOut(leaves, maxConcurrency)(compactOne).flatten
+  }
+
+  /** Run independent leaf rewrites (each its own read→shuffle→write + its
+    * own swap) across a bounded pool of `maxConcurrency` concurrent Spark
+    * jobs — the scheduler interleaves their tasks fine — returning results
+    * in input order; serial for a single item or `maxConcurrency <= 1`. A
+    * failed item fails the call.
+    */
+  private def fanOut[A, B](items: Seq[A], maxConcurrency: Int)(f: A => B): Seq[B] =
+    if (items.size <= 1 || maxConcurrency <= 1) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(maxConcurrency, leaves.size))
+        math.min(maxConcurrency, items.size))
       try {
         import scala.concurrent.{Await, ExecutionContext, Future}
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(
-          Future.sequence(leaves.map(l => Future(compactOne(l)))),
-          scala.concurrent.duration.Duration.Inf).flatten
+        Await.result(Future.sequence(items.map(i => Future(f(i)))),
+          scala.concurrent.duration.Duration.Inf)
       } finally pool.shutdown()
     }
+
+  /** File count for rewriting `files` at `targetFileBytes` each (>= 1). */
+  private def rewriteFileCount(files: Seq[FileStatus], targetFileBytes: Long): Int = {
+    val bytes = files.map(_.getLen).sum
+    math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+  }
+
+  /** Crash-safe swap WITHOUT retention: the ORIGINAL leaf is renamed aside
+    * under `_compact_old` before the rewrite renames in, and deleted only
+    * LAST — at no instant is the rewrite the partition's only copy (a
+    * delete-then-rename swap has a window where the sole copy lives in
+    * `_compact_tmp`, which vacuum would then reap as orphaned); a crash
+    * between the renames is healed by [[recoverSweeps]].
+    */
+  private def swapAside(fs: FileSystem, root: Path, leaf: Path, tmp: Path, verb: String): Unit = {
+    val old = new Path(new Path(root, OldRoot), leaf.getName)
+    fs.mkdirs(old.getParent)
+    fs.delete(old, true) // stale leftover from a recovered crash
+    require(fs.rename(leaf, old), s"$verb swap failed renaming $leaf aside")
+    require(fs.rename(tmp, leaf), s"$verb swap failed for $leaf")
+    fs.delete(old, true)
   }
 
   private val OldRoot = "_compact_old"
   private val HistoryRoot = "_graft_history"
   private val StatsRoot = "_graft_stats"
   private val CdcRoot = "_graft_cdc"
+  private def cdcDir(root: Path, b: Long): Path = new Path(new Path(root, CdcRoot), b.toString)
+
+  /** Write commit `b`'s change record (`_graft_cdc/<b>/`) durable-or-absent:
+    * staged under `.tmp<b>`, then renamed in.
+    */
+  private def writeChangeRecord(fs: FileSystem, root: Path, b: Long, changes: DataFrame): Unit = {
+    val dst = cdcDir(root, b)
+    val tmp = new Path(dst.getParent, s".tmp$b")
+    changes.write.mode("overwrite").parquet(tmp.toString)
+    fs.mkdirs(dst.getParent)
+    require(fs.rename(tmp, dst), s"change-record rename failed: $tmp -> $dst")
+  }
   private val DvRoot = "_graft_dv"
 
   /** FS-readable target manifest inside each DV generation: one `leaf/file`
@@ -1390,21 +1346,16 @@ object LakeSink {
     * until the marker exchange lands).
     */
   private def dvStore(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
+      spark: SparkSession,
+      fs: FileSystem,
       root: Path,
       asOf: Long = Long.MaxValue): Option[DataFrame] = {
     val dvRoot = new Path(root, DvRoot)
     if (!fs.exists(dvRoot)) return None
-    val head = maxCommittedId(fs, root)
-    val gens = fs.listStatus(dvRoot).toSeq
-      .filter(d => d.isDirectory && d.getPath.getName.nonEmpty &&
-        d.getPath.getName.forall(_.isDigit))
-      .map(_.getPath)
-      .filter(p => p.getName.toLong <= math.min(asOf, head))
-      .sortBy(_.getName.toLong)
-    if (gens.isEmpty) None
-    else Some(spark.read.parquet(gens.map(_.toString): _*))
+    val bound = math.min(asOf, maxCommittedId(fs, root))
+    val gens = numbered(fs, dvRoot)
+      .collect { case (id, d) if d.isDirectory && id <= bound => d.getPath.toString }
+    if (gens.isEmpty) None else Some(spark.read.parquet(gens: _*))
   }
 
   /** Anti-apply a deletion-vector relation to a FRESH FILE SCAN: each row
@@ -1471,7 +1422,7 @@ object LakeSink {
     * marker absent), `"pre-marker"`.
     */
   def deleteVectors(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       deletes: DataFrame,
       keyCol: String,
@@ -1480,18 +1431,16 @@ object LakeSink {
       recordChanges: Boolean = false,
       faultInjector: String => Unit = _ => ()): DvStats = {
     import org.apache.spark.sql.functions.{broadcast, concat, lit}
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "deleteVectors")
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
+    val epoch = verbEpoch(fs, root, fenceEpoch)
     recoverSweeps(fs, root)
     val b = maxCommittedId(fs, root) + 1
     require(b > 0, s"deletion vectors on $lakeDir need a ledgered lake (no " +
       "commits found) — lay the table down via appendBatch first")
     val dvGen = new Path(new Path(root, DvRoot), b.toString)
-    val marker = new Path(new Path(root, "_graft_commits"), b.toString)
+    val marker = markerPath(root, b)
 
     if (fs.exists(dvGen)) {
       // crash-before-marker retry: the generation is complete (rename made
@@ -1500,13 +1449,12 @@ object LakeSink {
       // target manifest, and finish the commit
       System.err.println(s"[lake] delete retry: deletion-vector generation " +
         s"$b already complete — committing the first attempt's sidecar")
-      val targets = readSmallFile(fs, new Path(dvGen, DvTargetsFile)).split('\n').toSeq
-      require(targets.lastOption.contains(MarkerEnd),
+      val targets = readSealed(fs, new Path(dvGen, DvTargetsFile))
+      require(targets.isDefined,
         s"deletion-vector generation $b has a torn target manifest — the " +
           "rename-in should have made it complete-or-absent; refusing to " +
           "commit an unaccountable generation")
-      val leaves = targets.dropRight(1).filter(_.nonEmpty)
-        .map(_.split('/').head).distinct.sorted
+      val leaves = targets.get.map(_.split('/').head).distinct.sorted
       val n = spark.read.parquet(dvGen.toString).count()
       faultInjector("pre-marker")
       checkWriterFence(fs, root, epoch)
@@ -1522,7 +1470,7 @@ object LakeSink {
     // k-bounded driver probe: one row per affected DATE, never per key
     val dates = delKeys.select("__d").distinct()
       .collect().map(_.getString(0)).sorted
-      .filter(d => fs.exists(new Path(root, s"event_date=$d")))
+      .filter(d => fs.exists(new Path(root, s"$LeafPrefix$d")))
     if (dates.isEmpty) {
       // nothing to delete — still a committed (empty) verb? No: an empty
       // commit would burn an id for nothing; report and return
@@ -1538,7 +1486,7 @@ object LakeSink {
       val r = spark.read
       val base = declaredReadSchema(fs, root).fold(r)(r.schema)
         .option("basePath", root.toString)
-        .parquet(dates.map(d => new Path(root, s"event_date=$d").toString): _*)
+        .parquet(dates.map(d => new Path(root, s"$LeafPrefix$d").toString): _*)
       val withIds = base
         .withColumn("__d", col("event_date").cast("string"))
         .withColumn("__leaf", concat(lit("event_date="), col("__d")))
@@ -1565,18 +1513,9 @@ object LakeSink {
       val targets = matched.select(col("__leaf"), col("__file")).distinct()
         .collect().map(r => s"${r.getString(0)}/${r.getString(1)}").sorted
       val leaves = targets.map(_.split('/').head).distinct.sorted.toSeq
-      if (recordChanges) {
-        val cdcDir = new Path(new Path(root, CdcRoot), b.toString)
-        if (!fs.exists(cdcDir)) {
-          val tmp = new Path(new Path(root, CdcRoot), s".tmp$b")
-          matched.drop("__d", "__leaf", "__file", "__pos")
-            .withColumn("_op", lit("delete"))
-            .write.mode("overwrite").parquet(tmp.toString)
-          fs.mkdirs(cdcDir.getParent)
-          require(fs.rename(tmp, cdcDir),
-            s"change-record rename failed: $tmp -> $cdcDir")
-        }
-      }
+      if (recordChanges && !fs.exists(cdcDir(root, b)))
+        writeChangeRecord(fs, root, b, matched.drop("__d", "__leaf", "__file", "__pos")
+          .withColumn("_op", lit("delete")))
       // the sidecar: (leaf, file, pos) parquet + the FS-readable target
       // manifest, staged then renamed — durable-or-absent as one unit
       val tmp = new Path(new Path(root, DvRoot), s".tmp$b")
@@ -1611,7 +1550,7 @@ object LakeSink {
     * of the file just written is the FS-primitives equivalent).
     */
   private def footerMinMax(
-      conf: org.apache.hadoop.conf.Configuration,
+      conf: Configuration,
       file: Path,
       cols: Set[String]): Map[String, (String, String)] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
@@ -1648,8 +1587,8 @@ object LakeSink {
     * "must scan".
     */
   private def writeFileStats(
-      fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
+      fs: FileSystem,
+      conf: Configuration,
       root: Path,
       tag: String,
       files: Seq[(String, Path)],
@@ -1665,15 +1604,12 @@ object LakeSink {
   }
 
   /** All complete stats lines under `_graft_stats` (torn sidecars skipped). */
-  private def statsLines(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
+  private def statsLines(fs: FileSystem, root: Path): Seq[String] = {
     val dir = new Path(root, StatsRoot)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.filter(_.isFile).sortBy(_.getPath.getName)
       .flatMap { s =>
-        val lines = readSmallFile(fs, s.getPath).split('\n').toSeq
-        if (lines.lastOption.contains(MarkerEnd)) lines.dropRight(1).filter(_.nonEmpty)
-        else {
+        readSealed(fs, s.getPath).getOrElse {
           System.err.println(s"[lake] torn stats sidecar ${s.getPath.getName} — " +
             "ignoring it (its files will be scanned, not pruned)")
           Seq.empty
@@ -1681,9 +1617,36 @@ object LakeSink {
       }
   }
 
+  /** Fold the zone-map sidecars into one (`folded`) once there are at least
+    * `minSidecars`: one file per write accumulates exactly like the ledger,
+    * so every sidecar is merged into one, dropping entries whose files no
+    * longer exist (retention-dropped, compaction-rewritten, merge-rewritten,
+    * purged — a dead file's min/max can carry a purged key's value). A
+    * crash mid-fold leaves either the old sidecars (fold lost, retried
+    * next time) or a torn merged file readers skip — pruning degrades to
+    * scanning, never to wrong results.
+    */
+  private def foldStats(fs: FileSystem, root: Path, minSidecars: Int): Unit = {
+    val statsDir = new Path(root, StatsRoot)
+    if (!fs.exists(statsDir)) return
+    val sidecars = fs.listStatus(statsDir).toSeq.filter(_.isFile).map(_.getPath)
+    if (sidecars.size >= minSidecars) {
+      val live = statsLines(fs, root).filter { l =>
+        l.split('\t') match {
+          case Array(key, _, _, _) => fs.exists(new Path(root, key))
+          case _ => false
+        }
+      }.distinct
+      writeSmallFile(fs, new Path(statsDir, "folded"), (live :+ MarkerEnd).mkString("\n"))
+      sidecars.filter(_.getName != "folded").foreach(p => fs.delete(p, false))
+      System.err.println(s"[lake] folded ${sidecars.size} stats sidecars " +
+        s"into one (${live.size} live entries)")
+    }
+  }
+
   /** Zone-map lookup for one column: `leaf/file` → (min, max). */
   private def loadStats(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      fs: FileSystem, root: Path,
       statsCol: String): Map[String, (BigDecimal, BigDecimal)] =
     statsLines(fs, root).flatMap { l =>
       l.split('\t') match {
@@ -1716,23 +1679,16 @@ object LakeSink {
     * [[readAsOf]] scan fully).
     */
   def readPruned(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       statsCol: String,
       lo: BigDecimal,
       hi: BigDecimal): (DataFrame, PruneReport) = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "readPruned")
-    val files = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .sortBy(_.getPath.getName)
-      .flatMap { l =>
-        fs.listStatus(l.getPath).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (l.getPath.getName, f.getPath))
-      }
+    val files = leafDirs(fs, root)
+      .flatMap(l => parquetFiles(fs, l).map(f => (l.getName, f.getPath)))
     require(files.nonEmpty, s"no data files under $lakeDir")
     val stats = loadStats(fs, root, statsCol)
     val survivors = files.filter { case (leaf, f) =>
@@ -1794,32 +1750,21 @@ object LakeSink {
     *     derives from it) — keep it, drop the current copy.
     */
   private def lineageStampedSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
+      conf: Configuration,
       root: Path,
       leaf: Path,
       tmp: Path,
       horizon: Long,
-      statsCols: Seq[String] = Nil,
-      conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration()): Unit = {
-    val parts = fs.listStatus(tmp)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName.toString)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      val dst = new Path(tmp, s"gc$horizon-p$i.snappy.parquet")
-      require(fs.rename(f.getPath, dst),
-        s"lineage stamp rename failed: ${f.getPath} -> $dst")
-    }
+      statsCols: Seq[String] = Nil): Unit = {
+    val stamped = stampRewrite(fs, tmp, horizon)
     // fresh zone maps for the rewrite (the original files' entries go
     // stale and point at names that no longer exist — harmless; vacuum
     // folds them away). Written BEFORE the swap so the entries exist the
     // instant the files are live; a crashed swap leaves advisory entries
     // for files recoverSweeps will promote or reap.
-    if (statsCols.nonEmpty) writeFileStats(fs, conf, root,
-      s"c$horizon.${leaf.getName}",
-      fs.listStatus(tmp).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => leaf.getName -> f.getPath),
-      statsCols)
+    writeFileStats(fs, conf, root, s"c$horizon.${leaf.getName}",
+      stamped.map(leaf.getName -> _), statsCols)
     val hist = new Path(new Path(new Path(root, HistoryRoot), horizon.toString),
       leaf.getName)
     fs.mkdirs(hist.getParent)
@@ -1841,6 +1786,16 @@ object LakeSink {
     require(fs.rename(tmp, leaf), s"rewrite swap failed for $leaf")
   }
 
+  /** Stamp a rewrite's parquet parts in `tmp` with commit lineage
+    * `gc<horizon>-p<k>`; returns the stamped files.
+    */
+  private def stampRewrite(fs: FileSystem, tmp: Path, horizon: Long): Seq[Path] =
+    parquetFiles(fs, tmp).zipWithIndex.map { case (f, i) =>
+      val dst = new Path(tmp, s"gc$horizon-p$i.snappy.parquet")
+      require(fs.rename(f.getPath, dst), s"lineage stamp rename failed: ${f.getPath} -> $dst")
+      dst
+    }
+
   /** SCHEMA REGISTRY — the Delta schema-in-log discipline from FS
     * primitives: the lake's data schema (WITHOUT the partition column)
     * lives in versioned `_graft_commits/_schema.<B>` files, one written
@@ -1856,9 +1811,9 @@ object LakeSink {
     * half-written current schema (the previous version keeps serving).
     */
   private def registeredSchema(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      asOf: Long = Long.MaxValue): Option[org.apache.spark.sql.types.StructType] = {
-    val ledger = new Path(root, "_graft_commits")
+      fs: FileSystem, root: Path,
+      asOf: Long = Long.MaxValue): Option[StructType] = {
+    val ledger = ledgerDir(root)
     if (!fs.exists(ledger)) return None
     val versions = fs.listStatus(ledger).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("_schema."))
@@ -1871,26 +1826,35 @@ object LakeSink {
     if (versions.isEmpty) None
     else Some(org.apache.spark.sql.types.DataType
       .fromJson(readSmallFile(fs, versions.maxBy(_._1)._2))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .asInstanceOf[StructType])
   }
+
+  /** The data schema a row-level rewrite declares: the registered union
+    * schema when the registry exists (files that predate a widening
+    * null-fill under the declared read); head-leaf inference only for a
+    * pre-registry lake.
+    */
+  private def rewriteSchema(spark: SparkSession, fs: FileSystem, root: Path): StructType =
+    registeredSchema(fs, root).getOrElse {
+      val leaves = leafDirs(fs, root)
+      require(leaves.nonEmpty, s"no $LeafPrefix leaves under $root")
+      spark.read.parquet(leaves.head.toString).schema
+    }
 
   /** Register commit `b`'s data schema if it widens the current one;
     * loud on anything that isn't pure widening. Call BEFORE the commit
     * marker so the schema is visible the instant the data is committed
-    * (a crash in between replays both idempotently).
-    */
-  /** Returns true iff a `_schema.<b>` registration file was written (first
-    * registration or a widening) — callers whose commit id can still move
-    * (OCC forward-rename) use this to carry the association with them.
+    * (a crash in between replays both idempotently). Returns true iff a
+    * `_schema.<b>` registration file was written (first registration or a
+    * widening) — callers whose commit id can still move (OCC
+    * forward-rename) use this to carry the association with them.
     */
   private def registerSchemaIfWidened(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, b: Long,
-      dataSchema: org.apache.spark.sql.types.StructType): Boolean = {
+      fs: FileSystem, root: Path, b: Long,
+      dataSchema: StructType): Boolean = {
     registeredSchema(fs, root) match {
       case None =>
-        writeSmallFile(fs,
-          new Path(new Path(root, "_graft_commits"), s"_schema.$b"),
-          dataSchema.json)
+        writeSmallFile(fs, new Path(ledgerDir(root), s"_schema.$b"), dataSchema.json)
         true
       case Some(cur) =>
         val byName = dataSchema.fields.map(f => f.name -> f.dataType).toMap
@@ -1903,9 +1867,8 @@ object LakeSink {
         }
         val newFields = dataSchema.fields.filterNot(f => cur.fieldNames.contains(f.name))
         if (newFields.nonEmpty) {
-          val union = org.apache.spark.sql.types.StructType(cur.fields ++ newFields)
-          writeSmallFile(fs,
-            new Path(new Path(root, "_graft_commits"), s"_schema.$b"), union.json)
+          val union = StructType(cur.fields ++ newFields)
+          writeSmallFile(fs, new Path(ledgerDir(root), s"_schema.$b"), union.json)
           System.err.println(s"[lake] commit $b widened the schema: +" +
             newFields.map(_.name).mkString(", "))
           true
@@ -1918,10 +1881,10 @@ object LakeSink {
     * (readers fall back to inference).
     */
   private def declaredReadSchema(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      asOf: Long = Long.MaxValue): Option[org.apache.spark.sql.types.StructType] =
+      fs: FileSystem, root: Path,
+      asOf: Long = Long.MaxValue): Option[StructType] =
     registeredSchema(fs, root, asOf)
-      .map(_.add("event_date", org.apache.spark.sql.types.DateType))
+      .map(_.add("event_date", DateType))
 
   /** The LIVE table read: declared registered schema (union across every
     * evolution — files predating a column null-fill) over partition
@@ -1930,9 +1893,8 @@ object LakeSink {
     * one footer and can silently miss late columns.
     */
   def readLake(
-      spark: org.apache.spark.sql.SparkSession, lakeDir: String): DataFrame = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, lakeDir: String): DataFrame = {
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     cloneMeta(fs, root) match {
       case Some((srcDir, asOf)) =>
@@ -1941,13 +1903,11 @@ object LakeSink {
         // shadowed by a CoW, plus everything the clone wrote locally
         val srcSnap = readAsOf(spark, srcDir, asOf)
         val shadowed = shadowedLeaves(fs, root)
-          .map(_.stripPrefix("event_date=")).toSeq.sorted
+          .map(_.stripPrefix(LeafPrefix)).toSeq.sorted
         val srcPart =
           if (shadowed.isEmpty) srcSnap
           else srcSnap.filter(!col("event_date").cast("string").isin(shadowed: _*))
-        val localLeaves = fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-          .map(_.getPath.toString).sorted
+        val localLeaves = leafDirs(fs, root).map(_.toString)
         if (localLeaves.isEmpty) srcPart
         else {
           val r = spark.read.option("basePath", lakeDir)
@@ -1967,15 +1927,8 @@ object LakeSink {
   }
 
   /** Max committed id in the lake's ledger, -1 when none (or no ledger). */
-  private def maxCommittedId(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Long = {
-    val ledger = new Path(root, "_graft_commits")
-    if (!fs.exists(ledger)) -1L
-    else fs.listStatus(ledger).toSeq
-      .filter(s => s.isFile && s.getPath.getName.nonEmpty &&
-        s.getPath.getName.forall(_.isDigit))
-      .map(_.getPath.getName.toLong).foldLeft(-1L)(math.max)
-  }
+  private def maxCommittedId(fs: FileSystem, root: Path): Long =
+    ledgerIds(fs, root).lastOption.getOrElse(-1L)
 
   /** Batch append with a LAKE-ALLOCATED commit id (`max committed + 1`) —
     * the write verb for a table maintained by [[mergeInto]], where the
@@ -1994,7 +1947,7 @@ object LakeSink {
     * Returns the committed id.
     */
   def appendBatch(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       rows: DataFrame,
       tsCol: String = "ts",
@@ -2002,29 +1955,12 @@ object LakeSink {
       statsCols: Seq[String] = Nil,
       fenceEpoch: Option[Long] = None,
       markerTag: Option[String] = None): Long = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     fs.mkdirs(root)
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
-    val next = maxCommittedId(fs, root) + 1
-    val b = commitId match {
-      case Some(id) =>
-        if (id < next) {
-          require(fs.exists(new Path(new Path(root, "_graft_commits"), id.toString)),
-            s"append at commit $id is below the ledger head ($next) but has " +
-              "no marker — the id was never committed here; refusing an " +
-              "out-of-order append")
-          System.err.println(s"[lake] append commit $id already in the " +
-            "ledger — idempotent retry, skipping")
-          return id
-        }
-        require(id == next, s"append expected to land at commit $id but the " +
-          s"ledger head allocates $next — a competing writer advanced the " +
-          "table (or the caller's high-water mark is stale); refusing to " +
-          "commit out of order")
-        id
-      case None => next
+    val epoch = verbEpoch(fs, root, fenceEpoch)
+    val b = admitCommitId(fs, root, commitId, "append") match {
+      case Left(done) => return done
+      case Right(b) => b
     }
     // schema validation + registration BEFORE any data movement: an append
     // that would narrow/retype dies with the lake untouched, and a widening
@@ -2032,24 +1968,39 @@ object LakeSink {
     // schema with no rows yet — nulls, harmless; the retry re-registers
     // idempotently)
     registerSchemaIfWidened(fs, root, b, rows.schema)
-    val staging = new Path(new Path(root, StagingRoot), s"b$b")
-    stagedLeafShape(rows.withColumn("event_date", to_date(col(tsCol))))
-      .write.partitionBy("event_date").mode("overwrite")
-      .parquet(staging.toString)
+    val committed = stageAndCommit(fs, root, rows, tsCol, b, epoch, statsCols)
     checkWriterFence(fs, root, epoch)
-    val committed = commitStaged(fs, root, staging, b, (_, _) => ())
-    if (statsCols.nonEmpty) writeFileStats(fs,
-      spark.sparkContext.hadoopConfiguration, root, b.toString,
-      committed.flatMap { l =>
-        fs.listStatus(new Path(root, l)).toSeq
-          .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$b-"))
-          .map(f => l -> f.getPath)
-      }, statsCols)
-    checkWriterFence(fs, root, epoch)
-    writeCommitMarker(fs, new Path(new Path(root, "_graft_commits"), b.toString),
-      b, committed, markerTag)
-    fs.delete(staging, true)
+    writeCommitMarker(fs, markerPath(root, b), b, committed, markerTag)
+    fs.delete(stagingDir(root, b), true)
     b
+  }
+
+  /** Commit-id admission for the lake-allocated append verbs: the id to
+    * commit (`commitId`, or the ledger head's next id when None) as Right,
+    * or Left(commitId) when that id already has a marker — an idempotent
+    * retry of a committed append. An id below the head WITHOUT a marker,
+    * or above the head, fails loudly (out-of-order commit).
+    */
+  private def admitCommitId(
+      fs: FileSystem, root: Path, commitId: Option[Long], verb: String): Either[Long, Long] = {
+    val next = maxCommittedId(fs, root) + 1
+    commitId match {
+      case Some(id) if id < next =>
+        require(fs.exists(markerPath(root, id)),
+          s"$verb at commit $id is below the ledger head ($next) but has " +
+            "no marker — the id was never committed here; refusing an " +
+            "out-of-order append")
+        System.err.println(s"[lake] $verb commit $id already in the " +
+          "ledger — idempotent retry, skipping")
+        Left(id)
+      case Some(id) =>
+        require(id == next, s"$verb expected to land at commit $id but the " +
+          s"ledger head allocates $next — a competing writer advanced the " +
+          "table (or the caller's high-water mark is stale); refusing to " +
+          "commit out of order")
+        Right(id)
+      case None => Right(next)
+    }
   }
 
   /** OPTIMISTIC multi-writer batch append — the verb that lets INDEPENDENT
@@ -2082,7 +2033,7 @@ object LakeSink {
     * each other or the standing exclusive owner.
     */
   def appendBatchOcc(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       rows: DataFrame,
       writerId: String,
@@ -2092,8 +2043,7 @@ object LakeSink {
       faultInjector: String => Unit = _ => ()): Long = {
     require(writerId.nonEmpty && writerId.forall(c => c.isLetterOrDigit || c == '_'),
       s"writerId '$writerId' must be alphanumeric (it becomes file lineage)")
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     fs.mkdirs(root)
     val sharedEpoch = maxWriterEpoch(fs, root)
     def checkShared(): Unit = {
@@ -2102,21 +2052,16 @@ object LakeSink {
         s"OCC writer $writerId fenced: epoch advanced $sharedEpoch -> $m " +
           s"for $root — an exclusive writer claimed the lake mid-commit")
     }
-    val ledger = new Path(root, "_graft_commits")
+    val ledger = ledgerDir(root)
     // (id, tag words after #occ) of THIS writer's committed markers —
     // O(retained ledger), which vacuum bounds
     def occCommits(): Seq[(Long, Seq[String])] =
-      if (!fs.exists(ledger)) Seq.empty
-      else fs.listStatus(ledger).toSeq
-        .filter(s => s.isFile && s.getPath.getName.nonEmpty &&
-          s.getPath.getName.forall(_.isDigit))
-        .flatMap { s =>
-          markerTagOf(fs, s.getPath).map(_.split(' ').toSeq) match {
-            case Some(`MarkerOcc` +: rest) if rest.headOption.contains(writerId) =>
-              Some(s.getPath.getName.toLong -> rest)
-            case _ => None
-          }
+      ledgerIds(fs, root).flatMap { id =>
+        markerTagOf(fs, markerPath(root, id)).map(_.split(' ').toSeq) match {
+          case Some(`MarkerOcc` +: rest) if rest.headOption.contains(writerId) => Some(id -> rest)
+          case _ => None
         }
+      }
     // exactly-once short-circuit: this batch already committed
     dedupKey.foreach { k =>
       occCommits().find(_._2.lift(1).contains(k)).foreach { case (id, _) =>
@@ -2130,23 +2075,20 @@ object LakeSink {
     // live instance holds this writerId, so the delete can never race a
     // rival's in-flight commit.
     val committedMine = occCommits().map(_._1).toSet
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      .foreach { leaf =>
-        fs.listStatus(leaf.getPath)
-          .filter { f =>
-            val n = f.getPath.getName
-            f.isFile && n.startsWith("gb") && n.contains(s"-w$writerId-") && {
-              val id = n.stripPrefix("gb").takeWhile(_.isDigit)
-              id.nonEmpty && !committedMine.contains(id.toLong)
-            }
+    leafDirs(fs, root).foreach { leaf =>
+      fs.listStatus(leaf)
+        .filter { f =>
+          val n = f.getPath.getName
+          f.isFile && n.startsWith("gb") && n.contains(s"-w$writerId-") && {
+            val id = n.stripPrefix("gb").takeWhile(_.isDigit)
+            id.nonEmpty && !committedMine.contains(id.toLong)
           }
-          .foreach { f =>
-            System.err.println(
-              s"[lake] occ reap: uncommitted leftover ${f.getPath.getName}")
-            fs.delete(f.getPath, false)
-          }
-      }
+        }
+        .foreach { f =>
+          System.err.println(s"[lake] occ reap: uncommitted leftover ${f.getPath.getName}")
+          fs.delete(f.getPath, false)
+        }
+    }
     // schema registration is keyed to the TENTATIVE id; if this writer
     // loses the exchange and forward-renames, the registration file moves
     // with it (carrySchemaForward below) so schema-as-of reads associate
@@ -2171,28 +2113,9 @@ object LakeSink {
     checkShared()
     var cur = maxCommittedId(fs, root) + 1
     carrySchemaForward(cur)
-    // place staged parts into live leaves under my lineage names
-    val placedLeaves: Seq[String] = {
-      val leaves =
-        if (!fs.exists(staging)) Seq.empty
-        else fs.listStatus(staging).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .map(_.getPath).sortBy(_.getName.toString)
-      leaves.map { sLeaf =>
-        val target = new Path(root, sLeaf.getName)
-        fs.mkdirs(target)
-        val parts = fs.listStatus(sLeaf).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName.toString)
-        parts.zipWithIndex.foreach { case (f, i) =>
-          val dst = new Path(target, s"gb$cur-w$writerId-p$i.snappy.parquet")
-          fs.delete(dst, false)
-          require(fs.rename(f.getPath, dst),
-            s"occ placement failed: ${f.getPath} -> $dst")
-        }
-        sLeaf.getName
-      }
-    }
+    // place staged parts into live leaves under my lineage names (no
+    // committed file carries them: cur has no marker yet)
+    val placedLeaves = commitStaged(fs, root, staging, s"gb$cur-w$writerId-").map(_._1)
     faultInjector("placed")
     def rollback(): Unit = placedLeaves.foreach { l =>
       fs.listStatus(new Path(root, l))
@@ -2300,7 +2223,7 @@ object LakeSink {
     * pushed to the source scan) — no cache, safe under streaming.
     */
   def appendWithExpectations(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       rows: DataFrame,
       expectations: Seq[(String, String)],
@@ -2310,24 +2233,13 @@ object LakeSink {
     import org.apache.spark.sql.functions.{coalesce, concat_ws, expr, when}
     require(expectations.nonEmpty,
       "appendWithExpectations with no rules — use appendBatch")
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     fs.mkdirs(root)
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
-    val next = maxCommittedId(fs, root) + 1
-    val b = commitId.getOrElse(next)
-    if (b < next) {
-      require(fs.exists(new Path(new Path(root, "_graft_commits"), b.toString)),
-        s"expectations append at commit $b is below the ledger head ($next) " +
-          "but has no marker — refusing an out-of-order append")
-      System.err.println(s"[lake] expectations append commit $b already in " +
-        "the ledger — idempotent retry, skipping")
-      return b
+    val epoch = verbEpoch(fs, root, fenceEpoch)
+    val b = admitCommitId(fs, root, commitId, "expectations append") match {
+      case Left(done) => return done
+      case Right(b) => b
     }
-    require(b == next, s"expectations append expected commit $b but the " +
-      s"ledger head allocates $next — stale high-water mark or competing " +
-      "writer; refusing to commit out of order")
     val violCol = concat_ws(",", expectations.map { case (name, pred) =>
       when(coalesce(expr(pred), lit(false)), lit(null).cast("string"))
         .otherwise(lit(name))
@@ -2352,8 +2264,8 @@ object LakeSink {
     * append at that id must not surface rejects of a batch that never
     * went through the gate). Retention is the caller's policy (the dirs
     * are outside data discovery; vacuum does not touch them).
-    */
-  /** ON-DISK FORMAT NOTE (r16 marker-tag gating): this read serves only
+    *
+    * ON-DISK FORMAT NOTE (r16 marker-tag gating): this read serves only
     * `#expect`-tagged commits, and [[shadowedLeaves]] requires `#cow` —
     * lakes written by a pre-tagging build (whose markers are untagged)
     * are NOT grandfathered: their quarantine rejects and CoW shadows go
@@ -2363,18 +2275,16 @@ object LakeSink {
     * a one-shot marker-tag migration first.
     */
   def readQuarantine(
-      spark: org.apache.spark.sql.SparkSession, lakeDir: String): DataFrame = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark: SparkSession, lakeDir: String): DataFrame = {
+    val (root, fs) = lakeFs(spark, lakeDir)
     val q = new Path(root, QuarantineRoot)
     require(fs.exists(q), s"no quarantine under $lakeDir")
-    val ledger = new Path(root, "_graft_commits")
     val gated: Seq[Long] = fs.listStatus(q).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("b"))
       .map(_.getPath.getName.stripPrefix("b"))
       .filter(_.forall(_.isDigit)).map(_.toLong)
       .filter { id =>
-        val m = new Path(ledger, id.toString)
+        val m = markerPath(root, id)
         fs.exists(m) && markerTagOf(fs, m).contains(MarkerExpect)
       }
     spark.read.option("recursiveFileLookup", "true").parquet(q.toString)
@@ -2386,7 +2296,7 @@ object LakeSink {
 
   /** Parse a clone's pin, or None for a regular lake. */
   private def cloneMeta(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Option[(String, Long)] = {
+      fs: FileSystem, root: Path): Option[(String, Long)] = {
     val p = new Path(root, CloneFile)
     if (!fs.exists(p)) None
     else {
@@ -2398,7 +2308,7 @@ object LakeSink {
   }
 
   private def requireNotClone(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, verb: String): Unit =
+      fs: FileSystem, root: Path, verb: String): Unit =
     require(!fs.exists(new Path(root, CloneFile)),
       s"$verb is unsupported on a shallow clone ($root) — materialize the " +
         "clone into a regular table first (read it, write it) or run the " +
@@ -2417,15 +2327,14 @@ object LakeSink {
     * them.
     */
   private def shadowedLeaves(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Set[String] = {
+      fs: FileSystem, root: Path): Set[String] = {
     val dir = new Path(root, ShadowRoot)
     if (!fs.exists(dir)) Set.empty
     else {
-      val ledger = new Path(root, "_graft_commits")
       fs.listStatus(dir).toSeq.filter(_.isFile).flatMap { m =>
         val content = readSmallFile(fs, m.getPath).trim
         val cowCommitted = content.nonEmpty && content.forall(_.isDigit) && {
-          val marker = new Path(ledger, content)
+          val marker = new Path(ledgerDir(root), content)
           fs.exists(marker) && markerTagOf(fs, marker).contains(MarkerCow)
         }
         if (cowCommitted) Some(m.getPath.getName) else None
@@ -2452,7 +2361,7 @@ object LakeSink {
     * part-snapshot).
     */
   def cloneTable(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       srcDir: String,
       dstDir: String): Long = {
     val src = new Path(srcDir)
@@ -2479,15 +2388,14 @@ object LakeSink {
     * materialization, exactly Delta's shallow-clone CoW bill.
     */
   def cloneMerge(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       cloneDir: String,
       upserts: DataFrame,
       keyCol: String,
       deletes: DataFrame,
       tsCol: String = "ts",
       targetFileBytes: Long = 128L << 20): MergeStats = {
-    val root = new Path(cloneDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, cloneDir)
     val (srcDir, asOf) = cloneMeta(fs, root).getOrElse(
       throw new IllegalArgumentException(s"$cloneDir is not a shallow clone"))
     // k-bounded probe: one row per touched date
@@ -2579,17 +2487,15 @@ object LakeSink {
     * snapshot content null-fills, the same read rule as every old file).
     */
   def restoreTo(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       asOf: Long,
       fenceEpoch: Option[Long] = None,
       faultInjector: String => Unit = _ => ()): RestoreStats = {
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "restoreTo")
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
+    val epoch = verbEpoch(fs, root, fenceEpoch)
     recoverSweeps(fs, root)
     val head = maxCommittedId(fs, root)
     require(head >= 0, s"restore needs a ledgered lake (no commits under $lakeDir)")
@@ -2607,29 +2513,21 @@ object LakeSink {
     }
     // leaves whose LOGICAL content moved after asOf via a deletion-vector
     // generation (file set unchanged — the listing alone would miss them)
-    val dvTouched: Set[String] = {
-      val dvRoot = new Path(root, DvRoot)
-      if (!fs.exists(dvRoot)) Set.empty
-      else fs.listStatus(dvRoot).toSeq
-        .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit) &&
-          g.getPath.getName.toLong > asOf && g.getPath.getName.toLong <= head)
-        .flatMap { g =>
-          val t = new Path(g.getPath, DvTargetsFile)
-          require(fs.exists(t), s"DV generation ${g.getPath.getName} has no " +
-            "targets manifest — cannot bound the restore's leaf set")
-          readSmallFile(fs, t).split('\n').toSeq
-            .filter(l => l.nonEmpty && !l.startsWith("#"))
-            .map(_.split('/').head)
-        }.toSet
-    }
-    val liveLeaves = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      .map(_.getPath.getName).sorted
+    val dvTouched: Set[String] = numbered(fs, new Path(root, DvRoot))
+      .collect { case (id, g) if g.isDirectory && id > asOf && id <= head => g.getPath }
+      .flatMap { g =>
+        val t = new Path(g, DvTargetsFile)
+        require(fs.exists(t), s"DV generation ${g.getName} has no " +
+          "targets manifest — cannot bound the restore's leaf set")
+        val targets = readSealed(fs, t)
+        require(targets.isDefined, s"DV generation ${g.getName} has a torn " +
+          "targets manifest — cannot bound the restore's leaf set")
+        targets.get.map(_.split('/').head)
+      }.toSet
+    val liveLeaves = leafDirs(fs, root).map(_.getName)
     val changed = liveLeaves.filter { l =>
-      dvTouched.contains(l) || fs.listStatus(new Path(root, l)).exists { f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet") &&
-          lineageOf(f.getPath.getName) > asOf
-      }
+      dvTouched.contains(l) ||
+        parquetFiles(fs, new Path(root, l)).exists(f => lineageOf(f.getPath.getName) > asOf)
     }
     // leaves retired into _graft_history by a PRIOR restore are not live,
     // but the snapshot at asOf may still hold their rows — e.g. undoing a
@@ -2638,21 +2536,14 @@ object LakeSink {
     // (histLeafNames); the restored LIVE view must RESURRECT them, or it
     // silently diverges from readAsOf(asOf). Which of them have content at
     // asOf is decided by the staging write below.
-    val hRoot = new Path(root, HistoryRoot)
-    val histOnly: Seq[String] =
-      (if (!fs.exists(hRoot)) Seq.empty[String]
-       else fs.listStatus(hRoot).toSeq
-         .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-         .flatMap(g => fs.listStatus(g.getPath).toSeq
-           .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-           .map(_.getPath.getName)))
-        .distinct.filterNot(liveLeaves.contains).sorted
+    val histOnly: Seq[String] = historyGens(fs, root)
+      .flatMap(g => leafDirs(fs, g._2).map(_.getName))
+      .distinct.filterNot(liveLeaves.contains).sorted
     if (changed.isEmpty && histOnly.isEmpty) {
       // nothing moved since asOf (pure no-op commits in between) — still a
       // commit, so readAsOf(M) is well-defined and the caller's version
       // arithmetic holds
-      writeCommitMarker(fs, new Path(new Path(root, "_graft_commits"), m.toString),
-        m, Nil, Some(MarkerRewrite))
+      writeCommitMarker(fs, markerPath(root, m), m, Nil, Some(MarkerRewrite))
       return RestoreStats(m, asOf, Nil, Nil)
     }
 
@@ -2660,7 +2551,7 @@ object LakeSink {
     // leaf; the snapshot listing runs against the untouched table (no
     // rename has happened yet)
     val snap = readAsOf(spark, lakeDir, asOf)
-    val changedDates = (changed ++ histOnly).map(_.stripPrefix("event_date="))
+    val changedDates = (changed ++ histOnly).map(_.stripPrefix(LeafPrefix))
     val stage = new Path(root, "_restore_stage")
     fs.delete(stage, true) // crashed attempt's leftovers
     snap.filter(col("event_date").cast("string").isin(changedDates: _*))
@@ -2670,20 +2561,17 @@ object LakeSink {
     faultInjector("staged")
     checkWriterFence(fs, root, epoch)
 
-    val staged = fs.listStatus(stage).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      .map(_.getPath.getName).toSet
+    val staged = leafDirs(fs, stage).map(_.getName).toSet
     val (rewritten, retired) = changed.partition(staged.contains)
     // history-resident leaves with snapshot content: re-materialize live
     // (those without stay retired — they legitimately had no rows at asOf)
     val resurrected = histOnly.filter(staged.contains)
     if (rewritten.isEmpty && retired.isEmpty && resurrected.isEmpty) {
       fs.delete(stage, true)
-      writeCommitMarker(fs, new Path(new Path(root, "_graft_commits"), m.toString),
-        m, Nil, Some(MarkerRewrite))
+      writeCommitMarker(fs, markerPath(root, m), m, Nil, Some(MarkerRewrite))
       return RestoreStats(m, asOf, Nil, Nil)
     }
-    val tmpRoot = new Path(root, "_compact_tmp")
+    val tmpRoot = new Path(root, TmpRoot)
     fs.mkdirs(tmpRoot)
     (rewritten ++ resurrected).foreach { l =>
       val tmp = new Path(tmpRoot, l)
@@ -2691,8 +2579,8 @@ object LakeSink {
       require(fs.rename(new Path(stage, l), tmp),
         s"restore failed staging $l into the sweep namespace")
       checkWriterFence(fs, root, epoch)
-      lineageStampedSwap(fs, root, new Path(root, l), tmp, m,
-        conf = spark.sparkContext.hadoopConfiguration)
+      lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
+        root, new Path(root, l), tmp, m)
       faultInjector(s"swapped:$l")
     }
     val gen = new Path(new Path(root, HistoryRoot), m.toString)
@@ -2708,8 +2596,8 @@ object LakeSink {
     fs.delete(stage, true)
     faultInjector("pre-marker")
     checkWriterFence(fs, root, epoch)
-    writeCommitMarker(fs, new Path(new Path(root, "_graft_commits"), m.toString),
-      m, (rewritten ++ retired ++ resurrected).sorted, Some(MarkerRewrite))
+    writeCommitMarker(fs, markerPath(root, m), m,
+      (rewritten ++ retired ++ resurrected).sorted, Some(MarkerRewrite))
     RestoreStats(m, asOf, rewritten, retired, resurrected)
   }
 
@@ -2763,7 +2651,7 @@ object LakeSink {
     * the insert commit, `"pre-marker"` before the marker).
     */
   def mergeInto(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       upserts: DataFrame,
       keyCol: String,
@@ -2786,7 +2674,7 @@ object LakeSink {
   }
 
   private def mergeIntoImpl(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       upserts: DataFrame,
       keyCol: String,
@@ -2799,25 +2687,14 @@ object LakeSink {
       recordChanges: Boolean,
       faultInjector: String => Unit): MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, lit}
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
+    val epoch = verbEpoch(fs, root, fenceEpoch)
     recoverSweeps(fs, root)
     val b = maxCommittedId(fs, root) + 1
     require(b > 0, s"merge into $lakeDir needs a ledgered lake (no commits " +
       "found) — lay the table down via appendBatch/datePartitioned first")
-
-    // the registered union schema when the registry exists (files that
-    // predate a widening null-fill under the declared read); head-leaf
-    // inference only for a pre-registry lake
-    val lakeSchema = registeredSchema(fs, root).getOrElse {
-      val leaves = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-      require(leaves.nonEmpty, s"no event_date= leaves under $lakeDir")
-      spark.read.parquet(leaves.head.getPath.toString).schema
-    }
+    val lakeSchema = rewriteSchema(spark, fs, root)
     require(upserts.schema.fields.map(f => (f.name, f.dataType)).toSet ==
       lakeSchema.fields.map(f => (f.name, f.dataType)).toSet,
       s"upserts schema ${upserts.schema.simpleString} does not match the " +
@@ -2861,7 +2738,7 @@ object LakeSink {
       val dates = allKeys.select("__d").distinct()
         .collect().map(_.getString(0)).sorted
       val (existing, fresh) = dates.partition(d =>
-        fs.exists(new Path(root, s"event_date=$d")))
+        fs.exists(new Path(root, s"$LeafPrefix$d")))
 
       // find-touched-leaves: read ONLY the scoped leaves, semi-join the
       // broadcast key set — the O(scoped-partitions) scan every MERGE pays.
@@ -2873,9 +2750,9 @@ object LakeSink {
         if (existing.isEmpty) None
         else Some {
           val scan = spark.read
-            .schema(lakeSchema.add("event_date", org.apache.spark.sql.types.DateType))
+            .schema(lakeSchema.add("event_date", DateType))
             .option("basePath", root.toString)
-            .parquet(existing.map(d => new Path(root, s"event_date=$d").toString): _*)
+            .parquet(existing.map(d => new Path(root, s"$LeafPrefix$d").toString): _*)
           dvM.fold(scan)(applyDv(scan, _))
         }
       val matched: Set[String] = scoped.fold(Set.empty[String]) { sc =>
@@ -2893,8 +2770,7 @@ object LakeSink {
       // is what lets [[tailChanges]] serve a merge commit instead of
       // refusing it the way [[tailCommits]] must.
       if (recordChanges) {
-        val cdcDir = new Path(new Path(root, CdcRoot), b.toString)
-        if (fs.exists(cdcDir)) System.err.println(
+        if (fs.exists(cdcDir(root, b))) System.err.println(
           s"[lake] merge retry: change record for commit $b already " +
             "complete — keeping the first attempt's pre-images")
         else {
@@ -2928,19 +2804,15 @@ object LakeSink {
                 .drop("__m", "__d")
               preOps.unionByName(postOps)
           }
-          val tmp = new Path(new Path(root, CdcRoot), s".tmp$b")
-          changes.write.mode("overwrite").parquet(tmp.toString)
-          fs.mkdirs(cdcDir.getParent)
-          require(fs.rename(tmp, cdcDir),
-            s"change-record rename failed: $tmp -> $cdcDir")
+          writeChangeRecord(fs, root, b, changes)
         }
       }
 
       // copy-on-write rewrites, fanned like compaction's sweep
       def mergeOne(d: String): String = {
-        val leafName = s"event_date=$d"
+        val leafName = s"$LeafPrefix$d"
         val leaf = new Path(root, leafName)
-        val tmp = new Path(new Path(root, "_compact_tmp"), leafName)
+        val tmp = new Path(new Path(root, TmpRoot), leafName)
         // declare the union schema: a leaf holding files from both sides
         // of a widening must read every file, null-filling the old ones.
         // DV'd rows are filtered out of the rewrite (materialized), never
@@ -2955,33 +2827,17 @@ object LakeSink {
         val merged = current
           .join(broadcast(keysHere), Seq(keyCol), "left_anti")
           .unionByName(upsertsHere)
-        val leafBytes = fs.listStatus(leaf)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getLen).sum
-        val nFiles = math.max(1L, (leafBytes + targetFileBytes - 1) / targetFileBytes).toInt
-        merged.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
+        merged.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
+          .write.mode("overwrite").parquet(tmp.toString)
         faultInjector(s"rewritten:$leafName")
         // the rewrite was a Spark job — re-validate at the last instant
         // before the swap, same as compaction
         checkWriterFence(fs, root, epoch)
-        lineageStampedSwap(fs, root, leaf, tmp, b,
-          statsCols = statsCols,
-          conf = spark.sparkContext.hadoopConfiguration)
+        lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
+          root, leaf, tmp, b, statsCols)
         leafName
       }
-      val toRewrite = matched.toSeq.sorted
-      val rewritten: Seq[String] =
-        if (toRewrite.size <= 1 || maxConcurrency <= 1) toRewrite.map(mergeOne)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(maxConcurrency, toRewrite.size))
-          try {
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-            Await.result(Future.sequence(toRewrite.map(d => Future(mergeOne(d)))),
-              scala.concurrent.duration.Duration.Inf)
-          } finally pool.shutdown()
-        }
+      val rewritten = fanOut(matched.toSeq.sorted, maxConcurrency)(mergeOne)
 
       // pure inserts (no match in their leaf, or the leaf is new): plain
       // gb<B> append — rewritten leaves already carry their upserts
@@ -2993,29 +2849,16 @@ object LakeSink {
             .filter(to_date(col(tsCol)).cast("string").isInCollection(insertDates))
           if (ins.isEmpty) Seq.empty
           else {
-            val staging = new Path(new Path(root, StagingRoot), s"b$b")
-            stagedLeafShape(ins.withColumn("event_date", to_date(col(tsCol))))
-              .write.partitionBy("event_date").mode("overwrite")
-              .parquet(staging.toString)
-            faultInjector("staged-inserts")
-            checkWriterFence(fs, root, epoch)
-            val committed = commitStaged(fs, root, staging, b, (_, _) => ())
-            if (statsCols.nonEmpty) writeFileStats(fs,
-              spark.sparkContext.hadoopConfiguration, root, b.toString,
-              committed.flatMap { l =>
-                fs.listStatus(new Path(root, l)).toSeq
-                  .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$b-"))
-                  .map(f => l -> f.getPath)
-              }, statsCols)
-            fs.delete(staging, true)
+            val committed = stageAndCommit(fs, root, ins, tsCol, b, epoch,
+              statsCols, () => faultInjector("staged-inserts"))
+            fs.delete(stagingDir(root, b), true)
             committed
           }
         }
 
       faultInjector("pre-marker")
       checkWriterFence(fs, root, epoch)
-      writeCommitMarker(fs,
-        new Path(new Path(root, "_graft_commits"), b.toString), b,
+      writeCommitMarker(fs, markerPath(root, b), b,
         rewritten ++ appended, markerTag = Some(MarkerRewrite))
       System.err.println(s"[lake] merge committed as $b: " +
         s"${rewritten.size} leaves rewritten, ${appended.size} appended")
@@ -3087,7 +2930,7 @@ object LakeSink {
     * `"rewritten:<leaf>"` after each live-leaf swap, `"pre-marker"`.
     */
   def purgeKeys(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       lakeDir: String,
       keys: DataFrame,
       keyCol: String,
@@ -3096,39 +2939,30 @@ object LakeSink {
       fenceEpoch: Option[Long] = None,
       faultInjector: String => Unit = _ => ()): PurgeStats = {
     import org.apache.spark.sql.functions.broadcast
-    val root = new Path(lakeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "purgeKeys")
-    val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
-    checkWriterFence(fs, root, epoch)
+    val epoch = verbEpoch(fs, root, fenceEpoch)
     recoverSweeps(fs, root)
     val b = maxCommittedId(fs, root) + 1
     require(b > 0, s"purge on $lakeDir needs a ledgered lake (no commits " +
       "found) — purge stamps its rewrites with a commit id")
     val keySet = keys.select(col(keyCol)).distinct().cache()
     try {
-      val lakeSchema = registeredSchema(fs, root).getOrElse {
-        val leaves = fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-        require(leaves.nonEmpty, s"no event_date= leaves under $lakeDir")
-        spark.read.parquet(leaves.head.getPath.toString).schema
-      }
+      val lakeSchema = rewriteSchema(spark, fs, root)
       val dvP = dvStore(spark, fs, root)
+      // mounts are the root and listed history generations: both exist
       def touchedLeafNames(mount: Path): Seq[String] = {
-        val leaves = if (!fs.exists(mount)) Seq.empty
-          else fs.listStatus(mount).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-            .map(_.getPath)
+        val leaves = leafDirs(fs, mount)
         if (leaves.isEmpty) return Seq.empty
         val scan = spark.read
-          .schema(lakeSchema.add("event_date", org.apache.spark.sql.types.DateType))
+          .schema(lakeSchema.add("event_date", DateType))
           .option("basePath", mount.toString)
           .parquet(leaves.map(_.toString): _*)
         scan.select(col(keyCol), col("event_date").cast("string").as("__d"))
           .join(broadcast(keySet), Seq(keyCol), "left_semi")
           .select("__d").distinct().collect()
-          .map(d => s"event_date=${d.getString(0)}").sorted.toSeq
+          .map(d => s"$LeafPrefix${d.getString(0)}").sorted.toSeq
       }
 
       // LIVE rewrite: copy-on-write WITHOUT retention, gc<B>-stamped
@@ -3136,108 +2970,58 @@ object LakeSink {
       var purged = 0L
       def purgeOne(leafName: String): Unit = {
         val leaf = new Path(root, leafName)
-        val tmp = new Path(new Path(root, "_compact_tmp"), leafName)
+        val tmp = new Path(new Path(root, TmpRoot), leafName)
         val scan = spark.read.schema(lakeSchema).parquet(leaf.toString)
         val current = dvP.fold(scan)(applyDv(scan, _)) // materialize DVs too
         val kept = current.join(broadcast(keySet), Seq(keyCol), "left_anti")
-        val leafBytes = fs.listStatus(leaf)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getLen).sum
-        val nFiles = math.max(1L, (leafBytes + targetFileBytes - 1) / targetFileBytes).toInt
-        kept.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
-        // stamp the rewrite with the purge commit's lineage
-        fs.listStatus(tmp).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName.toString).zipWithIndex.foreach { case (f, i) =>
-            require(fs.rename(f.getPath, new Path(tmp, s"gc$b-p$i.snappy.parquet")),
-              s"purge stamp rename failed in $tmp")
-          }
+        kept.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
+          .write.mode("overwrite").parquet(tmp.toString)
+        stampRewrite(fs, tmp, b) // the purge commit's lineage
         checkWriterFence(fs, root, epoch)
-        // crash-safe swap with NO retention: aside exists only between the
-        // two renames (recoverSweeps restores or promotes), then dies
-        val old = new Path(new Path(root, OldRoot), leafName)
-        fs.mkdirs(old.getParent)
-        fs.delete(old, true)
-        require(fs.rename(leaf, old), s"purge swap failed renaming $leaf aside")
-        require(fs.rename(tmp, leaf), s"purge swap failed for $leaf")
-        fs.delete(old, true)
+        swapAside(fs, root, leaf, tmp, "purge")
         faultInjector(s"rewritten:$leafName")
       }
       if (touchedLive.nonEmpty) {
         val scanAll = spark.read
-          .schema(lakeSchema.add("event_date", org.apache.spark.sql.types.DateType))
+          .schema(lakeSchema.add("event_date", DateType))
           .option("basePath", root.toString)
           .parquet(touchedLive.map(l => new Path(root, l).toString): _*)
         val liveAll = dvP.fold(scanAll)(applyDv(scanAll, _))
         purged = liveAll.join(broadcast(keySet), Seq(keyCol), "left_semi").count()
       }
-      if (touchedLive.size <= 1 || maxConcurrency <= 1) touchedLive.foreach(purgeOne)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrency, touchedLive.size))
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          Await.result(Future.sequence(touchedLive.map(l => Future(purgeOne(l)))),
-            scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
+      fanOut(touchedLive, maxConcurrency)(purgeOne)
 
       // HISTORY erasure: destroy every generation-leaf holding a match
-      val histRoot = new Path(root, HistoryRoot)
       var droppedHist = 0
-      if (fs.exists(histRoot)) {
-        fs.listStatus(histRoot).toSeq
-          .filter(g => g.isDirectory && g.getPath.getName.forall(_.isDigit))
-          .sortBy(_.getPath.getName.toLong)
-          .foreach { g =>
-            touchedLeafNames(g.getPath).foreach { l =>
-              fs.delete(new Path(g.getPath, l), true)
-              droppedHist += 1
-              System.err.println(s"[lake] purge erased history " +
-                s"${g.getPath.getName}/$l")
-            }
-            if (fs.listStatus(g.getPath).isEmpty) fs.delete(g.getPath, true)
-          }
+      historyGens(fs, root).foreach { case (_, g) =>
+        touchedLeafNames(g).foreach { l =>
+          fs.delete(new Path(g, l), true)
+          droppedHist += 1
+          System.err.println(s"[lake] purge erased history ${g.getName}/$l")
+        }
+        if (fs.listStatus(g).isEmpty) fs.delete(g, true)
       }
 
       // CHANGE-RECORD erasure: rewrite records holding the key (pre/post
       // images are row data); tmp + rename keeps them durable-or-absent
       val cdcRoot = new Path(root, CdcRoot)
       var cdcRewritten = 0
-      if (fs.exists(cdcRoot)) {
-        fs.listStatus(cdcRoot).toSeq
-          .filter(d => d.isDirectory && d.getPath.getName.forall(_.isDigit))
-          .sortBy(_.getPath.getName.toLong)
-          .foreach { d =>
-            val rec = spark.read.parquet(d.getPath.toString)
-            if (!rec.join(broadcast(keySet), Seq(keyCol), "left_semi").isEmpty) {
-              val tmp = new Path(cdcRoot, s".purge${d.getPath.getName}")
-              rec.join(broadcast(keySet), Seq(keyCol), "left_anti")
-                .write.mode("overwrite").parquet(tmp.toString)
-              fs.delete(d.getPath, true)
-              require(fs.rename(tmp, d.getPath),
-                s"purged change-record rename failed for ${d.getPath}")
-              cdcRewritten += 1
-            }
-          }
+      numbered(fs, cdcRoot).filter(_._2.isDirectory).foreach { case (_, d) =>
+        val rec = spark.read.parquet(d.getPath.toString)
+        if (!rec.join(broadcast(keySet), Seq(keyCol), "left_semi").isEmpty) {
+          val tmp = new Path(cdcRoot, s".purge${d.getPath.getName}")
+          rec.join(broadcast(keySet), Seq(keyCol), "left_anti")
+            .write.mode("overwrite").parquet(tmp.toString)
+          fs.delete(d.getPath, true)
+          require(fs.rename(tmp, d.getPath),
+            s"purged change-record rename failed for ${d.getPath}")
+          cdcRewritten += 1
+        }
       }
 
       // zone-map fold to live entries only (dead files' min/max can carry
       // a purged key's value) — same discipline as vacuum's fold
-      val statsDir = new Path(root, StatsRoot)
-      if (fs.exists(statsDir) && fs.listStatus(statsDir).nonEmpty) {
-        val live = statsLines(fs, root).filter { l =>
-          l.split('\t') match {
-            case Array(key, _, _, _) => fs.exists(new Path(root, key))
-            case _ => false
-          }
-        }.distinct
-        val sidecars = fs.listStatus(statsDir).toSeq.filter(_.isFile).map(_.getPath)
-        writeSmallFile(fs, new Path(statsDir, "folded"),
-          (live :+ MarkerEnd).mkString("\n"))
-        sidecars.filter(_.getName != "folded").foreach(p => fs.delete(p, false))
-      }
+      foldStats(fs, root, minSidecars = 1)
 
       // the marker's leaf list comes from the STAMPS, not this run's work
       // list: a crashed attempt may have swapped leaves (same re-allocated
@@ -3246,11 +3030,9 @@ object LakeSink {
       // re-allocate b and silently collide with the orphaned stamps. A
       // gc<b> stamp can only be a crashed attempt at THIS id: every
       // committed rewrite's id has a marker, which caps allocation above it
-      val stampedLeaves = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_date="))
-        .filter(l => fs.listStatus(l.getPath).exists(f =>
-          f.isFile && f.getPath.getName.startsWith(s"gc$b-")))
-        .map(_.getPath.getName).sorted
+      val stampedLeaves = leafDirs(fs, root)
+        .filter(l => fs.listStatus(l).exists(f => f.isFile && f.getPath.getName.startsWith(s"gc$b-")))
+        .map(_.getName)
       if (stampedLeaves.isEmpty && droppedHist == 0 && cdcRewritten == 0) {
         // nothing matched anywhere and no crashed attempt to complete:
         // burn no commit id (an effect-free rewrite marker would only trip
@@ -3263,8 +3045,8 @@ object LakeSink {
           stampedLeaves.mkString(", "))
       faultInjector("pre-marker")
       checkWriterFence(fs, root, epoch)
-      writeCommitMarker(fs, new Path(new Path(root, "_graft_commits"), b.toString),
-        b, stampedLeaves, markerTag = Some(MarkerRewrite))
+      writeCommitMarker(fs, markerPath(root, b), b, stampedLeaves,
+        markerTag = Some(MarkerRewrite))
       System.err.println(s"[lake] purge committed as $b: $purged rows from " +
         s"${stampedLeaves.size} live leaves, $droppedHist history leaves " +
         s"erased, $cdcRewritten change records rewritten")
@@ -3282,7 +3064,7 @@ object LakeSink {
     * ordering once old is healed, but if an operator hand-deleted a leaf)
     * → promote the rewrite rather than discard data.
     */
-  private def recoverSweeps(fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit = {
+  private def recoverSweeps(fs: FileSystem, root: Path): Unit = {
     val oldRoot = new Path(root, OldRoot)
     if (fs.exists(oldRoot)) fs.listStatus(oldRoot).foreach { o =>
       val target = new Path(root, o.getPath.getName)
@@ -3291,7 +3073,7 @@ object LakeSink {
         require(fs.rename(o.getPath, target), s"recovery rename failed for $target")
       } else fs.delete(o.getPath, true)
     }
-    val tmpRoot = new Path(root, "_compact_tmp")
+    val tmpRoot = new Path(root, TmpRoot)
     if (fs.exists(tmpRoot)) fs.listStatus(tmpRoot).foreach { t =>
       val target = new Path(root, t.getPath.getName)
       if (!fs.exists(target)) {

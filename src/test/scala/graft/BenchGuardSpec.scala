@@ -46,6 +46,12 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.driftDivisor(Some(1.0), Some(0.0)) === 1.0)
   }
 
+  test("a query that threw is listed as failed instead of silently leaving the totals") {
+    val times = Seq("q2" -> 0.4, "st1" -> -1.0, "q1" -> -1.0, "q3" -> 0.0)
+    assert(Bench.failedQueries(times) === Seq("q1", "st1"))
+    assert(Bench.failedQueries(Seq("q1" -> 0.2)) === Seq.empty)
+  }
+
   test("calibration key stays out of the query namespace") {
     assert(Bench.CalibrationKey.startsWith("_"))
     assert(Bench.refGaps(Seq("q1"), Map("q1" -> 0.2, Bench.CalibrationKey -> 1.0))
