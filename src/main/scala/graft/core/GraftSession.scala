@@ -97,26 +97,37 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForklessLocalFs].getName)
 
+  /** Settings that decide what the engine writes and reads, applied by
+    * every session that runs it, the test session included, so specs run
+    * the same file-commit protocol and readers the engine ships.
+    *   - [[LocalFsConf]].
+    *   - Per-job commit-protocol overhead: the streaming replay sinks run one
+    *     tiny write job per micro-batch, so the protocol's fixed costs are a
+    *     measured slice of the per-batch floor (OPTIMIZATION_r18.md item 3).
+    *     v2 commits task output directly at task commit — no job-commit
+    *     rename pass over _temporary — and _SUCCESS markers are dead weight
+    *     for directories nothing polls. Both safe here: every writer in this
+    *     engine either owns its output dir exclusively (per-batch b<id>
+    *     dirs, mode=overwrite) or stages invisibly and publishes by rename
+    *     (the lake sinks), so v2's weaker mid-job-failure visibility is
+    *     behind an atomic publish anyway.
+    *   - `nanosAsLong`: some fixture generations store `events.ts` as
+    *     TIMESTAMP(NANOS), which Spark's parquet reader accepts only as a
+    *     long under this flag; `Tables.loadEvents` normalizes either shape.
+    */
+  val SessionConf: Map[String, String] = LocalFsConf ++ Map(
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName("graft")
       .withExtensions(new graft.functions.GraftExtensions)
-      .config(LocalFsConf)
+      .config(SessionConf)
       .config("spark.local.dir", localDir)
-      // Per-job commit-protocol overhead: the streaming replay sinks run one
-      // tiny write job per micro-batch, so the protocol's fixed costs are a
-      // measured slice of the per-batch floor (OPTIMIZATION_r18.md item 3).
-      // v2 commits task output directly at task commit — no job-commit
-      // rename pass over _temporary — and _SUCCESS markers are dead weight
-      // for directories nothing polls. Both safe here: every writer in this
-      // engine either owns its output dir exclusively (per-batch b<id>
-      // dirs, mode=overwrite) or stages invisibly and publishes by rename
-      // (the lake sinks), so v2's weaker mid-job-failure visibility is
-      // behind an atomic publish anyway.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

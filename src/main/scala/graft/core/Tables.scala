@@ -26,14 +26,14 @@ object Tables {
 
   /** events.parquet has shipped with two physical ts encodings across
     * fixture generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
-    * only accepts as a long via the legacy conf) and plain TIMESTAMP(MICROS)
+    * only accepts as a long via the legacy conf, set for every session in
+    * `GraftSession.SessionConf`) and plain TIMESTAMP(MICROS)
     * without isAdjustedToUTC (which Spark reads as TIMESTAMP_NTZ). Both are
     * normalized to one shape — a session-zoned microsecond TIMESTAMP — so
     * every downstream operator and the DuckDB oracle (session TZ pinned to
     * UTC; GraftSession/GraftTestSpark) see identical instants either way.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val raw = spark.read.parquet(s"$sfDir/events.parquet")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -20,8 +20,10 @@ import org.apache.spark.sql.types._
   *      PERMISSIVE-parse policy with a corrupt-record side channel — bad
   *      records are captured, never kill the query (poison-pill tolerance,
   *      SURVEY §2.3);
-  *   2. the missing `user_id` primary key is generated engine-side with
-  *      `uuid()` in the sink projection.
+  *   2. the missing `user_id` primary key is derived engine-side from the
+  *      record's payload ([[userId]]), so a replayed or re-sent record gets
+  *      the same key and a keyed upsert can absorb it, which a random key
+  *      never allows.
   *
   * Scale: the whole plan is shuffle-free (scan -> project -> parse ->
   * project -> sink), so it pipelines at source parallelism on any cluster;
@@ -49,8 +51,25 @@ object UserIngestPipeline {
     StructField("phone", StringType),
     StructField("_corrupt_record", StringType)))
 
+  /** The `user_id` of a record: `java.util.UUID.nameUUIDFromBytes` of its
+    * UTF-8 payload (RFC 4122 version 3: the MD5 of the bytes with the
+    * version nibble set to 3 and the variant bits to 10), written with Spark
+    * built-ins so its generated code is the same in every micro-batch.
+    * `uuid()` cannot serve: streaming gives it a new seed every micro-batch
+    * and codegen writes the seed into the class, so every batch would
+    * compile a new one. The key is over the payload, not the source
+    * position, because a producer retry re-sends the same payload at a new
+    * offset and only a content key lets an upsert absorb it.
+    */
+  private val userId: Column = {
+    val h = "md5(CAST(value AS BINARY))"
+    expr(s"""concat_ws('-', substr($h, 1, 8), substr($h, 9, 4), '3' || substr($h, 14, 3),
+      |  substr('89ab', CAST(conv(substr($h, 17, 1), 16, 10) AS INT) % 4 + 1, 1) || substr($h, 18, 3),
+      |  substr($h, 21, 12))""".stripMargin)
+  }
+
   /** Kafka-shaped (binary `value`) or raw-string stream -> flat typed rows.
-    * Mirrors R8-R10 + the uuid surrogate key (R14 fix).
+    * Mirrors R8-R10 + the content-derived `user_id` key (R14 fix).
     */
   def parse(raw: DataFrame): DataFrame = {
     val stringified =
@@ -58,13 +77,13 @@ object UserIngestPipeline {
       else raw.toDF("value")
     stringified
       .select(from_json(col("value"), userSchema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")).as("data"))
-      .select("data.*")
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")).as("data"),
+        userId.as("user_id"))
+      .select("data.*", "user_id")
       // named cast policy: numeric -> long, alphanumeric -> null. try_cast,
       // because under ANSI mode (Spark 4 default) a plain cast would make
       // one UK postcode kill the whole query.
       .withColumn("postcode", expr("try_cast(postcode AS BIGINT)"))
-      .withColumn("user_id", expr("uuid()"))
   }
 
   /** Rows that failed schema parse (poison pills) — route to a quarantine

@@ -9,7 +9,7 @@ object GraftTestSpark {
       .master("local[4]")
       .appName("graft-test")
       .withExtensions(new graft.functions.GraftExtensions)
-      .config(graft.core.GraftSession.LocalFsConf)
+      .config(graft.core.GraftSession.SessionConf)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       // PlanSnapshotSpec: scan metadata (DataFilters/PushedFilters) is

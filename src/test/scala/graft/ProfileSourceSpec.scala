@@ -77,6 +77,6 @@ class ProfileSourceSpec extends AnyFunSuite {
     assert(total === 62)
     assert(corrupt === 2)
     assert(nullPost === 8, "i % 7 == 3 gives {3,10,17,24,31,38,45,52,59}; 17 is torn -> 8 remain")
-    assert(keyed === 60, "every clean row gets the uuid surrogate key")
+    assert(keyed === 60, "every clean row gets the content-derived user_id key")
   }
 }

@@ -8,7 +8,7 @@ import graft.streaming.UserIngestPipeline
 
 /** End-to-end replay of the reference pipeline (SURVEY §5.2 "pipeline e2e"):
   * raw randomuser-style JSON through MemoryStream -> permissive parse ->
-  * flatten -> uuid key -> checkpointed foreachBatch parquet append ->
+  * flatten -> content-derived key -> checkpointed foreachBatch parquet append ->
   * SQL over the ingested table.
   */
 class UserPipelineSpec extends AnyFunSuite {
@@ -23,7 +23,7 @@ class UserPipelineSpec extends AnyFunSuite {
     """{"full_name": "Alan Turing", "gender": "male", "address": "x", "postcode": "SW1A 1AA", "email": "a@b.c", "phone": "1"}"""
   private val truncated = """{"full_name": "Broken"""
 
-  test("ingest pipeline: parse, postcode policy, uuid key, keyed sink") {
+  test("ingest pipeline: parse, postcode policy, content key, keyed sink") {
     implicit val ctx: SQLContext = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[String]
@@ -45,9 +45,11 @@ class UserPipelineSpec extends AnyFunSuite {
     assert(ada.getAs[Long]("postcode") === 12345L)
     val alan = users.filter("full_name = 'Alan Turing'").head()
     assert(alan.isNullAt(alan.fieldIndex("postcode")))
-    // surrogate key generated and unique (SURVEY §1.2 defect 2 fix)
+    // key derived from the payload and unique (SURVEY §1.2 defect 2 fix)
     val ids = users.select("user_id").collect().map(_.getString(0))
     assert(ids.forall(_ != null) && ids.distinct.length === ids.length)
+    assert(ada.getAs[String]("user_id") ===
+      java.util.UUID.nameUUIDFromBytes(good.getBytes("UTF-8")).toString)
     // ad-hoc query path (reference entry point C)
     UserIngestPipeline.registerUsersTable(spark, outDir)
     assert(spark.sql("SELECT full_name FROM users WHERE postcode IS NOT NULL").count() === 1)
