@@ -808,10 +808,10 @@ object ScaleProbe {
     //      |P_c|x min(|M_c|, cap) the bound WITH it — the rung's pass
     //      criterion is block_salted holding while block_raw blows up
     //      with the 16x skew.
-    //   3. FIXED cell count contrast (knnJoinRanked census, the flat
-    //      broadcast shape kept only as a probe): per-cell population
-    //      grows with N and the candidate total goes quadratic — the
-    //      geometry that must not ship.
+    //   3. the FIXED cell count contrast (50 cells at every rung, flat
+    //      centroid broadcast) is no longer run: its candidate total went
+    //      quadratic in N (162k / 2.6M / 42.3M at 1x / 4x / 16x,
+    //      BENCH_NOTES round 15) — the geometry that must not ship.
     val knnJoinR = (if (phase == "all" || phase == "knnjoin") Seq(1, 4, 16)
       else Seq.empty[Int]).map { k =>
       val sim = graft.operators.SimilarityOps
@@ -838,16 +838,6 @@ object ScaleProbe {
         max(least(col("mc"), lit(cap)) * col("pc"))).head
       val (candStride, maxCell, meanCell) = (r.getLong(0), r.getLong(1), r.getDouble(2))
       val (blockRaw, blockSalted) = (r.getLong(3), r.getLong(4))
-      // fixed 50 cells at every rung: the base copy's ids 0..49 (census
-      // via the flat-broadcast probe; the operator never runs this shape)
-      val rankedF = sim.knnJoinRanked(e,
-        e.filter(col("vec_id") < 50)
-          .selectExpr("vec_id AS cid", "embedding AS cemb", "nrm AS cnrm"))
-      val candFixed = rankedF.filter(col("rn") === 1).groupBy("cid")
-        .agg(count(lit(1)).as("mc"))
-        .join(rankedF.filter(col("rn") <= 2).groupBy("cid")
-          .agg(count(lit(1)).as("pc")), "cid")
-        .agg(sum(col("mc") * col("pc"))).head.getLong(0)
       // analytic shuffle weight of the candidate join's corpus-sized rows:
       // codes row ~ (8B id + 8B norm + 8x4B codes) vs raw ~ 64x4B vector
       val codesMB = candStride * 48.0 / (1 << 20)
@@ -856,12 +846,11 @@ object ScaleProbe {
       e.unpersist(); vecs.unpersist()
       System.gc()
       System.err.println(f"[scale] knnjoin $k%2dx  vecs=$n%7d  $t%6.2f s  " +
-        f"cand(stride)=$candStride%10d  cand(fixed50)=$candFixed%11d  " +
+        f"cand(stride)=$candStride%10d  " +
         f"cellskew=${maxCell / meanCell}%5.1f  blockraw=$blockRaw%9d  " +
         f"blocksalted=$blockSalted%9d  shuffle codes=$codesMB%.1f MB vs raw=$rawMB%.1f MB")
       (k, Seq[(String, Double)](
         "join" -> t, "cand_stride" -> candStride.toDouble,
-        "cand_fixed50" -> candFixed.toDouble,
         "cell_skew" -> maxCell / meanCell,
         "block_raw" -> blockRaw.toDouble,
         "block_salted" -> blockSalted.toDouble,
@@ -1195,38 +1184,6 @@ object ScaleProbe {
       }
     }
 
-    // e7 materialization rung: the SAME bm25 pipeline with the inverted
-    // index pinned via localCheckpoint (lineage-free executor blocks; dies
-    // with an executor) vs written-to-parquet-and-read-back (the reliable
-    // production materialization). The delta prices the operator scaladocs'
-    // cluster guidance: parquet pays serialize+commit+rescan once, and in
-    // exchange the index survives executor loss and is servable to every
-    // future query. Run at 4x so the index is big enough to see the cost.
-    val e7Mat = (if (phase == "all" || phase == "e7mat") Seq(4)
-      else Seq.empty[Int]).map { k =>
-      val docs = docsTimes(spark, dir, k).cache()
-      docs.count()
-      // untimed warmup: JIT + codegen compile the whole pipeline once, so
-      // first-timed-run bias can't masquerade as a materializer difference
-      graft.operators.SimilarityOps.bm25Retrieve(docs)
-        .write.format("noop").mode("overwrite").save()
-      val tLocal = time {
-        graft.operators.SimilarityOps.bm25Retrieve(docs)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val matDir = java.nio.file.Files.createTempDirectory("graft-e7mat").toString
-      val tParquet = time {
-        graft.operators.SimilarityOps.bm25Retrieve(docs, df => {
-          df.write.mode("overwrite").parquet(s"$matDir/tf")
-          spark.read.parquet(s"$matDir/tf")
-        }).write.format("noop").mode("overwrite").save()
-      }
-      docs.unpersist()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(matDir))
-      System.err.println(f"[scale] e7mat $k%2dx  local=$tLocal%6.2f s  parquet=$tParquet%6.2f s")
-      (k, Seq(("local", tLocal), ("parquet", tParquet)))
-    }
-
     val json = (results.map { case (k, steps) =>
       steps.map { case (n, t) => s""""$n":$t""" }
         .mkString(s""""${k}x":{""", ",", "}")
@@ -1277,9 +1234,6 @@ object ScaleProbe {
       s""""hotkey_s${s}":{"drain":$t}"""
     } ++ liveCompactR.map { case (tag, t) =>
       s""""livecompact_$tag":{"drain2":$t}"""
-    } ++ e7Mat.map { case (k, vals) =>
-      vals.map { case (n, v) => s""""$n":$v""" }
-        .mkString(s""""e7mat_${k}x":{""", ",", "}")
     }).mkString("{\"metric\":\"scale_ladder\",", ",", "}")
     println(json)
     spark.stop()

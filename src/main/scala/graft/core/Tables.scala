@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is unchanged — the loaders deliberately expose nothing but a DataFrame.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Small dimension tables: always broadcast-eligible at any scale
     * (region=5 rows, nation=25 rows — fixed-size in TPC-H regardless of SF).
     */
@@ -58,10 +54,4 @@ object Tables {
           "normalization case before trusting downstream event-time semantics")
     }
   }
-
-  /** Register every fixture table as a temp view so `spark.sql` text matches
-    * the DuckDB oracle text as closely as possible.
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

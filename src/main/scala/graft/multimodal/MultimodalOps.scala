@@ -629,58 +629,57 @@ object MultimodalOps {
       |SELECT disposition, modality, count(*) AS n, sum(doc_id)::BIGINT AS id_checksum
       |FROM d GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val sink = graft.streaming.LakeSink
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_mediagate_")
-    val lakeDir = base.resolve("lake").toString
-    val corrupt = "doc_id % 3 < 2 AND doc_id % 7 = 0"
-    val rows = withPayloads(s, dir)
-      .withColumn("modality",
-        expr("CASE WHEN doc_id % 6 = 0 THEN 'image' WHEN doc_id % 6 = 3 THEN 'image_png' " +
-          "WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'binary' END"))
-      .withColumn("payload",
-        when(expr(corrupt), expr("substring(payload, 1, 20)"))
-          .otherwise(col("payload")))
-      .withColumn("ts",
-        expr("timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, CAST(doc_id % 10 AS INT))"))
-      // pin the synthesized payload frame ONCE: each of the 4 expectation
-      // appends makes two passes (pass + fail filters), so the unpinned
-      // lineage ran the per-row media synthesis (BMP/PNG/WAV container
-      // build incl. CRC32 framing) 8x per evaluation (guide §5)
-      .localCheckpoint()
-    (0 until 4).foreach { i =>
-      sink.appendWithExpectations(s, lakeDir,
-        rows.filter(pmod(col("doc_id"), lit(4)) === i),
-        Seq("catalog_match" -> "media_modality(payload) = modality"),
-        commitId = Some(i.toLong))
-    }
-    graft.core.Checkpoints.release(rows)
-    val live = sink.readLake(s, lakeDir)
-    val quarantined = sink.readQuarantine(s, lakeDir)
-    // the gate must be EXACT against the injected corruption — a drifting
-    // sniffer fails here, making the oracle row a true gate on the decoder.
-    // The certificate rides the census passes as observed metrics
-    // (CollectMetrics on the same scan the aggregation makes) instead of
-    // the two r16 standalone filter-isEmpty jobs; the require()s below
-    // still fire in-query, after the collect the row already performs.
     val fpObs = org.apache.spark.sql.Observation()
     val fnObs = org.apache.spark.sql.Observation()
-    val liveC = live
-      .observe(fnObs, coalesce(sum(when(expr(corrupt), 1L).otherwise(0L)), lit(0L))
-        .as("false_negatives"))
-      .groupBy(lit("live").as("disposition"), col("modality"))
-      .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_checksum"))
-    val qC = quarantined
-      .observe(fpObs, coalesce(sum(when(!expr(corrupt), 1L).otherwise(0L)), lit(0L))
-        .as("false_positives"))
-      .groupBy(col("_violations").as("disposition"), col("modality"))
-      .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_checksum"))
-    val out = liveC.unionByName(qC)
-    val collected = out.collect().toIndexedSeq
+    val out = graft.streaming.ReplayHarness.pinnedScratch(s, "graft_mediagate_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val corrupt = "doc_id % 3 < 2 AND doc_id % 7 = 0"
+      val rows = withPayloads(s, dir)
+        .withColumn("modality",
+          expr("CASE WHEN doc_id % 6 = 0 THEN 'image' WHEN doc_id % 6 = 3 THEN 'image_png' " +
+            "WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'binary' END"))
+        .withColumn("payload",
+          when(expr(corrupt), expr("substring(payload, 1, 20)"))
+            .otherwise(col("payload")))
+        .withColumn("ts",
+          expr("timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, CAST(doc_id % 10 AS INT))"))
+        // pin the synthesized payload frame ONCE: each of the 4 expectation
+        // appends makes two passes (pass + fail filters), so the unpinned
+        // lineage ran the per-row media synthesis (BMP/PNG/WAV container
+        // build incl. CRC32 framing) 8x per evaluation (guide §5)
+        .localCheckpoint()
+      (0 until 4).foreach { i =>
+        sink.appendWithExpectations(s, lakeDir,
+          rows.filter(pmod(col("doc_id"), lit(4)) === i),
+          Seq("catalog_match" -> "media_modality(payload) = modality"),
+          commitId = Some(i.toLong))
+      }
+      graft.core.Checkpoints.release(rows)
+      val live = sink.readLake(s, lakeDir)
+      val quarantined = sink.readQuarantine(s, lakeDir)
+      // the gate must be EXACT against the injected corruption — a drifting
+      // sniffer fails here, making the oracle row a true gate on the decoder.
+      // The certificate rides the census passes as observed metrics
+      // (CollectMetrics on the same scan the aggregation makes) instead of
+      // the two r16 standalone filter-isEmpty jobs; the require()s below
+      // still fire in-query, after the collect the row already performs.
+      val liveC = live
+        .observe(fnObs, coalesce(sum(when(expr(corrupt), 1L).otherwise(0L)), lit(0L))
+          .as("false_negatives"))
+        .groupBy(lit("live").as("disposition"), col("modality"))
+        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_checksum"))
+      val qC = quarantined
+        .observe(fpObs, coalesce(sum(when(!expr(corrupt), 1L).otherwise(0L)), lit(0L))
+          .as("false_positives"))
+        .groupBy(col("_violations").as("disposition"), col("modality"))
+        .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_checksum"))
+      liveC.unionByName(qC)
+    }
     require(fpObs.get.get("false_positives").contains(0L),
       "catalog gate false positive: a clean payload was quarantined")
     require(fnObs.get.get("false_negatives").contains(0L),
       "catalog gate false negative: a corrupt payload went live")
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(collected), out.schema)
+    out
   }
 
   val all: Seq[Q] = Seq(m1, m2, m3, m4, m5, m6)

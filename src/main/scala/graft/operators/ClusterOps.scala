@@ -40,8 +40,7 @@ import graft.core.{Q, Tables}
   * `checkpoint()` the frontier every few rounds (or rewrite it to a table),
   * so recovery replays at most the rounds since the last reliable cut —
   * the standard iterate-with-periodic-checkpoint discipline (same guidance
-  * as [[graft.operators.SimilarityOps.bm25Retrieve]]'s index, measured by
-  * ScaleProbe's e7mat rung).
+  * as [[graft.operators.SimilarityOps.bm25Retrieve]]'s index).
   */
 object ClusterOps {
 
@@ -231,26 +230,22 @@ object ClusterOps {
     */
   private[operators] val duckKmeansCtes: String = duckKmeansCtesOver("embeddings")
 
-  /** [[duckKmeansCtes]] parameterized on the corpus relation: e13's oracle
-    * replays the identical chain over the post-churn view (`cur`) to price
-    * a full re-train, while every existing consumer keeps the byte-identical
-    * `embeddings` instantiation.
+  /** [[duckKmeansCtes]] parameterized on the corpus relation and an
+    * optional training filter. `trainFilter`, a predicate on `vec_id`,
+    * restricts the rows that seed and update the centroids (e11 trains on
+    * the existing 80%), while `e` and the final assignment `a2` still cover
+    * every row of `src`. e13 replays the chain over the post-churn view
+    * (`cur`); every other consumer keeps the byte-identical `embeddings`
+    * instantiation.
     */
-  private[operators] def duckKmeansCtesOver(src: String): String =
-    s"""e AS (
-       |  SELECT vec_id, embedding,
-       |    ${duckDot("embedding", "embedding")} AS sq
-       |  FROM $src),
+  private[operators] def duckKmeansCtesOver(src: String, trainFilter: String = ""): String = {
+    val where = if (trainFilter.isEmpty) "" else s" WHERE $trainFilter"
+    s"""${duckSqCte("e", src)},
        |seeds AS (
        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cent,
        |    ${duckDot("embedding", "embedding")} AS csq
-       |  FROM (SELECT vec_id, embedding FROM $src ORDER BY vec_id LIMIT $KMeansK)),
-       |a1 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, s.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + s.csq - 2 * ${duckDot("e.embedding", "s.cent")}, s.cid) AS rn
-       |    FROM e, seeds s) t WHERE rn = 1),
+       |  FROM (SELECT vec_id, embedding FROM $src$where ORDER BY vec_id LIMIT $KMeansK)),
+       |${duckNearestCte("a1", "e", "seeds", "s", where)},
        |upd AS (
        |  SELECT cid, i, avg(e.embedding[i])::FLOAT AS m
        |  FROM a1 JOIN e USING (vec_id), (SELECT unnest(generate_series(1, 64)) AS i)
@@ -259,12 +254,29 @@ object ClusterOps {
        |  SELECT cid, list(m ORDER BY i) AS cent,
        |    list_sum(list_transform(list(m ORDER BY i), x -> x::DOUBLE * x::DOUBLE)) AS csq
        |  FROM upd GROUP BY 1),
-       |a2 AS (
+       |${duckNearestCte("a2", "e", "c2", "c")}""".stripMargin
+  }
+
+  /** `name(vec_id, embedding, sq)`: the vectors of `src` with their squared
+    * norms. */
+  private[operators] def duckSqCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, embedding,
+       |    ${duckDot("embedding", "embedding")} AS sq
+       |  FROM $src)""".stripMargin
+
+  /** `name(vec_id, cid)`: each row of `e` (read as alias `e`) assigned to its
+    * nearest centroid of `cents` (`cid, cent, csq`, alias `c`) by squared
+    * L2, ties to the smaller cid; `where` filters the assigned rows.
+    */
+  private[operators] def duckNearestCte(name: String, e: String, cents: String, c: String,
+      where: String = ""): String =
+    s"""$name AS (
        |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
+       |    SELECT e.vec_id, $c.cid,
        |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + c.csq - 2 * ${duckDot("e.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM e, c2 c) t WHERE rn = 1)""".stripMargin
+       |        ORDER BY e.sq + $c.csq - 2 * ${duckDot("e.embedding", s"$c.cent")}, $c.cid) AS rn
+       |    FROM $e, $cents $c$where) t WHERE rn = 1)""".stripMargin
 
   val c3 = Q(
     "c3_kmeans_semantic",

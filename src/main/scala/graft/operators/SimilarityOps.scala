@@ -270,20 +270,6 @@ object SimilarityOps {
       .select(col("qid"), col("neighbor"), round(col("cos"), 4).as("cosine"), col("rnk"))
   }
 
-  /** Per-vector nearest-cell ranking against a centroid relation
-    * `(cid, cemb, cnrm)` — the ScaleProbe candidate-law census probe.
-    * NOT the operator's assignment path: [[knnJoin]] assigns two-level
-    * (bounded super broadcast + sup-keyed join); this flat
-    * `broadcast(cents)` is exactly the shape that OOMs when cell count
-    * grows with the corpus, kept only to measure that geometry honestly.
-    */
-  def knnJoinRanked(e: DataFrame, cents: DataFrame): DataFrame =
-    e.join(broadcast(cents))
-      .selectExpr("vec_id", "embedding", "nrm", "cid",
-        s"${dotExpr("cemb", "embedding")} / (cnrm * nrm) AS ccos")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))))
-
   /** e1: embedding-cosine near-duplicate pairs (cos >= 0.4) among
     * hyperplane-LSH band candidates — the 6 sign bits split into 2 bands of
     * 3 planes; a pair is a candidate iff it agrees on ALL bits of SOME band
@@ -777,29 +763,23 @@ object SimilarityOps {
     * ordering, tf saturation, length normalization) on crafted corpora.
     * Queries are the doc_id < 3 documents, matching the registered query.
     *
-    * `materialize` is how the (doc_id, tok, tf) inverted index gets pinned
-    * before four downstream consumers derive from it. The default —
-    * `localCheckpoint()` — is right for a single-JVM run: blocks live in
-    * executor storage with NO lineage, so an executor loss makes them
-    * unrecoverable and fails the job. A production cluster should pass a
-    * RELIABLE materializer instead: write the index to a parquet table (or
-    * `checkpoint()` against a DFS checkpoint dir) and read it back — that
-    * is also what a lake does anyway, building the index ONCE and
-    * amortizing it across every query it ever serves. ScaleProbe's `e7mat`
-    * rung measures the delta between the two on the same corpus so the
-    * guidance carries a number (see BENCH_NOTES.md).
+    * The (doc_id, tok, tf) inverted index is pinned with `localCheckpoint()`
+    * before four downstream consumers derive from it — right for a
+    * single-JVM run, but its blocks live in executor storage with NO
+    * lineage, so on a cluster an executor loss fails the job. A cluster
+    * deployment writes the index to a table once and serves every query
+    * from it; that reliable materialization cost ~1.5x on this pipeline
+    * (2.25 s vs 3.41 s at 4x, BENCH_NOTES round 8).
     */
-  def bm25Retrieve(
-      docs: DataFrame,
-      materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def bm25Retrieve(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"),
         explode(expr("filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("tok"))
     // materialize the index ONCE (the e5 localCheckpoint precedent): dl,
     // dfs, tot, and q all derive from tf — without this the plan re-runs
     // the full-corpus tokenize + (doc, tok) agg four times per execution
-    val tf = materialize(
-      toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
+    val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+      .localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val dfs = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val tot = tf.agg(countDistinct(col("doc_id")).as("nn"), sum(col("tf")).as("ll"))
@@ -1289,6 +1269,166 @@ object SimilarityOps {
   /** Cells an e9 query probes (s2/c5's 2-probe convention). */
   val IvfPqProbes = 2
 
+  private def duckDot8(a: String, b: String) =
+    s"list_sum(list_transform(generate_series(1, $PqSubDim), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))"
+  private def duckDot64(a: String, b: String) =
+    s"list_sum(list_transform(generate_series(1, 64), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))"
+
+  /** The TRAINING prefix of the shared IVF-PQ oracle chain over the corpus
+    * `train`: coarse k-means cells (c3's certified CTEs, with the corpus's
+    * assignment `a2`), residual frame, and the PQ codebook train through
+    * `pcb`. `trainFilter`, a predicate on `vec_id`, restricts the rows that
+    * train either quantizer (k-means seeds and Lloyd assignment, codebook
+    * seeds and assignment) while every row of `train` still gets a cell and
+    * a residual — e11's build-on-the-existing-80% split.
+    */
+  private def duckIvfPqTrainCtesOver(train: String, trainFilter: String): String = {
+    val where = if (trainFilter.isEmpty) "" else s" WHERE $trainFilter"
+    s"""${ClusterOps.duckKmeansCtesOver(train, trainFilter)},
+       |${duckResidualCtes("")},
+       |seed_ids AS (SELECT vec_id FROM $train$where ORDER BY vec_id LIMIT $PqK),
+       |pseeds AS (
+       |  SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
+       |    sub AS cent, sq AS csq
+       |  FROM rsubq WHERE vec_id IN (SELECT vec_id FROM seed_ids)),
+       |${duckPqNearestCte("pa1", "cid", "rsubq", "pseeds", where)},
+       |pupd AS (
+       |  SELECT a.s, a.cid, i.i, avg(b.sub[i.i])::FLOAT AS m
+       |  FROM pa1 a JOIN rsubq b ON b.vec_id = a.vec_id AND b.s = a.s,
+       |    (SELECT unnest(generate_series(1, $PqSubDim)) AS i) i
+       |  GROUP BY 1, 2, 3),
+       |pcb AS (
+       |  SELECT s, cid, list(m ORDER BY i) AS cent,
+       |    list_sum(list_transform(list(m ORDER BY i), x -> x::DOUBLE * x::DOUBLE)) AS csq
+       |  FROM pupd GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** `res<x>`, `rsub<x>`, `rsubq<x>`: each vector of `e<x>` minus its cell
+    * centroid (`a2<x>` against `c2`), cut into per-subspace sub-vectors with
+    * squared norms. `x` is empty on the training corpus.
+    */
+  private def duckResidualCtes(x: String): String = {
+    def as(n: String) = if (x.isEmpty) n else s"$n$x $n"
+    s"""res$x AS (
+       |  SELECT a2.vec_id, a2.cid AS cell,
+       |    list_transform(generate_series(1, 64),
+       |      i -> (e.embedding[i]::DOUBLE - c.cent[i]::DOUBLE)::FLOAT) AS remb
+       |  FROM ${as("a2")} JOIN ${as("e")} USING (vec_id) JOIN c2 c ON c.cid = a2.cid),
+       |rsub$x AS (
+       |  SELECT vec_id, g.s,
+       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
+       |  FROM res$x, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
+       |rsubq$x AS (SELECT vec_id, s, sub, ${duckDot8("sub", "sub")} AS sq FROM rsub$x)""".stripMargin
+  }
+
+  /** `name(vec_id, s, <out>)`: each sub-vector of `sub` assigned to its
+    * nearest codeword of the codebook `cb`, ties to the smaller cid. */
+  private def duckPqNearestCte(name: String, out: String, sub: String, cb: String,
+      where: String = ""): String =
+    s"""$name AS (
+       |  SELECT vec_id, s, $out FROM (
+       |    SELECT b.vec_id, b.s, c.cid,
+       |      row_number() OVER (PARTITION BY b.vec_id, b.s
+       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
+       |    FROM $sub b JOIN $cb c ON c.s = b.s$where) t WHERE rn = 1)""".stripMargin
+
+  /** Suffix of the serve corpus's encode CTEs: empty when it is the
+    * training corpus, else `_s` (its vectors are then `e_s`, not `e`). */
+  private def serveSfx(train: String, serve: String): String =
+    if (serve == train) "" else "_s"
+
+  /** The shared IVF-PQ oracle chain: [[duckIvfPqTrainCtesOver]] on
+    * `train`, then the encode of `serve`, the probes and LUTs of its
+    * vec_id < 3 queries, and the ADC distance relation `adist(qid, vec_id,
+    * dist)`. When `serve` is not `train` (e12: quantizers trained on the
+    * original corpus, the upserted one encoded and queried) the serve
+    * corpus gets its own `e_s`/`a2_s`/`res_s`/`rsub_s`/`rsubq_s` against
+    * the trained `c2` and `pcb`.
+    */
+  private def duckIvfPqCtesOver(train: String, serve: String, trainFilter: String = ""): String = {
+    val x = serveSfx(train, serve)
+    val e = if (x.isEmpty) "e" else s"e$x e"
+    val serveEncode = if (x.isEmpty) "" else
+      s"""${ClusterOps.duckSqCte(s"e$x", serve)},
+         |${ClusterOps.duckNearestCte(s"a2$x", e, "c2", "c")},
+         |${duckResidualCtes(x)},
+         |""".stripMargin
+    s"""${duckIvfPqTrainCtesOver(train, trainFilter)},
+       |$serveEncode${duckPqNearestCte("codes", "cid AS code", s"rsubq$x", "pcb")},
+       |qp AS (
+       |  SELECT qid, cell, ccent FROM (
+       |    SELECT e.vec_id AS qid, c.cid AS cell, c.cent AS ccent,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY e.sq + c.csq - 2 * ${duckDot64("e.embedding", "c.cent")}, c.cid) AS rn
+       |    FROM $e, c2 c WHERE e.vec_id < 3) t WHERE rn <= $IvfPqProbes),
+       |qres AS (
+       |  SELECT qp.qid, qp.cell,
+       |    list_transform(generate_series(1, 64),
+       |      i -> (e.embedding[i]::DOUBLE - qp.ccent[i]::DOUBLE)::FLOAT) AS remb
+       |  FROM qp JOIN $e ON e.vec_id = qp.qid),
+       |qrsub AS (
+       |  SELECT qid, cell, g.s,
+       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
+       |  FROM qres, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
+       |qrsubq AS (SELECT qid, cell, s, sub, ${duckDot8("sub", "sub")} AS sq FROM qrsub),
+       |lut AS (
+       |  SELECT q.qid, q.cell, c.s, c.cid AS code,
+       |    q.sq + c.csq - 2 * ${duckDot8("q.sub", "c.cent")} AS d
+       |  FROM qrsubq q JOIN pcb c ON c.s = q.s),
+       |scored AS (
+       |  SELECT l.qid, c.vec_id, l.s, l.d
+       |  FROM codes c
+       |  JOIN res$x r ON r.vec_id = c.vec_id
+       |  JOIN lut l ON l.cell = r.cell AND l.s = c.s AND l.code = c.code
+       |    AND c.vec_id <> l.qid),
+       |adist AS (
+       |  SELECT qid, vec_id, list_sum(list(d ORDER BY s)) AS dist
+       |  FROM scored GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** e9/e15/e16's chain: train, encode and query all over `embeddings`. */
+  private val duckIvfPqCtes: String = duckIvfPqCtesOver("embeddings", "embeddings")
+
+  /** e10's read path as oracle SQL, shared by e10–e14: the chain of
+    * [[duckIvfPqCtesOver]]`(train, serve, trainFilter)`, its
+    * [[RefineShortlist]]-deep ADC shortlist, the exact squared-L2 re-rank
+    * against the serve corpus, top-[[PqTopK]]. `views` defines a corpus
+    * relation the chain reads that is not a table (e12/e13's `cur`).
+    */
+  private def duckRefineSql(train: String, serve: String, trainFilter: String = "",
+      views: String = ""): String = {
+    val e = s"e${serveSfx(train, serve)}"
+    s"""WITH $views${duckIvfPqCtesOver(train, serve, trainFilter)},
+       |short AS (
+       |  SELECT qid, vec_id FROM (
+       |    SELECT qid, vec_id,
+       |      row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
+       |    FROM adist) t WHERE rnk <= $RefineShortlist),
+       |rerank AS (
+       |  SELECT s.qid, s.vec_id,
+       |    eq.sq + ev.sq - 2 * ${duckDot64("eq.embedding", "ev.embedding")} AS dist
+       |  FROM short s
+       |  JOIN $e eq ON eq.vec_id = s.qid
+       |  JOIN $e ev ON ev.vec_id = s.vec_id)
+       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS edist FROM (
+       |  SELECT qid, vec_id, dist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
+       |  FROM rerank) t
+       |WHERE rnk <= $PqTopK""".stripMargin
+  }
+
+  /** The post-churn view `cur` as a CTE — the SQL mirror of [[churnedView]],
+    * for e12 and e13.
+    */
+  private val duckChurnedView: String =
+    s"""cur AS (
+       |  SELECT vec_id,
+       |    CASE WHEN vec_id % 7 = 3
+       |      THEN list_transform(generate_series(1, 64), i -> embedding[1 + (i % 64)])
+       |      ELSE embedding END AS embedding
+       |  FROM embeddings WHERE vec_id % 11 <> 5),
+       |""".stripMargin
+
   /** e9: IVF-PQ — the production ANN index, composed from parts this
     * engine already certifies separately: c3's coarse k-means partitions
     * the corpus into cells (the IVF inverted lists), each vector is PQ-
@@ -1317,117 +1457,15 @@ object SimilarityOps {
     * the one-time encode — the index is ~32× smaller than the corpus and
     * partition-prunable by cell.
     */
-  private def duckDot8(a: String, b: String) =
-    s"list_sum(list_transform(generate_series(1, $PqSubDim), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))"
-  private def duckDot64(a: String, b: String) =
-    s"list_sum(list_transform(generate_series(1, 64), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))"
-
-  /** The TRAINING prefix of the shared IVF-PQ oracle chain: coarse k-means
-    * cells (c3's certified CTEs, with the original corpus's assignment
-    * `a2`), residual frame, and the PQ codebook train through `pcb`. Shared
-    * by e9/e10 (via [[duckIvfPqCtes]]) and e12, whose ENCODE side runs over
-    * a different (upserted) corpus but whose quantizers are trained on the
-    * original one — exactly the build/ingest split the Spark side has.
-    */
-  private val duckIvfPqTrainCtes: String = duckIvfPqTrainCtesOver("embeddings")
-
-  /** [[duckIvfPqTrainCtes]] parameterized on the training corpus: e13's
-    * full re-train replays the chain over the post-churn view while e9/e10/
-    * e12 keep the byte-identical `embeddings` instantiation.
-    */
-  private def duckIvfPqTrainCtesOver(src: String): String =
-    s"""${ClusterOps.duckKmeansCtesOver(src)},
-       |res AS (
-       |  SELECT a2.vec_id, a2.cid AS cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (e.embedding[i]::DOUBLE - c.cent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM a2 JOIN e USING (vec_id) JOIN c2 c ON c.cid = a2.cid),
-       |rsub AS (
-       |  SELECT vec_id, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM res, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |rsubq AS (SELECT vec_id, s, sub, ${duckDot8("sub", "sub")} AS sq FROM rsub),
-       |seed_ids AS (SELECT vec_id FROM $src ORDER BY vec_id LIMIT $PqK),
-       |pseeds AS (
-       |  SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-       |    sub AS cent, sq AS csq
-       |  FROM rsubq WHERE vec_id IN (SELECT vec_id FROM seed_ids)),
-       |pa1 AS (
-       |  SELECT vec_id, s, cid FROM (
-       |    SELECT b.vec_id, b.s, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id, b.s
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
-       |    FROM rsubq b JOIN pseeds c ON c.s = b.s) t WHERE rn = 1),
-       |pupd AS (
-       |  SELECT a.s, a.cid, i.i, avg(b.sub[i.i])::FLOAT AS m
-       |  FROM pa1 a JOIN rsubq b ON b.vec_id = a.vec_id AND b.s = a.s,
-       |    (SELECT unnest(generate_series(1, $PqSubDim)) AS i) i
-       |  GROUP BY 1, 2, 3),
-       |pcb AS (
-       |  SELECT s, cid, list(m ORDER BY i) AS cent,
-       |    list_sum(list_transform(list(m ORDER BY i), x -> x::DOUBLE * x::DOUBLE)) AS csq
-       |  FROM pupd GROUP BY 1, 2)""".stripMargin
-
-  /** e9/e10's shared oracle chain: [[duckIvfPqTrainCtes]] plus the original
-    * corpus's encode, query probes, LUTs, and the ADC distance relation
-    * `adist(qid, vec_id, dist)` — e9 tops it at PqTopK, e10 shortlists it
-    * and exact-re-ranks.
-    */
-  private val duckIvfPqCtes: String = duckIvfPqCtesOver("embeddings")
-
-  /** [[duckIvfPqCtes]] parameterized on the corpus relation (train, encode,
-    * AND query vectors all come from `src`) — e13 instantiates it over the
-    * post-churn `cur` to replay a full rebuild-and-serve.
-    */
-  private def duckIvfPqCtesOver(src: String): String =
-    s"""${duckIvfPqTrainCtesOver(src)},
-       |codes AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT b.vec_id, b.s, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id, b.s
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
-       |    FROM rsubq b JOIN pcb c ON c.s = b.s) t WHERE rn = 1),
-       |qp AS (
-       |  SELECT qid, cell, ccent FROM (
-       |    SELECT e.vec_id AS qid, c.cid AS cell, c.cent AS ccent,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + c.csq - 2 * ${duckDot64("e.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM e, c2 c WHERE e.vec_id < 3) t WHERE rn <= $IvfPqProbes),
-       |qres AS (
-       |  SELECT qp.qid, qp.cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (e.embedding[i]::DOUBLE - qp.ccent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM qp JOIN e ON e.vec_id = qp.qid),
-       |qrsub AS (
-       |  SELECT qid, cell, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM qres, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |qrsubq AS (SELECT qid, cell, s, sub, ${duckDot8("sub", "sub")} AS sq FROM qrsub),
-       |lut AS (
-       |  SELECT q.qid, q.cell, c.s, c.cid AS code,
-       |    q.sq + c.csq - 2 * ${duckDot8("q.sub", "c.cent")} AS d
-       |  FROM qrsubq q JOIN pcb c ON c.s = q.s),
-       |scored AS (
-       |  SELECT l.qid, c.vec_id, l.s, l.d
-       |  FROM codes c
-       |  JOIN res r ON r.vec_id = c.vec_id
-       |  JOIN lut l ON l.cell = r.cell AND l.s = c.s AND l.code = c.code
-       |    AND c.vec_id <> l.qid),
-       |adist AS (
-       |  SELECT qid, vec_id, list_sum(list(d ORDER BY s)) AS dist
-       |  FROM scored GROUP BY 1, 2)""".stripMargin
-
-  val e9 = {
-    Q(
-      "e9_ivfpq_retrieve",
-      s"""WITH $duckIvfPqCtes
-         |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS adist FROM (
-         |  SELECT qid, vec_id, dist,
-         |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-         |  FROM adist) t
-         |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
-      ivfpqRetrieve(Tables.load(s, dir, "embeddings"))
-    }
+  val e9 = Q(
+    "e9_ivfpq_retrieve",
+    s"""WITH $duckIvfPqCtes
+       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS adist FROM (
+       |  SELECT qid, vec_id, dist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
+       |  FROM adist) t
+       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+    ivfpqRetrieve(Tables.load(s, dir, "embeddings"))
   }
 
   /** e9's materialized index: coarse cell centroids (`cid, cent, csq`),
@@ -1535,25 +1573,7 @@ object SimilarityOps {
     * Nothing corpus × corpus; the only corpus-wide work remains the
     * one-time index build.
     */
-  val e10 = Q(
-    "e10_ivfpq_refine",
-    s"""WITH $duckIvfPqCtes,
-       |short AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |    FROM adist) t WHERE rnk <= $RefineShortlist),
-       |rerank AS (
-       |  SELECT s.qid, s.vec_id,
-       |    eq.sq + ev.sq - 2 * ${duckDot64("eq.embedding", "ev.embedding")} AS dist
-       |  FROM short s
-       |  JOIN e eq ON eq.vec_id = s.qid
-       |  JOIN e ev ON ev.vec_id = s.vec_id)
-       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS edist FROM (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |  FROM rerank) t
-       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+  val e10 = Q("e10_ivfpq_refine", duckRefineSql("embeddings", "embeddings")) { (s, dir) =>
     ivfpqRefine(Tables.load(s, dir, "embeddings"))
   }
 
@@ -1561,12 +1581,8 @@ object SimilarityOps {
     * then exact re-rank of only those rows.
     */
   def ivfpqRefine(embs: DataFrame, nProbes: Int = IvfPqProbes,
-      shortlist: Int = RefineShortlist): DataFrame = {
-    val idx = ivfpqBuild(embs)
-    val q = embs.filter(col("vec_id") < 3)
-    val short = ivfpqScan(q, idx, nProbes, shortlist).select(col("qid"), col("doc_id"))
-    exactRerank(embs, q, short)
-  }
+      shortlist: Int = RefineShortlist): DataFrame =
+    ivfpqServeRefined(embs, ivfpqBuild(embs), embs, nProbes, shortlist)
 
   /** e15: METADATA-FILTERED ANN — the one production vector-store shape
     * the lifecycle family leaves open: a dimension predicate combined with
@@ -1614,10 +1630,22 @@ object SimilarityOps {
       .select("qid", "rnk", "doc_id", "adist")
   }
 
-  /** The refine stage shared by e10/e11: exact squared-L2 re-rank of a
-    * per-query shortlist against the raw-vector table, top-[[PqTopK]].
+  /** The serve path of e10–e14: probe and ADC-score the vec_id < 3 rows of
+    * `queries` against `idx` to a `shortlist`-deep list, then exact-re-rank
+    * that list against `corpus`. The two frames are separate because e12
+    * queries the churned view but re-ranks against it minus the deletes.
     */
-  private[graft] def exactRerank(corpus: DataFrame, q: DataFrame, short: DataFrame): DataFrame = {
+  private[graft] def ivfpqServeRefined(queries: DataFrame, idx: IvfPqIndex,
+      corpus: DataFrame, nProbes: Int = IvfPqProbes,
+      shortlist: Int = RefineShortlist): DataFrame = {
+    val q = queries.filter(col("vec_id") < 3)
+    exactRerank(corpus, q, ivfpqScan(q, idx, nProbes, shortlist).select(col("qid"), col("doc_id")))
+  }
+
+  /** The refine stage of [[ivfpqServeRefined]]: exact squared-L2 re-rank
+    * of a per-query shortlist against the raw-vector table, top-[[PqTopK]].
+    */
+  private def exactRerank(corpus: DataFrame, q: DataFrame, short: DataFrame): DataFrame = {
     val qv = q.selectExpr("vec_id AS qid", "embedding AS qemb",
       "vec_dot(embedding, embedding) AS qsq")
     val dv = corpus.selectExpr("vec_id AS doc_id", "embedding AS demb",
@@ -1687,10 +1715,16 @@ object SimilarityOps {
     val idx = ivfpqBuild(existing)
     val grown = IvfPqIndex(idx.cents, idx.cb,
       idx.codes.unionByName(ivfpqIngest(arriving, idx)))
-    val q = embs.filter(col("vec_id") < 3)
-    val short = ivfpqScan(q, grown, nProbes, shortlist).select(col("qid"), col("doc_id"))
-    exactRerank(embs, q, short)
+    ivfpqServeRefined(embs, grown, embs, nProbes, shortlist)
   }
+
+  /** e11's oracle — shared verbatim by e14: the streamed ingest must serve
+    * EXACTLY what the batch ingest serves (micro-batching, the store
+    * round-trip, and the kill+restart are implementation detail the result
+    * may not observe).
+    */
+  private val e11GrowSql: String =
+    duckRefineSql("embeddings", "embeddings", trainFilter = "vec_id % 5 <> 4")
 
   /** e11: incremental ANN ingest — grow (the fourth lifecycle edge after
     * e9 build, the ivfpqscan split, and e10 refine). The oracle re-trains
@@ -1701,124 +1735,6 @@ object SimilarityOps {
     * or an encode drift all break the hash. Read path + output shape are
     * e10's (top-[[PqTopK]] exact-refined per query).
     */
-  /** e11's full oracle — shared verbatim by e14: the streamed ingest must
-    * serve EXACTLY what the batch ingest serves (micro-batching, the store
-    * round-trip, and the kill+restart are implementation detail the result
-    * may not observe).
-    */
-  private val e11GrowSql: String =
-    s"""WITH e AS (
-       |  SELECT vec_id, embedding, ${duckDot64("embedding", "embedding")} AS sq
-       |  FROM embeddings),
-       |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cent,
-       |    ${duckDot64("embedding", "embedding")} AS csq
-       |  FROM (SELECT vec_id, embedding FROM embeddings
-       |        WHERE vec_id % 5 <> 4 ORDER BY vec_id LIMIT ${ClusterOps.KMeansK})),
-       |a1 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, s.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + s.csq - 2 * ${duckDot64("e.embedding", "s.cent")}, s.cid) AS rn
-       |    FROM e, seeds s WHERE e.vec_id % 5 <> 4) t WHERE rn = 1),
-       |upd AS (
-       |  SELECT cid, i, avg(e.embedding[i])::FLOAT AS m
-       |  FROM a1 JOIN e USING (vec_id), (SELECT unnest(generate_series(1, 64)) AS i)
-       |  GROUP BY 1, 2),
-       |c2 AS (
-       |  SELECT cid, list(m ORDER BY i) AS cent,
-       |    list_sum(list_transform(list(m ORDER BY i), x -> x::DOUBLE * x::DOUBLE)) AS csq
-       |  FROM upd GROUP BY 1),
-       |a2 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + c.csq - 2 * ${duckDot64("e.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM e, c2 c) t WHERE rn = 1),
-       |res AS (
-       |  SELECT a2.vec_id, a2.cid AS cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (e.embedding[i]::DOUBLE - c.cent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM a2 JOIN e USING (vec_id) JOIN c2 c ON c.cid = a2.cid),
-       |rsub AS (
-       |  SELECT vec_id, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM res, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |rsubq AS (SELECT vec_id, s, sub, ${duckDot8("sub", "sub")} AS sq FROM rsub),
-       |seed_ids AS (SELECT vec_id FROM embeddings
-       |             WHERE vec_id % 5 <> 4 ORDER BY vec_id LIMIT $PqK),
-       |pseeds AS (
-       |  SELECT s, row_number() OVER (PARTITION BY s ORDER BY vec_id) - 1 AS cid,
-       |    sub AS cent, sq AS csq
-       |  FROM rsubq WHERE vec_id IN (SELECT vec_id FROM seed_ids)),
-       |pa1 AS (
-       |  SELECT vec_id, s, cid FROM (
-       |    SELECT b.vec_id, b.s, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id, b.s
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
-       |    FROM rsubq b JOIN pseeds c ON c.s = b.s
-       |    WHERE b.vec_id % 5 <> 4) t WHERE rn = 1),
-       |pupd AS (
-       |  SELECT a.s, a.cid, i.i, avg(b.sub[i.i])::FLOAT AS m
-       |  FROM pa1 a JOIN rsubq b ON b.vec_id = a.vec_id AND b.s = a.s,
-       |    (SELECT unnest(generate_series(1, $PqSubDim)) AS i) i
-       |  GROUP BY 1, 2, 3),
-       |pcb AS (
-       |  SELECT s, cid, list(m ORDER BY i) AS cent,
-       |    list_sum(list_transform(list(m ORDER BY i), x -> x::DOUBLE * x::DOUBLE)) AS csq
-       |  FROM pupd GROUP BY 1, 2),
-       |codes AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT b.vec_id, b.s, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id, b.s
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
-       |    FROM rsubq b JOIN pcb c ON c.s = b.s) t WHERE rn = 1),
-       |qp AS (
-       |  SELECT qid, cell, ccent FROM (
-       |    SELECT e.vec_id AS qid, c.cid AS cell, c.cent AS ccent,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY e.sq + c.csq - 2 * ${duckDot64("e.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM e, c2 c WHERE e.vec_id < 3) t WHERE rn <= $IvfPqProbes),
-       |qres AS (
-       |  SELECT qp.qid, qp.cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (e.embedding[i]::DOUBLE - qp.ccent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM qp JOIN e ON e.vec_id = qp.qid),
-       |qrsub AS (
-       |  SELECT qid, cell, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM qres, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |qrsubq AS (SELECT qid, cell, s, sub, ${duckDot8("sub", "sub")} AS sq FROM qrsub),
-       |lut AS (
-       |  SELECT q.qid, q.cell, c.s, c.cid AS code,
-       |    q.sq + c.csq - 2 * ${duckDot8("q.sub", "c.cent")} AS d
-       |  FROM qrsubq q JOIN pcb c ON c.s = q.s),
-       |scored AS (
-       |  SELECT l.qid, c.vec_id, l.s, l.d
-       |  FROM codes c
-       |  JOIN res r ON r.vec_id = c.vec_id
-       |  JOIN lut l ON l.cell = r.cell AND l.s = c.s AND l.code = c.code
-       |    AND c.vec_id <> l.qid),
-       |adist AS (
-       |  SELECT qid, vec_id, list_sum(list(d ORDER BY s)) AS dist
-       |  FROM scored GROUP BY 1, 2),
-       |short AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |    FROM adist) t WHERE rnk <= $RefineShortlist),
-       |rerank AS (
-       |  SELECT s.qid, s.vec_id,
-       |    eq.sq + ev.sq - 2 * ${duckDot64("eq.embedding", "ev.embedding")} AS dist
-       |  FROM short s
-       |  JOIN e eq ON eq.vec_id = s.qid
-       |  JOIN e ev ON ev.vec_id = s.vec_id)
-       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS edist FROM (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |  FROM rerank) t
-       |WHERE rnk <= $PqTopK""".stripMargin
-
   val e11 = Q("e11_ivfpq_ingest", e11GrowSql) { (s, dir) =>
     ivfpqGrowRetrieve(Tables.load(s, dir, "embeddings"))
   }
@@ -1843,8 +1759,7 @@ object SimilarityOps {
     import org.apache.spark.sql.streaming.Trigger
     val existing = embs.filter(col("vec_id") % 5 =!= 4)
     val arriving = embs.filter(col("vec_id") % 5 === 4)
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_ivfpqstream_")
-    try {
+    graft.streaming.ReplayHarness.pinnedScratch(spark, "graft_ivfpqstream_") { base =>
       val streamDir = java.nio.file.Files.createDirectory(base.resolve("in"))
       val ckpt = base.resolve("ckpt").toString
       val store = base.resolve("store").toString
@@ -1911,14 +1826,9 @@ object SimilarityOps {
           .select(col("vec_id"), col("s"), col("code"),
             col("cell").cast("long").as("cell"))
       }.reduce(_ unionByName _)
-      val grown = IvfPqIndex(v1.cents, v1.cb, v1.codes.unionByName(ingested))
-      val q = embs.filter(col("vec_id") < 3)
-      val short = ivfpqScan(q, grown, nProbes, shortlist)
-        .select(col("qid"), col("doc_id"))
-      val out = exactRerank(embs, q, short)
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), out.schema)
-    } finally graft.streaming.ReplayHarness.cleanupScratch(base)
+      ivfpqServeRefined(embs, IvfPqIndex(v1.cents, v1.cb, v1.codes.unionByName(ingested)),
+        embs, nProbes, shortlist)
+    }
   }
 
   /** e14: STREAMING index ingest — e11's grow edge as a continuously
@@ -2005,10 +1915,8 @@ object SimilarityOps {
     val mask = updIds.union(delIds).distinct()
     val served = idx.codes.join(broadcast(mask), Seq("vec_id"), "left_anti")
       .unionByName(ver1)
-    val q = cur.filter(col("vec_id") < 3)
-    val short = ivfpqScan(q, IvfPqIndex(idx.cents, idx.cb, served),
-      nProbes, shortlist).select(col("qid"), col("doc_id"))
-    exactRerank(cur.join(broadcast(delIds), Seq("vec_id"), "left_anti"), q, short)
+    ivfpqServeRefined(cur, IvfPqIndex(idx.cents, idx.cb, served),
+      cur.join(broadcast(delIds), Seq("vec_id"), "left_anti"), nProbes, shortlist)
   }
 
   /** e12's scheduled maintenance: fold the tombstone mask and the ver-1
@@ -2063,93 +1971,16 @@ object SimilarityOps {
   /** e12: upsert + delete over the IVF-PQ index. The oracle needs no
     * version machinery at all — served codes ≡ encode(current corpus minus
     * deletes) against the ORIGINAL quantizers, which is the whole point of
-    * the tombstone design: reads see exactly the current view. It reuses
-    * the e9/e10 training prefix verbatim ([[duckIvfPqTrainCtes]] — trained
-    * on the original corpus, like the Spark build) and encodes the
-    * rotated-where-updated, dropped-where-deleted corpus. A served stale
+    * the tombstone design: reads see exactly the current view. Its chain
+    * ([[duckRefineSql]]) trains on the original corpus, like the Spark
+    * build, and encodes and queries the rotated-where-updated,
+    * dropped-where-deleted corpus `cur`. A served stale
     * ver-0 row, a missed ingest, a resurfacing delete, or read-side
     * mis-resolution each shifts some query's shortlist and breaks the hash
     * (updated ids sit in the fixture's top-5 — suite-guarded).
     */
-  val e12 = Q(
-    "e12_ivfpq_upsert",
-    s"""WITH $duckIvfPqTrainCtes,
-       |cur AS (
-       |  SELECT vec_id,
-       |    CASE WHEN vec_id % 7 = 3
-       |      THEN list_transform(generate_series(1, 64), i -> embedding[1 + (i % 64)])
-       |      ELSE embedding END AS embedding
-       |  FROM embeddings WHERE vec_id % 11 <> 5),
-       |curq AS (
-       |  SELECT vec_id, embedding, ${duckDot64("embedding", "embedding")} AS sq
-       |  FROM cur),
-       |a2c AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT b.vec_id, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot64("b.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM curq b, c2 c) t WHERE rn = 1),
-       |resc AS (
-       |  SELECT a2c.vec_id, a2c.cid AS cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (b.embedding[i]::DOUBLE - c.cent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM a2c JOIN curq b USING (vec_id) JOIN c2 c ON c.cid = a2c.cid),
-       |rsubc AS (
-       |  SELECT vec_id, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM resc, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |rsubqc AS (SELECT vec_id, s, sub, ${duckDot8("sub", "sub")} AS sq FROM rsubc),
-       |codesc AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT b.vec_id, b.s, c.cid,
-       |      row_number() OVER (PARTITION BY b.vec_id, b.s
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot8("b.sub", "c.cent")}, c.cid) AS rn
-       |    FROM rsubqc b JOIN pcb c ON c.s = b.s) t WHERE rn = 1),
-       |qp AS (
-       |  SELECT qid, cell, ccent FROM (
-       |    SELECT b.vec_id AS qid, c.cid AS cell, c.cent AS ccent,
-       |      row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY b.sq + c.csq - 2 * ${duckDot64("b.embedding", "c.cent")}, c.cid) AS rn
-       |    FROM curq b, c2 c WHERE b.vec_id < 3) t WHERE rn <= $IvfPqProbes),
-       |qres AS (
-       |  SELECT qp.qid, qp.cell,
-       |    list_transform(generate_series(1, 64),
-       |      i -> (b.embedding[i]::DOUBLE - qp.ccent[i]::DOUBLE)::FLOAT) AS remb
-       |  FROM qp JOIN curq b ON b.vec_id = qp.qid),
-       |qrsub AS (
-       |  SELECT qid, cell, g.s,
-       |    list_transform(generate_series(1, $PqSubDim), i -> remb[$PqSubDim * g.s + i]) AS sub
-       |  FROM qres, (SELECT unnest(generate_series(0, ${PqSubspaces - 1})) AS s) g),
-       |qrsubq AS (SELECT qid, cell, s, sub, ${duckDot8("sub", "sub")} AS sq FROM qrsub),
-       |lut AS (
-       |  SELECT q.qid, q.cell, c.s, c.cid AS code,
-       |    q.sq + c.csq - 2 * ${duckDot8("q.sub", "c.cent")} AS d
-       |  FROM qrsubq q JOIN pcb c ON c.s = q.s),
-       |scored AS (
-       |  SELECT l.qid, c.vec_id, l.s, l.d
-       |  FROM codesc c
-       |  JOIN resc r ON r.vec_id = c.vec_id
-       |  JOIN lut l ON l.cell = r.cell AND l.s = c.s AND l.code = c.code
-       |    AND c.vec_id <> l.qid),
-       |adist AS (
-       |  SELECT qid, vec_id, list_sum(list(d ORDER BY s)) AS dist
-       |  FROM scored GROUP BY 1, 2),
-       |short AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |    FROM adist) t WHERE rnk <= $RefineShortlist),
-       |rerank AS (
-       |  SELECT s.qid, s.vec_id,
-       |    eq.sq + ev.sq - 2 * ${duckDot64("eq.embedding", "ev.embedding")} AS dist
-       |  FROM short s
-       |  JOIN curq eq ON eq.vec_id = s.qid
-       |  JOIN curq ev ON ev.vec_id = s.vec_id)
-       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS edist FROM (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |  FROM rerank) t
-       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+  val e12 = Q("e12_ivfpq_upsert",
+      duckRefineSql("embeddings", "cur", views = duckChurnedView)) { (s, dir) =>
     ivfpqUpsertRetrieve(Tables.load(s, dir, "embeddings"))
   }
 
@@ -2267,19 +2098,14 @@ object SimilarityOps {
     */
   def ivfpqRebuildSwapRetrieve(spark: SparkSession, embs: DataFrame,
       nProbes: Int = IvfPqProbes, shortlist: Int = RefineShortlist): DataFrame = {
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_ivfpqstore_")
-    try {
+    graft.streaming.ReplayHarness.pinnedScratch(spark, "graft_ivfpqstore_") { base =>
       writeIndexVersion(spark, base.toString, ivfpqBuild(embs), 1)
       val cur = churnedView(embs)
       writeIndexVersion(spark, base.toString, ivfpqBuild(cur), 2)
       val (ver, idx) = readCurrentIndex(spark, base.toString)
       require(ver == 2, s"pointer should serve the swapped v2, got v$ver")
-      val q = cur.filter(col("vec_id") < 3)
-      val short = ivfpqScan(q, idx, nProbes, shortlist).select(col("qid"), col("doc_id"))
-      val out = exactRerank(cur, q, short)
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows), out.schema)
-    } finally graft.streaming.ReplayHarness.cleanupScratch(base)
+      ivfpqServeRefined(cur, idx, cur, nProbes, shortlist)
+    }
   }
 
   /** e13: scheduled index REBUILD + atomic serve swap — closes the IVF-PQ
@@ -2288,39 +2114,16 @@ object SimilarityOps {
     * served the retrained index": the ENTIRE e9/e10 chain — coarse k-means
     * seeds, Lloyd round, residual frame, PQ codebook train, encode, probes,
     * LUT, ADC, shortlist, exact refine — instantiated over the post-churn
-    * corpus `cur` ([[duckIvfPqCtesOver]]). Serving stale v1 quantizers, a
+    * corpus `cur` ([[duckRefineSql]]). Serving stale v1 quantizers, a
     * half-swapped index, dropped churn, or a pointer that never flipped
     * each produce different cells/codes and break the hash.
     */
-  val e13 = Q(
-    "e13_ivfpq_rebuild",
-    s"""WITH cur AS (
-       |  SELECT vec_id,
-       |    CASE WHEN vec_id % 7 = 3
-       |      THEN list_transform(generate_series(1, 64), i -> embedding[1 + (i % 64)])
-       |      ELSE embedding END AS embedding
-       |  FROM embeddings WHERE vec_id % 11 <> 5),
-       |${duckIvfPqCtesOver("cur")},
-       |short AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |    FROM adist) t WHERE rnk <= $RefineShortlist),
-       |rerank AS (
-       |  SELECT s.qid, s.vec_id,
-       |    eq.sq + ev.sq - 2 * ${duckDot64("eq.embedding", "ev.embedding")} AS dist
-       |  FROM short s
-       |  JOIN e eq ON eq.vec_id = s.qid
-       |  JOIN e ev ON ev.vec_id = s.vec_id)
-       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS edist FROM (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY round(dist, 4), vec_id) AS rnk
-       |  FROM rerank) t
-       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+  val e13 = Q("e13_ivfpq_rebuild",
+      duckRefineSql("cur", "cur", views = duckChurnedView)) { (s, dir) =>
     ivfpqRebuildSwapRetrieve(s, Tables.load(s, dir, "embeddings"))
   }
 
-  /** e15's oracle: e9's certified ADC chain with the predicate applied
+  /** e15's oracle, shared verbatim by e16: e9's certified ADC chain with the predicate applied
     * BEFORE the per-query ranking — exactly the pre-filter semantics
     * (masking code rows changes which candidates are scored, never their
     * scores, so filtering the `adist` relation is equivalent and keeps the
@@ -2328,8 +2131,7 @@ object SimilarityOps {
     * — selective enough that post-filter at equal budget visibly loses
     * rows, which is what the companion property test prices.
     */
-  val e15 = Q(
-    "e15_ivfpq_filtered_retrieve",
+  private val e15FilteredSql: String =
     s"""WITH $duckIvfPqCtes
        |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS adist FROM (
        |  SELECT a.qid, a.vec_id, a.dist,
@@ -2337,7 +2139,9 @@ object SimilarityOps {
        |      ORDER BY round(a.dist, 4), a.vec_id) AS rnk
        |  FROM adist a JOIN embeddings v ON v.vec_id = a.vec_id
        |  WHERE v.label < 4) t
-       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+       |WHERE rnk <= $PqTopK""".stripMargin
+
+  val e15 = Q("e15_ivfpq_filtered_retrieve", e15FilteredSql) { (s, dir) =>
     val embs = Tables.load(s, dir, "embeddings")
     ivfpqFilteredScan(embs.filter(col("vec_id") < 3), ivfpqBuild(embs),
       embs.filter(col("label") < 4))
@@ -2363,32 +2167,20 @@ object SimilarityOps {
     idx.copy(codes = idx.codes.join(embs.select("vec_id", metaCols: _*), Seq("vec_id")))
   }
 
-  val e16 = Q(
-    "e16_ivfpq_denorm_filtered",
-    s"""WITH $duckIvfPqCtes
-       |SELECT qid, rnk, vec_id AS doc_id, round(dist, 4) AS adist FROM (
-       |  SELECT a.qid, a.vec_id, a.dist,
-       |    row_number() OVER (PARTITION BY a.qid
-       |      ORDER BY round(a.dist, 4), a.vec_id) AS rnk
-       |  FROM adist a JOIN embeddings v ON v.vec_id = a.vec_id
-       |  WHERE v.label < 4) t
-       |WHERE rnk <= $PqTopK""".stripMargin) { (s, dir) =>
+  val e16 = Q("e16_ivfpq_denorm_filtered", e15FilteredSql) { (s, dir) =>
     val embs = Tables.load(s, dir, "embeddings")
     val idx = ivfpqDenormBuild(embs, Seq("label"))
     // the stored shape: label lives IN the codes parquet (cell-partitioned
     // like the index store), so the mask reaches the scan as PushedFilters
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_denorm_")
-    val codesDir = base.resolve("codes").toString
-    idx.codes.write.partitionBy("cell").parquet(codesDir)
-    val stored = s.read.parquet(codesDir)
-      .select(col("vec_id"), col("s"), col("code"),
-        col("cell").cast("long").as("cell"), col("label"))
-    val res = ivfpqScan(embs.filter(col("vec_id") < 3),
-      IvfPqIndex(idx.cents, idx.cb, stored.filter(col("label") < 4)))
-    // pin the k-row result and reclaim the scratch store (f11's discipline)
-    val rows = res.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), res.schema)
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_denorm_") { base =>
+      val codesDir = base.resolve("codes").toString
+      idx.codes.write.partitionBy("cell").parquet(codesDir)
+      val stored = s.read.parquet(codesDir)
+        .select(col("vec_id"), col("s"), col("code"),
+          col("cell").cast("long").as("cell"), col("label"))
+      ivfpqScan(embs.filter(col("vec_id") < 3),
+        IvfPqIndex(idx.cents, idx.cb, stored.filter(col("label") < 4)))
+    }
   }
 
   val all: Seq[Q] = Seq(s1, s2, s3, s4, e1, e2, e3, e4, e5, e6, e7, e8, e9, e10, e11,

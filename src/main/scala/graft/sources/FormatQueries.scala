@@ -337,8 +337,6 @@ object FormatQueries {
       } catch { case _: ClassNotFoundException => None }
   }
 
-  def avroAvailable: Boolean = avroFormat.isDefined
-
   /** f9: Avro round-trip of the part table — the row-oriented interchange
     * format Kafka/Schema-Registry pipelines land (the reference deploys a
     * Schema Registry its code never uses, docker-compose.yml:47–81; this
@@ -471,25 +469,21 @@ object FormatQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM events WHERE event_id % 6 <= 3 GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_asof_")
-    val lakeDir = base.resolve("lake").toString
-    // small target size so the sweep genuinely merges multi-file leaves at
-    // fixture scale; compactEvery=4 puts the one sweep after batch 3
-    val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
-      compactEvery = 4L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    (0 until 6).foreach { i =>
-      sink(events.filter(pmod(col("event_id"), lit(6)) === i), i.toLong)
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_asof_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      // small target size so the sweep genuinely merges multi-file leaves at
+      // fixture scale; compactEvery=4 puts the one sweep after batch 3
+      val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
+        compactEvery = 4L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      (0 until 6).foreach { i =>
+        sink(events.filter(pmod(col("event_id"), lit(6)) === i), i.toLong)
+      }
+      graft.streaming.LakeSink.readAsOf(s, lakeDir, 3L)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val census = graft.streaming.LakeSink.readAsOf(s, lakeDir, 3L)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    // pin the k-row census and reclaim the RAM-backed lake (st36's
-    // discipline — a lazy read would hold the tmpfs tree alive per run)
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f12: LAKE MERGE (copy-on-write upsert/delete —
@@ -525,32 +519,30 @@ object FormatQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM merged GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_merge_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_merge_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
+        .withColumn("value", col("value") + 1000.0)
+        .withColumn("event_type", lit("updated"))
+        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("value", col("value") * 2.0)
+          .withColumn("event_type", lit("inserted")))
+      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
+        .select("event_id", "ts")
+      graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts, "event_id",
+        deletes, targetFileBytes = 512L << 10)
+      s.read.parquet(lakeDir)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-      .withColumn("value", col("value") + 1000.0)
-      .withColumn("event_type", lit("updated"))
-      .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("value", col("value") * 2.0)
-        .withColumn("event_type", lit("inserted")))
-    val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-      .select("event_id", "ts")
-    graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts, "event_id",
-      deletes, targetFileBytes = 512L << 10)
-    val census = s.read.parquet(lakeDir)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f13: LAKE DATA SKIPPING (file-level zone maps —
@@ -581,25 +573,23 @@ object FormatQueries {
     // 2-row driver probe (min/max bound class): the quartile edges
     val m = events.agg(max(col("event_id"))).head.getLong(0) + 1L
     val (q1, q2) = (m / 4, m / 2)
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_skip_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(col("event_id") >= lit(i * (m / 4)) &&
-          (if (i == 3) lit(true) else col("event_id") < lit((i + 1) * (m / 4)))),
-        commitId = Some(i.toLong), statsCols = Seq("event_id"))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_skip_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(col("event_id") >= lit(i * (m / 4)) &&
+            (if (i == 3) lit(true) else col("event_id") < lit((i + 1) * (m / 4)))),
+          commitId = Some(i.toLong), statsCols = Seq("event_id"))
+      }
+      val (pruned, report) = graft.streaming.LakeSink.readPruned(
+        s, lakeDir, "event_id", BigDecimal(q1), BigDecimal(q2 - 1))
+      require(report.scannedFiles < report.totalFiles,
+        s"data skipping stopped skipping: $report — the zone maps are dead")
+      pruned.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val (pruned, report) = graft.streaming.LakeSink.readPruned(
-      s, lakeDir, "event_id", BigDecimal(q1), BigDecimal(q2 - 1))
-    require(report.scannedFiles < report.totalFiles,
-      s"data skipping stopped skipping: $report — the zone maps are dead")
-    val census = pruned.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f14: LAKE CHANGE DATA FEED — the row-level consumption shape
@@ -634,33 +624,31 @@ object FormatQueries {
       |  sum(event_id)::BIGINT AS id_checksum
       |FROM chg GROUP BY 1""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_cdf_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_cdf_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
+        .withColumn("value", col("value") + 1000.0)
+        .withColumn("event_type", lit("updated"))
+        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("value", col("value") * 2.0)
+          .withColumn("event_type", lit("inserted")))
+      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
+        .select("event_id", "ts")
+      val stats = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
+        "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
+      graft.streaming.LakeSink
+        .tailChanges(s, lakeDir, -1L, stats.commitId)
+        .groupBy(col("_op").as("op"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-      .withColumn("value", col("value") + 1000.0)
-      .withColumn("event_type", lit("updated"))
-      .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("value", col("value") * 2.0)
-        .withColumn("event_type", lit("inserted")))
-    val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-      .select("event_id", "ts")
-    val stats = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
-      "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
-    val census = graft.streaming.LakeSink
-      .tailChanges(s, lakeDir, -1L, stats.commitId)
-      .groupBy(col("_op").as("op"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f15: LAKE SCHEMA EVOLUTION on the write path — f5 certifies batch
@@ -686,27 +674,25 @@ object FormatQueries {
       |  sum(event_id)::BIGINT AS id_checksum
       |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_evo_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 2).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_evo_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 2).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      (2 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i)
+            .withColumn("quality", pmod(col("event_id"), lit(5)).cast("int")),
+          commitId = Some(i.toLong))
+      }
+      graft.streaming.LakeSink.readLake(s, lakeDir)
+        .groupBy(coalesce(col("quality").cast("long"), lit(-1L)).as("quality"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    (2 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i)
-          .withColumn("quality", pmod(col("event_id"), lit(5)).cast("int")),
-        commitId = Some(i.toLong))
-    }
-    val census = graft.streaming.LakeSink.readLake(s, lakeDir)
-      .groupBy(coalesce(col("quality").cast("long"), lit(-1L)).as("quality"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f16: LAKE DELETION VECTORS (merge-on-read delete —
@@ -730,39 +716,37 @@ object FormatQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM events WHERE event_id % 10 <> 3 GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_dv_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_dv_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      def layout(): Map[String, Set[String]] = {
+        val root = new org.apache.hadoop.fs.Path(lakeDir)
+        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.listStatus(root).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
+          .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
+            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            .map(_.getPath.getName).toSet)
+          .toMap
+      }
+      val before = layout()
+      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
+        .select("event_id", "ts")
+      val stats = graft.streaming.LakeSink.deleteVectors(
+        s, lakeDir, deletes, "event_id")
+      require(stats.deletedRows > 0, "fixture must delete rows")
+      require(layout() == before,
+        "merge-on-read stopped merge-on-reading: the delete moved data files")
+      graft.streaming.LakeSink.readLake(s, lakeDir)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    def layout(): Map[String, Set[String]] = {
-      val root = new org.apache.hadoop.fs.Path(lakeDir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
-        .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.getName).toSet)
-        .toMap
-    }
-    val before = layout()
-    val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-      .select("event_id", "ts")
-    val stats = graft.streaming.LakeSink.deleteVectors(
-      s, lakeDir, deletes, "event_id")
-    require(stats.deletedRows > 0, "fixture must delete rows")
-    require(layout() == before,
-      "merge-on-read stopped merge-on-reading: the delete moved data files")
-    val census = graft.streaming.LakeSink.readLake(s, lakeDir)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f17: LAKE Z-ORDER SKIPPING (OPTIMIZE ZORDER —
@@ -805,34 +789,32 @@ object FormatQueries {
     val (q1, q2) = (m / 4, m / 2)
     val (umin, umax) = (bounds.getLong(1), bounds.getLong(2))
     val (u1, u2) = (umin + (umax - umin + 1) / 4, umin + (umax - umin + 1) / 2)
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_zorder_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_zorder_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      graft.streaming.LakeSink.compactPartitions(s, lakeDir,
+        targetFileBytes = 8L << 10, minFiles = 2,
+        statsCols = Seq("event_id", "user_id"),
+        zorderBy = Seq("event_id", "user_id"))
+      def census(dim: String, statsCol: String, lo: Long, hi: Long) = {
+        val (pruned, report) = graft.streaming.LakeSink.readPruned(
+          s, lakeDir, statsCol, BigDecimal(lo), BigDecimal(hi))
+        require(report.scannedFiles < report.totalFiles,
+          s"z-order skipping stopped skipping on $statsCol: $report")
+        pruned.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("value")), 2).as("total_value"),
+            sum(col("event_id")).as("id_checksum"))
+          .select(lit(dim).as("dim"), col("event_type"), col("n"),
+            col("total_value"), col("id_checksum"))
+      }
+      census("by_event_id", "event_id", q1, q2 - 1)
+        .unionByName(census("by_user_id", "user_id", u1, u2 - 1))
     }
-    graft.streaming.LakeSink.compactPartitions(s, lakeDir,
-      targetFileBytes = 8L << 10, minFiles = 2,
-      statsCols = Seq("event_id", "user_id"),
-      zorderBy = Seq("event_id", "user_id"))
-    def census(dim: String, statsCol: String, lo: Long, hi: Long) = {
-      val (pruned, report) = graft.streaming.LakeSink.readPruned(
-        s, lakeDir, statsCol, BigDecimal(lo), BigDecimal(hi))
-      require(report.scannedFiles < report.totalFiles,
-        s"z-order skipping stopped skipping on $statsCol: $report")
-      pruned.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
-        .select(lit(dim).as("dim"), col("event_type"), col("n"),
-          col("total_value"), col("id_checksum"))
-    }
-    val out = census("by_event_id", "event_id", q1, q2 - 1)
-      .unionByName(census("by_user_id", "user_id", u1, u2 - 1))
-    val rows = out.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), out.schema)
   }
 
   /** f18: LAKE GDPR PURGE (physical erasure —
@@ -871,47 +853,45 @@ object FormatQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM merged WHERE user_id % 25 <> 3 GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_purge_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_purge_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
+        .withColumn("value", col("value") + 1000.0)
+        .withColumn("event_type", lit("updated"))
+        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("value", col("value") * 2.0)
+          .withColumn("event_type", lit("inserted")))
+      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
+        .select("event_id", "ts")
+      val merged = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
+        "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
+      val stats = graft.streaming.LakeSink.purgeKeys(s, lakeDir,
+        events.filter(pmod(col("user_id"), lit(25)) === 3).select("user_id"),
+        "user_id", targetFileBytes = 512L << 10)
+      require(stats.purgedRows > 0 && stats.historyLeavesDropped > 0 &&
+        stats.cdcRecordsRewritten > 0, s"purge fixture drift: $stats")
+      // time travel into the erased window must fail LOUDLY, never resurrect
+      val preSnapshotLost =
+        try { graft.streaming.LakeSink.readAsOf(s, lakeDir, merged.commitId - 1).count(); false }
+        catch { case e: IllegalStateException => e.getMessage.contains("time travel") }
+      require(preSnapshotLost, "pre-purge snapshot served after history erasure")
+      // the change feed must have forgotten the purged users, not the commit
+      require(graft.streaming.LakeSink
+        .tailChanges(s, lakeDir, merged.commitId - 1, merged.commitId)
+        .filter(pmod(col("user_id"), lit(25)) === 3).isEmpty,
+        "purged keys survived in the change feed")
+      graft.streaming.LakeSink.readLake(s, lakeDir)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-      .withColumn("value", col("value") + 1000.0)
-      .withColumn("event_type", lit("updated"))
-      .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("value", col("value") * 2.0)
-        .withColumn("event_type", lit("inserted")))
-    val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-      .select("event_id", "ts")
-    val merged = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
-      "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
-    val stats = graft.streaming.LakeSink.purgeKeys(s, lakeDir,
-      events.filter(pmod(col("user_id"), lit(25)) === 3).select("user_id"),
-      "user_id", targetFileBytes = 512L << 10)
-    require(stats.purgedRows > 0 && stats.historyLeavesDropped > 0 &&
-      stats.cdcRecordsRewritten > 0, s"purge fixture drift: $stats")
-    // time travel into the erased window must fail LOUDLY, never resurrect
-    val preSnapshotLost =
-      try { graft.streaming.LakeSink.readAsOf(s, lakeDir, merged.commitId - 1).count(); false }
-      catch { case e: IllegalStateException => e.getMessage.contains("time travel") }
-    require(preSnapshotLost, "pre-purge snapshot served after history erasure")
-    // the change feed must have forgotten the purged users, not the commit
-    require(graft.streaming.LakeSink
-      .tailChanges(s, lakeDir, merged.commitId - 1, merged.commitId)
-      .filter(pmod(col("user_id"), lit(25)) === 3).isEmpty,
-      "purged keys survived in the change feed")
-    val census = graft.streaming.LakeSink.readLake(s, lakeDir)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
   }
 
   /** f19: WRITE-TIME EXPECTATIONS — the data-quality gate
@@ -944,43 +924,42 @@ object FormatQueries {
     val rules = Seq(
       "value_cap" -> "value <= 300",
       "known_type" -> "event_type <> 'error'")
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_expect_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 4).foreach { i =>
-      graft.streaming.LakeSink.appendWithExpectations(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i), rules,
-        commitId = Some(i.toLong))
-    }
-    val live = graft.streaming.LakeSink.readLake(s, lakeDir)
-    val quarantined = graft.streaming.LakeSink.readQuarantine(s, lakeDir)
-    // conservation + gate guards: nothing lost, nothing leaked. Both ride
-    // passes the query already makes instead of the three r16 standalone
-    // jobs (live.count + quarantined.count + live-leak filter): the leak
-    // certificate is an observed metric on the live census scan, and
-    // conservation compares the census's own n column against one cheap
-    // count of the input (guide §1.2 — don't compute things twice).
     val leakObs = org.apache.spark.sql.Observation()
-    val liveCensus = live
-      .observe(leakObs, coalesce(sum(when(
-        col("value") > 300 || col("event_type") === "error", 1L).otherwise(0L)),
-        lit(0L)).as("leaked"))
-      .groupBy(lit("live").as("disposition"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val qCensus = quarantined
-      .groupBy(col("_violations").as("disposition"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val census = liveCensus.unionByName(qCensus)
-    val rows = census.collect().toIndexedSeq
-    require(rows.map(_.getAs[Long]("n")).sum == events.count(),
+    val census = graft.streaming.ReplayHarness.pinnedScratch(s, "graft_expect_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 4).foreach { i =>
+        graft.streaming.LakeSink.appendWithExpectations(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i), rules,
+          commitId = Some(i.toLong))
+      }
+      val live = graft.streaming.LakeSink.readLake(s, lakeDir)
+      val quarantined = graft.streaming.LakeSink.readQuarantine(s, lakeDir)
+      // conservation + gate guards: nothing lost, nothing leaked. Both ride
+      // passes the query already makes instead of the three r16 standalone
+      // jobs (live.count + quarantined.count + live-leak filter): the leak
+      // certificate is an observed metric on the live census scan, and
+      // conservation compares the census's own n column against one cheap
+      // count of the input (guide §1.2 — don't compute things twice).
+      val liveCensus = live
+        .observe(leakObs, coalesce(sum(when(
+          col("value") > 300 || col("event_type") === "error", 1L).otherwise(0L)),
+          lit(0L)).as("leaked"))
+        .groupBy(lit("live").as("disposition"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
+      val qCensus = quarantined
+        .groupBy(col("_violations").as("disposition"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
+      liveCensus.unionByName(qCensus)
+    }
+    require(census.collect().map(_.getAs[Long]("n")).sum == events.count(),
       "expectations gate lost or duplicated rows")
     require(leakObs.get.get("leaked").contains(0L),
       "violating rows leaked into the live lake")
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
+    census
   }
 
   /** f20: LAKE RESTORE — roll the table back to a snapshot AS A NEW
@@ -1007,63 +986,61 @@ object FormatQueries {
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
     val sink = graft.streaming.LakeSink
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_restore_")
-    val lakeDir = base.resolve("lake").toString
-    (0 until 3).foreach { i =>
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_restore_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      (0 until 3).foreach { i =>
+        sink.appendBatch(s, lakeDir,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      val goodCount = sink.readLake(s, lakeDir).count()
+      // the bad era: merge (3), DV delete (4), backfill onto new dates (5)
+      val present = pmod(col("event_id"), lit(4)) < 3
+      val upserts = events.filter(present && pmod(col("event_id"), lit(10)) === 7)
+        .withColumn("value", col("value") + 1000.0)
+        .withColumn("event_type", lit("updated"))
+        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("value", col("value") * 2.0)
+          .withColumn("event_type", lit("inserted")))
+      val merged = sink.mergeInto(s, lakeDir, upserts, "event_id",
+        events.filter(present && pmod(col("event_id"), lit(10)) === 3)
+          .select("event_id", "ts"),
+        targetFileBytes = 512L << 10)
+      require(merged.commitId == 3L, s"fixture drift: merge at ${merged.commitId}")
+      val dv = sink.deleteVectors(s, lakeDir,
+        events.filter(present && pmod(col("event_id"), lit(10)) === 9)
+          .select("event_id", "ts"),
+        "event_id")
+      require(dv.commitId == 4L, s"fixture drift: DV delete at ${dv.commitId}")
       sink.appendBatch(s, lakeDir,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
-    }
-    val goodCount = sink.readLake(s, lakeDir).count()
-    // the bad era: merge (3), DV delete (4), backfill onto new dates (5)
-    val present = pmod(col("event_id"), lit(4)) < 3
-    val upserts = events.filter(present && pmod(col("event_id"), lit(10)) === 7)
-      .withColumn("value", col("value") + 1000.0)
-      .withColumn("event_type", lit("updated"))
-      .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("value", col("value") * 2.0)
-        .withColumn("event_type", lit("inserted")))
-    val merged = sink.mergeInto(s, lakeDir, upserts, "event_id",
-      events.filter(present && pmod(col("event_id"), lit(10)) === 3)
-        .select("event_id", "ts"),
-      targetFileBytes = 512L << 10)
-    require(merged.commitId == 3L, s"fixture drift: merge at ${merged.commitId}")
-    val dv = sink.deleteVectors(s, lakeDir,
-      events.filter(present && pmod(col("event_id"), lit(10)) === 9)
-        .select("event_id", "ts"),
-      "event_id")
-    require(dv.commitId == 4L, s"fixture drift: DV delete at ${dv.commitId}")
-    sink.appendBatch(s, lakeDir,
-      events.filter(pmod(col("event_id"), lit(10)) === 5)
-        .withColumn("event_id", col("event_id") + 20000000L)
-        .withColumn("ts", col("ts") + expr("INTERVAL 3000 DAYS")),
-      commitId = Some(5L))
-    val damagedCount = sink.readLake(s, lakeDir).count()
+        events.filter(pmod(col("event_id"), lit(10)) === 5)
+          .withColumn("event_id", col("event_id") + 20000000L)
+          .withColumn("ts", col("ts") + expr("INTERVAL 3000 DAYS")),
+        commitId = Some(5L))
+      val damagedCount = sink.readLake(s, lakeDir).count()
 
-    val stats = sink.restoreTo(s, lakeDir, asOf = 2L)
-    require(stats.commitId == 6L && stats.rewrittenLeaves.nonEmpty &&
-      stats.retiredLeaves.nonEmpty, s"restore fixture drift: $stats")
-    // the live view IS the snapshot again
-    require(sink.readLake(s, lakeDir).count() == goodCount,
-      "restore did not reproduce the snapshot row count")
-    // history preserved THROUGH the restore: the damaged era still serves
-    // (5 includes the retired backfill leaves — history-only resolution)
-    require(sink.readAsOf(s, lakeDir, 5L).count() == damagedCount,
-      "pre-restore version lost after restore")
-    require(sink.readAsOf(s, lakeDir, 2L).count() == goodCount,
-      "snapshot 2 drifted after restore")
-    // ingestion continues on the restored timeline
-    sink.appendBatch(s, lakeDir,
-      events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(7L))
-    val census = sink.readLake(s, lakeDir)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = census.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
+      val stats = sink.restoreTo(s, lakeDir, asOf = 2L)
+      require(stats.commitId == 6L && stats.rewrittenLeaves.nonEmpty &&
+        stats.retiredLeaves.nonEmpty, s"restore fixture drift: $stats")
+      // the live view IS the snapshot again
+      require(sink.readLake(s, lakeDir).count() == goodCount,
+        "restore did not reproduce the snapshot row count")
+      // history preserved THROUGH the restore: the damaged era still serves
+      // (5 includes the retired backfill leaves — history-only resolution)
+      require(sink.readAsOf(s, lakeDir, 5L).count() == damagedCount,
+        "pre-restore version lost after restore")
+      require(sink.readAsOf(s, lakeDir, 2L).count() == goodCount,
+        "snapshot 2 drifted after restore")
+      // ingestion continues on the restored timeline
+      sink.appendBatch(s, lakeDir,
+        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(7L))
+      sink.readLake(s, lakeDir)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
+    }
   }
 
   /** f21: SHALLOW CLONE with leaf-level copy-on-write
@@ -1107,59 +1084,57 @@ object FormatQueries {
       |FROM events GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
     val sink = graft.streaming.LakeSink
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_clone_")
-    val src = base.resolve("source").toString
-    val cln = base.resolve("clone").toString
-    (0 until 3).foreach { i =>
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_clone_") { base =>
+      val src = base.resolve("source").toString
+      val cln = base.resolve("clone").toString
+      (0 until 3).foreach { i =>
+        sink.appendBatch(s, src,
+          events.filter(pmod(col("event_id"), lit(4)) === i),
+          commitId = Some(i.toLong))
+      }
+      require(sink.cloneTable(s, src, cln) == 2L, "clone pinned at wrong head")
+      def srcFiles(): Map[String, Set[String]] = {
+        val root = new org.apache.hadoop.fs.Path(src)
+        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.listStatus(root).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
+          .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
+            .filter(_.isFile).map(_.getPath.getName).toSet).toMap
+      }
+      // the source diverges AFTER the pin — invisible to the clone
       sink.appendBatch(s, src,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
+        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(3L))
+      val srcBefore = srcFiles()
+      // clone-local append: union overlay, no CoW
+      sink.appendBatch(s, cln,
+        events.filter(pmod(col("event_id"), lit(4)) === 3)
+          .withColumn("event_id", col("event_id") + 10000000L)
+          .withColumn("event_type", lit("cloneonly"))
+          .withColumn("value", col("value") * 2.0),
+        commitId = Some(0L))
+      // half-scoped merge: CoW + shadow exactly the early-date leaves
+      val h = (events.agg(max(col("event_id"))).head.getLong(0) + 1) / 2
+      val early = pmod(col("event_id"), lit(4)) < 3 && col("event_id") < h
+      sink.cloneMerge(s, cln,
+        events.filter(early && pmod(col("event_id"), lit(10)) === 7)
+          .withColumn("event_type", lit("updated"))
+          .withColumn("value", col("value") + 1000.0),
+        "event_id",
+        events.filter(early && pmod(col("event_id"), lit(10)) === 3)
+          .select("event_id", "ts"),
+        targetFileBytes = 512L << 10)
+      // zero-copy claim: every clone write left the source byte-untouched
+      require(srcFiles() == srcBefore, "a clone write touched the source")
+      def census(df: org.apache.spark.sql.DataFrame, tag: String) =
+        df.groupBy(col("event_date"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("value")), 2).as("total_value"),
+            sum(col("event_id")).as("id_checksum"))
+          .select(lit(tag).as("tbl"), col("event_date"), col("event_type"),
+            col("n"), col("total_value"), col("id_checksum"))
+      census(sink.readLake(s, cln), "clone")
+        .unionByName(census(sink.readLake(s, src), "source"))
     }
-    require(sink.cloneTable(s, src, cln) == 2L, "clone pinned at wrong head")
-    def srcFiles(): Map[String, Set[String]] = {
-      val root = new org.apache.hadoop.fs.Path(src)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
-        .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
-          .filter(_.isFile).map(_.getPath.getName).toSet).toMap
-    }
-    // the source diverges AFTER the pin — invisible to the clone
-    sink.appendBatch(s, src,
-      events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(3L))
-    val srcBefore = srcFiles()
-    // clone-local append: union overlay, no CoW
-    sink.appendBatch(s, cln,
-      events.filter(pmod(col("event_id"), lit(4)) === 3)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("event_type", lit("cloneonly"))
-        .withColumn("value", col("value") * 2.0),
-      commitId = Some(0L))
-    // half-scoped merge: CoW + shadow exactly the early-date leaves
-    val h = (events.agg(max(col("event_id"))).head.getLong(0) + 1) / 2
-    val early = pmod(col("event_id"), lit(4)) < 3 && col("event_id") < h
-    sink.cloneMerge(s, cln,
-      events.filter(early && pmod(col("event_id"), lit(10)) === 7)
-        .withColumn("event_type", lit("updated"))
-        .withColumn("value", col("value") + 1000.0),
-      "event_id",
-      events.filter(early && pmod(col("event_id"), lit(10)) === 3)
-        .select("event_id", "ts"),
-      targetFileBytes = 512L << 10)
-    // zero-copy claim: every clone write left the source byte-untouched
-    require(srcFiles() == srcBefore, "a clone write touched the source")
-    def census(df: org.apache.spark.sql.DataFrame, tag: String) =
-      df.groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
-        .select(lit(tag).as("tbl"), col("event_date"), col("event_type"),
-          col("n"), col("total_value"), col("id_checksum"))
-    val out = census(sink.readLake(s, cln), "clone")
-      .unionByName(census(sink.readLake(s, src), "source"))
-    val rows = out.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), out.schema)
   }
 
   /** f22: OPTIMISTIC MULTI-WRITER CONCURRENCY
@@ -1198,45 +1173,43 @@ object FormatQueries {
       |FROM allr GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = Tables.load(s, dir, "events")
     val sink = graft.streaming.LakeSink
-    val base = graft.streaming.ReplayHarness.scratchDir("graft_occ_")
-    val lake = base.resolve("t").toString
-    sink.appendBatch(s, lake,
-      events.filter(pmod(col("event_id"), lit(3)) === 0), commitId = Some(0L))
-    // the deployment's standing epoch, handed to the merge job so no
-    // writer bumps the fence out from under the others
-    val epoch = sink.claimWriterEpoch(s, lake)
-    val tailRows = events.filter(pmod(col("event_id"), lit(3)) === 1)
-      .withColumn("ts", expr("ts + INTERVAL 365 DAYS"))
-      .withColumn("event_type", lit("tail"))
-    val tailId = sink.appendBatchOcc(s, lake, tailRows, writerId = "tail",
-      faultInjector = p => if (p == "placed") {
-        val m = sink.mergeInto(s, lake,
-          events.filter(pmod(col("event_id"), lit(3)) === 0 &&
-              pmod(col("event_id"), lit(10)) === 7)
-            .withColumn("event_type", lit("updated"))
-            .withColumn("value", col("value") + 1000.0),
-          "event_id",
-          events.filter(pmod(col("event_id"), lit(3)) === 0 &&
-              pmod(col("event_id"), lit(10)) === 3)
-            .select("event_id", "ts"),
-          fenceEpoch = Some(epoch))
-        require(m.commitId == 1L, s"merge expected commit 1, got ${m.commitId}")
-      })
-    require(tailId == 2L, s"OCC tail expected commit 2, got $tailId")
-    val bfId = sink.appendBatchOcc(s, lake,
-      events.filter(pmod(col("event_id"), lit(3)) === 2)
-        .withColumn("ts", expr("ts + INTERVAL 730 DAYS"))
-        .withColumn("event_type", lit("backfill")),
-      writerId = "backfill", dedupKey = Some("bf1"))
-    require(bfId == 3L, s"OCC backfill expected commit 3, got $bfId")
-    val out = sink.readLake(s, lake)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    val rows = out.collect().toIndexedSeq
-    graft.streaming.ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), out.schema)
+    graft.streaming.ReplayHarness.pinnedScratch(s, "graft_occ_") { base =>
+      val lake = base.resolve("t").toString
+      sink.appendBatch(s, lake,
+        events.filter(pmod(col("event_id"), lit(3)) === 0), commitId = Some(0L))
+      // the deployment's standing epoch, handed to the merge job so no
+      // writer bumps the fence out from under the others
+      val epoch = sink.claimWriterEpoch(s, lake)
+      val tailRows = events.filter(pmod(col("event_id"), lit(3)) === 1)
+        .withColumn("ts", expr("ts + INTERVAL 365 DAYS"))
+        .withColumn("event_type", lit("tail"))
+      val tailId = sink.appendBatchOcc(s, lake, tailRows, writerId = "tail",
+        faultInjector = p => if (p == "placed") {
+          val m = sink.mergeInto(s, lake,
+            events.filter(pmod(col("event_id"), lit(3)) === 0 &&
+                pmod(col("event_id"), lit(10)) === 7)
+              .withColumn("event_type", lit("updated"))
+              .withColumn("value", col("value") + 1000.0),
+            "event_id",
+            events.filter(pmod(col("event_id"), lit(3)) === 0 &&
+                pmod(col("event_id"), lit(10)) === 3)
+              .select("event_id", "ts"),
+            fenceEpoch = Some(epoch))
+          require(m.commitId == 1L, s"merge expected commit 1, got ${m.commitId}")
+        })
+      require(tailId == 2L, s"OCC tail expected commit 2, got $tailId")
+      val bfId = sink.appendBatchOcc(s, lake,
+        events.filter(pmod(col("event_id"), lit(3)) === 2)
+          .withColumn("ts", expr("ts + INTERVAL 730 DAYS"))
+          .withColumn("event_type", lit("backfill")),
+        writerId = "backfill", dedupKey = Some("bf1"))
+      require(bfId == 3L, s"OCC backfill expected commit 3, got $bfId")
+      sink.readLake(s, lake)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
+    }
   }
 
   val all: Seq[Q] = Seq(f1, f2, f3, f4, f5, f6, f7, f8, f9, f10, f11, f12, f13,

@@ -2571,6 +2571,13 @@ object LakeSink {
       writeCommitMarker(fs, markerPath(root, m), m, Nil, Some(MarkerRewrite))
       return RestoreStats(m, asOf, Nil, Nil)
     }
+    // zone maps for the restored files, on every column the lake already
+    // keeps them for (read from its sidecars) — without them readPruned
+    // scans each restored leaf in full until a later rewrite
+    val statsCols = statsLines(fs, root).flatMap(_.split('\t') match {
+      case Array(_, c, _, _) => Some(c)
+      case _ => None
+    }).distinct.sorted
     val tmpRoot = new Path(root, TmpRoot)
     fs.mkdirs(tmpRoot)
     (rewritten ++ resurrected).foreach { l =>
@@ -2580,7 +2587,7 @@ object LakeSink {
         s"restore failed staging $l into the sweep namespace")
       checkWriterFence(fs, root, epoch)
       lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
-        root, new Path(root, l), tmp, m)
+        root, new Path(root, l), tmp, m, statsCols)
       faultInjector(s"swapped:$l")
     }
     val gen = new Path(new Path(root, HistoryRoot), m.toString)

@@ -153,16 +153,21 @@ object ReplayHarness {
         .parquet(outDir.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
-  /** Collects the row-bounded `df` (a census), reclaims the RAM-backed
-    * scratch tree `base`, and rebuilds the rows on the caller's `spark` —
-    * a lazy read would hold a fixture-sized tmpfs tree alive per run and
-    * accumulate across a long session.
+  /** Pin and reclaim: runs `body` on a fresh RAM-backed scratch tree
+    * ([[scratchDir]]), collects the row-bounded frame it returns (a census)
+    * and rebuilds the rows on the caller's `spark`. The tree is reclaimed
+    * in a `finally`, so a throwing body reclaims it too — a lazy read
+    * would hold a fixture-sized tmpfs tree alive per run and accumulate
+    * across a long session.
     */
-  private def pinned(spark: SparkSession, base: Path)(df: DataFrame): DataFrame = {
-    val rows = df.collect().toIndexedSeq
-    val schema = df.schema
-    cleanupScratch(base)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+  private[graft] def pinnedScratch(spark: SparkSession, prefix: String)(
+      body: Path => DataFrame): DataFrame = {
+    val base = scratchDir(prefix)
+    try {
+      val df = body(base)
+      val rows = df.collect().toIndexedSeq
+      spark.createDataFrame(spark.sparkContext.parallelize(rows), df.schema)
+    } finally cleanupScratch(base)
   }
 
   /** (min, max) of `ts` in epoch ms: two scalar aggregates to the driver. */
@@ -488,19 +493,20 @@ object ReplayHarness {
       finish: DataFrame => DataFrame = identity,
       crashSinkAt: Option[(Long, String)] = None)(
       transform: DataFrame => DataFrame): DataFrame = {
-    val base = scratchDir("graft_lake_")
-    val lakeDir = base.resolve("lake").toString
-    val crash = new CrashScenario("lake", crashSinkAt)
-    // small target size so the mid-stream sweeps really rewrite leaves at
-    // fixture scale; production would keep the 128 MiB default
-    val sink = LakeSink.datePartitioned(lakeDir, tsCol = "ts",
-      compactEvery = compactEvery, targetFileBytes = 512L << 10,
-      minFilesToCompact = 2, faultInjector = crash.inject)
-    isolated(spark) { s =>
-      crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
-        transform)(sink)
+    pinnedScratch(spark, "graft_lake_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val crash = new CrashScenario("lake", crashSinkAt)
+      // small target size so the mid-stream sweeps really rewrite leaves at
+      // fixture scale; production would keep the 128 MiB default
+      val sink = LakeSink.datePartitioned(lakeDir, tsCol = "ts",
+        compactEvery = compactEvery, targetFileBytes = 512L << 10,
+        minFilesToCompact = 2, faultInjector = crash.inject)
+      isolated(spark) { s =>
+        crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
+          transform)(sink)
+      }
+      finish(spark.read.parquet(lakeDir))
     }
-    pinned(spark, base)(finish(spark.read.parquet(lakeDir)))
   }
 
   /** st46's harness: ONE micro-batch stream fanned into TWO ledgered lake
@@ -526,27 +532,28 @@ object ReplayHarness {
       phase1Chunks: Int = 3,
       crashBetweenSinksAt: Long = 1L,
       finish: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val base = scratchDir("graft_fanout_")
-    val lakeA = base.resolve("lake_raw").toString
-    val lakeB = base.resolve("lake_derived").toString
-    val sinkA = LakeSink.datePartitioned(lakeA, tsCol = "ts",
-      compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    val sinkB = LakeSink.datePartitioned(lakeB, tsCol = "ts",
-      compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    // recovery of the between-sinks crash: A's ledger skips the batch, B
-    // commits it; the dropped commit record at the phase boundary (st32's
-    // engine-crash window) must then be a skip in BOTH ledgers
-    val crash = new CrashScenario("fanout", Some((crashBetweenSinksAt, "between-sinks")))
-    isolated(spark) { s =>
-      crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
-        _.select("event_id", "ts", "user_id", "event_type", "value")) {
-        (batch, batchId) =>
-          sinkA(batch, batchId)
-          crash.inject(batchId, "between-sinks")
-          sinkB(batch.filter(col("event_type") === "click"), batchId)
+    pinnedScratch(spark, "graft_fanout_") { base =>
+      val lakeA = base.resolve("lake_raw").toString
+      val lakeB = base.resolve("lake_derived").toString
+      val sinkA = LakeSink.datePartitioned(lakeA, tsCol = "ts",
+        compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      val sinkB = LakeSink.datePartitioned(lakeB, tsCol = "ts",
+        compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      // recovery of the between-sinks crash: A's ledger skips the batch, B
+      // commits it; the dropped commit record at the phase boundary (st32's
+      // engine-crash window) must then be a skip in BOTH ledgers
+      val crash = new CrashScenario("fanout", Some((crashBetweenSinksAt, "between-sinks")))
+      isolated(spark) { s =>
+        crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
+          _.select("event_id", "ts", "user_id", "event_type", "value")) {
+          (batch, batchId) =>
+            sinkA(batch, batchId)
+            crash.inject(batchId, "between-sinks")
+            sinkB(batch.filter(col("event_type") === "click"), batchId)
+        }
       }
+      finish(spark.read.parquet(lakeA), spark.read.parquet(lakeB))
     }
-    pinned(spark, base)(finish(spark.read.parquet(lakeA), spark.read.parquet(lakeB)))
   }
 
   /** The crash-restart scenario shared by the ledgered-sink replays (st32/
@@ -702,42 +709,43 @@ object ReplayHarness {
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_cdcapply_")
-    val src = base.resolve("source").toString
-    val dst = base.resolve("replica").toString
-    val sink = LakeSink
+    pinnedScratch(spark, "graft_cdcapply_") { base =>
+      val src = base.resolve("source").toString
+      val dst = base.resolve("replica").toString
+      val sink = LakeSink
 
-    // source lay-down: three appends, one recorded merge, one late append
-    layDownCdcSource(spark, events, src)
-    sink.appendBatch(spark, src,
-      events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(4L))
+      // source lay-down: three appends, one recorded merge, one late append
+      layDownCdcSource(spark, events, src)
+      sink.appendBatch(spark, src,
+        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(4L))
 
-    val dataCols = events.columns.toSeq
-    def applyRange(from: Long, to: Long): Unit = {
-      val changes = sink.tailChanges(spark, src, from, to)
-      val ups = changes.filter(col("_op").isin("insert", "update_post"))
-        .select(dataCols.map(col): _*)
-      val dels = changes.filter(col("_op") === "delete")
-        .select("event_id", "ts")
-      val fs = new org.apache.hadoop.fs.Path(dst)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dst))) {
-        require(dels.isEmpty, "bootstrap range cannot carry deletes")
-        // claimed id 0: a crash-retry of the bootstrap is a ledger no-op
-        sink.appendBatch(spark, dst, ups, commitId = Some(0L))
-      } else {
-        sink.mergeInto(spark, dst, ups, "event_id", dels,
-          targetFileBytes = 512L << 10)
+      val dataCols = events.columns.toSeq
+      def applyRange(from: Long, to: Long): Unit = {
+        val changes = sink.tailChanges(spark, src, from, to)
+        val ups = changes.filter(col("_op").isin("insert", "update_post"))
+          .select(dataCols.map(col): _*)
+        val dels = changes.filter(col("_op") === "delete")
+          .select("event_id", "ts")
+        val fs = new org.apache.hadoop.fs.Path(dst)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(new org.apache.hadoop.fs.Path(dst))) {
+          require(dels.isEmpty, "bootstrap range cannot carry deletes")
+          // claimed id 0: a crash-retry of the bootstrap is a ledger no-op
+          sink.appendBatch(spark, dst, ups, commitId = Some(0L))
+        } else {
+          sink.mergeInto(spark, dst, ups, "event_id", dels,
+            targetFileBytes = 512L << 10)
+        }
       }
-    }
-    applyRange(-1L, 2L) // bootstrap: the three appends
-    applyRange(2L, 3L)  // the merge's row-level changes
-    // crash window: effect committed, high-water not advanced — the
-    // consumer re-applies the SAME range; the replica must converge
-    applyRange(2L, 3L)
-    applyRange(3L, 4L)  // the late append
+      applyRange(-1L, 2L) // bootstrap: the three appends
+      applyRange(2L, 3L)  // the merge's row-level changes
+      // crash window: effect committed, high-water not advanced — the
+      // consumer re-applies the SAME range; the replica must converge
+      applyRange(2L, 3L)
+      applyRange(3L, 4L)  // the late append
 
-    pinned(spark, base)(finish(sink.readLake(spark, dst)))
+      finish(sink.readLake(spark, dst))
+    }
   }
 
   /** st48's harness: INCREMENTAL VIEW MAINTENANCE — a downstream AGGREGATE
@@ -776,69 +784,70 @@ object ReplayHarness {
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_ivm_")
-    val src = base.resolve("source").toString
-    val dst = base.resolve("aggregate").toString
-    val sink = LakeSink
+    pinnedScratch(spark, "graft_ivm_") { base =>
+      val src = base.resolve("source").toString
+      val dst = base.resolve("aggregate").toString
+      val sink = LakeSink
 
-    // source: shared CDC lay-down (appends 0-2, recorded merge 3), then a
-    // recorded merge-on-read delete (4) and a late append (5)
-    layDownCdcSource(spark, events, src)
-    val present = pmod(col("event_id"), lit(4)) < 3
-    val dv = sink.deleteVectors(spark, src,
-      events.filter(present && pmod(col("event_id"), lit(10)) === 9)
-        .select("event_id", "ts"),
-      "event_id", recordChanges = true)
-    require(dv.commitId == 4L, s"fixture drift: DV delete landed at ${dv.commitId}")
-    sink.appendBatch(spark, src,
-      events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(5L))
+      // source: shared CDC lay-down (appends 0-2, recorded merge 3), then a
+      // recorded merge-on-read delete (4) and a late append (5)
+      layDownCdcSource(spark, events, src)
+      val present = pmod(col("event_id"), lit(4)) < 3
+      val dv = sink.deleteVectors(spark, src,
+        events.filter(present && pmod(col("event_id"), lit(10)) === 9)
+          .select("event_id", "ts"),
+        "event_id", recordChanges = true)
+      require(dv.commitId == 4L, s"fixture drift: DV delete landed at ${dv.commitId}")
+      sink.appendBatch(spark, src,
+        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(5L))
 
-    def applyRange(k: Long, from: Long, to: Long): Unit = {
-      val changes = sink.tailChanges(spark, src, from, to)
-      val sign = when(col("_op").isin("insert", "update_post"), lit(1L))
-        .otherwise(lit(-1L))
-      val delta = changes
-        .select(to_date(col("ts")).as("d"), col("event_type"), sign.as("s"),
-          col("value"), col("event_id"))
-        .groupBy("d", "event_type")
-        .agg(sum(col("s")).as("dn"),
-          sum(col("s") * col("value")).as("dv"),
-          sum(col("s") * col("event_id")).as("dc"))
-      val next = (if (k == 0L) delta.select(col("d"), col("event_type"),
-          col("dn").as("n"), col("dv").as("total_value"), col("dc").as("id_checksum"))
-        else {
-          val prev = sink.tailCommits(spark, dst, k - 2, k - 1)
-            .select(col("event_date").as("d"), col("event_type"),
-              col("n"), col("total_value"), col("id_checksum"))
-          prev.join(delta, Seq("d", "event_type"), "full_outer")
-            .select(col("d"), col("event_type"),
-              (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-              (coalesce(col("total_value"), lit(0.0)) + coalesce(col("dv"), lit(0.0))).as("total_value"),
-              (coalesce(col("id_checksum"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("id_checksum"))
-        })
-        .filter(col("n") > 0) // a fully-deleted group leaves the view
-        .withColumn("applied_to", lit(to))
-        .withColumn("ts", col("d").cast("timestamp"))
-        .drop("d")
-      // the atomic effect+watermark: claimed id k — a crash-retry of an
-      // already-applied range is a ledger no-op, so deltas never double
-      sink.appendBatch(spark, dst, next, commitId = Some(k))
+      def applyRange(k: Long, from: Long, to: Long): Unit = {
+        val changes = sink.tailChanges(spark, src, from, to)
+        val sign = when(col("_op").isin("insert", "update_post"), lit(1L))
+          .otherwise(lit(-1L))
+        val delta = changes
+          .select(to_date(col("ts")).as("d"), col("event_type"), sign.as("s"),
+            col("value"), col("event_id"))
+          .groupBy("d", "event_type")
+          .agg(sum(col("s")).as("dn"),
+            sum(col("s") * col("value")).as("dv"),
+            sum(col("s") * col("event_id")).as("dc"))
+        val next = (if (k == 0L) delta.select(col("d"), col("event_type"),
+            col("dn").as("n"), col("dv").as("total_value"), col("dc").as("id_checksum"))
+          else {
+            val prev = sink.tailCommits(spark, dst, k - 2, k - 1)
+              .select(col("event_date").as("d"), col("event_type"),
+                col("n"), col("total_value"), col("id_checksum"))
+            prev.join(delta, Seq("d", "event_type"), "full_outer")
+              .select(col("d"), col("event_type"),
+                (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
+                (coalesce(col("total_value"), lit(0.0)) + coalesce(col("dv"), lit(0.0))).as("total_value"),
+                (coalesce(col("id_checksum"), lit(0L)) + coalesce(col("dc"), lit(0L))).as("id_checksum"))
+          })
+          .filter(col("n") > 0) // a fully-deleted group leaves the view
+          .withColumn("applied_to", lit(to))
+          .withColumn("ts", col("d").cast("timestamp"))
+          .drop("d")
+        // the atomic effect+watermark: claimed id k — a crash-retry of an
+        // already-applied range is a ledger no-op, so deltas never double
+        sink.appendBatch(spark, dst, next, commitId = Some(k))
+      }
+      applyRange(0L, -1L, 2L) // bootstrap: the three appends
+      applyRange(1L, 2L, 3L)  // merge deltas (±: update moves groups)
+      // crash window: snapshot k=1 committed, consumer's in-memory watermark
+      // lost — recovery re-derives (k, to) from the last snapshot's
+      // `applied_to` and re-applies the SAME range: must be a no-op
+      applyRange(1L, 2L, 3L)
+      applyRange(2L, 3L, 4L)  // the DV delete's recorded pre-images, −deltas
+      applyRange(3L, 4L, 5L)  // the late append
+      val last = sink.tailCommits(spark, dst, 2L, 3L)
+      require(last.select("applied_to").distinct().collect()
+        .map(_.getLong(0)).toSeq == Seq(5L), "watermark column drifted")
+
+      finish(last.select(
+        col("event_date"), col("event_type"), col("n"),
+        col("total_value"), col("id_checksum")))
     }
-    applyRange(0L, -1L, 2L) // bootstrap: the three appends
-    applyRange(1L, 2L, 3L)  // merge deltas (±: update moves groups)
-    // crash window: snapshot k=1 committed, consumer's in-memory watermark
-    // lost — recovery re-derives (k, to) from the last snapshot's
-    // `applied_to` and re-applies the SAME range: must be a no-op
-    applyRange(1L, 2L, 3L)
-    applyRange(2L, 3L, 4L)  // the DV delete's recorded pre-images, −deltas
-    applyRange(3L, 4L, 5L)  // the late append
-    val last = sink.tailCommits(spark, dst, 2L, 3L)
-    require(last.select("applied_to").distinct().collect()
-      .map(_.getLong(0)).toSeq == Seq(5L), "watermark column drifted")
-
-    pinned(spark, base)(finish(last.select(
-      col("event_date"), col("event_type"), col("n"),
-      col("total_value"), col("id_checksum"))))
   }
 
   /** st49's harness: SCD TYPE-2 DIMENSION maintenance from a CDC stream —
@@ -876,60 +885,61 @@ object ReplayHarness {
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_scd2_")
-    val dim = base.resolve("dim").toString
-    val sink = LakeSink
-    val fs = new org.apache.hadoop.fs.Path(dim)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    pinnedScratch(spark, "graft_scd2_") { base =>
+      val dim = base.resolve("dim").toString
+      val sink = LakeSink
+      val fs = new org.apache.hadoop.fs.Path(dim)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    val dimCols = Seq("skey", "user_id", "segment", "value",
-      "valid_from_id", "valid_to_id", "is_current", "ts")
-    def applyBatch(b: DataFrame): Unit = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("valid_from_id"))
-      val newVers = b.select(
-          concat_ws("#", col("user_id"), col("event_id")).as("skey"),
-          col("user_id"), col("event_type").as("segment"), col("value"),
-          col("event_id").as("valid_from_id"), col("ts"))
-        .withColumn("valid_to_id", lead(col("valid_from_id"), 1).over(w))
-        .withColumn("is_current", col("valid_to_id").isNull)
-        .select(dimCols.map(col): _*)
-      val firstPerUser = b.groupBy("user_id")
-        .agg(min(col("event_id")).as("first_id"))
-      if (!fs.exists(new org.apache.hadoop.fs.Path(dim))) {
-        sink.appendBatch(spark, dim, newVers, commitId = Some(0L))
-      } else {
-        val closeOuts = sink.readLake(spark, dim)
-          .filter(col("is_current"))
-          .drop("event_date")
-          .join(broadcast(firstPerUser), Seq("user_id"))
-          .filter(col("valid_from_id") < col("first_id"))
-          .withColumn("valid_to_id", col("first_id"))
-          .withColumn("is_current", lit(false))
-          .drop("first_id")
+      val dimCols = Seq("skey", "user_id", "segment", "value",
+        "valid_from_id", "valid_to_id", "is_current", "ts")
+      def applyBatch(b: DataFrame): Unit = {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id")).orderBy(col("valid_from_id"))
+        val newVers = b.select(
+            concat_ws("#", col("user_id"), col("event_id")).as("skey"),
+            col("user_id"), col("event_type").as("segment"), col("value"),
+            col("event_id").as("valid_from_id"), col("ts"))
+          .withColumn("valid_to_id", lead(col("valid_from_id"), 1).over(w))
+          .withColumn("is_current", col("valid_to_id").isNull)
           .select(dimCols.map(col): _*)
-        val ups = closeOuts.unionByName(newVers)
-        sink.mergeInto(spark, dim, ups, "skey",
-          deletes = ups.filter(lit(false)).select("skey", "ts"),
-          targetFileBytes = 512L << 10)
+        val firstPerUser = b.groupBy("user_id")
+          .agg(min(col("event_id")).as("first_id"))
+        if (!fs.exists(new org.apache.hadoop.fs.Path(dim))) {
+          sink.appendBatch(spark, dim, newVers, commitId = Some(0L))
+        } else {
+          val closeOuts = sink.readLake(spark, dim)
+            .filter(col("is_current"))
+            .drop("event_date")
+            .join(broadcast(firstPerUser), Seq("user_id"))
+            .filter(col("valid_from_id") < col("first_id"))
+            .withColumn("valid_to_id", col("first_id"))
+            .withColumn("is_current", lit(false))
+            .drop("first_id")
+            .select(dimCols.map(col): _*)
+          val ups = closeOuts.unionByName(newVers)
+          sink.mergeInto(spark, dim, ups, "skey",
+            deletes = ups.filter(lit(false)).select("skey", "ts"),
+            targetFileBytes = 512L << 10)
+        }
       }
+
+      // 2-row driver probe (min/max bound class): the arrival-quartile edges
+      val m = events.agg(max(col("event_id"))).head.getLong(0) + 1L
+      val cuts = Seq(0L, m / 4, m / 2, 3 * m / 4, m)
+      val batches = cuts.sliding(2).map { case Seq(lo, hi) =>
+        events.filter(col("event_id") >= lo && col("event_id") < hi)
+      }.toSeq
+      applyBatch(batches(0))
+      applyBatch(batches(1))
+      applyBatch(batches(2))
+      // crash window: merge committed, consumer high-water not advanced —
+      // the same batch re-applies VERBATIM; the dimension must converge
+      applyBatch(batches(2))
+      applyBatch(batches(3))
+
+      finish(sink.readLake(spark, dim))
     }
-
-    // 2-row driver probe (min/max bound class): the arrival-quartile edges
-    val m = events.agg(max(col("event_id"))).head.getLong(0) + 1L
-    val cuts = Seq(0L, m / 4, m / 2, 3 * m / 4, m)
-    val batches = cuts.sliding(2).map { case Seq(lo, hi) =>
-      events.filter(col("event_id") >= lo && col("event_id") < hi)
-    }.toSeq
-    applyBatch(batches(0))
-    applyBatch(batches(1))
-    applyBatch(batches(2))
-    // crash window: merge committed, consumer high-water not advanced —
-    // the same batch re-applies VERBATIM; the dimension must converge
-    applyBatch(batches(2))
-    applyBatch(batches(3))
-
-    pinned(spark, base)(finish(sink.readLake(spark, dim)))
   }
 
   /** st50's harness: DOWNSTREAM RESYNC ACROSS A SOURCE RESTORE — the
@@ -955,56 +965,57 @@ object ReplayHarness {
       sfDir: String,
       finish: DataFrame => DataFrame = identity): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_resync_")
-    val src = base.resolve("source").toString
-    def replica(v: Int) = base.resolve(s"replica_v$v").toString
-    val sink = LakeSink
-    val dataCols = events.columns.toSeq.map(col)
+    pinnedScratch(spark, "graft_resync_") { base =>
+      val src = base.resolve("source").toString
+      def replica(v: Int) = base.resolve(s"replica_v$v").toString
+      val sink = LakeSink
+      val dataCols = events.columns.toSeq.map(col)
 
-    // source: three good appends
-    (0 until 3).foreach { i =>
+      // source: three good appends
+      (0 until 3).foreach { i =>
+        sink.appendBatch(spark, src,
+          events.filter(pmod(col("event_id"), lit(4)) === i), commitId = Some(i.toLong))
+      }
+      // replica v1 bootstraps, then dutifully propagates the BAD deploy
+      sink.appendBatch(spark, replica(1),
+        sink.tailCommits(spark, src, -1L, 2L).select(dataCols: _*),
+        commitId = Some(0L))
       sink.appendBatch(spark, src,
-        events.filter(pmod(col("event_id"), lit(4)) === i), commitId = Some(i.toLong))
+        events.filter(pmod(col("event_id"), lit(4)) === 3)
+          .withColumn("value", col("value") * 100.0)
+          .withColumn("event_type", lit("corrupted")),
+        commitId = Some(3L))
+      sink.appendBatch(spark, replica(1),
+        sink.tailCommits(spark, src, 2L, 3L).select(dataCols: _*),
+        commitId = Some(1L))
+      require(sink.readLake(spark, replica(1))
+        .filter(col("event_type") === "corrupted").count() > 0,
+        "fixture drift: the replica never saw the bad deploy")
+
+      // source rolls back and continues with the corrected batch
+      val rs = sink.restoreTo(spark, src, asOf = 2L)
+      require(rs.commitId == 4L, s"fixture drift: restore landed at $rs")
+      sink.appendBatch(spark, src,
+        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(5L))
+
+      // the tail must refuse the rewrite boundary, not cross it silently
+      val boundary =
+        try { sink.tailCommits(spark, src, 3L, 4L); false }
+        catch { case e: IllegalStateException => e.getMessage.contains("REWRITE") }
+      require(boundary, "ledger tail crossed a restore commit silently")
+
+      // RESYNC: rebuild from the restored snapshot, swap, tail above it
+      val snap = sink.readAsOf(spark, src, 4L).select(dataCols: _*)
+      sink.appendBatch(spark, replica(2), snap, commitId = Some(0L))
+      // crash window: rebuild committed, high-water not advanced — the
+      // verbatim re-apply must be a ledger no-op
+      sink.appendBatch(spark, replica(2), snap, commitId = Some(0L))
+      sink.appendBatch(spark, replica(2),
+        sink.tailCommits(spark, src, 4L, 5L).select(dataCols: _*),
+        commitId = Some(1L))
+
+      finish(sink.readLake(spark, replica(2)))
     }
-    // replica v1 bootstraps, then dutifully propagates the BAD deploy
-    sink.appendBatch(spark, replica(1),
-      sink.tailCommits(spark, src, -1L, 2L).select(dataCols: _*),
-      commitId = Some(0L))
-    sink.appendBatch(spark, src,
-      events.filter(pmod(col("event_id"), lit(4)) === 3)
-        .withColumn("value", col("value") * 100.0)
-        .withColumn("event_type", lit("corrupted")),
-      commitId = Some(3L))
-    sink.appendBatch(spark, replica(1),
-      sink.tailCommits(spark, src, 2L, 3L).select(dataCols: _*),
-      commitId = Some(1L))
-    require(sink.readLake(spark, replica(1))
-      .filter(col("event_type") === "corrupted").count() > 0,
-      "fixture drift: the replica never saw the bad deploy")
-
-    // source rolls back and continues with the corrected batch
-    val rs = sink.restoreTo(spark, src, asOf = 2L)
-    require(rs.commitId == 4L, s"fixture drift: restore landed at $rs")
-    sink.appendBatch(spark, src,
-      events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(5L))
-
-    // the tail must refuse the rewrite boundary, not cross it silently
-    val boundary =
-      try { sink.tailCommits(spark, src, 3L, 4L); false }
-      catch { case e: IllegalStateException => e.getMessage.contains("REWRITE") }
-    require(boundary, "ledger tail crossed a restore commit silently")
-
-    // RESYNC: rebuild from the restored snapshot, swap, tail above it
-    val snap = sink.readAsOf(spark, src, 4L).select(dataCols: _*)
-    sink.appendBatch(spark, replica(2), snap, commitId = Some(0L))
-    // crash window: rebuild committed, high-water not advanced — the
-    // verbatim re-apply must be a ledger no-op
-    sink.appendBatch(spark, replica(2), snap, commitId = Some(0L))
-    sink.appendBatch(spark, replica(2),
-      sink.tailCommits(spark, src, 4L, 5L).select(dataCols: _*),
-      commitId = Some(1L))
-
-    pinned(spark, base)(finish(sink.readLake(spark, replica(2))))
   }
 
   /** The engine-crash simulation shared by the lake replays: delete the
@@ -1136,181 +1147,180 @@ object ReplayHarness {
       segmentChunks: Int = 2,
       liveCompaction: Boolean = false): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_b2g_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
-    val bronzeDir = base.resolve("bronze").toString
-    val silverDir = base.resolve("silver").toString
-    val ckptB = base.resolve("ckpt_bronze")
-    val ckptS = base.resolve("ckpt_silver")
+    pinnedScratch(spark, "graft_b2g_") { base =>
+      val streamDir = Files.createDirectory(base.resolve("in"))
+      val bronzeDir = base.resolve("bronze").toString
+      val silverDir = base.resolve("silver").toString
+      val ckptB = base.resolve("ckpt_bronze")
+      val ckptS = base.resolve("ckpt_silver")
 
-    val (minMs, maxMs) = tsBoundsMs(events)
-    val midMs = (minMs + maxMs) / 2
-    val now = System.currentTimeMillis()
-    // stage BOTH segments' chunk files concurrently up front (guide §2.6 —
-    // segment 2's staging overlaps segment 1's bronze drain); publication
-    // order, names and mtimes are exactly the sequential version's:
-    // publish index = seg * segmentChunks + i in call order
-    val stagePool = java.util.concurrent.Executors.newFixedThreadPool(2 * segmentChunks)
-    val stagedSegChunks = {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(stagePool)
-      (for (seg <- 0 until 2; i <- 0 until segmentChunks) yield (seg, i) -> {
-        val segFilter =
-          if (seg == 0) unix_millis(col("ts")) < midMs
-          else unix_millis(col("ts")) >= midMs
-        scala.concurrent.Future {
-          events.filter(segFilter)
-            .filter(pmod(col("event_id"), lit(segmentChunks)) === i)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .coalesce(1).write.parquet(base.resolve(s"stage_${seg}_$i").toString)
+      val (minMs, maxMs) = tsBoundsMs(events)
+      val midMs = (minMs + maxMs) / 2
+      val now = System.currentTimeMillis()
+      // stage BOTH segments' chunk files concurrently up front (guide §2.6 —
+      // segment 2's staging overlaps segment 1's bronze drain); publication
+      // order, names and mtimes are exactly the sequential version's:
+      // publish index = seg * segmentChunks + i in call order
+      val stagePool = java.util.concurrent.Executors.newFixedThreadPool(2 * segmentChunks)
+      val stagedSegChunks = {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(stagePool)
+        (for (seg <- 0 until 2; i <- 0 until segmentChunks) yield (seg, i) -> {
+          val segFilter =
+            if (seg == 0) unix_millis(col("ts")) < midMs
+            else unix_millis(col("ts")) >= midMs
+          scala.concurrent.Future {
+            events.filter(segFilter)
+              .filter(pmod(col("event_id"), lit(segmentChunks)) === i)
+              .select("event_id", "ts", "user_id", "event_type", "value")
+              .coalesce(1).write.parquet(base.resolve(s"stage_${seg}_$i").toString)
+          }
+        }).toMap
+      }
+      stagePool.shutdown()
+      def publishChunk(seg: Int, i: Int): Unit = {
+        scala.concurrent.Await.result(stagedSegChunks((seg, i)),
+          scala.concurrent.duration.Duration(10, "min"))
+        val published = seg * segmentChunks + i
+        publish(base.resolve(s"stage_${seg}_$i"), streamDir,
+          f"batch_$published%03d", now + published * 1000L)
+      }
+      val bronzeSchema =
+        events.select("event_id", "ts", "user_id", "event_type", "value").schema
+      val ignoreMissing =
+        if (liveCompaction) Seq("spark.sql.files.ignoreMissingFiles" -> "true") else Nil
+
+      // bronze data files get mod times from their date leaf so the silver
+      // tail reads them in event-time order; idempotent over already-read
+      // files (the source tracks paths, not times)
+      def stampBronzeByDate(): Unit = {
+        val root = java.nio.file.Paths.get(bronzeDir)
+        val walk = Files.walk(root)
+        try walk.iterator().asScala.foreach { f =>
+          val leaf = f.getParent
+          if (Files.isRegularFile(f) && leaf != null &&
+              leaf.getFileName.toString.startsWith("event_date=")) {
+            val day = java.time.LocalDate.parse(
+              leaf.getFileName.toString.stripPrefix("event_date="))
+            Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+              .fromMillis(day.toEpochDay * 86400000L))
+          }
+        } finally walk.close()
+      }
+      isolated(spark, ignoreMissing: _*) { s =>
+        def runBronze(sink: (DataFrame, Long) => Unit): Unit = {
+          val q = fileStream(s, bronzeSchema, streamDir)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", ckptB.toString)
+            .foreachBatch(sink)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
         }
-      }).toMap
-    }
-    stagePool.shutdown()
-    def publishChunk(seg: Int, i: Int): Unit = {
-      scala.concurrent.Await.result(stagedSegChunks((seg, i)),
-        scala.concurrent.duration.Duration(10, "min"))
-      val published = seg * segmentChunks + i
-      publish(base.resolve(s"stage_${seg}_$i"), streamDir,
-        f"batch_$published%03d", now + published * 1000L)
-    }
-    val bronzeSchema =
-      events.select("event_id", "ts", "user_id", "event_type", "value").schema
-    val ignoreMissing =
-      if (liveCompaction) Seq("spark.sql.files.ignoreMissingFiles" -> "true") else Nil
+        // ---- bronze segment 1 ----
+        // compact-before-tail mode: the sweep lands during lay-down, before
+        // the tail attaches. Live mode: lay down FRAGMENTED and let the
+        // between-drain sweep rewrite leaves the tail has already consumed.
+        (0 until segmentChunks).foreach(publishChunk(0, _))
+        runBronze(LakeSink.datePartitioned(bronzeDir, tsCol = "ts",
+          compactEvery = if (liveCompaction) 0L else segmentChunks.toLong,
+          targetFileBytes = 512L << 10, minFilesToCompact = 2))
+        val bronzeReplayed = dropLastCommitRecord(ckptB)
+        System.err.println(s"[b2g] bronze: dropped commit $bronzeReplayed; " +
+          "segment-2 run must recover via the ledger")
 
-    // bronze data files get mod times from their date leaf so the silver
-    // tail reads them in event-time order; idempotent over already-read
-    // files (the source tracks paths, not times)
-    def stampBronzeByDate(): Unit = {
-      val root = java.nio.file.Paths.get(bronzeDir)
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.foreach { f =>
-        val leaf = f.getParent
-        if (Files.isRegularFile(f) && leaf != null &&
-            leaf.getFileName.toString.startsWith("event_date=")) {
-          val day = java.time.LocalDate.parse(
-            leaf.getFileName.toString.stripPrefix("event_date="))
-          Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
-            .fromMillis(day.toEpochDay * 86400000L))
+        // ---- silver drain #1 over the compacted segment-1 lake ----
+        stampBronzeByDate()
+        // the tail re-discovers event_date from the Hive leaves (st36's shape)
+        val bronzeReadSchema = bronzeSchema.add("event_date", DateType)
+        val silverSink = LakeSink.datePartitioned(silverDir, tsCol = "ts",
+          compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+        def runSilver(): Unit = {
+          val in = s.readStream.schema(bronzeReadSchema)
+            .option("maxFilesPerTrigger", "5")
+            .option("maxFileAge", "100000d") // date-derived stamps are "old"
+            .parquet(bronzeDir)
+          val watermarked = in.withWatermark("ts", "25 hours")
+          // live-rewrite hardening: drop a compaction re-delivery while its
+          // id is inside the watermark horizon; older re-deliveries fall to
+          // the watermark's own late filter (see the liveCompaction scaladoc)
+          val deduped =
+            if (liveCompaction) watermarked.dropDuplicatesWithinWatermark("event_id")
+            else watermarked
+          val agg = deduped
+            .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+            .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"),
+              sum(col("event_id")).as("ck"))
+            .selectExpr("window.start AS ts", "event_type", "n", "sv", "ck")
+          val q = agg.writeStream.outputMode("append")
+            .option("checkpointLocation", ckptS.toString)
+            .foreachBatch(silverSink)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
         }
-      } finally walk.close()
-    }
-    isolated(spark, ignoreMissing: _*) { s =>
-      def runBronze(sink: (DataFrame, Long) => Unit): Unit = {
-        val q = fileStream(s, bronzeSchema, streamDir)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckptB.toString)
-          .foreachBatch(sink)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // ---- bronze segment 1 ----
-      // compact-before-tail mode: the sweep lands during lay-down, before
-      // the tail attaches. Live mode: lay down FRAGMENTED and let the
-      // between-drain sweep rewrite leaves the tail has already consumed.
-      (0 until segmentChunks).foreach(publishChunk(0, _))
-      runBronze(LakeSink.datePartitioned(bronzeDir, tsCol = "ts",
-        compactEvery = if (liveCompaction) 0L else segmentChunks.toLong,
-        targetFileBytes = 512L << 10, minFilesToCompact = 2))
-      val bronzeReplayed = dropLastCommitRecord(ckptB)
-      System.err.println(s"[b2g] bronze: dropped commit $bronzeReplayed; " +
-        "segment-2 run must recover via the ledger")
+        // compact the TAILED bronze prefix in place — every leaf's files are
+        // rewritten under new names, so the next drain re-lists and
+        // re-delivers the whole leaf; the hardened silver hop must shed it
+        def sweepBronze(): Unit = {
+          val done = LakeSink.compactPartitions(s, bronzeDir,
+            targetFileBytes = 512L << 10, minFiles = 2)
+          System.err.println(s"[b2g] live-compacted ${done.size} tailed bronze leaves")
+          stampBronzeByDate() // rewrites carry fresh mod times; restore date order
+        }
+        runSilver()
+        if (liveCompaction) sweepBronze()
 
-      // ---- silver drain #1 over the compacted segment-1 lake ----
-      stampBronzeByDate()
-      // the tail re-discovers event_date from the Hive leaves (st36's shape)
-      val bronzeReadSchema = bronzeSchema.add("event_date", DateType)
-      val silverSink = LakeSink.datePartitioned(silverDir, tsCol = "ts",
-        compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      def runSilver(): Unit = {
-        val in = s.readStream.schema(bronzeReadSchema)
-          .option("maxFilesPerTrigger", "5")
-          .option("maxFileAge", "100000d") // date-derived stamps are "old"
-          .parquet(bronzeDir)
-        val watermarked = in.withWatermark("ts", "25 hours")
-        // live-rewrite hardening: drop a compaction re-delivery while its
-        // id is inside the watermark horizon; older re-deliveries fall to
-        // the watermark's own late filter (see the liveCompaction scaladoc)
-        val deduped =
-          if (liveCompaction) watermarked.dropDuplicatesWithinWatermark("event_id")
-          else watermarked
-        val agg = deduped
-          .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"),
-            sum(col("event_id")).as("ck"))
-          .selectExpr("window.start AS ts", "event_type", "n", "sv", "ck")
-        val q = agg.writeStream.outputMode("append")
-          .option("checkpointLocation", ckptS.toString)
-          .foreachBatch(silverSink)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // compact the TAILED bronze prefix in place — every leaf's files are
-      // rewritten under new names, so the next drain re-lists and
-      // re-delivers the whole leaf; the hardened silver hop must shed it
-      def sweepBronze(): Unit = {
-        val done = LakeSink.compactPartitions(s, bronzeDir,
-          targetFileBytes = 512L << 10, minFiles = 2)
-        System.err.println(s"[b2g] live-compacted ${done.size} tailed bronze leaves")
-        stampBronzeByDate() // rewrites carry fresh mod times; restore date order
-      }
-      runSilver()
-      if (liveCompaction) sweepBronze()
+        // ---- bronze segment 2 + sentinel: compaction OFF (tail attached) ----
+        (0 until segmentChunks).foreach(publishChunk(1, _))
+        val sentinel = s.range(1).selectExpr("-1L AS event_id",
+          s"timestamp_millis(${maxMs + 40L * 86400000}) AS ts",
+          "-1L AS user_id", s"'$SentinelType' AS event_type", "0D AS value")
+        val sentStage = base.resolve("stage_sentinel")
+        sentinel.coalesce(1).write.parquet(sentStage.toString)
+        // the sentinel publishes after both segments: index 2 * segmentChunks
+        val sentIdx = 2 * segmentChunks
+        publish(sentStage, streamDir, f"batch_$sentIdx%03d", now + sentIdx * 1000L)
+        runBronze(LakeSink.datePartitioned(bronzeDir, tsCol = "ts",
+          compactEvery = 0L))
 
-      // ---- bronze segment 2 + sentinel: compaction OFF (tail attached) ----
-      (0 until segmentChunks).foreach(publishChunk(1, _))
-      val sentinel = s.range(1).selectExpr("-1L AS event_id",
-        s"timestamp_millis(${maxMs + 40L * 86400000}) AS ts",
-        "-1L AS user_id", s"'$SentinelType' AS event_type", "0D AS value")
-      val sentStage = base.resolve("stage_sentinel")
-      sentinel.coalesce(1).write.parquet(sentStage.toString)
-      // the sentinel publishes after both segments: index 2 * segmentChunks
-      val sentIdx = 2 * segmentChunks
-      publish(sentStage, streamDir, f"batch_$sentIdx%03d", now + sentIdx * 1000L)
-      runBronze(LakeSink.datePartitioned(bronzeDir, tsCol = "ts",
-        compactEvery = 0L))
+        // ---- silver drain #2 (+ its own kill+restart) ----
+        stampBronzeByDate()
+        runSilver()
+        val silverReplayed = dropLastCommitRecord(ckptS)
+        System.err.println(s"[b2g] silver: dropped commit $silverReplayed; " +
+          "drain #3 must replay it idempotently")
+        // live mode: sweep AGAIN so drain #3 faces the committed-batch replay
+        // and a fresh leaf rewrite simultaneously — the two recovery paths
+        // (engine replay via the sink ledger, re-delivery via dedup + late
+        // filter) must compose without double-counting a single row. Safe
+        // ONLY because the replayed batch read no files (asserted): the
+        // sweep deletes the paths its offset entry references, and
+        // ignoreMissingFiles would otherwise skip those rows on replay
+        if (liveCompaction) {
+          requireNoDataCommit(ckptS, silverReplayed)
+          sweepBronze()
+        }
+        runSilver()
 
-      // ---- silver drain #2 (+ its own kill+restart) ----
-      stampBronzeByDate()
-      runSilver()
-      val silverReplayed = dropLastCommitRecord(ckptS)
-      System.err.println(s"[b2g] silver: dropped commit $silverReplayed; " +
-        "drain #3 must replay it idempotently")
-      // live mode: sweep AGAIN so drain #3 faces the committed-batch replay
-      // and a fresh leaf rewrite simultaneously — the two recovery paths
-      // (engine replay via the sink ledger, re-delivery via dedup + late
-      // filter) must compose without double-counting a single row. Safe
-      // ONLY because the replayed batch read no files (asserted): the
-      // sweep deletes the paths its offset entry references, and
-      // ignoreMissingFiles would otherwise skip those rows on replay
-      if (liveCompaction) {
-        requireNoDataCommit(ckptS, silverReplayed)
-        sweepBronze()
+        // ---- gold: batch census over the silver lake ----
+        // collect() pins the k-row census to the driver so the scratch tree
+        // can be reclaimed before returning. The date travels as a STRING across
+        // the collect: decoding a DateType to java.sql.Date goes through
+        // DateTimeUtils.toJavaDate → sun.util.calendar, which is
+        // module-sealed on Java 17 unless the JVM was launched with
+        // --add-opens (plain `java -cp` isn't). Cast back after re-create —
+        // the string→date cast runs entirely inside Catalyst.
+        s.read.parquet(silverDir)
+          .groupBy(col("event_date"), col("event_type"))
+          .agg(count(lit(1)).as("n_windows"), sum(col("n")).as("n_events"),
+            round(sum(col("sv")), 2).as("total_value"),
+            sum(col("ck")).as("id_checksum"))
+          .withColumn("event_date", col("event_date").cast("string"))
       }
-      runSilver()
-
-      // ---- gold: batch census over the silver lake ----
-      // collect() pins the k-row census to the driver so the scratch tree
-      // can be reclaimed before returning. The date travels as a STRING across
-      // the collect: decoding a DateType to java.sql.Date goes through
-      // DateTimeUtils.toJavaDate → sun.util.calendar, which is
-      // module-sealed on Java 17 unless the JVM was launched with
-      // --add-opens (plain `java -cp` isn't). Cast back after re-create —
-      // the string→date cast runs entirely inside Catalyst.
-      val gold = s.read.parquet(silverDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n_windows"), sum(col("n")).as("n_events"),
-          round(sum(col("sv")), 2).as("total_value"),
-          sum(col("ck")).as("id_checksum"))
-        .withColumn("event_date", col("event_date").cast("string"))
-      pinned(spark, base)(gold)
-        .withColumn("event_date", col("event_date").cast("date"))
-        .select("event_date", "event_type", "n_windows", "n_events",
-          "total_value", "id_checksum")
-    }
+    }.withColumn("event_date", col("event_date").cast("date"))
+      .select("event_date", "event_type", "n_windows", "n_events",
+        "total_value", "id_checksum")
   }
 
   /** st43: SOURCE SCHEMA EVOLUTION through a stateful streaming tail — the
@@ -1345,98 +1355,99 @@ object ReplayHarness {
   def replaySourceEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val base = scratchDir("graft_srcevolve_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
-    val outDir = base.resolve("out")
+    pinnedScratch(spark, "graft_srcevolve_") { base =>
+      val streamDir = Files.createDirectory(base.resolve("in"))
+      val outDir = base.resolve("out")
 
-    val (minMs, maxMs) = tsBoundsMs(events)
-    val midMs = (minMs + maxMs) / 2
-    // the evolved column, a pure function of pre-existing fields so the
-    // oracle can reproduce it: which ingest channel a v2 row came from
-    val channelCol = concat(col("event_type"), lit("_"), pmod(col("user_id"), lit(3)))
-    val half1 = events.filter(unix_millis(col("ts")) < midMs)
-    val half2 = events.filter(unix_millis(col("ts")) >= midMs)
-      .withColumn("channel", channelCol)
-    val now = System.currentTimeMillis()
-    var published = 0
-    // staging (a private-dir write, invisible to the stream) is split from
-    // publication so phase-2 staging can overlap the phase-1 drain
-    // (guide §2.6); names/mtimes follow publication order exactly as the
-    // sequential version's did
-    val stagePool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val stageEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(stagePool)
-    def stageDf(df: DataFrame, name: String): scala.concurrent.Future[Unit] =
-      scala.concurrent.Future {
-        df.coalesce(1).write.parquet(base.resolve(s"stage_$name").toString)
+      val (minMs, maxMs) = tsBoundsMs(events)
+      val midMs = (minMs + maxMs) / 2
+      // the evolved column, a pure function of pre-existing fields so the
+      // oracle can reproduce it: which ingest channel a v2 row came from
+      val channelCol = concat(col("event_type"), lit("_"), pmod(col("user_id"), lit(3)))
+      val half1 = events.filter(unix_millis(col("ts")) < midMs)
+      val half2 = events.filter(unix_millis(col("ts")) >= midMs)
+        .withColumn("channel", channelCol)
+      val now = System.currentTimeMillis()
+      var published = 0
+      // staging (a private-dir write, invisible to the stream) is split from
+      // publication so phase-2 staging can overlap the phase-1 drain
+      // (guide §2.6); names/mtimes follow publication order exactly as the
+      // sequential version's did
+      val stagePool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      implicit val stageEc: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(stagePool)
+      def stageDf(df: DataFrame, name: String): scala.concurrent.Future[Unit] =
+        scala.concurrent.Future {
+          df.coalesce(1).write.parquet(base.resolve(s"stage_$name").toString)
+        }
+      def publishStaged(staged: scala.concurrent.Future[Unit], name: String): Unit = {
+        scala.concurrent.Await.result(staged,
+          scala.concurrent.duration.Duration(10, "min"))
+        publish(base.resolve(s"stage_$name"), streamDir,
+          f"batch_${published}%03d_$name", now + published * 1000L)
+        published += 1
       }
-    def publishStaged(staged: scala.concurrent.Future[Unit], name: String): Unit = {
-      scala.concurrent.Await.result(staged,
-        scala.concurrent.duration.Duration(10, "min"))
-      publish(base.resolve(s"stage_$name"), streamDir,
-        f"batch_${published}%03d_$name", now + published * 1000L)
-      published += 1
-    }
-    // phase 1: two time-range chunks of the original-schema half
-    val q1 = (minMs + midMs) / 2
-    publishStaged(stageDf(half1.filter(unix_millis(col("ts")) < q1), "p1a"), "p1a")
-    publishStaged(stageDf(half1.filter(unix_millis(col("ts")) >= q1), "p1b"), "p1b")
+      // phase 1: two time-range chunks of the original-schema half
+      val q1 = (minMs + midMs) / 2
+      publishStaged(stageDf(half1.filter(unix_millis(col("ts")) < q1), "p1a"), "p1a")
+      publishStaged(stageDf(half1.filter(unix_millis(col("ts")) >= q1), "p1b"), "p1b")
 
-    val schema1 = half1.schema
-    val schema2 = half2.schema // = schema1 + channel
-    try isolated(spark) { s =>
-      def drain(schema: StructType): Unit =
-        startBatchDirSink(fileStream(s, schema, streamDir)
-          .withWatermark("ts", "25 hours")
-          .dropDuplicatesWithinWatermark("event_id"),
-          "append", base.resolve("ckpt"), outDir).awaitTermination()
-      // pre-stage all of phase 2 so its jobs overlap the phase-1 drain:
-      // every staged frame is a pure function of the fixture, and nothing
-      // reaches streamDir until the post-drain publishStaged calls
-      // phase 2, file 1: the re-delivery probe — phase-1 rows of the last
-      // 20 h, now carrying the evolved column (a re-delivered row reads
-      // back in the NEW schema). Restored dedup state must drop them all.
-      val redeliverStaged: scala.concurrent.Future[Long] = scala.concurrent.Future {
-        val maxP1 = half1.agg(unix_millis(max(col("ts")))).collect()(0).getLong(0)
-        val redeliver = half1
-          .filter(unix_millis(col("ts")) >= maxP1 - 20L * 3600 * 1000)
-          .withColumn("channel", channelCol)
-        // the probe must have teeth: these rows beat the late filter by
-        // construction (ts >= restored watermark + 5 h), so ONLY restored
-        // dedup state can shed them — but only if there are any
-        val n = redeliver.count()
-        require(n > 0,
-          "empty re-delivery window — the restart probe is vacuous on this fixture")
-        redeliver.coalesce(1).write
-          .parquet(base.resolve("stage_redeliver").toString)
-        n
+      val schema1 = half1.schema
+      val schema2 = half2.schema // = schema1 + channel
+      try isolated(spark) { s =>
+        def drain(schema: StructType): Unit =
+          startBatchDirSink(fileStream(s, schema, streamDir)
+            .withWatermark("ts", "25 hours")
+            .dropDuplicatesWithinWatermark("event_id"),
+            "append", base.resolve("ckpt"), outDir).awaitTermination()
+        // pre-stage all of phase 2 so its jobs overlap the phase-1 drain:
+        // every staged frame is a pure function of the fixture, and nothing
+        // reaches streamDir until the post-drain publishStaged calls
+        // phase 2, file 1: the re-delivery probe — phase-1 rows of the last
+        // 20 h, now carrying the evolved column (a re-delivered row reads
+        // back in the NEW schema). Restored dedup state must drop them all.
+        val redeliverStaged: scala.concurrent.Future[Long] = scala.concurrent.Future {
+          val maxP1 = half1.agg(unix_millis(max(col("ts")))).collect()(0).getLong(0)
+          val redeliver = half1
+            .filter(unix_millis(col("ts")) >= maxP1 - 20L * 3600 * 1000)
+            .withColumn("channel", channelCol)
+          // the probe must have teeth: these rows beat the late filter by
+          // construction (ts >= restored watermark + 5 h), so ONLY restored
+          // dedup state can shed them — but only if there are any
+          val n = redeliver.count()
+          require(n > 0,
+            "empty re-delivery window — the restart probe is vacuous on this fixture")
+          redeliver.coalesce(1).write
+            .parquet(base.resolve("stage_redeliver").toString)
+          n
+        }
+        // then the evolved half, two ascending time-range chunks
+        val q3 = (midMs + maxMs) / 2
+        val p2aStaged = stageDf(half2.filter(unix_millis(col("ts")) < q3), "p2a")
+        val p2bStaged = stageDf(half2.filter(unix_millis(col("ts")) >= q3), "p2b")
+        drain(schema1)
+        System.err.println("[evolve] phase 1 drained on the 5-column schema; " +
+          "bronze gains `channel`, consumer restarts with the union schema")
+        val nRedeliver = scala.concurrent.Await.result(redeliverStaged,
+          scala.concurrent.duration.Duration(10, "min"))
+        System.err.println(s"[evolve] re-delivering $nRedeliver phase-1 rows " +
+          "across the widened-schema restart; restored dedup state must shed them")
+        publishStaged(scala.concurrent.Future.successful(()), "redeliver")
+        publishStaged(p2aStaged, "p2a")
+        publishStaged(p2bStaged, "p2b")
+        drain(schema2)
+      } finally {
+        stagePool.shutdown()
+        reclaimStreamState(base)
       }
-      // then the evolved half, two ascending time-range chunks
-      val q3 = (midMs + maxMs) / 2
-      val p2aStaged = stageDf(half2.filter(unix_millis(col("ts")) < q3), "p2a")
-      val p2bStaged = stageDf(half2.filter(unix_millis(col("ts")) >= q3), "p2b")
-      drain(schema1)
-      System.err.println("[evolve] phase 1 drained on the 5-column schema; " +
-        "bronze gains `channel`, consumer restarts with the union schema")
-      val nRedeliver = scala.concurrent.Await.result(redeliverStaged,
-        scala.concurrent.duration.Duration(10, "min"))
-      System.err.println(s"[evolve] re-delivering $nRedeliver phase-1 rows " +
-        "across the widened-schema restart; restored dedup state must shed them")
-      publishStaged(scala.concurrent.Future.successful(()), "redeliver")
-      publishStaged(p2aStaged, "p2a")
-      publishStaged(p2bStaged, "p2b")
-      drain(schema2)
-    } finally {
-      stagePool.shutdown()
-      reclaimStreamState(base)
+      // gold census under the union schema: phase-1 batch files lack
+      // `channel` and null-fill — surfaced as the 'legacy' bucket
+      readBatchDirs(spark, outDir, schema2)
+        .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    // gold census under the union schema: phase-1 batch files lack
-    // `channel` and null-fill — surfaced as the 'legacy' bucket
-    pinned(spark, base)(readBatchDirs(spark, outDir, schema2)
-      .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum")))
   }
 
   /** st44: STREAMING TAIL FROM A SNAPSHOT — the lake-consumer bootstrap
@@ -1471,59 +1482,60 @@ object ReplayHarness {
   def replayTailFromSnapshot(spark: SparkSession, sfDir: String): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val base = scratchDir("graft_snaptail_")
-    val lakeDir = base.resolve("lake").toString
-    val snapDir = base.resolve("snap").toString
-    val tailOut = base.resolve("tail")
-    val ckpt = base.resolve("ckpt")
-    val horizon = 3L
+    pinnedScratch(spark, "graft_snaptail_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val snapDir = base.resolve("snap").toString
+      val tailOut = base.resolve("tail")
+      val ckpt = base.resolve("ckpt")
+      val horizon = 3L
 
-    // bronze: batches 0..5 through the production sink, one sweep at the
-    // snapshot horizon (compactEvery=4) — leaves then hold gc3 + gb4 + gb5
-    val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
-      targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    (0 until 6).foreach { i =>
-      sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
+      // bronze: batches 0..5 through the production sink, one sweep at the
+      // snapshot horizon (compactEvery=4) — leaves then hold gc3 + gb4 + gb5
+      val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
+        targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      (0 until 6).foreach { i =>
+        sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
+      }
+
+      // BOOTSTRAP: batch-load the snapshot once; this is the whole history
+      // scan a tail-from-zero would otherwise re-stream
+      LakeSink.readAsOf(spark, lakeDir, horizon)
+        .select("event_id", "event_date", "event_type", "value")
+        .write.parquet(snapDir)
+
+      // TAIL: file-stream the live lake, serving only post-horizon lineage
+      val schema = events.schema.add("event_date", DateType)
+      def drain(): Unit =
+        startBatchDirSink(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "7").parquet(lakeDir)
+          .filter(regexp_extract(input_file_name(), "/g[bc](\\d+)-", 1)
+            .cast("long") > horizon)
+          .select("event_id", "event_date", "event_type", "value"),
+          "append", ckpt, tailOut).awaitTermination()
+      drain()
+      // transition-batch crash: the engine committed the sink-side effect
+      // but lost its commit record — recovery must replay it idempotently
+      val replayedId = dropLastCommitRecord(ckpt)
+      require(replayedId > 0,
+        s"tail drained in a single micro-batch ($replayedId) — the replay probe needs a longer tail")
+      // two more commits land before the restart (a fresh sink generation;
+      // no sweep — live-rewrite re-delivery is st40's certified concern)
+      val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
+      (6 until 8).foreach { i =>
+        sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
+      }
+      System.err.println(s"[snaptail] dropped commit $replayedId; restarting the " +
+        "tail across the replay + two new commits")
+      drain()
+
+      spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
+        .unionByName(readBatchDirs(spark, tailOut,
+            StructType(schema.filter(f => f.name != "ts" && f.name != "user_id")))
+          .withColumn("phase", lit("tail")))
+        .groupBy(col("event_date"), col("event_type"), col("phase"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-
-    // BOOTSTRAP: batch-load the snapshot once; this is the whole history
-    // scan a tail-from-zero would otherwise re-stream
-    LakeSink.readAsOf(spark, lakeDir, horizon)
-      .select("event_id", "event_date", "event_type", "value")
-      .write.parquet(snapDir)
-
-    // TAIL: file-stream the live lake, serving only post-horizon lineage
-    val schema = events.schema.add("event_date", DateType)
-    def drain(): Unit =
-      startBatchDirSink(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "7").parquet(lakeDir)
-        .filter(regexp_extract(input_file_name(), "/g[bc](\\d+)-", 1)
-          .cast("long") > horizon)
-        .select("event_id", "event_date", "event_type", "value"),
-        "append", ckpt, tailOut).awaitTermination()
-    drain()
-    // transition-batch crash: the engine committed the sink-side effect
-    // but lost its commit record — recovery must replay it idempotently
-    val replayedId = dropLastCommitRecord(ckpt)
-    require(replayedId > 0,
-      s"tail drained in a single micro-batch ($replayedId) — the replay probe needs a longer tail")
-    // two more commits land before the restart (a fresh sink generation;
-    // no sweep — live-rewrite re-delivery is st40's certified concern)
-    val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
-    (6 until 8).foreach { i =>
-      sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-    }
-    System.err.println(s"[snaptail] dropped commit $replayedId; restarting the " +
-      "tail across the replay + two new commits")
-    drain()
-
-    pinned(spark, base)(spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
-      .unionByName(readBatchDirs(spark, tailOut,
-          StructType(schema.filter(f => f.name != "ts" && f.name != "user_id")))
-        .withColumn("phase", lit("tail")))
-      .groupBy(col("event_date"), col("event_type"), col("phase"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum")))
   }
 
   /** st45: LEDGER-DRIVEN INCREMENTAL TAIL — st44's stated 100 TB upgrade
@@ -1554,82 +1566,83 @@ object ReplayHarness {
   def replayLedgerTail(spark: SparkSession, sfDir: String): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
-    val base = scratchDir("graft_ledgertail_")
-    val lakeDir = base.resolve("lake").toString
-    val silver = base.resolve("silver")
-    val hwPath = base.resolve("hw")
-    Files.createDirectories(silver)
+    pinnedScratch(spark, "graft_ledgertail_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val silver = base.resolve("silver")
+      val hwPath = base.resolve("hw")
+      Files.createDirectories(silver)
 
-    val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
-      targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    (0 until 6).foreach { i =>
-      sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-    }
-
-    // bootstrap: snapshot + high-water mark
-    LakeSink.readAsOf(spark, lakeDir, 3L)
-      .select("event_id", "event_date", "event_type", "value")
-      .write.parquet(silver.resolve("snapshot").toString)
-    def writeHw(v: Long): Unit = { Files.writeString(hwPath, v.toString); () }
-    def readHw(): Long = Files.readString(hwPath).trim.toLong
-    writeHw(3L)
-    def maxMarker(): Long = {
-      val l = Files.list(base.resolve("lake").resolve("_graft_commits"))
-      try l.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .foldLeft(-1L)(math.max)
-      finally l.close()
-    }
-    def rangeCols(df: DataFrame): DataFrame =
-      df.select("event_id", "event_date", "event_type", "value")
-    def consume(): (Long, Long) = {
-      val from = readHw(); val to = maxMarker()
-      if (to > from) {
-        rangeCols(LakeSink.tailCommits(spark, lakeDir, from, to))
-          .write.mode("overwrite")
-          .parquet(silver.resolve(s"range_${from}_$to").toString)
-        writeHw(to)
+      val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
+        targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      (0 until 6).foreach { i =>
+        sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
       }
-      (from, to)
+
+      // bootstrap: snapshot + high-water mark
+      LakeSink.readAsOf(spark, lakeDir, 3L)
+        .select("event_id", "event_date", "event_type", "value")
+        .write.parquet(silver.resolve("snapshot").toString)
+      def writeHw(v: Long): Unit = { Files.writeString(hwPath, v.toString); () }
+      def readHw(): Long = Files.readString(hwPath).trim.toLong
+      writeHw(3L)
+      def maxMarker(): Long = {
+        val l = Files.list(base.resolve("lake").resolve("_graft_commits"))
+        try l.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+          .foldLeft(-1L)(math.max)
+        finally l.close()
+      }
+      def rangeCols(df: DataFrame): DataFrame =
+        df.select("event_id", "event_date", "event_type", "value")
+      def consume(): (Long, Long) = {
+        val from = readHw(); val to = maxMarker()
+        if (to > from) {
+          rangeCols(LakeSink.tailCommits(spark, lakeDir, from, to))
+            .write.mode("overwrite")
+            .parquet(silver.resolve(s"range_${from}_$to").toString)
+          writeHw(to)
+        }
+        (from, to)
+      }
+      val (f1, t1) = consume()
+      require(f1 == 3L && t1 == 5L, s"unexpected first tail range ($f1, $t1]")
+      // crash between effect and mark: rewind and re-consume — idempotent
+      writeHw(3L)
+      require(consume() == ((3L, 5L)), "crash-replay consumed a different range")
+
+      // compaction immunity: the served range must be byte-stable across a
+      // sweep that merges its batches away
+      def rangeIds(from: Long, to: Long): Set[Long] =
+        rangeCols(LakeSink.tailCommits(spark, lakeDir, from, to))
+          .select("event_id").collect().map(_.getLong(0)).toSet
+      val preSweep = rangeIds(3L, 5L)
+      val epoch = LakeSink.claimWriterEpoch(spark, lakeDir)
+      val swept = LakeSink.compactPartitions(spark, lakeDir, 512L << 10,
+        minFiles = 2, fenceEpoch = Some(epoch))
+      require(swept.nonEmpty, "immunity probe vacuous: the sweep rewrote nothing")
+      val postSweep = rangeIds(3L, 5L)
+      require(preSweep == postSweep,
+        s"compaction changed a served range: ${(preSweep -- postSweep).size} lost, " +
+          s"${(postSweep -- preSweep).size} gained")
+
+      // a successor generation appends two more commits; consume them
+      val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
+      (6 until 8).foreach { i =>
+        sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
+      }
+      require(consume() == ((5L, 7L)), "post-sweep appends not tailed")
+
+      spark.read
+        .parquet(silver.resolve("snapshot").toString)
+        .withColumn("phase", lit("snapshot"))
+        .unionByName(spark.read
+          .parquet(silver.resolve("range_3_5").toString,
+            silver.resolve("range_5_7").toString)
+          .withColumn("phase", lit("tail")))
+        .groupBy(col("event_date"), col("event_type"), col("phase"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    val (f1, t1) = consume()
-    require(f1 == 3L && t1 == 5L, s"unexpected first tail range ($f1, $t1]")
-    // crash between effect and mark: rewind and re-consume — idempotent
-    writeHw(3L)
-    require(consume() == ((3L, 5L)), "crash-replay consumed a different range")
-
-    // compaction immunity: the served range must be byte-stable across a
-    // sweep that merges its batches away
-    def rangeIds(from: Long, to: Long): Set[Long] =
-      rangeCols(LakeSink.tailCommits(spark, lakeDir, from, to))
-        .select("event_id").collect().map(_.getLong(0)).toSet
-    val preSweep = rangeIds(3L, 5L)
-    val epoch = LakeSink.claimWriterEpoch(spark, lakeDir)
-    val swept = LakeSink.compactPartitions(spark, lakeDir, 512L << 10,
-      minFiles = 2, fenceEpoch = Some(epoch))
-    require(swept.nonEmpty, "immunity probe vacuous: the sweep rewrote nothing")
-    val postSweep = rangeIds(3L, 5L)
-    require(preSweep == postSweep,
-      s"compaction changed a served range: ${(preSweep -- postSweep).size} lost, " +
-        s"${(postSweep -- preSweep).size} gained")
-
-    // a successor generation appends two more commits; consume them
-    val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
-    (6 until 8).foreach { i =>
-      sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-    }
-    require(consume() == ((5L, 7L)), "post-sweep appends not tailed")
-
-    pinned(spark, base)(spark.read
-      .parquet(silver.resolve("snapshot").toString)
-      .withColumn("phase", lit("snapshot"))
-      .unionByName(spark.read
-        .parquet(silver.resolve("range_3_5").toString,
-          silver.resolve("range_5_7").toString)
-        .withColumn("phase", lit("tail")))
-      .groupBy(col("event_date"), col("event_type"), col("phase"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum")))
   }
 
   /** Scratch trees not yet reclaimed by [[cleanupScratch]] — reaped at JVM
@@ -1693,42 +1706,41 @@ object ReplayHarness {
     */
   def stateStoreIntrospect(spark: SparkSession, sfDir: String): DataFrame = {
     val events = Tables.load(spark, sfDir, "events")
-    val base = scratchDir("graft_stateread_")
-    val streamDir = Files.createDirectory(base.resolve("in"))
-    val ckpt = base.resolve("ckpt").toString
-    val (minMs, maxMs) = tsBoundsMs(events)
-    val midMs = (minMs + maxMs) / 2
-    val half = events.filter(unix_millis(col("ts")) < midMs)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    isolated(spark) { s =>
-      val now = System.currentTimeMillis()
-      (0 until 2).foreach { i =>
-        val stage = base.resolve(s"stage_$i")
-        half.filter(pmod(col("event_id"), lit(2)) === i)
-          .coalesce(1).write.parquet(stage.toString)
-        publish(stage, streamDir, f"batch_$i%03d", now - (4 - i) * 60000L)
+    pinnedScratch(spark, "graft_stateread_") { base =>
+      val streamDir = Files.createDirectory(base.resolve("in"))
+      val ckpt = base.resolve("ckpt").toString
+      val (minMs, maxMs) = tsBoundsMs(events)
+      val midMs = (minMs + maxMs) / 2
+      val half = events.filter(unix_millis(col("ts")) < midMs)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      isolated(spark) { s =>
+        val now = System.currentTimeMillis()
+        (0 until 2).foreach { i =>
+          val stage = base.resolve(s"stage_$i")
+          half.filter(pmod(col("event_id"), lit(2)) === i)
+            .coalesce(1).write.parquet(stage.toString)
+          publish(stage, streamDir, f"batch_$i%03d", now - (4 - i) * 60000L)
+        }
+        val q = fileStream(s, half.schema, streamDir)
+          .withWatermark("ts", "25 hours")
+          .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .format("noop")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        // the store as a relation: key = (window, event_type), value = the
+        // partial agg buffer. Timestamps travel as strings across the pinning
+        // collect (same module-opens hazard class as the b2g gold census)
+        s.read.format("statestore").option("path", ckpt).load()
+          .selectExpr("CAST(key.window.start AS STRING) AS window_start",
+            "key.event_type AS event_type", "value.count AS n",
+            "round(value.sum, 2) AS sv")
       }
-      val q = fileStream(s, half.schema, streamDir)
-        .withWatermark("ts", "25 hours")
-        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("noop")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the store as a relation: key = (window, event_type), value = the
-      // partial agg buffer. Timestamps travel as strings across the pinning
-      // collect (same module-opens hazard class as the b2g gold census)
-      val state = s.read.format("statestore").option("path", ckpt).load()
-        .selectExpr("CAST(key.window.start AS STRING) AS window_start",
-          "key.event_type AS event_type", "value.count AS n",
-          "round(value.sum, 2) AS sv")
-      pinned(spark, base)(state)
-        .withColumn("window_start", col("window_start").cast("timestamp"))
-        .select("window_start", "event_type", "n", "sv")
-    }
+    }.withColumn("window_start", col("window_start").cast("timestamp"))
+      .select("window_start", "event_type", "n", "sv")
   }
 
   private def deleteRecursively(p: Path): Unit =
@@ -1763,51 +1775,52 @@ object ReplayHarness {
     */
   def replayOccTail(spark: SparkSession, sfDir: String, chunks: Int = 6,
       phase1Chunks: Int = 3): DataFrame = {
-    val base = scratchDir("graft_occtail_")
-    val lakeDir = base.resolve("lake").toString
-    val committedIds =
-      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-    // the replay of batch 1 must dedup off its marker, not double-append
-    val crash = new CrashScenario("occtail", Some((1L, "post-commit")))
-    // the events are loaded on the isolated session: the between-phase
-    // merge builds its inputs from them, so its jobs plan under the same
-    // conf as the stream's
-    isolated(spark) { s =>
-      val events = Tables.load(s, sfDir, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      // an independent merge job between tail batches: its own exclusive
-      // epoch, its own ledger slot — the tail resumes right past it
-      def mergeBetweenPhases(): Unit = {
-        require(Option(committedIds.get(1L)).map(_.longValue).contains(1L),
-          s"replayed batch 1 landed at ${committedIds.get(1L)} — the dedupKey " +
-            "did not short-circuit")
-        val inPhase1 = pmod(col("event_id"), lit(chunks)) < phase1Chunks
-        val m = LakeSink.mergeInto(s, lakeDir,
-          events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 7)
-            .withColumn("event_type", lit("updated"))
-            .withColumn("value", col("value") + 1000.0),
-          "event_id",
-          events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 3)
-            .select("event_id", "ts"))
-        require(m.commitId == phase1Chunks.toLong,
-          s"merge expected commit $phase1Chunks, got ${m.commitId}")
+    pinnedScratch(spark, "graft_occtail_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val committedIds =
+        new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Long]()
+      // the replay of batch 1 must dedup off its marker, not double-append
+      val crash = new CrashScenario("occtail", Some((1L, "post-commit")))
+      // the events are loaded on the isolated session: the between-phase
+      // merge builds its inputs from them, so its jobs plan under the same
+      // conf as the stream's
+      isolated(spark) { s =>
+        val events = Tables.load(s, sfDir, "events")
+          .select("event_id", "ts", "user_id", "event_type", "value")
+        // an independent merge job between tail batches: its own exclusive
+        // epoch, its own ledger slot — the tail resumes right past it
+        def mergeBetweenPhases(): Unit = {
+          require(Option(committedIds.get(1L)).map(_.longValue).contains(1L),
+            s"replayed batch 1 landed at ${committedIds.get(1L)} — the dedupKey " +
+              "did not short-circuit")
+          val inPhase1 = pmod(col("event_id"), lit(chunks)) < phase1Chunks
+          val m = LakeSink.mergeInto(s, lakeDir,
+            events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 7)
+              .withColumn("event_type", lit("updated"))
+              .withColumn("value", col("value") + 1000.0),
+            "event_id",
+            events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 3)
+              .select("event_id", "ts"))
+          require(m.commitId == phase1Chunks.toLong,
+            s"merge expected commit $phase1Chunks, got ${m.commitId}")
+        }
+        crash.run(s, base, events, chunks, phase1Chunks, dropCommit = false,
+          between = mergeBetweenPhases) { (batch, batchId) =>
+          committedIds.put(batchId, LakeSink.appendBatchOcc(s, lakeDir, batch,
+            writerId = "tail", dedupKey = Some(s"b$batchId")))
+          crash.inject(batchId, "post-commit")
+        }
       }
-      crash.run(s, base, events, chunks, phase1Chunks, dropCommit = false,
-        between = mergeBetweenPhases) { (batch, batchId) =>
-        committedIds.put(batchId, LakeSink.appendBatchOcc(s, lakeDir, batch,
-          writerId = "tail", dedupKey = Some(s"b$batchId")))
-        crash.inject(batchId, "post-commit")
-      }
+      require(Option(committedIds.get(chunks - 1L)).map(_.longValue)
+          .contains(chunks.toLong),
+        s"tail did not resume past the merge: last batch landed at " +
+          s"${committedIds.get(chunks - 1L)}, expected $chunks")
+      LakeSink.readLake(spark, lakeDir)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
     }
-    require(Option(committedIds.get(chunks - 1L)).map(_.longValue)
-        .contains(chunks.toLong),
-      s"tail did not resume past the merge: last batch landed at " +
-        s"${committedIds.get(chunks - 1L)}, expected $chunks")
-    pinned(spark, base)(LakeSink.readLake(spark, lakeDir)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum")))
   }
 
   /** Concurrent chunk staging (guide §2.6): fire one tiny staging write

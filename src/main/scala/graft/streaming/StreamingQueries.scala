@@ -1395,48 +1395,45 @@ object StreamingQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     val events = graft.core.Tables.load(s, dir, "events")
-    val base = ReplayHarness.scratchDir("graft_lakesrc_")
-    val lakeDir = base.resolve("lake").toString
-    val outDir = base.resolve("out")
-    // lay the lake down through the production sink: 4 id-interleaved
-    // batches (every batch touches every date leaf) with a compaction
-    // sweep after batches 1 and 3, so the streamed files are the
-    // compacted rewrites, not the original appends
-    val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
-      compactEvery = 2L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-    (0 until 4).foreach { i =>
-      sink(events.filter(pmod(col("event_id"), lit(4)) === i), i.toLong)
-    }
-    // stream-read: schema = data columns + the partition column; the
-    // source discovers event_date from the directory names
-    val schema = org.apache.spark.sql.types.StructType(events.schema.fields :+
-      org.apache.spark.sql.types.StructField("event_date",
-        org.apache.spark.sql.types.DateType))
-    val in = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "7").parquet(lakeDir)
-    val q = in.select("event_id", "event_date", "event_type", "value")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // batch's own partitioning — no coalesce(1): see replayEvents' sink
-        batch.write.mode("overwrite")
-          .parquet(outDir.resolve(s"b$batchId").toString)
+    ReplayHarness.pinnedScratch(s, "graft_lakesrc_") { base =>
+      val lakeDir = base.resolve("lake").toString
+      val outDir = base.resolve("out")
+      // lay the lake down through the production sink: 4 id-interleaved
+      // batches (every batch touches every date leaf) with a compaction
+      // sweep after batches 1 and 3, so the streamed files are the
+      // compacted rewrites, not the original appends
+      val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
+        compactEvery = 2L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      (0 until 4).foreach { i =>
+        sink(events.filter(pmod(col("event_id"), lit(4)) === i), i.toLong)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val census = s.read.option("recursiveFileLookup", "true")
-      .parquet(outDir.toString)
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
-    // pin the k-row census (dates × types) so the RAM-backed lake + out +
-    // ckpt trees can be reclaimed before returning — the lazy read would
-    // otherwise hold a fixture-sized tmpfs tree alive per run
-    val rows = census.collect().toIndexedSeq
-    ReplayHarness.cleanupScratch(base)
-    s.createDataFrame(s.sparkContext.parallelize(rows), census.schema)
+      // stream-read: schema = data columns + the partition column; the
+      // source discovers event_date from the directory names
+      val schema = org.apache.spark.sql.types.StructType(events.schema.fields :+
+        org.apache.spark.sql.types.StructField("event_date",
+          org.apache.spark.sql.types.DateType))
+      val in = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "7").parquet(lakeDir)
+      val q = in.select("event_id", "event_date", "event_type", "value")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", base.resolve("ckpt").toString)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          // batch's own partitioning — no coalesce(1): see replayEvents' sink
+          batch.write.mode("overwrite")
+            .parquet(outDir.resolve(s"b$batchId").toString)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // pin the k-row census (dates × types) so the RAM-backed lake + out +
+      // ckpt trees are reclaimed before returning
+      s.read.option("recursiveFileLookup", "true")
+        .parquet(outDir.toString)
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 2).as("total_value"),
+          sum(col("event_id")).as("id_checksum"))
+    }
   }
 
   /** st39: the lake sink's WORST crash instant, end to end — st32's twin

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared session for every suite (sbt forks a single test JVM). */
 object GraftTestSpark {
@@ -25,6 +25,17 @@ object GraftTestSpark {
   }
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Every registered query's frame at [[sf]], built at most once per test
+    * JVM and shared by PlanSnapshotSpec (reads its executed plan) and
+    * QueriesSmokeSpec (counts it): building a frame runs the eager queries'
+    * work (lake laydowns, stream replays), which would otherwise run twice.
+    * A build that throws is not cached, so both suites report it.
+    */
+  private val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+
+  def registryFrame(name: String): DataFrame =
+    frames.computeIfAbsent(name, n => SparkEntry.queries(n)(spark, sf))
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

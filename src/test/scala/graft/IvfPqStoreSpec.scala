@@ -21,14 +21,9 @@ class IvfPqStoreSpec extends AnyFunSuite {
   private def cur = SimilarityOps.churnedView(embs)
 
   /** e10's read path over an index, against a given refine corpus. */
-  private def serve(idx: SimilarityOps.IvfPqIndex, corpus: DataFrame): Seq[String] = {
-    val q = corpus.filter(col("vec_id") < 3)
-    val short = SimilarityOps.ivfpqScan(q, idx,
-      SimilarityOps.IvfPqProbes, SimilarityOps.RefineShortlist)
-      .select(col("qid"), col("doc_id"))
-    SimilarityOps.exactRerank(corpus, q, short)
+  private def serve(idx: SimilarityOps.IvfPqIndex, corpus: DataFrame): Seq[String] =
+    SimilarityOps.ivfpqServeRefined(corpus, idx, corpus)
       .collect().map(_.toString).sorted.toSeq
-  }
 
   test("kill matrix: every crash instant of the rebuild leaves a servable store") {
     val base = GraftTestSpark.tmpDir("ivfpq_store_kill_")

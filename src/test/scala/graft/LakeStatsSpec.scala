@@ -209,4 +209,23 @@ class LakeStatsSpec extends AnyFunSuite {
       "vacuum must fold the sidecars into one")
     check() // pruning survives the fold unchanged
   }
+
+  test("restored files carry zone maps on the lake's stats columns") {
+    val lake = GraftTestSpark.tmpDir("lake_stats_restore") + "/t"
+    layDown(lake)
+    // roll back batches 2 and 3: both leaves are rewritten to ids 0-19
+    val restored = LakeSink.restoreTo(spark, lake, asOf = 1L)
+    assert(restored.rewrittenLeaves.size == 2, s"both leaves rewritten: $restored")
+    val (df, report) = LakeSink.readPruned(spark, lake, "event_id", 5, 14)
+    assert(idSet(df) == (5L to 14L).toSet)
+    assert(report.totalFiles > 0 && report.scannedFiles == report.totalFiles,
+      s"each restored leaf holds ids in range: $report")
+    // the rolled-back ids: every restored file's map ends at 19 (its
+    // `value` at 19.0), so both columns prune every file
+    Seq("event_id", "value").foreach { c =>
+      val (gone, r) = LakeSink.readPruned(spark, lake, c, 20, 39)
+      assert(gone.isEmpty && r.totalFiles > 0 && r.scannedFiles == 0,
+        s"restored files must be prunable on $c: $r")
+    }
+  }
 }

@@ -15,8 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * GRAFT_UPDATE_PLANS=1 sbt test and review the plans/ diff in the commit.
   */
 class PlanSnapshotSpec extends AnyFunSuite {
-  private lazy val spark = GraftTestSpark.spark
-  private val sf = GraftTestSpark.sf
   private val snapDir = new File("plans")
 
   /** Strip run-variant noise (expression ids, codegen stage ids, paths,
@@ -68,7 +66,7 @@ class PlanSnapshotSpec extends AnyFunSuite {
 
   SparkEntry.registry.sortBy(_.name).foreach { q =>
     test(s"plan snapshot: ${q.name}") {
-      val exec = q.fn(spark, sf).queryExecution.executedPlan
+      val exec = GraftTestSpark.registryFrame(q.name).queryExecution.executedPlan
       val plan =
         if (shapeOnlyQueries(q.name)) shapeOnly(exec)
         else normalize(exec.toString)
