@@ -1026,7 +1026,7 @@ object ScaleProbe {
       }
       val cowRoot = new org.apache.hadoop.fs.Path(cowLake)
       val cowBytes = treeBytes(cowRoot, cowRoot.getFileSystem(hconf),
-        n => n.startsWith(s"gc$k-")) // the merge landed at commit id k
+        n => n.startsWith(sink.Lineage.rewrite(k))) // the merge landed at commit id k
       val tMor = time { sink.readLake(spark, dvLake).count() }
       val tMat = time {
         sink.compactPartitions(spark, dvLake, 1L << 30, minFiles = 1,

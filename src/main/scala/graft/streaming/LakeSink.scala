@@ -193,18 +193,25 @@ object LakeSink {
       }
   }
 
-  /** Staged-write layout: hash-distribute the batch by its partition key
-    * before the partitioned write (guide §6 — the Iceberg
+  /** Staged-write layout: ASK for the batch hash-distributed by its
+    * partition key before the partitioned write (guide §6 — the Iceberg
     * `write.distribution-mode=hash` / REBALANCE-before-write shape).
     * Without it every upstream task writes its own file into every date
     * leaf it touches — (tasks × dates) small files per batch, each one a
     * placement rename at commit, a footer read when stats are recorded,
     * and a per-file open for every later scan, compaction, merge and
-    * purge. With it a batch lays down O(dates) right-sized files. AQE
-    * (on in [[graft.core.GraftSession]]) both coalesces the small
-    * per-date partitions at replay scale and SPLITS a skewed hot date at
-    * production scale, so the shape is scale-adaptive rather than tuned
-    * to either the local core count or one date distribution.
+    * purge. With it a batch lays down O(dates) right-sized files, and AQE
+    * both coalesces the small per-date partitions at replay scale and
+    * SPLITS a skewed hot date at production scale.
+    *
+    * The hint is only a request: Spark resolves REBALANCE only while AQE
+    * is on. AQE is on in [[graft.core.GraftSession]] for batch callers
+    * ([[appendBatch]], [[mergeInto]]'s inserts), but Spark runs stateful
+    * micro-batches (dedup, window aggregation, stream joins — the
+    * `lake_stream` benchmark's dedup upstream among them) with AQE off.
+    * There the hint is dropped with an `Unrecognized hint` warning and
+    * the staged write keeps the upstream's partitioning: one file per
+    * task and date leaf, the small-file shape described above.
     */
   private def stagedLeafShape(dated: DataFrame): DataFrame =
     dated.hint("rebalance", col("event_date"))
@@ -264,25 +271,151 @@ object LakeSink {
     * order; empty when `dir` does not exist.
     */
   private def numbered(fs: FileSystem, dir: Path): Seq[(Long, FileStatus)] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(_.getPath.getName.forall(_.isDigit))
-      .map(s => s.getPath.getName.toLong -> s).sortBy(_._1)
+    children(fs, dir).flatMap(s => idAfter(s.getPath.getName, "").map(_ -> s)).sortBy(_._1)
+
+  /** The children of `dir`, empty when it does not exist: one LIST, no
+    * separate existence probe.
+    */
+  private def children(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The id a child name `<prefix><digits>` carries (staging trees,
+    * deletion-vector stages, schema versions, quarantine batches), or None
+    * for any other name.
+    */
+  private def idAfter(name: String, prefix: String): Option[Long] = {
+    val id = name.stripPrefix(prefix)
+    if (name.startsWith(prefix) && id.nonEmpty && id.forall(_.isDigit)) Some(id.toLong) else None
+  }
 
   /** Committed ids: the numeric marker files of `_graft_commits`, ascending. */
   private def ledgerIds(fs: FileSystem, root: Path): Seq[Long] =
     numbered(fs, ledgerDir(root)).collect { case (id, s) if s.isFile => id }
 
-  /** Retained `_graft_history/<B>` generations, ascending by horizon. */
-  private def historyGens(fs: FileSystem, root: Path): Seq[(Long, Path)] =
-    numbered(fs, new Path(root, HistoryRoot))
-      .collect { case (b, s) if s.isDirectory => b -> s.getPath }
+  /** One retained `_graft_history/<horizon>` generation: its directory and
+    * the leaf names it stores.
+    */
+  private final case class HistGen(horizon: Long, dir: Path, leaves: Set[String])
+
+  /** HISTORY INDEX: every retained generation, ascending by horizon, each
+    * listed ONCE into its leaf set. Every history resolver answers from it
+    * ([[readAsOf]], [[tailCommits]], [[tailChanges]], [[restoreTo]]'s
+    * history-only leaves, [[vacuum]]'s deletion-vector liveness,
+    * [[purgeKeys]]' erasure) instead of re-listing a generation or probing
+    * it per leaf: per-leaf probes cost O(leaves × generations) metadata
+    * RPCs per read, expensive on object stores for lakes with long
+    * restore/compaction history.
+    */
+  private def historyIndex(fs: FileSystem, root: Path): Seq[HistGen] =
+    numbered(fs, new Path(root, HistoryRoot)).collect { case (b, s) if s.isDirectory =>
+      HistGen(b, s.getPath, leafDirs(fs, s.getPath).map(_.getName).toSet)
+    }
+
+  /** The smallest stored horizon >= `minHorizon` that stores `leafName`.
+    * It holds the leaf's state just before that rewrite, and every earlier
+    * rewrite of the leaf has a smaller horizon, so it serves the snapshot
+    * at `minHorizon - 1` ([[readAsOf]]) and still carries the append files
+    * of batch `minHorizon` ([[tailCommits]]). None when no retained
+    * generation stores the leaf that late.
+    */
+  private def servingGen(hist: Seq[HistGen], leafName: String, minHorizon: Long): Option[HistGen] =
+    hist.find(g => g.horizon >= minHorizon && g.leaves(leafName))
+
+  /** LINEAGE CODEC — the one place that formats and parses the commit
+    * lineage a LakeSink data file name carries:
+    *
+    *   - `gb<id>-p<k>.snappy.parquet`: rows appended by commit `id`;
+    *   - `gb<id>-w<writer>-p<k>.snappy.parquet`: rows an
+    *     [[appendBatchOcc]] writer appended at commit `id`;
+    *   - `gc<B>-p<k>.snappy.parquet`: a leaf rewrite (compaction, merge,
+    *     purge, restore) stamped with horizon `B`, holding exactly the
+    *     leaf's batches <= B.
+    *
+    * Any other name has no lineage (the file was not written by this sink).
+    */
+  private[graft] object Lineage {
+
+    /** A parsed lineage name: a `gc` rewrite or a `gb` append, its id, and
+      * the OCC writer for a writer-owned append.
+      */
+    final case class Parsed(rewrite: Boolean, id: Long, writer: Option[String])
+
+    private val Name = """g([bc])(\d+)-(?:w([^-]+)-)?.*""".r
+
+    /** Name prefix of commit `id`'s append files (every writer's). */
+    def append(id: Long): String = s"gb$id-"
+
+    /** Name prefix of OCC writer `writer`'s append files at commit `id`. */
+    def occ(id: Long, writer: String): String = s"gb$id-w$writer-"
+
+    /** Name prefix of a rewrite stamped with `horizon`. */
+    def rewrite(horizon: Long): String = s"gc$horizon-"
+
+    def parse(fileName: String): Option[Parsed] = fileName match {
+      case Name(kind, id, writer) => Some(Parsed(kind == "c", id.toLong, Option(writer)))
+      case _ => None
+    }
+
+    /** The lineage id of a data file PATH as a long column, null for a file
+      * without lineage — for reads that filter the live tree by commit.
+      */
+    def idOf(path: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      org.apache.spark.sql.functions.regexp_extract(path, "/g[bc](\\d+)-", 1).cast("long")
+
+    /** Rename `from`'s parquet parts into `to` as `<prefix>p<k>.snappy.parquet`,
+      * in name order; returns the renamed files.
+      */
+    def place(fs: FileSystem, from: Path, to: Path, prefix: String): Seq[Path] =
+      parquetFiles(fs, from).zipWithIndex.map { case (f, i) =>
+        val dst = new Path(to, s"${prefix}p$i.snappy.parquet")
+        require(fs.rename(f.getPath, dst), s"lineage rename failed: ${f.getPath} -> $dst")
+        dst
+      }
+  }
+
+  /** SCAN PATH — the one way lake files become a frame: `paths` (leaf
+    * directories or data files) under `mount`, the directory holding their
+    * `event_date=` leaves (the root, a history generation, a mid-swap
+    * directory), passed as `basePath` so discovery keeps the partition
+    * column (None reads bare leaves, without it); the declared `schema`
+    * when the lake has one (files that predate a widening null-fill); and
+    * the committed deletion vectors `dv` anti-applied on the direct file
+    * scan, the only place `_metadata` resolves.
+    */
+  private def scanOf(
+      spark: SparkSession,
+      mount: Option[Path],
+      paths: Seq[Path],
+      schema: Option[StructType],
+      dv: Option[DataFrame] = None): DataFrame = {
+    val r = mount.fold(spark.read)(m => spark.read.option("basePath", m.toString))
+    val files = schema.fold(r)(r.schema).parquet(paths.map(_.toString): _*)
+    dv.fold(files)(applyDv(files, _))
+  }
+
+  /** [[scanOf]] over `(mount, file)` pairs from several mounts: partition
+    * discovery needs one consistent depth per relation, so this is a
+    * unionByName of one scan per mount (the mixed case a scoped sweep
+    * creates, where only SOME leaves resolve from history — a
+    * single-basePath listing would refuse the conflicting directory
+    * depths).
+    */
+  private def scanMounts(
+      spark: SparkSession,
+      files: Seq[(Path, Path)],
+      schema: Option[StructType],
+      dv: Option[DataFrame] = None): DataFrame =
+    files.groupBy(_._1).toSeq.sortBy(_._1.toString)
+      .map { case (mount, fl) => scanOf(spark, Some(mount), fl.map(_._2).distinct, schema, dv) }
+      .reduce(_ unionByName _)
 
   /** The `event_date=` leaf directories directly under `dir` (the root, a
-    * history generation, a staging or sweep directory), by name.
+    * history generation, a staging or sweep directory), by name; none when
+    * `dir` does not exist.
     */
   private def leafDirs(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq
+    children(fs, dir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(LeafPrefix))
       .map(_.getPath).sortBy(_.getName)
 
@@ -350,6 +483,31 @@ object LakeSink {
     val epoch = fenceEpoch.getOrElse(acquireWriterEpoch(fs, root))
     checkWriterFence(fs, root, epoch)
     epoch
+  }
+
+  /** An opened one-shot verb: the lake root and its filesystem, the writer
+    * epoch the verb holds, and the commit id it claims (`max committed + 1`).
+    */
+  private final case class Verb(root: Path, fs: FileSystem, epoch: Long, next: Long)
+
+  /** VERB PROLOGUE shared by [[deleteVectors]], [[restoreTo]],
+    * [[mergeInto]] and [[purgeKeys]]: open the lake and require it, refuse
+    * a shallow clone (`cloneVerb` names the verb in the error; None for
+    * [[cloneMerge]]'s own merge), claim or check the writer epoch
+    * ([[verbEpoch]]), heal interrupted swaps ([[recoverSweeps]]), and
+    * allocate the next commit id.
+    */
+  private def openVerb(
+      spark: SparkSession,
+      lakeDir: String,
+      fenceEpoch: Option[Long],
+      cloneVerb: Option[String]): Verb = {
+    val (root, fs) = lakeFs(spark, lakeDir)
+    require(fs.exists(root), s"no lake at $lakeDir")
+    cloneVerb.foreach(requireNotClone(fs, root, _))
+    val epoch = verbEpoch(fs, root, fenceEpoch)
+    recoverSweeps(fs, root)
+    Verb(root, fs, epoch, maxCommittedId(fs, root) + 1)
   }
 
   /** Rebuild the sweep scope a crashed writer lost: union of the leaf
@@ -490,6 +648,18 @@ object LakeSink {
     readSmallFile(fs, p).split('\n').headOption
       .filter(l => l.startsWith("#") && l != MarkerEnd)
 
+  /** Whether commit `id` has a marker tagged `tag`. */
+  private def committedAs(fs: FileSystem, root: Path, id: Long, tag: String): Boolean = {
+    val m = markerPath(root, id)
+    fs.exists(m) && markerTagOf(fs, m).contains(tag)
+  }
+
+  /** The words after [[MarkerOcc]] in a commit marker's tag (`writerId
+    * [dedupKey]`), or None when the marker is not an OCC commit's.
+    */
+  private def occTagOf(fs: FileSystem, p: Path): Option[Seq[String]] =
+    markerTagOf(fs, p).map(_.split(' ').toSeq).collect { case MarkerOcc +: rest => rest }
+
   private def writeSmallFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -498,21 +668,16 @@ object LakeSink {
 
   private def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   /** The staged-commit step: for each leaf the staged batch holds, delete
     * the `<lineage>*` files a CRASHED attempt of this same batch may have
     * left in the target (the rollback that makes the commit idempotent),
-    * then rename the staged files in under deterministic per-batch names
-    * `<lineage>p<k>.snappy.parquet` (`gb<batchId>-` for the single-writer
-    * verbs, `gb<id>-w<writerId>-` for [[appendBatchOcc]]). Returns each
+    * then rename the staged files in under deterministic per-batch
+    * [[Lineage]] names (`Lineage.append` for the single-writer verbs,
+    * `Lineage.occ` for [[appendBatchOcc]]). Returns each
     * committed leaf name with the files renamed into it. Correctness leans
     * on Spark's deterministic-replay contract: a replayed batch carries the
     * same rows, so the leaves it stages are a superset of any crashed
@@ -525,8 +690,7 @@ object LakeSink {
       staging: Path,
       lineage: String,
       onCommitted: String => Unit = _ => ()): Seq[(String, Seq[Path])] = {
-    val leaves = if (!fs.exists(staging)) Seq.empty else leafDirs(fs, staging)
-    leaves.map { sLeaf =>
+    leafDirs(fs, staging).map { sLeaf =>
       val target = new Path(root, sLeaf.getName)
       fs.mkdirs(target)
       fs.listStatus(target)
@@ -535,12 +699,7 @@ object LakeSink {
           System.err.println(s"[lake] rolling back crashed-attempt file ${f.getPath.getName}")
           fs.delete(f.getPath, false)
         }
-      val placed = parquetFiles(fs, sLeaf).zipWithIndex.map { case (f, i) =>
-        val dst = new Path(target, s"${lineage}p$i.snappy.parquet")
-        require(fs.rename(f.getPath, dst),
-          s"staged commit rename failed: ${f.getPath} -> $dst")
-        dst
-      }
+      val placed = Lineage.place(fs, sLeaf, target, lineage)
       onCommitted(sLeaf.getName)
       sLeaf.getName -> placed
     }
@@ -573,7 +732,7 @@ object LakeSink {
       .parquet(stagingDir(root, b).toString)
     onStaged()
     checkWriterFence(fs, root, epoch)
-    val committed = commitStaged(fs, root, stagingDir(root, b), s"gb$b-", onCommitted)
+    val committed = commitStaged(fs, root, stagingDir(root, b), Lineage.append(b), onCommitted)
     writeFileStats(fs, rows.sparkSession.sparkContext.hadoopConfiguration, root,
       b.toString, committed.flatMap { case (l, fl) => fl.map(l -> _) }, statsCols)
     committed.map(_._1)
@@ -668,10 +827,9 @@ object LakeSink {
     // unmarkered staging dir belongs to a batch the engine will replay and
     // is left for that replay's overwrite)
     val stagingRoot = new Path(root, StagingRoot)
-    val marked = ids.map(_.toString).toSet
-    if (fs.exists(stagingRoot)) fs.listStatus(stagingRoot).foreach { s =>
-      val id = s.getPath.getName.stripPrefix("b")
-      if (id.nonEmpty && id.forall(_.isDigit) && marked(id)) {
+    val marked = ids.toSet
+    children(fs, stagingRoot).foreach { s =>
+      if (idAfter(s.getPath.getName, "b").exists(marked)) {
         System.err.println(s"[lake] reclaiming committed staging ${s.getPath.getName}")
         fs.delete(s.getPath, true)
       } else if (s.getPath.getName.startsWith("occ-") &&
@@ -701,30 +859,18 @@ object LakeSink {
     // writer may land its marker while this pass runs.
     val ledgerFloor: Option[Long] = ids.headOption
     leafDirs(fs, root).foreach { leaf =>
-      fs.listStatus(leaf)
-        .filter(f => f.isFile && f.getPath.getName.startsWith("gb") &&
-          f.getPath.getName.contains("-w"))
-        .foreach { f =>
-          val n = f.getPath.getName
-          val id = n.stripPrefix("gb").takeWhile(_.isDigit)
-          val wid = n.drop(2 + id.length).stripPrefix("-w").takeWhile(_ != '-')
-          val committed = id.nonEmpty && {
-            val m = new Path(ledgerDir(root), id)
-            fs.exists(m) && (markerTagOf(fs, m) match {
-              case Some(tag) =>
-                val words = tag.split(' ')
-                words.headOption.contains(MarkerOcc) && words.lift(1).contains(wid)
-              case None => false
-            })
-          }
-          val aboveFloor =
-            id.nonEmpty && ledgerFloor.exists(floor => id.toLong >= floor)
+      fs.listStatus(leaf).filter(_.isFile).foreach { f =>
+        Lineage.parse(f.getPath.getName).filter(_.writer.nonEmpty).foreach { l =>
+          val m = markerPath(root, l.id)
+          val committed = fs.exists(m) && occTagOf(fs, m).exists(_.headOption == l.writer)
+          val aboveFloor = ledgerFloor.exists(floor => l.id >= floor)
           val agedOut = f.getModificationTime < occReapHorizon
-          if (!committed && wid.nonEmpty && aboveFloor && agedOut) {
-            System.err.println(s"[lake] reclaiming uncommitted OCC leftover $n")
+          if (!committed && aboveFloor && agedOut) {
+            System.err.println(s"[lake] reclaiming uncommitted OCC leftover ${f.getPath.getName}")
             fs.delete(f.getPath, false)
           }
         }
+      }
     }
     // time-travel history: pre-sweep generations serve snapshots older
     // than a compaction horizon ([[readAsOf]]) — retention-expired leaves
@@ -734,14 +880,16 @@ object LakeSink {
     // generation directory is removed outright. This is the vacuum
     // window: after it, readAsOf fails loudly for the pruned range.
     val markerMax = ids.lastOption.getOrElse(Long.MinValue)
-    val retainedGens: Seq[Path] = historyGens(fs, root).flatMap { case (horizon, g) =>
-      if (markerMax != Long.MinValue && horizon < markerMax - ledgerKeep) {
-        fs.delete(g, true)
-        System.err.println(s"[lake] vacuumed history generation $horizon")
+    val retainedGens: Seq[HistGen] = historyIndex(fs, root).flatMap { g =>
+      if (markerMax != Long.MinValue && g.horizon < markerMax - ledgerKeep) {
+        fs.delete(g.dir, true)
+        System.err.println(s"[lake] vacuumed history generation ${g.horizon}")
         None
       } else {
-        leafDirs(fs, g).filter(l => expired(l.getName)).foreach(fs.delete(_, true))
-        if (fs.listStatus(g).isEmpty) { fs.delete(g, true); None } else Some(g)
+        val (gone, kept) = g.leaves.partition(expired)
+        gone.foreach(l => fs.delete(new Path(g.dir, l), true))
+        if (fs.listStatus(g.dir).isEmpty) { fs.delete(g.dir, true); None }
+        else Some(g.copy(leaves = kept))
       }
     }
     // writer-epoch ledger: only the MAX epoch is ever consulted by the
@@ -771,20 +919,22 @@ object LakeSink {
     // conservative, like every advisory sidecar here. Stale `.tmp` stages
     // whose generation (or marker) landed are reaped like staging dirs.
     val dvRoot = new Path(root, DvRoot)
-    val keptMarked = keptIds.map(_.toString).toSet
-    if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { g =>
+    val keptMarked = keptIds.toSet
+    children(fs, dvRoot).foreach { g =>
       val name = g.getPath.getName
       if (name.startsWith(".tmp")) {
-        val id = name.stripPrefix(".tmp")
-        if (id.nonEmpty && id.forall(_.isDigit) &&
-            (fs.exists(new Path(dvRoot, id)) || keptMarked(id)))
+        if (idAfter(name, ".tmp").exists(id =>
+            fs.exists(new Path(dvRoot, id.toString)) || keptMarked(id)))
           fs.delete(g.getPath, true)
-      } else if (name.nonEmpty && name.forall(_.isDigit)) {
+      } else if (idAfter(name, "").nonEmpty) {
         val manifest = new Path(g.getPath, DvTargetsFile)
         val targets = if (!fs.exists(manifest)) None else readSealed(fs, manifest)
         targets.foreach { ts =>
+          // a target is `leaf/file`: only generations storing its leaf
+          // can hold it
           val liveSomewhere = ts.exists { t =>
-            fs.exists(new Path(root, t)) || retainedGens.exists(h => fs.exists(new Path(h, t)))
+            fs.exists(new Path(root, t)) || retainedGens.exists(h =>
+              h.leaves(t.split('/').head) && fs.exists(new Path(h.dir, t)))
           }
           if (!liveSomewhere) {
             fs.delete(g.getPath, true)
@@ -857,87 +1007,53 @@ object LakeSink {
     require(fs.exists(root), s"no lake at $lakeDir")
     requireNotClone(fs, root, "time travel (readAsOf)")
 
-    def lineageId(n: String, prefix: String, leafName: String): Long = {
-      val digits = n.stripPrefix(prefix).takeWhile(_.isDigit)
-      require(digits.nonEmpty, s"unparseable lineage name $n in $leafName")
-      digits.toLong
-    }
     // files of one directory filtered to lineage <= asOf; Left(horizon) if
     // a rewrite beyond asOf makes this directory's content unservable
-    def serveDir(dir: Path, leafName: String): Either[Long, Seq[String]] = {
-      val fstats = parquetFiles(fs, dir)
-      val over = fstats.flatMap { f =>
-        val n = f.getPath.getName
-        if (n.startsWith("gc") && lineageId(n, "gc", leafName) > asOf)
-          Some(lineageId(n, "gc", leafName))
-        else None
-      }
+    def serveDir(dir: Path): Either[Long, Seq[Path]] = {
+      val named = parquetFiles(fs, dir).map(f => f.getPath -> Lineage.parse(f.getPath.getName))
+      val over = named.collect { case (_, Some(l)) if l.rewrite && l.id > asOf => l.id }
       if (over.nonEmpty) Left(over.min)
-      else Right(fstats.flatMap { f =>
-        val n = f.getPath.getName
-        if (n.startsWith("gb")) {
-          if (lineageId(n, "gb", leafName) <= asOf) Some(f.getPath.toString) else None
-        } else if (n.startsWith("gc")) Some(f.getPath.toString) // <= asOf here
-        else throw new IllegalStateException(
-          s"$n in $leafName carries no batch lineage — this lake was not " +
+      else Right(named.flatMap {
+        // a rewrite here is <= asOf
+        case (f, Some(l)) => if (l.rewrite || l.id <= asOf) Some(f) else None
+        case (f, None) => throw new IllegalStateException(
+          s"${f.getName} in $dir carries no batch lineage — this lake was not " +
             "(only) written by LakeSink; time travel undefined")
       })
     }
-    val histRoot = new Path(root, HistoryRoot)
     // read-only remnant resolution (see scaladoc): a leaf name can be live
     // under the root, mid-swap in _compact_tmp, or aside in _compact_old —
     // the union is the leaf namespace; the live copy always wins (a tmp or
     // old child whose target exists is a stale orphan for the next sweep's
     // healing, not for this reader)
-    def childLeafNames(dir: Path): Seq[String] =
-      if (!fs.exists(dir)) Seq.empty else leafDirs(fs, dir).map(_.getName)
-    // ONE listing per history generation, answered from memory after —
-    // retainedGens/fromHistory per-leaf fs.exists probes were
-    // O(leaves x generations) metadata RPCs per snapshot read, expensive
-    // on object stores for lakes with long restore/compaction history
-    val genLeaves: Map[Long, Set[String]] =
-      historyGens(fs, root).map { case (b, g) => b -> childLeafNames(g).toSet }.toMap
-    // generations that retain this leaf beyond asOf, if any — empty both
+    val mounts = Seq(root, new Path(root, TmpRoot), new Path(root, OldRoot))
+    val hist = historyIndex(fs, root)
+    // the generation serving this leaf beyond asOf, if any — None both
     // when the leaf was never swept and when it exists only at or before
     // asOf-era history
-    def retainedGens(leafName: String): Seq[Long] =
-      genLeaves.keys.toSeq.filter(b => b > asOf && genLeaves(b)(leafName))
-    def fromHistory(leafName: String): Seq[(String, String)] = {
-      // resolve from history: smallest stored horizon > asOf for THIS leaf
-      val gens = retainedGens(leafName)
-      if (gens.isEmpty) throw new IllegalStateException(
+    def retainedGen(leafName: String): Option[HistGen] = servingGen(hist, leafName, asOf + 1)
+    def fromHistory(leafName: String): Seq[(Path, Path)] = {
+      val gen = retainedGen(leafName).getOrElse(throw new IllegalStateException(
         s"time travel to batch $asOf is lost for $leafName: the " +
           "compaction that rewrote it has no retained pre-sweep " +
           "generation (vacuumed, or compacted without a ledger) — " +
-          "snapshots reach exactly as far back as the retained history")
-      val gen = new Path(new Path(histRoot, gens.min.toString), leafName)
-      serveDir(gen, s"${HistoryRoot}/${gens.min}/$leafName") match {
-        case Right(paths) => paths.map(f => gen.getParent.toString -> f)
+          "snapshots reach exactly as far back as the retained history"))
+      serveDir(new Path(gen.dir, leafName)) match {
+        case Right(paths) => paths.map(gen.dir -> _)
         case Left(b) => throw new IllegalStateException(
           s"time travel to batch $asOf is lost for $leafName: the " +
-            s"oldest retained generation (${gens.min}) already holds a " +
+            s"oldest retained generation (${gen.horizon}) already holds a " +
             s"rewrite at horizon $b > $asOf — the deeper generation that " +
             "could serve this snapshot has been vacuumed")
       }
     }
     // each served file is tagged with its MOUNT (the directory holding the
     // `event_date=` leaf — the root, a history generation, or a mid-swap
-    // staging dir): partition discovery needs one consistent depth per
-    // read, so the scan below is a unionByName of one parquet relation per
-    // mount, each with basePath = its mount (this also serves the mixed
-    // case a scoped sweep creates, where only SOME leaves resolve from
-    // history — a single-basePath listing would refuse the conflicting
-    // directory depths)
-    def tagged(dir: Path, tag: String, leafName: String): Either[Long, Seq[(String, String)]] =
-      serveDir(dir, tag).map(_.map(f => dir.getParent.toString -> f))
-    def serveLeaf(leafName: String): Seq[(String, String)] = {
-      def hist = fromHistory(leafName)
-      val candidates = Seq(
-        (new Path(root, leafName), leafName),
-        (new Path(new Path(root, TmpRoot), leafName), s"$TmpRoot/$leafName"),
-        (new Path(new Path(root, OldRoot), leafName), s"$OldRoot/$leafName"))
-      candidates.find(c => fs.exists(c._1)) match {
-        case Some((dir, tag)) => tagged(dir, tag, leafName).getOrElse(hist)
+    // staging dir) for [[scanMounts]]
+    def serveLeaf(leafName: String): Seq[(Path, Path)] = {
+      mounts.map(new Path(_, leafName)).find(fs.exists) match {
+        case Some(dir) =>
+          serveDir(dir).map(_.map(dir.getParent -> _)).getOrElse(fromHistory(leafName))
         case None =>
           // HISTORY-ONLY leaf: retired by a restore (born after its
           // snapshot, rolled back out of the live tree). Generations
@@ -945,35 +1061,23 @@ object LakeSink {
           // content at this snapshot — empty, NOT an error (the
           // time-travel-lost error is for LIVE leaves whose rewrite
           // outran asOf with the retained generation vacuumed)
-          if (retainedGens(leafName).isEmpty) Seq.empty else hist
+          if (retainedGen(leafName).isEmpty) Seq.empty else fromHistory(leafName)
       }
     }
     // leaf namespace: live, mid-swap, aside, AND history-resident — a
     // restore retires a born-after-snapshot leaf wholesale into its
     // generation, where pre-restore snapshots must still find it
-    val histLeafNames: Seq[String] = genLeaves.values.flatten.toSeq
-    val files = (childLeafNames(root) ++
-        childLeafNames(new Path(root, TmpRoot)) ++
-        childLeafNames(new Path(root, OldRoot)) ++ histLeafNames)
+    val files = (mounts.flatMap(leafDirs(fs, _).map(_.getName)) ++ hist.flatMap(_.leaves))
       .distinct.sorted
       .flatMap(serveLeaf)
     require(files.nonEmpty, s"no files at or before batch $asOf under $lakeDir")
     // SCHEMA AS OF the snapshot: a pre-evolution snapshot correctly lacks
-    // the later column; files older than a widening null-fill under it
-    val declared = declaredReadSchema(fs, root, asOf)
-    // deletion vectors AS OF the snapshot: generations committed at or
-    // before asOf apply; later deletes stay invisible. Applied PER MOUNT —
-    // `_metadata` resolves only on the direct file scan, and positions are
-    // keyed by (leaf, file name) so a file served from a retained history
+    // the later column; files older than a widening null-fill under it.
+    // Deletion vectors AS OF the snapshot: generations committed at or
+    // before asOf apply; later deletes stay invisible. Positions are keyed
+    // by (leaf, file name), so a file served from a retained history
     // generation matches its entries exactly as it did live
-    val dv = dvStore(spark, fs, root, asOf)
-    files.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (mount, fl) =>
-        val r = spark.read.option("basePath", mount)
-        val scan = declared.fold(r)(r.schema).parquet(fl.map(_._2): _*)
-        dv.fold(scan)(applyDv(scan, _))
-      }
-      .reduce(_ unionByName _)
+    scanMounts(spark, files, declaredReadSchema(fs, root, asOf), dvStore(spark, fs, root, asOf))
   }
 
   /** LEDGER-DRIVEN INCREMENTAL TAIL — batch-read exactly the commits in
@@ -1008,35 +1112,35 @@ object LakeSink {
     val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(ledgerDir(root)), s"no commit ledger under $lakeDir — " +
       "ledger tailing needs a LakeSink-written lake")
-    val gens = historyGens(fs, root)
-    def allLeafNames: Seq[String] =
-      (leafDirs(fs, root) ++ gens.flatMap(g => leafDirs(fs, g._2))).map(_.getName).distinct
+    tailRange(spark, fs, root, historyIndex(fs, root), fromExclusive, toInclusive)
+  }
+
+  /** [[tailCommits]] over an opened lake and its history index. */
+  private def tailRange(
+      spark: SparkSession,
+      fs: FileSystem,
+      root: Path,
+      hist: Seq[HistGen],
+      fromExclusive: Long,
+      toInclusive: Long): DataFrame = {
     // (mount, file) pairs for one batch's files in one leaf: live leaf when
-    // the batch is past every sweep horizon, else the smallest stored
-    // generation >= the batch id (which holds the leaf's state just before
-    // the sweep that merged this batch away); `strict` requires the files
-    // to exist (a marker named this leaf), the over-approximated torn-
-    // marker path probes quietly
-    def locate(batchId: Long, leafName: String, strict: Boolean): Seq[(String, String)] = {
-      def gbFiles(dir: Path): Seq[(String, String)] =
-        if (!fs.exists(dir)) Seq.empty
-        else fs.listStatus(dir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$batchId-"))
-          .sortBy(_.getPath.getName)
-          .map(f => dir.getParent.toString -> f.getPath.toString)
-      // the leaf's OWN sweep history (scoped sweeps rewrite only some
-      // leaves per horizon): gb<id> lives in the smallest of ITS stored
-      // horizons >= id — earlier leaf sweeps merged only batches < id, so
-      // that generation still carries the file
-      val servingGen = gens.find { case (b, g) =>
-        b >= batchId && fs.exists(new Path(g, leafName)) }
-      val served = gbFiles(servingGen.fold(new Path(root, leafName))(g => new Path(g._2, leafName)))
+    // the batch is past every sweep horizon, else the leaf's OWN smallest
+    // stored generation >= the batch id (scoped sweeps rewrite only some
+    // leaves per horizon; earlier sweeps of this leaf merged only batches
+    // < id, so that generation still carries the file); `strict` requires
+    // the files to exist (a marker named this leaf), the over-approximated
+    // torn-marker path probes quietly
+    def locate(batchId: Long, leafName: String, strict: Boolean): Seq[(Path, Path)] = {
+      val gen = servingGen(hist, leafName, batchId)
+      val mount = gen.fold(root)(_.dir)
+      val served = children(fs, new Path(mount, leafName)).map(_.getPath)
+        .filter(_.getName.startsWith(Lineage.append(batchId))).sortBy(_.getName)
       if (served.isEmpty && strict) throw new IllegalStateException(
         s"ledger tail lost batch $batchId in $leafName: its files are in " +
-          s"neither the live leaf nor the ${servingGen.fold("(no)")(g => s"horizon-${g._1}")} " +
+          s"neither the live leaf nor the ${gen.fold("(no)")(g => s"horizon-${g.horizon}")} " +
           "generation — the retaining generation has been vacuumed; " +
           "incremental tails reach exactly as far back as the retained history")
-      served
+      served.map(mount -> _)
     }
     val files = ((fromExclusive + 1) to toInclusive).flatMap { id =>
       val marker = markerPath(root, id)
@@ -1067,20 +1171,15 @@ object LakeSink {
       readMarkerLeaves(fs, marker) match {
         case Some(leaves) => leaves.flatMap(l => locate(id, l, strict = true))
         case None => // torn content: leaf list unknown — probe everywhere
-          allLeafNames.flatMap(l => locate(id, l, strict = false))
+          (leafDirs(fs, root).map(_.getName) ++ hist.flatMap(_.leaves)).distinct
+            .flatMap(l => locate(id, l, strict = false))
       }
     }
     require(files.nonEmpty,
-      s"no files found for commits ($fromExclusive, $toInclusive] under $lakeDir")
+      s"no files found for commits ($fromExclusive, $toInclusive] under $root")
     // schema as of the range head — commits inside the range that predate
     // a widening null-fill under it
-    val declared = declaredReadSchema(fs, root, toInclusive)
-    files.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (mount, fl) =>
-        val r = spark.read.option("basePath", mount)
-        declared.fold(r)(r.schema).parquet(fl.map(_._2).distinct: _*)
-      }
-      .reduce(_ unionByName _)
+    scanMounts(spark, files, declaredReadSchema(fs, root, toInclusive))
   }
 
   /** CHANGE-DATA-FEED tail — the row-level consumption shape Delta serves
@@ -1110,22 +1209,23 @@ object LakeSink {
       s"empty change range ($fromExclusive, $toInclusive]")
     val (root, fs) = lakeFs(spark, lakeDir)
     require(fs.exists(ledgerDir(root)), s"no commit ledger under $lakeDir")
+    // ONE history index serves every append commit of the range
+    val hist = historyIndex(fs, root)
     val perCommit = ((fromExclusive + 1) to toInclusive).map { id =>
       val marker = markerPath(root, id)
       require(fs.exists(marker), s"change tail lost batch $id: its commit " +
         "marker has been pruned — tail before vacuum's ledgerKeep horizon passes")
       if (markerTagOf(fs, marker).exists(t => t == MarkerRewrite || t == MarkerDv)) {
-        val cdcDir = new Path(new Path(root, CdcRoot), id.toString)
-        if (!fs.exists(cdcDir)) throw new IllegalStateException(
+        if (!fs.exists(cdcDir(root, id))) throw new IllegalStateException(
           s"commit $id is a merge/delete with NO change record — it ran " +
             "with recordChanges = false (or vacuum pruned the record); its " +
             "row-level changes are unrecoverable from the rewritten " +
             s"leaves (or the DV sidecar's bare positions). Consume a fresh " +
             s"snapshot via readAsOf($id) instead")
-        spark.read.parquet(cdcDir.toString)
+        spark.read.parquet(cdcDir(root, id).toString)
           .withColumn("_commit", lit(id))
       } else {
-        tailCommits(spark, lakeDir, id - 1, id)
+        tailRange(spark, fs, root, hist, id - 1, id)
           .withColumn("_op", lit("insert"))
           .withColumn("_commit", lit(id))
       }
@@ -1216,7 +1316,6 @@ object LakeSink {
       val before = files.size
       if (before < minFiles) None
       else {
-        val tmp = new Path(new Path(root, TmpRoot), leaf.getName)
         // the leaf's files carry no event_date column (partitionBy strips
         // it), so a plain rewrite within the same leaf round-trips exactly.
         // `clusterBy` range-partitions + sorts the rewrite (Layout's
@@ -1229,7 +1328,11 @@ object LakeSink {
         // EITHER column; 1-D clustering prunes only its own column and
         // leaves the other unconstrained in every file
         val dvT = (df: DataFrame) => dvLive.fold(df)(applyDv(df, _))
-        val after =
+        // the rewrite is stamped with the ledger head; a lake without a
+        // ledger has no lineage and no history: swap without retention
+        val after = rewriteLeaf(spark, fs, root, leaf.getName, asOfHorizon,
+          retain = true, statsCols, "compaction", () => sweepHook(leaf.getName),
+          () => fenceEpoch.foreach(e => checkWriterFence(fs, root, e))) { tmp =>
           if (zorderBy.isEmpty)
             Layout.compactParquet(spark, leaf.toString, tmp.toString,
               targetFileBytes, clusterBy, transform = dvT)
@@ -1239,18 +1342,6 @@ object LakeSink {
               zorderBy.head, zorderBy(1), n, transform = dvT)
             n
           }
-        sweepHook(leaf.getName)
-        // the rewrite was a long job: re-validate the fence at the last
-        // instant before the swap renames — a zombie that paused here must
-        // die with the rewrite still safely in _compact_tmp (the live
-        // leaf untouched; the next recoverSweeps reaps the orphan)
-        fenceEpoch.foreach(e => checkWriterFence(fs, root, e))
-        asOfHorizon match {
-          case Some(b) =>
-            lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
-              root, leaf, tmp, b, statsCols)
-          // no ledger, no lineage, no history: swap without retention
-          case None => swapAside(fs, root, leaf, tmp, "compaction")
         }
         System.err.println(
           s"[lake] compacted ${leaf.getName}: $before -> $after files")
@@ -1308,12 +1399,16 @@ object LakeSink {
   private def cdcDir(root: Path, b: Long): Path = new Path(new Path(root, CdcRoot), b.toString)
 
   /** Write commit `b`'s change record (`_graft_cdc/<b>/`) durable-or-absent:
-    * staged under `.tmp<b>`, then renamed in.
+    * staged under `.tmp<b>`, then renamed in. A change record is O(churn)
+    * by its verb's contract, so it is written as ONE file — every later
+    * [[tailChanges]] read opens it — with `repartition(1)` rather than
+    * `coalesce(1)`, which would collapse the upstream pre-image join to
+    * one task too.
     */
   private def writeChangeRecord(fs: FileSystem, root: Path, b: Long, changes: DataFrame): Unit = {
     val dst = cdcDir(root, b)
     val tmp = new Path(dst.getParent, s".tmp$b")
-    changes.write.mode("overwrite").parquet(tmp.toString)
+    changes.repartition(1).write.mode("overwrite").parquet(tmp.toString)
     fs.mkdirs(dst.getParent)
     require(fs.rename(tmp, dst), s"change-record rename failed: $tmp -> $dst")
   }
@@ -1350,10 +1445,9 @@ object LakeSink {
       fs: FileSystem,
       root: Path,
       asOf: Long = Long.MaxValue): Option[DataFrame] = {
-    val dvRoot = new Path(root, DvRoot)
-    if (!fs.exists(dvRoot)) return None
-    val bound = math.min(asOf, maxCommittedId(fs, root))
-    val gens = numbered(fs, dvRoot)
+    // the ledger is listed only when a generation exists
+    lazy val bound = math.min(asOf, maxCommittedId(fs, root))
+    val gens = numbered(fs, new Path(root, DvRoot))
       .collect { case (id, d) if d.isDirectory && id <= bound => d.getPath.toString }
     if (gens.isEmpty) None else Some(spark.read.parquet(gens: _*))
   }
@@ -1431,12 +1525,7 @@ object LakeSink {
       recordChanges: Boolean = false,
       faultInjector: String => Unit = _ => ()): DvStats = {
     import org.apache.spark.sql.functions.{broadcast, concat, lit}
-    val (root, fs) = lakeFs(spark, lakeDir)
-    require(fs.exists(root), s"no lake at $lakeDir")
-    requireNotClone(fs, root, "deleteVectors")
-    val epoch = verbEpoch(fs, root, fenceEpoch)
-    recoverSweeps(fs, root)
-    val b = maxCommittedId(fs, root) + 1
+    val Verb(root, fs, epoch, b) = openVerb(spark, lakeDir, fenceEpoch, Some("deleteVectors"))
     require(b > 0, s"deletion vectors on $lakeDir need a ledgered lake (no " +
       "commits found) — lay the table down via appendBatch first")
     val dvGen = new Path(new Path(root, DvRoot), b.toString)
@@ -1483,11 +1572,8 @@ object LakeSink {
     // those same columns so a row deleted twice yields no second entry (and
     // no false pre-image in the change record)
     val scoped = {
-      val r = spark.read
-      val base = declaredReadSchema(fs, root).fold(r)(r.schema)
-        .option("basePath", root.toString)
-        .parquet(dates.map(d => new Path(root, s"$LeafPrefix$d").toString): _*)
-      val withIds = base
+      val withIds = scanOf(spark, Some(root), dates.map(d => new Path(root, s"$LeafPrefix$d")),
+          declaredReadSchema(fs, root))
         .withColumn("__d", col("event_date").cast("string"))
         .withColumn("__leaf", concat(lit("event_date="), col("__d")))
         .withColumn("__file", col("_metadata.file_name"))
@@ -1517,11 +1603,13 @@ object LakeSink {
         writeChangeRecord(fs, root, b, matched.drop("__d", "__leaf", "__file", "__pos")
           .withColumn("_op", lit("delete")))
       // the sidecar: (leaf, file, pos) parquet + the FS-readable target
-      // manifest, staged then renamed — durable-or-absent as one unit
+      // manifest, staged then renamed — durable-or-absent as one unit. It
+      // is O(deleted rows), so one file (see [[writeChangeRecord]]), which
+      // every later read's [[dvStore]] opens
       val tmp = new Path(new Path(root, DvRoot), s".tmp$b")
       matched.select(col("__leaf").as("leaf"), col("__file").as("file"),
           col("__pos").as("pos"))
-        .write.mode("overwrite").parquet(tmp.toString)
+        .repartition(1).write.mode("overwrite").parquet(tmp.toString)
       writeSmallFile(fs, new Path(tmp, DvTargetsFile),
         (targets :+ MarkerEnd).mkString("\n"))
       fs.mkdirs(dvGen.getParent)
@@ -1605,9 +1693,7 @@ object LakeSink {
 
   /** All complete stats lines under `_graft_stats` (torn sidecars skipped). */
   private def statsLines(fs: FileSystem, root: Path): Seq[String] = {
-    val dir = new Path(root, StatsRoot)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isFile).sortBy(_.getPath.getName)
+    children(fs, new Path(root, StatsRoot)).filter(_.isFile).sortBy(_.getPath.getName)
       .flatMap { s =>
         readSealed(fs, s.getPath).getOrElse {
           System.err.println(s"[lake] torn stats sidecar ${s.getPath.getName} — " +
@@ -1628,8 +1714,7 @@ object LakeSink {
     */
   private def foldStats(fs: FileSystem, root: Path, minSidecars: Int): Unit = {
     val statsDir = new Path(root, StatsRoot)
-    if (!fs.exists(statsDir)) return
-    val sidecars = fs.listStatus(statsDir).toSeq.filter(_.isFile).map(_.getPath)
+    val sidecars = children(fs, statsDir).filter(_.isFile).map(_.getPath)
     if (sidecars.size >= minSidecars) {
       val live = statsLines(fs, root).filter { l =>
         l.split('\t') match {
@@ -1648,12 +1733,8 @@ object LakeSink {
   private def loadStats(
       fs: FileSystem, root: Path,
       statsCol: String): Map[String, (BigDecimal, BigDecimal)] =
-    statsLines(fs, root).flatMap { l =>
-      l.split('\t') match {
-        case Array(key, c, mn, mx) if c == statsCol =>
-          Some(key -> (BigDecimal(mn), BigDecimal(mx)))
-        case _ => None
-      }
+    statsLines(fs, root).map(_.split('\t')).collect {
+      case Array(key, c, mn, mx) if c == statsCol => key -> (BigDecimal(mn), BigDecimal(mx))
     }.toMap
 
   /** How a pruned read went: files the listing found vs files the zone
@@ -1697,10 +1778,7 @@ object LakeSink {
         case None => true // no zone map: must scan
       }
     }
-    val all = {
-      val r = spark.read.option("basePath", root.toString)
-      declaredReadSchema(fs, root).fold(r)(r.schema)
-    }
+    val declared = declaredReadSchema(fs, root)
     def typed(df: DataFrame): DataFrame = {
       import org.apache.spark.sql.types._
       val (l, h) = df.schema(statsCol).dataType match {
@@ -1717,22 +1795,26 @@ object LakeSink {
       if (survivors.isEmpty)
         // every file pruned: keep the schema, plan nothing (Catalyst folds
         // the false filter to an empty relation — no scan is scheduled)
-        typed(all.parquet(files.map(_._2.toString): _*)).filter(lit(false))
-      else {
-        val scan = typed(all.parquet(survivors.map(_._2.toString): _*))
+        typed(scanOf(spark, Some(root), files.map(_._2), declared)).filter(lit(false))
+      else
         // merge-on-read deletes apply to the pruned live view too (zone
         // maps stay conservative over DV'd rows — pruning never widens)
-        dvStore(spark, fs, root).fold(scan)(applyDv(scan, _))
-      }
+        typed(scanOf(spark, Some(root), survivors.map(_._2), declared, dvStore(spark, fs, root)))
     (df, PruneReport(files.size, survivors.size))
   }
 
-  /** Stamp `tmp`'s parquet parts `gc<horizon>-p<k>`, retain the current
-    * leaf as the pre-rewrite generation under `_graft_history/<horizon>/`,
-    * and rename the rewrite in. Shared by compaction (content-preserving
-    * rewrite) and [[mergeInto]] (content-CHANGING rewrite) — the
-    * crash-safety and time-travel discipline is identical; only what sits
-    * in `tmp` differs:
+  /** COPY-ON-WRITE LEAF REWRITE shared by compaction, [[mergeInto]],
+    * [[purgeKeys]] and [[restoreTo]]: `write(tmp)` lays the leaf's new
+    * content down under `_compact_tmp/<leaf>`, `onWritten` fires (the
+    * verb's hook), and `fence` re-validates the writer at the last instant
+    * before the swap renames — the write was a long job, and a zombie that
+    * paused there must die with the rewrite still safely in `_compact_tmp`
+    * (the live leaf untouched; the next [[recoverSweeps]] reaps the
+    * orphan). The rewrite's parts are then stamped `gc<horizon>-p<k>`
+    * ([[Lineage]]) and swapped in. With `retain` (compaction's
+    * content-preserving rewrite, merge's and restore's content-CHANGING
+    * ones — the crash-safety and time-travel discipline is identical; only
+    * what sits in `tmp` differs):
     *
     *   - HISTORY-PRESERVING: the original leaf is renamed (not deleted)
     *     into `_graft_history/<horizon>/<leaf>` — the rename-aside that
@@ -1748,31 +1830,58 @@ object LakeSink {
     *     crash) finds the generation already stored: that copy holds the
     *     leaf's pre-rewrite state with FINER lineage (the current content
     *     derives from it) — keep it, drop the current copy.
+    *
+    * Without `retain` (purge) or without a horizon (a lake with no ledger:
+    * no lineage to stamp, no history) the swap is a [[swapAside]] — the
+    * pre-rewrite copy is renamed aside for crash-safety only, then
+    * deleted. Returns what `write` returned.
     */
-  private def lineageStampedSwap(
+  private def rewriteLeaf[A](
+      spark: SparkSession,
       fs: FileSystem,
-      conf: Configuration,
       root: Path,
-      leaf: Path,
-      tmp: Path,
-      horizon: Long,
-      statsCols: Seq[String] = Nil): Unit = {
-    val stamped = stampRewrite(fs, tmp, horizon)
-    // fresh zone maps for the rewrite (the original files' entries go
-    // stale and point at names that no longer exist — harmless; vacuum
-    // folds them away). Written BEFORE the swap so the entries exist the
-    // instant the files are live; a crashed swap leaves advisory entries
-    // for files recoverSweeps will promote or reap.
-    writeFileStats(fs, conf, root, s"c$horizon.${leaf.getName}",
-      stamped.map(leaf.getName -> _), statsCols)
-    val hist = new Path(new Path(new Path(root, HistoryRoot), horizon.toString),
-      leaf.getName)
+      leafName: String,
+      horizon: Option[Long],
+      retain: Boolean,
+      statsCols: Seq[String],
+      verb: String,
+      onWritten: () => Unit,
+      fence: () => Unit)(write: Path => A): A = {
+    val leaf = new Path(root, leafName)
+    val tmp = new Path(new Path(root, TmpRoot), leafName)
+    val written = write(tmp)
+    onWritten()
+    fence()
+    val stamped = horizon.toSeq.flatMap(b => Lineage.place(fs, tmp, tmp, Lineage.rewrite(b)))
+    horizon match {
+      case Some(b) if retain =>
+        // fresh zone maps for the rewrite (the original files' entries go
+        // stale and point at names that no longer exist — harmless; vacuum
+        // folds them away). Written BEFORE the swap so the entries exist the
+        // instant the files are live; a crashed swap leaves advisory entries
+        // for files recoverSweeps will promote or reap.
+        writeFileStats(fs, spark.sparkContext.hadoopConfiguration, root,
+          s"c$b.$leafName", stamped.map(leafName -> _), statsCols)
+        retireLeaf(fs, root, leafName, b)
+        require(fs.rename(tmp, leaf), s"rewrite swap failed for $leaf")
+      case _ => swapAside(fs, root, leaf, tmp, verb)
+    }
+    written
+  }
+
+  /** Retire live leaf `leafName` into generation `_graft_history/<horizon>/`
+    * — a rename, so the generation keeps the leaf's files and lineage. A
+    * generation that already stores the leaf (a same-horizon retry) keeps
+    * its copy and the live one is dropped.
+    */
+  private def retireLeaf(fs: FileSystem, root: Path, leafName: String, horizon: Long): Unit = {
+    val leaf = new Path(root, leafName)
+    val hist = new Path(new Path(new Path(root, HistoryRoot), horizon.toString), leafName)
     fs.mkdirs(hist.getParent)
     if (fs.exists(hist)) {
       fs.delete(leaf, true)
     } else if (fs.exists(leaf)) {
-      require(fs.rename(leaf, hist),
-        s"rewrite swap failed renaming $leaf into history")
+      require(fs.rename(leaf, hist), s"swap failed retiring $leaf into history")
     } else {
       // no live copy to retire — a restore RESURRECTING a leaf a prior
       // restore retired into history. The EMPTY generation dir records
@@ -1783,18 +1892,7 @@ object LakeSink {
       // deeper generation that holds the pre-retire content.
       fs.mkdirs(hist)
     }
-    require(fs.rename(tmp, leaf), s"rewrite swap failed for $leaf")
   }
-
-  /** Stamp a rewrite's parquet parts in `tmp` with commit lineage
-    * `gc<horizon>-p<k>`; returns the stamped files.
-    */
-  private def stampRewrite(fs: FileSystem, tmp: Path, horizon: Long): Seq[Path] =
-    parquetFiles(fs, tmp).zipWithIndex.map { case (f, i) =>
-      val dst = new Path(tmp, s"gc$horizon-p$i.snappy.parquet")
-      require(fs.rename(f.getPath, dst), s"lineage stamp rename failed: ${f.getPath} -> $dst")
-      dst
-    }
 
   /** SCHEMA REGISTRY — the Delta schema-in-log discipline from FS
     * primitives: the lake's data schema (WITHOUT the partition column)
@@ -1813,16 +1911,9 @@ object LakeSink {
   private def registeredSchema(
       fs: FileSystem, root: Path,
       asOf: Long = Long.MaxValue): Option[StructType] = {
-    val ledger = ledgerDir(root)
-    if (!fs.exists(ledger)) return None
-    val versions = fs.listStatus(ledger).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_schema."))
-      .flatMap { s =>
-        val id = s.getPath.getName.stripPrefix("_schema.")
-        if (id.nonEmpty && id.forall(_.isDigit) && id.toLong <= asOf)
-          Some(id.toLong -> s.getPath)
-        else None
-      }
+    val versions = children(fs, ledgerDir(root)).filter(_.isFile).flatMap { s =>
+      idAfter(s.getPath.getName, "_schema.").filter(_ <= asOf).map(_ -> s.getPath)
+    }
     if (versions.isEmpty) None
     else Some(org.apache.spark.sql.types.DataType
       .fromJson(readSmallFile(fs, versions.maxBy(_._1)._2))
@@ -1907,22 +1998,15 @@ object LakeSink {
         val srcPart =
           if (shadowed.isEmpty) srcSnap
           else srcSnap.filter(!col("event_date").cast("string").isin(shadowed: _*))
-        val localLeaves = leafDirs(fs, root).map(_.toString)
+        val localLeaves = leafDirs(fs, root)
         if (localLeaves.isEmpty) srcPart
-        else {
-          val r = spark.read.option("basePath", lakeDir)
-          val localRaw = declaredReadSchema(fs, root).fold(r)(r.schema)
-            .parquet(localLeaves: _*)
-          srcPart.unionByName(localRaw, allowMissingColumns = true)
-        }
+        else srcPart.unionByName(scanOf(spark, Some(root), localLeaves,
+          declaredReadSchema(fs, root)), allowMissingColumns = true)
       case None =>
-        val raw = declaredReadSchema(fs, root) match {
-          case Some(s) => spark.read.schema(s).parquet(lakeDir)
-          case None => spark.read.parquet(lakeDir)
-        }
-        // committed deletion vectors anti-apply here (merge-on-read); a lake
-        // with no `_graft_dv` pays nothing — the plan is exactly the raw scan
-        dvStore(spark, fs, root).fold(raw)(applyDv(raw, _))
+        // ONE directory scan of the root; committed deletion vectors
+        // anti-apply here (merge-on-read); a lake with no `_graft_dv` pays
+        // nothing — the plan is exactly the raw scan
+        scanOf(spark, None, Seq(root), declaredReadSchema(fs, root), dvStore(spark, fs, root))
     }
   }
 
@@ -2057,10 +2141,7 @@ object LakeSink {
     // O(retained ledger), which vacuum bounds
     def occCommits(): Seq[(Long, Seq[String])] =
       ledgerIds(fs, root).flatMap { id =>
-        markerTagOf(fs, markerPath(root, id)).map(_.split(' ').toSeq) match {
-          case Some(`MarkerOcc` +: rest) if rest.headOption.contains(writerId) => Some(id -> rest)
-          case _ => None
-        }
+        occTagOf(fs, markerPath(root, id)).filter(_.headOption.contains(writerId)).map(id -> _)
       }
     // exactly-once short-circuit: this batch already committed
     dedupKey.foreach { k =>
@@ -2077,13 +2158,8 @@ object LakeSink {
     val committedMine = occCommits().map(_._1).toSet
     leafDirs(fs, root).foreach { leaf =>
       fs.listStatus(leaf)
-        .filter { f =>
-          val n = f.getPath.getName
-          f.isFile && n.startsWith("gb") && n.contains(s"-w$writerId-") && {
-            val id = n.stripPrefix("gb").takeWhile(_.isDigit)
-            id.nonEmpty && !committedMine.contains(id.toLong)
-          }
-        }
+        .filter(f => f.isFile && Lineage.parse(f.getPath.getName).exists(l =>
+          l.writer.contains(writerId) && !committedMine.contains(l.id)))
         .foreach { f =>
           System.err.println(s"[lake] occ reap: uncommitted leftover ${f.getPath.getName}")
           fs.delete(f.getPath, false)
@@ -2115,19 +2191,25 @@ object LakeSink {
     carrySchemaForward(cur)
     // place staged parts into live leaves under my lineage names (no
     // committed file carries them: cur has no marker yet)
-    val placedLeaves = commitStaged(fs, root, staging, s"gb$cur-w$writerId-").map(_._1)
+    val placedLeaves = commitStaged(fs, root, staging, Lineage.occ(cur, writerId)).map(_._1)
     faultInjector("placed")
-    def rollback(): Unit = placedLeaves.foreach { l =>
-      fs.listStatus(new Path(root, l))
-        .filter(f => f.isFile && f.getPath.getName.startsWith(s"gb$cur-w$writerId-"))
-        .foreach(f => fs.delete(f.getPath, false))
+    // my files at the current tentative id, leaf by leaf
+    def mine(): Seq[(Path, FileStatus)] = placedLeaves.map(new Path(root, _)).flatMap { l =>
+      fs.listStatus(l).toSeq
+        .filter(f => f.isFile && f.getPath.getName.startsWith(Lineage.occ(cur, writerId)))
+        .map(l -> _)
+    }
+    // my placed files and my staging, out
+    def rollback(): Unit = {
+      mine().foreach(f => fs.delete(f._2.getPath, false))
+      fs.delete(staging, true)
     }
     val tag = Some((Seq(MarkerOcc, writerId) ++ dedupKey).mkString(" "))
     var attempt = 0
     while (true) {
       attempt += 1
       try checkShared()
-      catch { case e: Throwable => rollback(); fs.delete(staging, true); throw e }
+      catch { case e: Throwable => rollback(); throw e }
       try {
         writeCommitMarker(fs, new Path(ledger, cur.toString), cur,
           placedLeaves.sorted, tag)
@@ -2147,7 +2229,7 @@ object LakeSink {
           // fence path — otherwise its placed-but-uncommitted files stay
           // visible in live leaves as dirty reads and the staging leaks.
           if (!fs.exists(new Path(ledger, cur.toString))) {
-            rollback(); fs.delete(staging, true)
+            rollback()
             throw new IllegalStateException(
               s"OCC marker write failed for $writerId at $cur with no marker " +
                 s"present — IO failure, not a lost exchange; rolled back, " +
@@ -2162,7 +2244,6 @@ object LakeSink {
           val conflict = winnerLeaves.isEmpty || overlap.exists(_.nonEmpty)
           if (conflict || attempt >= maxAttempts) {
             rollback()
-            fs.delete(staging, true)
             throw new IllegalStateException(
               if (winnerLeaves.isEmpty)
                 s"OCC conflict: commit $cur landed with an unreadable (torn) " +
@@ -2180,16 +2261,11 @@ object LakeSink {
           // disjoint: carry my files forward to the next id and retry
           val next = cur + 1
           carrySchemaForward(next)
-          placedLeaves.foreach { l =>
-            fs.listStatus(new Path(root, l))
-              .filter(f => f.isFile &&
-                f.getPath.getName.startsWith(s"gb$cur-w$writerId-"))
-              .foreach { f =>
-                val dst = new Path(new Path(root, l),
-                  f.getPath.getName.replaceFirst(s"^gb$cur-", s"gb$next-"))
-                require(fs.rename(f.getPath, dst),
-                  s"occ forward rename failed for ${f.getPath}")
-              }
+          mine().foreach { case (l, f) =>
+            val dst = new Path(l, Lineage.occ(next, writerId) +
+              f.getPath.getName.stripPrefix(Lineage.occ(cur, writerId)))
+            require(fs.rename(f.getPath, dst),
+              s"occ forward rename failed for ${f.getPath}")
           }
           cur = next
       }
@@ -2280,13 +2356,8 @@ object LakeSink {
     val q = new Path(root, QuarantineRoot)
     require(fs.exists(q), s"no quarantine under $lakeDir")
     val gated: Seq[Long] = fs.listStatus(q).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("b"))
-      .map(_.getPath.getName.stripPrefix("b"))
-      .filter(_.forall(_.isDigit)).map(_.toLong)
-      .filter { id =>
-        val m = markerPath(root, id)
-        fs.exists(m) && markerTagOf(fs, m).contains(MarkerExpect)
-      }
+      .filter(_.isDirectory).flatMap(s => idAfter(s.getPath.getName, "b"))
+      .filter(committedAs(fs, root, _, MarkerExpect))
     spark.read.option("recursiveFileLookup", "true").parquet(q.toString)
       .filter(col("_commit_id").isin(gated: _*))
   }
@@ -2328,18 +2399,10 @@ object LakeSink {
     */
   private def shadowedLeaves(
       fs: FileSystem, root: Path): Set[String] = {
-    val dir = new Path(root, ShadowRoot)
-    if (!fs.exists(dir)) Set.empty
-    else {
-      fs.listStatus(dir).toSeq.filter(_.isFile).flatMap { m =>
-        val content = readSmallFile(fs, m.getPath).trim
-        val cowCommitted = content.nonEmpty && content.forall(_.isDigit) && {
-          val marker = new Path(ledgerDir(root), content)
-          fs.exists(marker) && markerTagOf(fs, marker).contains(MarkerCow)
-        }
-        if (cowCommitted) Some(m.getPath.getName) else None
-      }.toSet
-    }
+    children(fs, new Path(root, ShadowRoot)).filter(_.isFile)
+      .filter(m => idAfter(readSmallFile(fs, m.getPath).trim, "")
+        .exists(committedAs(fs, root, _, MarkerCow)))
+      .map(_.getPath.getName).toSet
   }
 
   /** SHALLOW CLONE — a zero-copy writable branch of `srcDir` pinned at
@@ -2364,9 +2427,8 @@ object LakeSink {
       spark: SparkSession,
       srcDir: String,
       dstDir: String): Long = {
-    val src = new Path(srcDir)
+    val (src, fs) = lakeFs(spark, srcDir)
     val dst = new Path(dstDir)
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(src), s"no lake at $srcDir")
     requireNotClone(fs, src, "cloning a clone")
     val asOf = maxCommittedId(fs, src)
@@ -2429,7 +2491,7 @@ object LakeSink {
     }
     mergeIntoImpl(spark, cloneDir, upserts, keyCol, deletes, tsCol,
       targetFileBytes, maxConcurrency = 8, fenceEpoch = None,
-      statsCols = Nil, recordChanges = false, faultInjector = _ => ())
+      statsCols = Nil, recordChanges = false, faultInjector = _ => (), cloneVerb = None)
   }
 
   /** Per-restore outcome: the commit the restore landed at, the snapshot
@@ -2455,7 +2517,7 @@ object LakeSink {
     * WHOSE REWRITE CONTENT IS THE SNAPSHOT, touching ONLY leaves that
     * changed after `asOf` (post-`asOf` lineage, or targeted by a
     * post-`asOf` deletion-vector generation — a DV flips logical content
-    * without moving files). Per changed leaf, [[lineageStampedSwap]] at
+    * without moving files). Per changed leaf, [[rewriteLeaf]] at
     * horizon `M` renames the pre-restore state into
     * `_graft_history/M/<leaf>` and swaps in `gc<M>` files holding the
     * snapshot content; a leaf with no snapshot content (born after
@@ -2475,7 +2537,7 @@ object LakeSink {
     * read-after-swap hazard), then the swaps are pure renames. A crash
     * anywhere re-runs idempotently: the marker is absent so `M` is
     * re-allocated, a half-swapped leaf still serves its snapshot via
-    * generation `M`'s fallback, and [[lineageStampedSwap]]'s
+    * generation `M`'s fallback, and [[rewriteLeaf]]'s
     * same-horizon branch converges. Fenced like every mutation; the
     * marker (tagged `#rewrite` — its files are rewrites, not appends)
     * lands LAST via the atomic commit exchange.
@@ -2492,24 +2554,18 @@ object LakeSink {
       asOf: Long,
       fenceEpoch: Option[Long] = None,
       faultInjector: String => Unit = _ => ()): RestoreStats = {
-    val (root, fs) = lakeFs(spark, lakeDir)
-    require(fs.exists(root), s"no lake at $lakeDir")
-    requireNotClone(fs, root, "restoreTo")
-    val epoch = verbEpoch(fs, root, fenceEpoch)
-    recoverSweeps(fs, root)
-    val head = maxCommittedId(fs, root)
+    val Verb(root, fs, epoch, m) = openVerb(spark, lakeDir, fenceEpoch, Some("restoreTo"))
+    val head = m - 1
     require(head >= 0, s"restore needs a ledgered lake (no commits under $lakeDir)")
     require(asOf >= 0 && asOf <= head,
       s"restore target $asOf outside the committed range [0, $head]")
     if (asOf == head) return RestoreStats(head, asOf, Nil, Nil)
-    val m = head + 1
 
     def lineageOf(n: String): Long = {
-      val digits = n.dropWhile(!_.isDigit).takeWhile(_.isDigit)
-      require((n.startsWith("gb") || n.startsWith("gc")) && digits.nonEmpty,
-        s"$n carries no batch lineage — this lake was not (only) written " +
-          "by LakeSink; restore undefined")
-      digits.toLong
+      val lineage = Lineage.parse(n)
+      require(lineage.nonEmpty, s"$n carries no batch lineage — this lake was " +
+        "not (only) written by LakeSink; restore undefined")
+      lineage.get.id
     }
     // leaves whose LOGICAL content moved after asOf via a deletion-vector
     // generation (file set unchanged — the listing alone would miss them)
@@ -2532,12 +2588,11 @@ object LakeSink {
     // leaves retired into _graft_history by a PRIOR restore are not live,
     // but the snapshot at asOf may still hold their rows — e.g. undoing a
     // restore (restoreTo(5) after an earlier restoreTo(2) retired a leaf
-    // born in (2, 5]). readAsOf serves them from their generation
-    // (histLeafNames); the restored LIVE view must RESURRECT them, or it
+    // born in (2, 5]). readAsOf serves them from their generation through
+    // the history index; the restored LIVE view must RESURRECT them, or it
     // silently diverges from readAsOf(asOf). Which of them have content at
     // asOf is decided by the staging write below.
-    val histOnly: Seq[String] = historyGens(fs, root)
-      .flatMap(g => leafDirs(fs, g._2).map(_.getName))
+    val histOnly: Seq[String] = historyIndex(fs, root).flatMap(_.leaves)
       .distinct.filterNot(liveLeaves.contains).sorted
     if (changed.isEmpty && histOnly.isEmpty) {
       // nothing moved since asOf (pure no-op commits in between) — still a
@@ -2574,30 +2629,22 @@ object LakeSink {
     // zone maps for the restored files, on every column the lake already
     // keeps them for (read from its sidecars) — without them readPruned
     // scans each restored leaf in full until a later rewrite
-    val statsCols = statsLines(fs, root).flatMap(_.split('\t') match {
-      case Array(_, c, _, _) => Some(c)
-      case _ => None
-    }).distinct.sorted
+    val statsCols = statsLines(fs, root).map(_.split('\t'))
+      .collect { case Array(_, c, _, _) => c }.distinct.sorted
     val tmpRoot = new Path(root, TmpRoot)
     fs.mkdirs(tmpRoot)
     (rewritten ++ resurrected).foreach { l =>
-      val tmp = new Path(tmpRoot, l)
-      fs.delete(tmp, true)
-      require(fs.rename(new Path(stage, l), tmp),
-        s"restore failed staging $l into the sweep namespace")
-      checkWriterFence(fs, root, epoch)
-      lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
-        root, new Path(root, l), tmp, m, statsCols)
+      rewriteLeaf(spark, fs, root, l, Some(m), retain = true, statsCols, "restore",
+        () => (), () => checkWriterFence(fs, root, epoch)) { tmp =>
+        fs.delete(tmp, true)
+        require(fs.rename(new Path(stage, l), tmp),
+          s"restore failed staging $l into the sweep namespace")
+      }
       faultInjector(s"swapped:$l")
     }
-    val gen = new Path(new Path(root, HistoryRoot), m.toString)
     retired.foreach { l =>
-      val hist = new Path(gen, l)
-      fs.mkdirs(gen)
       checkWriterFence(fs, root, epoch)
-      if (fs.exists(hist)) fs.delete(new Path(root, l), true)
-      else require(fs.rename(new Path(root, l), hist),
-        s"restore failed retiring $l into history")
+      retireLeaf(fs, root, l, m)
       faultInjector(s"retired:$l")
     }
     fs.delete(stage, true)
@@ -2633,7 +2680,7 @@ object LakeSink {
     *     dates is expressed as delete(old ts) + upsert(new ts).
     *
     *   - ONLY leaves holding matched keys are rewritten (one
-    *     [[lineageStampedSwap]] each — `gc<B>` stamp, pre-merge state
+    *     [[rewriteLeaf]] each — `gc<B>` stamp, pre-merge state
     *     retained under `_graft_history/<B>/`, so [[readAsOf]] serves
     *     pre-merge snapshots until [[vacuum]] prunes them); insert-only
     *     leaves take a plain `gb<B>` append through [[commitStaged]] —
@@ -2645,7 +2692,7 @@ object LakeSink {
     *     LAST via the atomic commit exchange. A crash at any instant
     *     re-runs idempotently: the same B is re-allocated (marker absent),
     *     a re-merged leaf converges (anti-join removes what the union
-    *     re-adds), [[lineageStampedSwap]]'s same-horizon branch keeps the
+    *     re-adds), [[rewriteLeaf]]'s same-horizon branch keeps the
     *     finer-lineage history copy, and [[commitStaged]] rolls back the
     *     crashed attempt's `gb<B>` files before renaming fresh ones in.
     *
@@ -2673,11 +2720,9 @@ object LakeSink {
     // a direct merge on a shallow clone would match only LOCAL rows and
     // silently insert duplicates of un-CoW'd source keys — [[cloneMerge]]
     // is the clone's merge verb (CoW first, then this impl)
-    requireNotClone(new Path(lakeDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration), new Path(lakeDir), "mergeInto")
     mergeIntoImpl(spark, lakeDir, upserts, keyCol, deletes, tsCol,
       targetFileBytes, maxConcurrency, fenceEpoch, statsCols, recordChanges,
-      faultInjector)
+      faultInjector, cloneVerb = Some("mergeInto"))
   }
 
   private def mergeIntoImpl(
@@ -2692,13 +2737,10 @@ object LakeSink {
       fenceEpoch: Option[Long],
       statsCols: Seq[String],
       recordChanges: Boolean,
-      faultInjector: String => Unit): MergeStats = {
+      faultInjector: String => Unit,
+      cloneVerb: Option[String]): MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, lit}
-    val (root, fs) = lakeFs(spark, lakeDir)
-    require(fs.exists(root), s"no lake at $lakeDir")
-    val epoch = verbEpoch(fs, root, fenceEpoch)
-    recoverSweeps(fs, root)
-    val b = maxCommittedId(fs, root) + 1
+    val Verb(root, fs, epoch, b) = openVerb(spark, lakeDir, fenceEpoch, cloneVerb)
     require(b > 0, s"merge into $lakeDir needs a ledgered lake (no commits " +
       "found) — lay the table down via appendBatch/datePartitioned first")
     val lakeSchema = rewriteSchema(spark, fs, root)
@@ -2755,13 +2797,8 @@ object LakeSink {
       val dvM = dvStore(spark, fs, root)
       val scoped: Option[DataFrame] =
         if (existing.isEmpty) None
-        else Some {
-          val scan = spark.read
-            .schema(lakeSchema.add("event_date", DateType))
-            .option("basePath", root.toString)
-            .parquet(existing.map(d => new Path(root, s"$LeafPrefix$d").toString): _*)
-          dvM.fold(scan)(applyDv(scan, _))
-        }
+        else Some(scanOf(spark, Some(root), existing.map(d => new Path(root, s"$LeafPrefix$d")),
+          Some(lakeSchema.add("event_date", DateType)), dvM))
       val matched: Set[String] = scoped.fold(Set.empty[String]) { sc =>
         sc.select(col(keyCol), col("event_date").cast("string").as("__d"))
           .join(broadcast(allKeys), Seq(keyCol, "__d"), "left_semi")
@@ -2782,8 +2819,7 @@ object LakeSink {
             "complete — keeping the first attempt's pre-images")
         else {
           val dated = srcUpserts.withColumn("event_date", to_date(col(tsCol)))
-          val upsertKeySet = srcUpserts.select(col(keyCol),
-            to_date(col(tsCol)).cast("string").as("__d")).distinct()
+          val upsertKeySet = upsertKeys.distinct()
           val changes = scoped match {
             case None => // brand-new dates only: every upsert is an insert
               dated.withColumn("_op", lit("insert"))
@@ -2819,29 +2855,23 @@ object LakeSink {
       def mergeOne(d: String): String = {
         val leafName = s"$LeafPrefix$d"
         val leaf = new Path(root, leafName)
-        val tmp = new Path(new Path(root, TmpRoot), leafName)
-        // declare the union schema: a leaf holding files from both sides
-        // of a widening must read every file, null-filling the old ones.
-        // DV'd rows are filtered out of the rewrite (materialized), never
-        // resurrected
-        val current = {
-          val scan = spark.read.schema(lakeSchema).parquet(leaf.toString)
-          dvM.fold(scan)(applyDv(scan, _))
+        rewriteLeaf(spark, fs, root, leafName, Some(b), retain = true, statsCols, "merge",
+          () => faultInjector(s"rewritten:$leafName"),
+          () => checkWriterFence(fs, root, epoch)) { tmp =>
+          // declare the union schema: a leaf holding files from both sides
+          // of a widening must read every file, null-filling the old ones.
+          // DV'd rows are filtered out of the rewrite (materialized), never
+          // resurrected
+          val current = scanOf(spark, None, Seq(leaf), Some(lakeSchema), dvM)
+          val keysHere = allKeys.filter(col("__d") === d).select(keyCol)
+          val upsertsHere = srcUpserts.filter(to_date(col(tsCol)).cast("string") === d)
+            .select(current.columns.map(col): _*)
+          val merged = current
+            .join(broadcast(keysHere), Seq(keyCol), "left_anti")
+            .unionByName(upsertsHere)
+          merged.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
+            .write.mode("overwrite").parquet(tmp.toString)
         }
-        val keysHere = allKeys.filter(col("__d") === d).select(keyCol)
-        val upsertsHere = srcUpserts.filter(to_date(col(tsCol)).cast("string") === d)
-          .select(current.columns.map(col): _*)
-        val merged = current
-          .join(broadcast(keysHere), Seq(keyCol), "left_anti")
-          .unionByName(upsertsHere)
-        merged.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
-          .write.mode("overwrite").parquet(tmp.toString)
-        faultInjector(s"rewritten:$leafName")
-        // the rewrite was a Spark job — re-validate at the last instant
-        // before the swap, same as compaction
-        checkWriterFence(fs, root, epoch)
-        lineageStampedSwap(fs, spark.sparkContext.hadoopConfiguration,
-          root, leaf, tmp, b, statsCols)
         leafName
       }
       val rewritten = fanOut(matched.toSeq.sorted, maxConcurrency)(mergeOne)
@@ -2946,67 +2976,53 @@ object LakeSink {
       fenceEpoch: Option[Long] = None,
       faultInjector: String => Unit = _ => ()): PurgeStats = {
     import org.apache.spark.sql.functions.broadcast
-    val (root, fs) = lakeFs(spark, lakeDir)
-    require(fs.exists(root), s"no lake at $lakeDir")
-    requireNotClone(fs, root, "purgeKeys")
-    val epoch = verbEpoch(fs, root, fenceEpoch)
-    recoverSweeps(fs, root)
-    val b = maxCommittedId(fs, root) + 1
+    val Verb(root, fs, epoch, b) = openVerb(spark, lakeDir, fenceEpoch, Some("purgeKeys"))
     require(b > 0, s"purge on $lakeDir needs a ledgered lake (no commits " +
       "found) — purge stamps its rewrites with a commit id")
     val keySet = keys.select(col(keyCol)).distinct().cache()
     try {
       val lakeSchema = rewriteSchema(spark, fs, root)
+      val datedSchema = Some(lakeSchema.add("event_date", DateType))
       val dvP = dvStore(spark, fs, root)
-      // mounts are the root and listed history generations: both exist
-      def touchedLeafNames(mount: Path): Seq[String] = {
-        val leaves = leafDirs(fs, mount)
-        if (leaves.isEmpty) return Seq.empty
-        val scan = spark.read
-          .schema(lakeSchema.add("event_date", DateType))
-          .option("basePath", mount.toString)
-          .parquet(leaves.map(_.toString): _*)
-        scan.select(col(keyCol), col("event_date").cast("string").as("__d"))
+      // mounts are the root and indexed history generations: both exist
+      def touchedLeafNames(mount: Path, leaves: Seq[String]): Seq[String] =
+        if (leaves.isEmpty) Seq.empty
+        else scanOf(spark, Some(mount), leaves.map(new Path(mount, _)), datedSchema)
+          .select(col(keyCol), col("event_date").cast("string").as("__d"))
           .join(broadcast(keySet), Seq(keyCol), "left_semi")
           .select("__d").distinct().collect()
           .map(d => s"$LeafPrefix${d.getString(0)}").sorted.toSeq
-      }
 
-      // LIVE rewrite: copy-on-write WITHOUT retention, gc<B>-stamped
-      val touchedLive = touchedLeafNames(root)
+      // LIVE rewrite: copy-on-write WITHOUT retention, gc<B>-stamped (the
+      // purge commit's lineage)
+      val touchedLive = touchedLeafNames(root, leafDirs(fs, root).map(_.getName))
       var purged = 0L
       def purgeOne(leafName: String): Unit = {
         val leaf = new Path(root, leafName)
-        val tmp = new Path(new Path(root, TmpRoot), leafName)
-        val scan = spark.read.schema(lakeSchema).parquet(leaf.toString)
-        val current = dvP.fold(scan)(applyDv(scan, _)) // materialize DVs too
-        val kept = current.join(broadcast(keySet), Seq(keyCol), "left_anti")
-        kept.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
-          .write.mode("overwrite").parquet(tmp.toString)
-        stampRewrite(fs, tmp, b) // the purge commit's lineage
-        checkWriterFence(fs, root, epoch)
-        swapAside(fs, root, leaf, tmp, "purge")
+        rewriteLeaf(spark, fs, root, leafName, Some(b), retain = false, Nil, "purge",
+          () => (), () => checkWriterFence(fs, root, epoch)) { tmp =>
+          val current = scanOf(spark, None, Seq(leaf), Some(lakeSchema), dvP) // materialize DVs too
+          val kept = current.join(broadcast(keySet), Seq(keyCol), "left_anti")
+          kept.repartition(rewriteFileCount(parquetFiles(fs, leaf), targetFileBytes))
+            .write.mode("overwrite").parquet(tmp.toString)
+        }
         faultInjector(s"rewritten:$leafName")
       }
       if (touchedLive.nonEmpty) {
-        val scanAll = spark.read
-          .schema(lakeSchema.add("event_date", DateType))
-          .option("basePath", root.toString)
-          .parquet(touchedLive.map(l => new Path(root, l).toString): _*)
-        val liveAll = dvP.fold(scanAll)(applyDv(scanAll, _))
+        val liveAll = scanOf(spark, Some(root), touchedLive.map(new Path(root, _)), datedSchema, dvP)
         purged = liveAll.join(broadcast(keySet), Seq(keyCol), "left_semi").count()
       }
       fanOut(touchedLive, maxConcurrency)(purgeOne)
 
       // HISTORY erasure: destroy every generation-leaf holding a match
       var droppedHist = 0
-      historyGens(fs, root).foreach { case (_, g) =>
-        touchedLeafNames(g).foreach { l =>
-          fs.delete(new Path(g, l), true)
+      historyIndex(fs, root).foreach { g =>
+        touchedLeafNames(g.dir, g.leaves.toSeq.sorted).foreach { l =>
+          fs.delete(new Path(g.dir, l), true)
           droppedHist += 1
-          System.err.println(s"[lake] purge erased history ${g.getName}/$l")
+          System.err.println(s"[lake] purge erased history ${g.dir.getName}/$l")
         }
-        if (fs.listStatus(g).isEmpty) fs.delete(g, true)
+        if (fs.listStatus(g.dir).isEmpty) fs.delete(g.dir, true)
       }
 
       // CHANGE-RECORD erasure: rewrite records holding the key (pre/post
@@ -3016,9 +3032,10 @@ object LakeSink {
       numbered(fs, cdcRoot).filter(_._2.isDirectory).foreach { case (_, d) =>
         val rec = spark.read.parquet(d.getPath.toString)
         if (!rec.join(broadcast(keySet), Seq(keyCol), "left_semi").isEmpty) {
+          // one file, like every change record ([[writeChangeRecord]])
           val tmp = new Path(cdcRoot, s".purge${d.getPath.getName}")
           rec.join(broadcast(keySet), Seq(keyCol), "left_anti")
-            .write.mode("overwrite").parquet(tmp.toString)
+            .repartition(1).write.mode("overwrite").parquet(tmp.toString)
           fs.delete(d.getPath, true)
           require(fs.rename(tmp, d.getPath),
             s"purged change-record rename failed for ${d.getPath}")
@@ -3038,7 +3055,8 @@ object LakeSink {
       // gc<b> stamp can only be a crashed attempt at THIS id: every
       // committed rewrite's id has a marker, which caps allocation above it
       val stampedLeaves = leafDirs(fs, root)
-        .filter(l => fs.listStatus(l).exists(f => f.isFile && f.getPath.getName.startsWith(s"gc$b-")))
+        .filter(l => fs.listStatus(l).exists(f =>
+          f.isFile && f.getPath.getName.startsWith(Lineage.rewrite(b))))
         .map(_.getName)
       if (stampedLeaves.isEmpty && droppedHist == 0 && cdcRewritten == 0) {
         // nothing matched anywhere and no crashed attempt to complete:
@@ -3072,21 +3090,16 @@ object LakeSink {
     * → promote the rewrite rather than discard data.
     */
   private def recoverSweeps(fs: FileSystem, root: Path): Unit = {
-    val oldRoot = new Path(root, OldRoot)
-    if (fs.exists(oldRoot)) fs.listStatus(oldRoot).foreach { o =>
-      val target = new Path(root, o.getPath.getName)
-      if (!fs.exists(target)) {
-        System.err.println(s"[lake] recovering interrupted sweep of ${o.getPath.getName}")
-        require(fs.rename(o.getPath, target), s"recovery rename failed for $target")
-      } else fs.delete(o.getPath, true)
-    }
-    val tmpRoot = new Path(root, TmpRoot)
-    if (fs.exists(tmpRoot)) fs.listStatus(tmpRoot).foreach { t =>
-      val target = new Path(root, t.getPath.getName)
-      if (!fs.exists(target)) {
-        System.err.println(s"[lake] promoting stranded rewrite ${t.getPath.getName}")
-        require(fs.rename(t.getPath, target), s"promotion rename failed for $target")
-      } else fs.delete(t.getPath, true)
-    }
+    // each child of `dir` is renamed back to its missing target, or dropped
+    def heal(dir: String, healing: String, rename: String): Unit =
+      children(fs, new Path(root, dir)).foreach { c =>
+        val target = new Path(root, c.getPath.getName)
+        if (!fs.exists(target)) {
+          System.err.println(s"[lake] $healing ${c.getPath.getName}")
+          require(fs.rename(c.getPath, target), s"$rename rename failed for $target")
+        } else fs.delete(c.getPath, true)
+      }
+    heal(OldRoot, "recovering interrupted sweep of", "recovery")
+    heal(TmpRoot, "promoting stranded rewrite", "promotion")
   }
 }

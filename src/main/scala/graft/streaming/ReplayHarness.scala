@@ -1463,7 +1463,7 @@ object ReplayHarness {
     *     and only the tail — must deliver;
     *   - the tail is the plain file-stream source over the lake plus a
     *     LINEAGE FILTER on the per-batch deterministic file names
-    *     (`g[bc]<id>-` with id > N): pre-horizon files are read-and-
+    *     ([[LakeSink.Lineage.idOf]] > N): pre-horizon files are read-and-
     *     dropped once at bootstrap (the checkpointed source never re-lists
     *     a processed path), so the steady-state tail pays only for new
     *     files. At 100 TB the once-only bootstrap pass is the cost of NOT
@@ -1508,8 +1508,7 @@ object ReplayHarness {
       def drain(): Unit =
         startBatchDirSink(spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "7").parquet(lakeDir)
-          .filter(regexp_extract(input_file_name(), "/g[bc](\\d+)-", 1)
-            .cast("long") > horizon)
+          .filter(LakeSink.Lineage.idOf(input_file_name()) > horizon)
           .select("event_id", "event_date", "event_type", "value"),
           "append", ckpt, tailOut).awaitTermination()
       drain()

@@ -58,42 +58,68 @@ class LakeLayoutSpec extends AnyFunSuite {
       s"## $rel" +: new String(Files.readAllBytes(root.resolve(rel)), UTF_8)
         .split("\n", -1).toSeq
     }
-    val rows = LakeSink.readLake(spark, lake)
-      .select("event_id", "ts", "user_id", "event_type", "value", "event_date")
-      .collect().map(_.mkString(",")).sorted.toSeq
-    ("# paths" +: paths) ++ ("# files" +: texts) ++ ("# rows" +: rows)
+    ("# paths" +: paths) ++ ("# files" +: texts) ++
+      ("# rows" +: rows(LakeSink.readLake(spark, lake)))
   }
 
-  test("a fixed verb sequence lays down the recorded on-disk format") {
+  private val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "event_date")
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(cols.head, cols.tail: _*).collect().map(_.mkString(",")).sorted.toSeq
+
+  /** The fixed verb sequence up to the restore: streaming batches 0-2 (with
+    * a scoped sweep), an append (3), a recorded merge (4), a recorded
+    * deletion-vector delete (5) and a restore to 3 (6). `onCommit(k, rows)`
+    * fires after each commit k with the rows it appended (none for the
+    * rewrite and deletion-vector commits).
+    */
+  private def layDown(lake: String)(onCommit: (Long, Seq[Event]) => Unit): Unit = {
     import spark.implicits._
-    val lake = GraftTestSpark.tmpDir("lake_layout") + "/t"
     val sink = LakeSink.datePartitioned(lake, compactEvery = 2,
       minFilesToCompact = 2, statsCols = statsCols)
     // batches 0-2 through the streaming sink; batch 1 triggers the scoped
     // sweep (event_date 1 and 2 hold two files each, 3 holds one)
-    sink(Seq(ev(1, 1, 1.0), ev(2, 1, 2.0), ev(3, 2, 3.0), ev(4, 2, 4.0)).toDF(), 0L)
-    sink(Seq(ev(5, 1, 5.0), ev(6, 1, 6.0), ev(7, 2, 7.0), ev(8, 2, 8.0),
-      ev(9, 3, 9.0), ev(10, 3, 10.0)).toDF(), 1L)
-    sink(Seq(ev(11, 2, 11.0), ev(12, 2, 12.0), ev(13, 3, 13.0),
-      ev(14, 3, 14.0)).toDF(), 2L)
-    assert(LakeSink.appendBatch(spark, lake,
-      Seq(ev(15, 4, 15.0), ev(16, 4, 16.0)).toDF(), statsCols = statsCols) == 3L)
+    val batches = Seq(
+      Seq(ev(1, 1, 1.0), ev(2, 1, 2.0), ev(3, 2, 3.0), ev(4, 2, 4.0)),
+      Seq(ev(5, 1, 5.0), ev(6, 1, 6.0), ev(7, 2, 7.0), ev(8, 2, 8.0),
+        ev(9, 3, 9.0), ev(10, 3, 10.0)),
+      Seq(ev(11, 2, 11.0), ev(12, 2, 12.0), ev(13, 3, 13.0), ev(14, 3, 14.0)))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      sink(b.toDF(), i.toLong)
+      onCommit(i.toLong, b)
+    }
+    val appended = Seq(ev(15, 4, 15.0), ev(16, 4, 16.0))
+    assert(LakeSink.appendBatch(spark, lake, appended.toDF(), statsCols = statsCols) == 3L)
+    onCommit(3L, appended)
     // rewrites day 1 (update 5) and day 2 (delete 11); appends day 5
     val m = LakeSink.mergeInto(spark, lake,
       Seq(ev(5, 1, 50.0), ev(17, 5, 17.0)).toDF(), "event_id",
       Seq(ev(11, 2, 0.0)).toDF().select("event_id", "ts"),
       statsCols = statsCols, recordChanges = true)
     assert(m.commitId == 4L)
+    onCommit(4L, Nil)
     val dv = LakeSink.deleteVectors(spark, lake,
       Seq(ev(13, 3, 0.0)).toDF().select("event_id", "ts"), "event_id",
       recordChanges = true)
     assert(dv.commitId == 5L && dv.deletedRows == 1L)
+    onCommit(5L, Nil)
     val r = LakeSink.restoreTo(spark, lake, asOf = 3L)
     assert(r.commitId == 6L)
-    val afterRestore = snapshot(lake)
+    onCommit(6L, Nil)
+  }
+
+  /** Vacuum the laid-down lake: drops day 1, prunes markers 0-3. */
+  private def vacuumLake(lake: String): Unit = {
     val (dropped, pruned) = LakeSink.vacuum(spark, lake,
       before = java.time.LocalDate.parse("2024-03-02"), ledgerKeep = 2L)
     assert(dropped == Seq("event_date=2024-03-01") && pruned == 4)
+  }
+
+  test("a fixed verb sequence lays down the recorded on-disk format") {
+    val lake = GraftTestSpark.tmpDir("lake_layout") + "/t"
+    layDown(lake)((_, _) => ())
+    val afterRestore = snapshot(lake)
+    vacuumLake(lake)
     val actual = (("=== after restoreTo" +: afterRestore) ++
       ("=== after vacuum" +: snapshot(lake))).mkString("\n") + "\n"
 
@@ -108,6 +134,36 @@ class LakeLayoutSpec extends AnyFunSuite {
           s"line ${i + 1}: actual '$a' vs expected '$e'" }
       fail(s"on-disk layout differs from $golden (${firstDiff.getOrElse("length")}); " +
         s"actual written to $out")
+    }
+  }
+
+  test("readAsOf and tailCommits agree with the live view at every commit") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, to_date}
+    val lake = GraftTestSpark.tmpDir("lake_layout_asof") + "/t"
+    val live = scala.collection.mutable.Map.empty[Long, Seq[String]]
+    val appended = scala.collection.mutable.Map.empty[Long, Seq[String]]
+    layDown(lake) { (k, input) =>
+      live(k) = rows(LakeSink.readLake(spark, lake))
+      if (input.nonEmpty)
+        appended(k) = rows(input.toDF().withColumn("event_date", to_date(col("ts"))))
+    }
+    (0L to 6L).foreach { k =>
+      assert(rows(LakeSink.readAsOf(spark, lake, k)) == live(k), s"readAsOf($k)")
+    }
+    assert(appended.keySet == Set(0L, 1L, 2L, 3L))
+    appended.foreach { case (k, input) =>
+      assert(rows(LakeSink.tailCommits(spark, lake, k - 1, k)) == input, s"tailCommits($k)")
+    }
+    // vacuum keeps markers and history generations from 4 on and drops
+    // day 1: inside that window every snapshot still matches the live view
+    // (minus day 1); below it a snapshot either fails loudly or is whole
+    vacuumLake(lake)
+    val kept = live.map { case (k, rs) => k -> rs.filterNot(_.endsWith(",2024-03-01")) }
+    (0L to 6L).foreach { k =>
+      val got = scala.util.Try(rows(LakeSink.readAsOf(spark, lake, k)))
+      if (k >= 4L) assert(got.toOption.contains(kept(k)), s"readAsOf($k) after vacuum: $got")
+      else assert(got.isFailure || got.get == kept(k), s"readAsOf($k) after vacuum: $got")
     }
   }
 }
