@@ -3,36 +3,30 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-ladder probe for the three operators whose joins became
-  * size-adaptive in round 3 (d4 LSH verify, e1 embedding near-dup, t6
-  * TF-IDF): runs each on 1x/4x/16x synthetic multiples of the corpus and
-  * prints per-step wall times as one JSON line. The multiplied corpus gives
-  * every clone distinct ids (shifted doc_id/vec_id) and perturbed content
-  * (a suffix token per clone / one perturbed vector element), so candidate
-  * structures GROW with the corpus instead of collapsing onto duplicate
-  * keys.
+/** Scale ladders for the operators whose cost claims are about growth:
+  * each rung runs one operator over growing synthetic multiples of the
+  * fixture (or a growing dial: probes, churn, shards, touched leaves) and
+  * prints its wall times, plus any exact counts, as one JSON line. The
+  * rungs are the IVF-PQ lifecycle (`ivfpq` build, `ivfpqprobes`,
+  * `ivfpqscan`, `ivfpqingest`, `ivfpqmask`, `filteredann`, `ivfpqdrift`),
+  * the `knnjoin` cell-pair join, the lake verbs (`lakesweep`, `lakemerge`,
+  * `lakeskip`, `lakedv`), the hot-key sharded top-k (`hotkey`) and the
+  * live-compaction re-delivery cost (`livecompact`). Multiplied
+  * embeddings give every clone a shifted vec_id and one perturbed
+  * element, so candidate structures grow with the corpus instead of
+  * collapsing onto duplicate keys.
   *
   * This is evidence, not proof: near-linear growth here means the shapes
   * hold while relative relation sizes shift; the 100x claim rests on the
-  * plan invariants guarded in PlanShapeSpec (no corpus-sized broadcast
-  * hints, no arrays on the band-key shuffle).
+  * plan invariants guarded in PlanShapeSpec. The rungs whose results are
+  * recorded in BENCH_NOTES.md and no longer run (the d4/e1/t6/c1/d9/c3/
+  * t10/c4/c5/t12 corpus ladder, d12skew, d13boiler, c45/c45hd, bm25, bpe
+  * and mmr) are described there.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleProbe"
+  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleProbe lakedv"
   */
 object ScaleProbe {
-
-  /** documents unioned `k` times: clone i shifts doc_id by i*10M and appends
-    * a clone-specific token so normalized fingerprints and word sets differ.
-    */
-  private def docsTimes(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val base = graft.core.Tables.load(spark, dir, "documents")
-    (0 until k).map { i =>
-      base.select(
-        (col("doc_id") + lit(i.toLong * 10_000_000L)).as("doc_id"),
-        concat(col("text"), lit(s" clonetok$i")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ union _)
-  }
 
   /** embeddings unioned `k` times with shifted vec_id and the first element
     * nudged per clone (keeps vectors near their original — the LSH buckets
@@ -56,384 +50,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.GraftSession.getOrCreate()
-    // `runMain graft.ScaleProbe d12skew|c45` runs one phase (iteration aid)
+    // `runMain graft.ScaleProbe ivfpq|lakedv|...` runs one rung (iteration aid)
     val phase = args.headOption.getOrElse("all")
-    val ladder = if (phase == "all") Seq(1, 4, 16) else Seq.empty[Int]
-
-    val results = ladder.map { k =>
-      val docs = docsTimes(spark, dir, k).cache()
-      val vecs = vecsTimes(spark, dir, k).cache()
-      docs.count(); vecs.count() // materialize inputs outside the timings
-      docs.createOrReplaceTempView("probe_documents")
-      vecs.createOrReplaceTempView("probe_embeddings")
-
-      // d4 shape over the multiplied docs: signature -> capped bands ->
-      // paired candidates -> doc_id-keyed verify join (the size-adaptive one)
-      val d4t = time {
-        val sig = docs.selectExpr("doc_id", "word_hashes(text) AS whashes")
-          .selectExpr("doc_id", "minhash16(whashes) AS sig")
-        val bands = sig.select(col("doc_id"), col("sig"),
-            explode(expr("sequence(0, 1)")).as("band_idx"))
-          .selectExpr("doc_id", "band_idx",
-            "md5(array_join(transform(slice(sig, 8*band_idx + 1, 8), x -> CAST(x AS STRING)), '-')) AS band_key")
-        val sizes = bands.groupBy("band_idx", "band_key").agg(count(lit(1)).as("c"))
-        val oversize = sizes.filter(col("c") > graft.operators.DedupOps.BucketCap)
-        val kept = bands.join(broadcast(oversize.select("band_idx", "band_key")),
-          Seq("band_idx", "band_key"), "left_anti")
-        val cand = kept.as("x").join(kept.as("y"),
-            col("x.band_idx") === col("y.band_idx") &&
-              col("x.band_key") === col("y.band_key") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-        val sets = docs.selectExpr("doc_id", "array_sort(array_distinct(word_hashes(text))) AS ws")
-          .withColumn("sz", size(col("ws")))
-        cand
-          .join(sets.select(col("doc_id").as("a"), col("ws").as("wsa"), col("sz").as("sza")), Seq("a"))
-          .join(sets.select(col("doc_id").as("b"), col("ws").as("wsb"), col("sz").as("szb")), Seq("b"))
-          .select(floor(expr("sorted_intersect_count(wsa, wsb)").cast("double")
-            / (col("sza") + col("szb") - expr("sorted_intersect_count(wsa, wsb)")) * 20).as("sim_bucket"))
-          .groupBy("sim_bucket").agg(count(lit(1)))
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // e1 shape over multiplied embeddings: banded candidates ->
-      // vec_id-keyed verify. Geometry SCALES with the corpus: planes-per-
-      // band r grows by log2(k) so band-bucket populations stay bounded
-      // (fixture k=1 keeps the production 2x3 key; 16x uses 2x7 = 128
-      // buckets/band). With the fixed 6-bit key this stage measured 68 s at
-      // 16x — quadratic in corpus size — vs near-linear with the widened key.
-      // r = 3 + log2(k) holds per-bucket population ~constant (N/2^r)
-      val r = 3 + (31 - Integer.numberOfLeadingZeros(k)) // 3, 5, 7 for k = 1, 4, 16
-      val e1t = time {
-        val sim = graft.operators.SimilarityOps
-        val e = if (k == 1) sim.bucketed(vecs) else sim.bucketedWith(vecs, 2 * r)
-        val cand = sim.bandCandidatePairs(e, sim.E1Bands, 2 * r)
-        cand
-          .join(e.selectExpr("vec_id AS a", "embedding AS aemb", "nrm AS anrm"), Seq("a"))
-          .join(e.selectExpr("vec_id AS b", "embedding AS bemb", "nrm AS bnrm"), Seq("b"))
-          .selectExpr("a", "b", "vec_dot(aemb, bemb) / (anrm * bnrm) AS cos")
-          .filter(col("cos") >= 0.4)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // t6 shape: tf + df aggs, term-keyed join (vocabulary grows with clones)
-      val t6t = time {
-        val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        val df = toks.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
-        val n = docs.agg(count(lit(1)).as("n"))
-        val scored = tf.join(df, Seq("term")).join(broadcast(n))
-          .select(col("doc_id"), col("term"),
-            round(col("tf") * log(col("n").cast("double") / col("df")), 4).as("tfidf"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("term"))
-        scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // c1 shape: connected components over a k-multiplied near-dup pair
-      // graph — the REAL 1x pair set cloned with disjoint id ranges, so the
-      // graph grows k-fold while its diameter stays fixed. That isolates the
-      // two scale axes of the iterative op: round COUNT is topology-bound
-      // (log diameter, constant here) and per-round cost is linear in edges
-      // — so wall time should grow sub-linearly in k (fixed per-round job
-      // overhead amortizes).
-      val pairs1 = graft.operators.DedupOps.simhashNearDupPairs(spark, dir).cache()
-      val nPairs = pairs1.count()
-      val pairsK = (0 until k).map { i =>
-        pairs1.select((col("a") + lit(i.toLong * 10_000_000L)).as("a"),
-          (col("b") + lit(i.toLong * 10_000_000L)).as("b"))
-      }.reduce(_ union _)
-      val c1t = time {
-        graft.operators.ClusterOps.connectedComponents(pairsK)
-          .write.format("noop").mode("overwrite").save()
-      }
-      pairs1.unpersist()
-
-      // d9 shape over the multiplied docs. The df cap scales with the
-      // corpus multiple: boilerplate is a RELATIVE frequency notion, so a
-      // fixed absolute cap at 16x would reclassify every shared shingle as
-      // boilerplate and the probe would measure an empty join.
-      val d9t = time {
-        graft.operators.DedupOps
-          .decontaminationCensus(docs, graft.operators.DedupOps.ContamDfCap * k)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // c3 shape: k-means assignment + centroid update over multiplied
-      // vectors — centroid count is fixed (k=8 broadcast rows), so both
-      // Lloyd stages are linear scans; this rung verifies that holds.
-      val c3t = time {
-        graft.operators.ClusterOps.kmeansCensus(vecs)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // t10 shape: unigram-LM build + term-keyed scoring join — vocabulary
-      // grows with clones (each adds clone tokens), split sizes grow with k.
-      val t10t = time {
-        graft.functions.TextOps.unigramNll(docs)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // c4 shape: cluster-then-pair semantic dedup. The cluster count
-      // scales WITH the corpus (k-means k ∝ N — the SemDeDup production
-      // setting), so per-cluster population and with it the within-cluster
-      // pair scan stay bounded; a fixed k would grow the pair stage
-      // quadratically, which is exactly what clustering-first exists to
-      // prevent.
-      val c4t = time {
-        graft.operators.ClusterOps
-          .semdedupCensus(vecs, graft.operators.ClusterOps.KMeansK * k)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // c5 shape: the same census through TWO-LEVEL assignment — scored
-      // candidate pairs drop from N·k (c4's brute assignment) to
-      // N·(k1 + k/k1) with k1 ~ sqrt(k); the rung measures how much of
-      // c4's superlinear growth the hierarchy removes.
-      val kTot = graft.operators.ClusterOps.KMeansK * k
-      val k1 = math.max(2, math.ceil(math.sqrt(kTot.toDouble)).toInt)
-      val c5t = time {
-        graft.operators.ClusterOps
-          .semdedupCensusFrom(
-            graft.operators.ClusterOps.kmeansAssignHier(vecs, kTot, k1), vecs)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      // t12 shape: frequent-span scrub over the multiplied docs. The df
-      // floor scales with the corpus multiple (relative-frequency notion,
-      // same reasoning as d9's cap above): cloned docs multiply every
-      // span's df by k, so a fixed floor would reclassify the whole corpus
-      // as boilerplate and measure a degenerate join.
-      val t12t = time {
-        graft.functions.TextOps
-          .boilerplateScrub(docs, graft.functions.TextOps.BoilerDf * k)
-          .write.format("noop").mode("overwrite").save()
-      }
-
-      docs.unpersist(); vecs.unpersist()
-      System.gc()
-      val steps = Seq("d4" -> d4t, "e1" -> e1t, "t6" -> t6t, "c1" -> c1t,
-        "d9" -> d9t, "c3" -> c3t, "t10" -> t10t, "c4" -> c4t, "c5" -> c5t,
-        "t12" -> t12t)
-      System.err.println(
-        f"[scale] ${k}%2dx  " +
-          steps.map { case (n, t) => f"$n=$t%6.2f s" }.mkString("  ") +
-          s" (${nPairs * k} edges)")
-      k -> steps
-    }
-
-    // d12 skew rung: a planted mega-duplicate cluster (c near-identical
-    // docs sharing a 60-token base, two unique tokens each → pairwise
-    // J ≈ 0.94) drives even the cluster's rarest SHARED shingle to df = c,
-    // so capless prefix candidates grow as C(c,2) — the named worst case.
-    // With the df cap, those frequent prefix entries are skipped and the
-    // candidate count stays flat in c (the cluster's own pairs are the
-    // documented recall trade; exact dedup (d1/d2) upstream collapses such
-    // clusters before this operator in a real pipeline).
-    val d12Skew = (if (phase == "all" || phase == "d12skew")
-      Seq(250, 500, 1000) else Seq.empty[Int]).map { c =>
-      val docs = graft.core.Tables.load(spark, dir, "documents").select("doc_id", "text")
-      val cluster = spark.range(c).selectExpr(
-        "20000000 + id AS doc_id",
-        "concat(concat_ws(' ', transform(sequence(1, 60), i -> concat('btok', CAST(i AS STRING)))), " +
-          "' uq', CAST(id AS STRING), 'a uq', CAST(id AS STRING), 'b') AS text")
-      val all = docs.union(cluster).cache()
-      all.count()
-      val candOff = graft.operators.DedupOps.prefixCandidates(all).count()
-      val tOff = time {
-        graft.operators.DedupOps.prefixFilterJoin(all)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val candOn = graft.operators.DedupOps.prefixCandidates(all, Some(64L)).count()
-      val tOn = time {
-        graft.operators.DedupOps.prefixFilterJoin(all, Some(64L))
-          .write.format("noop").mode("overwrite").save()
-      }
-      all.unpersist()
-      System.gc()
-      System.err.println(f"[scale] d12skew c=$c%4d  off: $candOff%9d cand $tOff%6.2f s" +
-        f"   on(cap=64): $candOn%7d cand $tOn%6.2f s")
-      c -> Seq("cand_off" -> candOff.toDouble, "t_off" -> tOff,
-        "cand_on" -> candOn.toDouble, "t_on" -> tOn)
-    }
-
-    // d13 boilerplate rung: plant c documents sharing one ~190-char licence
-    // header (unique tails) — every winnowed fingerprint of the header gets
-    // df = c, so the CAPLESS fingerprint join fans out ~|header fps| × C(c,2)
-    // pair slots, the quadratic-bucket worst case. With the df cap those
-    // fingerprints drop before pairing and the candidate count stays flat at
-    // the organic corpus's own pair volume (the planted cluster's overlap is
-    // the documented recall trade — boilerplate is exactly what the cap is
-    // FOR). Candidate counts are computed exactly from the df census
-    // (Σ C(df, 2)); wall time is printed alongside but the counts are the
-    // contention-proof signal.
-    val boilerHeader = "permission is hereby granted free of charge to any " +
-      "person obtaining a copy of this software and associated documentation " +
-      "files to deal in the software without restriction including the rights " +
-      "to use copy modify and merge"
-    val d13Boiler = (if (phase == "all" || phase == "d13boiler")
-      Seq(250, 500, 1000) else Seq.empty[Int]).map { c =>
-      val docs = graft.core.Tables.load(spark, dir, "documents").select("doc_id", "text")
-      val planted = spark.range(c).selectExpr(
-        "30000000 + id AS doc_id",
-        s"concat('$boilerHeader', ' uq', CAST(id AS STRING), 'a uq', CAST(id AS STRING), 'b') AS text")
-      val all = docs.union(planted).cache()
-      all.count()
-      def candPairs(cap: Option[Long]): Long = {
-        val dfs = graft.operators.DedupOps.winnowFps(all)
-          .groupBy("fp").agg(count(lit(1)).as("df"))
-        cap.fold(dfs)(cp => dfs.filter(col("df") <= cp))
-          .agg(coalesce(sum(expr("df * (df - 1) DIV 2")), lit(0L)))
-          .collect().head.getLong(0)
-      }
-      val candOff = candPairs(None)
-      val tOff = time {
-        graft.operators.DedupOps.winnowOverlapJoin(all, None)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val candOn = candPairs(Some(graft.operators.DedupOps.WinnowDfCap))
-      val tOn = time {
-        graft.operators.DedupOps.winnowOverlapJoin(all)
-          .write.format("noop").mode("overwrite").save()
-      }
-      all.unpersist()
-      System.gc()
-      System.err.println(f"[scale] d13boiler c=$c%4d  off: $candOff%10d cand $tOff%6.2f s" +
-        f"   on(cap=${graft.operators.DedupOps.WinnowDfCap}): $candOn%8d cand $tOn%6.2f s")
-      c -> Seq("cand_off" -> candOff.toDouble, "t_off" -> tOff,
-        "cand_on" -> candOn.toDouble, "t_on" -> tOn)
-    }
-
-    // c4-vs-c5 widening rung: k-means k scales WITH the corpus (k ∝ N, the
-    // SemDeDup production setting), so brute assignment costs N·k ∝ N²
-    // while the two-level hierarchy costs N·(k1 + 2k/k1) ∝ N^1.5 with
-    // k1 = ceil(sqrt(k)). The 16x point overlaps the main ladder for
-    // continuity; 64x is where the gap should visibly widen. Scored
-    // candidate-pair counts (distance evaluations) are printed alongside
-    // wall time because time on this host carries up to 10x contention
-    // noise while the pair counts are exact.
-    def c45Rung(k: Int, widen: Int): (String, Seq[(String, Double)]) = {
-      val base = vecsTimes(spark, dir, k)
-      // widen > 1 tiles each 64-float embedding into a 64*widen-dim vector
-      // (flatten preserves the float element type; geometry — and therefore
-      // cluster populations and the verify-pair count — is identical to the
-      // 64-dim rung, only the per-distance FLOP cost grows widen-fold)
-      val vecs = (if (widen == 1) base
-        else base.select(col("vec_id"),
-          expr(s"flatten(array_repeat(embedding, $widen))").as("embedding"),
-          col("label"))).cache()
-      val n = vecs.count()
-      val kTot = graft.operators.ClusterOps.KMeansK * k
-      val k1 = math.max(2, math.ceil(math.sqrt(kTot.toDouble)).toInt)
-      val pairsC4 = n * kTot
-      val pairsC5 = n * (k1 + 2L * kTot / k1)
-      val c4t = time {
-        graft.operators.ClusterOps.semdedupCensus(vecs, kTot)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val c5t = time {
-        graft.operators.ClusterOps
-          .semdedupCensusFrom(
-            graft.operators.ClusterOps.kmeansAssignHier(vecs, kTot, k1), vecs)
-          .write.format("noop").mode("overwrite").save()
-      }
-      vecs.unpersist()
-      System.gc()
-      val tag = if (widen == 1) s"c45_${k}x" else s"c45hd_${k}x_${64 * widen}d"
-      System.err.println(f"[scale] $tag%-16s (k=$kTot, k1=$k1)  " +
-        f"c4: $pairsC4%11d pairs $c4t%7.2f s   c5: $pairsC5%10d pairs $c5t%7.2f s")
-      tag -> Seq("c4_pairs" -> pairsC4.toDouble, "c4_t" -> c4t,
-        "c5_pairs" -> pairsC5.toDouble, "c5_t" -> c5t)
-    }
-    val c45 = (if (phase == "all" || phase == "c45")
-      Seq(16, 64) else Seq.empty[Int]).map(k => c45Rung(k, 1)) ++
-      // the 64-dim rungs prove the N^1.5 work reduction in exact pair
-      // counts but wall-tie because per-distance cost is small next to the
-      // row machinery and the shared verify stage; at 512 dims the same
-      // pair-count gap is FLOP-dominated and must show on the clock
-      (if (phase == "all" || phase == "c45hd")
-        Seq(64) else Seq.empty[Int]).map(k => c45Rung(k, 8))
-
-    // e7 shape: BM25 over a k-multiplied corpus with a FIXED query set (the
-    // doc_id < 3 queries live only in clone 0) — the inverted-index build
-    // (tf/df/dl aggs) is the corpus-linear stage; scoring is bounded by the
-    // query terms' postings. Wall time must grow ~linearly in k: nothing in
-    // the plan ever pairs corpus x corpus, and the query count stays
-    // constant while the corpus multiplies — the amortization a lake
-    // banks on when it serves many queries from one materialized index.
-    val bm25R = (if (phase == "all" || phase == "bm25") Seq(1, 4, 16)
-      else Seq.empty[Int]).map { k =>
-      val docs = docsTimes(spark, dir, k).cache()
-      val nDocs = docs.count()
-      val t = time {
-        graft.operators.SimilarityOps.bm25Retrieve(docs)
-          .write.format("noop").mode("overwrite").save()
-      }
-      docs.unpersist()
-      System.err.println(f"[scale] bm25 $k%2dx  docs=$nDocs%8d  $t%6.2f s")
-      (k, t)
-    }
-
-    // t15 BPE-loop rung: bpeTrain's per-round work is VOCABULARY-keyed
-    // (pair counts over distinct words), so multiplying the corpus k-fold
-    // must grow a fixed-round train far slower than k — the corpus is
-    // touched once (initial word count); every round after shuffles only
-    // vocab-sized relations. Clone suffix tokens add k-1 words per distinct
-    // word-position, so the vocab grows ~2x (not 16x) at 16x corpus —
-    // measured wall should track vocab, not corpus.
-    val bpeR = (if (phase == "all" || phase == "bpe") Seq(1, 4, 16)
-      else Seq.empty[Int]).map { k =>
-      val docs = docsTimes(spark, dir, k).cache()
-      val nDocs = docs.count()
-      val t = time {
-        val vocab = docs
-          .select(explode(split(lower(col("text")), " ")).as("w"))
-          .filter(col("w").rlike("^[a-z]+$") && length(col("w")) <= 20)
-          .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-          .select(expr("trim(regexp_replace(w, '(.)', '<$1> '))").as("syms"), col("freq"))
-        graft.functions.TextOps.bpeTrain(spark, vocab, maxRounds = 5, minPairCount = 2L)
-          .write.format("noop").mode("overwrite").save()
-      }
-      docs.unpersist()
-      System.err.println(f"[scale] bpe $k%2dx  docs=$nDocs%8d  $t%6.2f s (5 rounds)")
-      (k, t)
-    }
-
-    // mmr k-ladder: mmrRerank over a FIXED depth-24 candidate pool at
-    // k = 5/10/20 — prices the O(q·k²) claim (SimilarityOps.mmrRerank
-    // scaladoc) in isolation from candidate generation. Two cost terms:
-    // per-round fixed driver/DAG overhead (linear in k — each round is two
-    // jobs over a <=q*24-row frontier) and the rem x selected scoring join
-    // (quadratic in k). At fixture pool sizes the fixed term dominates, so
-    // measured growth should be ~LINEAR in k, bounding the claimed
-    // quadratic from below; the quadratic term only surfaces at pool
-    // sizes x query counts where q*k² rows outweigh per-job overhead.
-    val mmrR = {
-      val ks = if (phase == "all" || phase == "mmr") Seq(5, 10, 20) else Seq.empty[Int]
-      if (ks.isEmpty) Seq.empty[(Int, Double)]
-      else {
-        val pool = graft.operators.SimilarityOps.mmrCandidatePool(spark, dir, 24)
-          .cache()
-        pool.count()
-        // untimed warmup: JIT + codegen compile the whole round pipeline
-        // once, so first-rung bias can't masquerade as k-scaling
-        graft.operators.SimilarityOps.mmrRerank(pool, 3)
-          .write.format("noop").mode("overwrite").save()
-        val out = ks.map { k =>
-          def once = time {
-            graft.operators.SimilarityOps.mmrRerank(pool, k)
-              .write.format("noop").mode("overwrite").save()
-          }
-          val t = math.min(once, once) // best of 2: driver-launched rounds
-          System.gc()                  // are contention-sensitive on this box
-          System.err.println(f"[scale] mmr k=$k%2d  $t%6.2f s (fixed 24-deep pool)")
-          (k, t)
-        }
-        pool.unpersist()
-        out
-      }
-    }
 
     // ivfpq corpus ladder: the e9 pipeline (coarse k-means + residual PQ
     // train + encode + 2-probe ADC retrieval) over 1x/4x/16x embeddings
@@ -908,10 +526,7 @@ object ScaleProbe {
       val base = java.nio.file.Files.createTempDirectory("graft-lakemerge")
       val lake = base.resolve("lake").toString
       val ev = graft.core.Tables.load(spark, dir, "events")
-      (0 until 4).foreach { i =>
-        sink.appendBatch(spark, lake,
-          ev.filter(pmod(col("event_id"), lit(4)) === i), commitId = Some(i.toLong))
-      }
+      graft.streaming.LakeFixture.layDown(spark, lake, ev, 4, 0 until 4)
       val dates = ev.select(to_date(col("ts")).cast("string").as("d")).distinct()
         .collect().map(_.getString(0)).sorted.take(k).toSeq
       val scoped = ev.filter(to_date(col("ts")).cast("string").isin(dates: _*))
@@ -1184,25 +799,7 @@ object ScaleProbe {
       }
     }
 
-    val json = (results.map { case (k, steps) =>
-      steps.map { case (n, t) => s""""$n":$t""" }
-        .mkString(s""""${k}x":{""", ",", "}")
-    } ++ d12Skew.map { case (c, vals) =>
-      vals.map { case (n, v) => s""""$n":$v""" }
-        .mkString(s""""d12skew_$c":{""", ",", "}")
-    } ++ d13Boiler.map { case (c, vals) =>
-      vals.map { case (n, v) => s""""$n":$v""" }
-        .mkString(s""""d13boiler_$c":{""", ",", "}")
-    } ++ c45.map { case (tag, vals) =>
-      vals.map { case (n, v) => s""""$n":$v""" }
-        .mkString(s""""$tag":{""", ",", "}")
-    } ++ bm25R.map { case (k, t) =>
-      s""""bm25_${k}x":{"bm25":$t}"""
-    } ++ bpeR.map { case (k, t) =>
-      s""""bpe_${k}x":{"bpe5":$t}"""
-    } ++ mmrR.map { case (k, t) =>
-      s""""mmr_k$k":{"mmr":$t}"""
-    } ++ ivfpqR.map { case (k, t) =>
+    val json = (ivfpqR.map { case (k, t) =>
       s""""ivfpq_${k}x":{"ivfpq":$t}"""
     } ++ ivfpqProbesR.map { case (p, (recall, coverage, cand, t)) =>
       s""""ivfpqprobes_p$p":{"recall5":$recall,"coverage5":$coverage,"cand":$cand,"scan":$t}"""

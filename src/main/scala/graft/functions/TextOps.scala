@@ -301,8 +301,9 @@ object TextOps {
     unigramNll(Tables.load(s, dir, "documents"))
   }
 
-  /** t10's pipeline over any `documents`-shaped relation — ScaleProbe runs
-    * it on multiplied corpora (vocabulary and split both grow with k).
+  /** t10's pipeline over any `documents`-shaped relation — the t10 scale
+    * rung (BENCH_NOTES.md) ran it on multiplied corpora (vocabulary and
+    * split both grow with k).
     */
   def unigramNll(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val d = docs
@@ -410,9 +411,10 @@ object TextOps {
     boilerplateScrub(Tables.load(s, dir, "documents"))
   }
 
-  /** t12's pipeline over any `documents`-shaped relation — ScaleProbe runs
-    * it on multiplied corpora with the df floor scaled ∝ N (boilerplate is
-    * a relative-frequency notion, like d9's ContamDfCap).
+  /** t12's pipeline over any `documents`-shaped relation — the t12 scale
+    * rung (BENCH_NOTES.md) ran it on multiplied corpora with the df floor
+    * scaled ∝ N (boilerplate is a relative-frequency notion, like d9's
+    * ContamDfCap).
     */
   def boilerplateScrub(docs: org.apache.spark.sql.DataFrame,
       dfFloor: Int = BoilerDf): org.apache.spark.sql.DataFrame = {

@@ -423,8 +423,8 @@ object HyperplaneKernel {
   /** Widest geometry the kernel pre-derives. The fixture operators use the
     * first [[NPlanes]]; larger corpora need more sign bits — planes-per-band
     * must grow ~log2(N) to keep band-bucket populations (and therefore
-    * candidate pairs) bounded, which is the e1 scale knob measured by
-    * [[graft.ScaleProbe]].
+    * candidate pairs) bounded, which is the e1 scale knob (its scale rung
+    * is recorded in BENCH_NOTES.md).
     */
   val MaxPlanes = 24
 
@@ -506,7 +506,7 @@ case class HyperplaneBucket(child: Expression) extends UnaryExpression {
   * `hyperplane_bucket` — same deterministic plane formula — so widening is
   * purely additive. This is the e1 scale knob made operable: a 16x corpus
   * keeps band-bucket populations bounded by banding a wider key (e.g. 2x8
-  * instead of 2x3), which [[graft.ScaleProbe]] measures.
+  * instead of 2x3), as the e1 scale rung measured (BENCH_NOTES.md).
   */
 case class HyperplaneBucketN(child: Expression, nPlanes: Int) extends UnaryExpression {
   require(nPlanes > 0 && nPlanes <= HyperplaneKernel.MaxPlanes,

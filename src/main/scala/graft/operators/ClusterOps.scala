@@ -289,10 +289,10 @@ object ClusterOps {
   }
 
   /** c3's pipeline over any `embeddings`-shaped relation, returning the
-    * final (vec_id, cid) assignment — ScaleProbe runs it on multiplied
-    * corpora (the centroid count stays k; only the assignment and update
-    * stages grow with the corpus), and c4 consumes the assignment for
-    * within-cluster semantic dedup.
+    * final (vec_id, cid) assignment — the c3 scale rung (BENCH_NOTES.md)
+    * ran it on multiplied corpora (the centroid count stays k; only the
+    * assignment and update stages grow with the corpus), and c4 consumes
+    * the assignment for within-cluster semantic dedup.
     */
   private def withSq(embs: DataFrame): DataFrame =
     embs.selectExpr("vec_id", "embedding", "vec_dot(embedding, embedding) AS sq")
@@ -347,14 +347,6 @@ object ClusterOps {
     */
   def kmeansAssignWith(embs: DataFrame, cents: DataFrame): DataFrame =
     assignTo(withSq(embs), cents)
-
-  /** Backwards-compatible census form of [[kmeansAssign]] (ScaleProbe's
-    * entry point — one aggregated row per cluster).
-    */
-  def kmeansCensus(embs: DataFrame): DataFrame =
-    kmeansAssign(embs)
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("id_checksum"))
 
   /** Cosine threshold above which two same-cluster vectors count as
     * semantic duplicates in c4 (matches e1's corpus-calibrated threshold —
@@ -503,7 +495,8 @@ object ClusterOps {
   }
 
   /** c4's census pipeline from a given (vec_id, cid) assignment — shared by
-    * the exact and hierarchical paths (ScaleProbe times both).
+    * the exact and hierarchical paths (the c45 scale rung in BENCH_NOTES.md
+    * timed both).
     */
   def semdedupCensusFrom(assign: DataFrame, embs: DataFrame): DataFrame = {
     // one materialization of the assignment pipeline; reused by the pair
@@ -528,9 +521,10 @@ object ClusterOps {
           .as("kept_checksum"))
   }
 
-  /** c4's pipeline over any `embeddings`-shaped relation — ScaleProbe runs
-    * it on multiplied corpora with `k` scaled ∝ N (the production SemDeDup
-    * setting that bounds per-cluster population).
+  /** c4's pipeline over any `embeddings`-shaped relation — the c4 scale
+    * rung (BENCH_NOTES.md) ran it on multiplied corpora with `k` scaled
+    * ∝ N (the production SemDeDup setting that bounds per-cluster
+    * population).
     */
   def semdedupCensus(embs: DataFrame, k: Int = KMeansK): DataFrame =
     semdedupCensusFrom(kmeansAssign(embs, k), embs)

@@ -496,7 +496,7 @@ object DedupOps {
 
   /** d9's pipeline over any `documents`-shaped relation with an explicit df
     * cap — the cap must SCALE with the corpus (boilerplate frequency is
-    * relative), which is what ScaleProbe's d9 rung exercises.
+    * relative), which is what the d9 scale rung (BENCH_NOTES.md) exercised.
     */
   def decontaminationCensus(docs: org.apache.spark.sql.DataFrame, cap: Long): org.apache.spark.sql.DataFrame = {
     // hashed distinct 5-gram shingles of the token array `t` (empty below 5
@@ -686,17 +686,17 @@ object DedupOps {
     prefixFilterJoin(Tables.load(s, dir, "documents"))
   }
 
-  /** d12's candidate stage, exposed for the skew ScaleProbe rung: shingle
+  /** d12's candidate stage, exposed for the d12skew scale rung: shingle
     * df agg → per-doc rarity-ordered prefix → prefix-shingle equi-join.
     *
     * `dfCap`: optional frequent-shingle cap on the CANDIDATE key. The
     * rarity order already concentrates work on the rarest shingles, but a
     * mega-cluster of near-identical docs (size c) forces even its rarest
     * SHARED shingle to df ≈ c, making one bucket quadratic — the planted-
-    * cluster ScaleProbe rung measures exactly this. With a cap, prefix
-    * entries whose shingle occurs in more than `cap` docs are skipped:
-    * candidates stay bounded at c · cap per shingle, at the documented
-    * cost of missing pairs whose ONLY shared prefix shingle is frequent
+    * cluster d12skew rung (BENCH_NOTES.md) measured exactly this. With a
+    * cap, prefix entries whose shingle occurs in more than `cap` docs are
+    * skipped: candidates stay bounded at c · cap per shingle, at the
+    * documented cost of missing pairs whose ONLY shared prefix shingle is frequent
     * (d9's discipline — at a threshold this high such pairs are near-
     * identical, so run exact/normalized dedup (d1/d2) first and the cap
     * loses nothing). Capless is the default so the brute-force oracle
@@ -721,7 +721,7 @@ object DedupOps {
       .select("a", "b").distinct()
   }
 
-  /** d12's pipeline over any `documents`-shaped relation (ScaleProbe rung:
+  /** d12's pipeline over any `documents`-shaped relation (d12skew rung:
     * df and the prefix width scale with the corpus; the candidate join key
     * stays the rarity-ordered shingle). See [[prefixCandidates]] for the
     * `dfCap` skew knob and its exactness trade.
@@ -789,8 +789,9 @@ object DedupOps {
     docs.select(col("doc_id"), explode(expr("winnow_fps(text)")).as("fp"))
 
   /** The d13 operator body with the df cap and pair threshold as knobs
-    * (ScaleProbe's d13boiler rung measures capless vs capped on a planted
-    * boilerplate corpus, same discipline as d12's dfCap rung).
+    * (the d13boiler scale rung in BENCH_NOTES.md measured capless vs
+    * capped on a planted boilerplate corpus, same discipline as d12's dfCap
+    * rung).
     */
   def winnowOverlapJoin(docs: DataFrame,
       dfCap: Option[Long] = Some(WinnowDfCap),

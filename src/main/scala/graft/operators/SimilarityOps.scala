@@ -209,7 +209,7 @@ object SimilarityOps {
     * large-corpus geometry. Planes-per-band must grow ~log2(N) to keep
     * band-bucket populations bounded — with the fixture's 6-bit key a 3-bit
     * band has only 8 buckets, so candidate pairs grow quadratically with
-    * corpus size (measured in ScaleProbe: 16x corpus, 57x time). The first
+    * corpus size (measured by the e1 scale rung: 16x corpus, 57x time). The first
     * 6 bits equal the fixture key, so widening only ever SHRINKS buckets.
     */
   def bucketedWith(df: DataFrame, nPlanes: Int): DataFrame =
@@ -572,8 +572,8 @@ object SimilarityOps {
   /** e5's candidate-pool construction at arbitrary depth — per query
     * (vec_id < 3), the top-`depth` exact-cosine candidates with embedding
     * and norm attached: `(qid, doc_id, emb, dn, rel)`. Exposed separately
-    * so the ScaleProbe k-ladder can hold the pool FIXED while varying
-    * [[mmrRerank]]'s k (pricing the O(q·k²) claim in isolation from
+    * so the mmr scale rung (BENCH_NOTES.md) could hold the pool FIXED
+    * while varying [[mmrRerank]]'s k (pricing the O(q·k²) claim in isolation from
     * candidate generation, the only corpus-sized stage).
     */
   def mmrCandidatePool(s: SparkSession, dir: String, depth: Int): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Q, Tables}
+import graft.streaming.LakeFixture
+import graft.streaming.LakeFixture.census
 
 /** Oracle-gated NON-PARQUET batch scan paths (SURVEY §2.2 "Scans: JSON/CSV
   * batch" + ORC): each query round-trips a fixture table through a text or
@@ -471,18 +473,10 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_asof_") { base =>
       val lakeDir = base.resolve("lake").toString
-      // small target size so the sweep genuinely merges multi-file leaves at
-      // fixture scale; compactEvery=4 puts the one sweep after batch 3
-      val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
-        compactEvery = 4L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      (0 until 6).foreach { i =>
-        sink(events.filter(pmod(col("event_id"), lit(6)) === i), i.toLong)
-      }
-      graft.streaming.LakeSink.readAsOf(s, lakeDir, 3L)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      // compactEvery=4 puts the one sweep after batch 3
+      LakeFixture.layDown(events, 6, 0 until 6)(LakeFixture.fixtureSink(lakeDir, 4L))
+      census(graft.streaming.LakeSink.readAsOf(s, lakeDir, 3L),
+        col("event_date"), col("event_type"))
     }
   }
 
@@ -521,27 +515,11 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_merge_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
-      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-        .withColumn("value", col("value") + 1000.0)
-        .withColumn("event_type", lit("updated"))
-        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-          .withColumn("event_id", col("event_id") + 10000000L)
-          .withColumn("value", col("value") * 2.0)
-          .withColumn("event_type", lit("inserted")))
-      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-        .select("event_id", "ts")
-      graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts, "event_id",
-        deletes, targetFileBytes = 512L << 10)
-      s.read.parquet(lakeDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 4)
+      val (updates, inserts, deletes) = LakeFixture.changeSet(events)
+      graft.streaming.LakeSink.mergeInto(s, lakeDir, updates.unionByName(inserts),
+        "event_id", deletes, targetFileBytes = LakeFixture.TargetFileBytes)
+      census(s.read.parquet(lakeDir), col("event_date"), col("event_type"))
     }
   }
 
@@ -585,10 +563,7 @@ object FormatQueries {
         s, lakeDir, "event_id", BigDecimal(q1), BigDecimal(q2 - 1))
       require(report.scannedFiles < report.totalFiles,
         s"data skipping stopped skipping: $report — the zone maps are dead")
-      pruned.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(pruned, col("event_type"))
     }
   }
 
@@ -626,28 +601,13 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_cdf_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
-      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-        .withColumn("value", col("value") + 1000.0)
-        .withColumn("event_type", lit("updated"))
-        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-          .withColumn("event_id", col("event_id") + 10000000L)
-          .withColumn("value", col("value") * 2.0)
-          .withColumn("event_type", lit("inserted")))
-      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-        .select("event_id", "ts")
-      val stats = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
-        "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
-      graft.streaming.LakeSink
-        .tailChanges(s, lakeDir, -1L, stats.commitId)
-        .groupBy(col("_op").as("op"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 4)
+      val (updates, inserts, deletes) = LakeFixture.changeSet(events)
+      val stats = graft.streaming.LakeSink.mergeInto(s, lakeDir,
+        updates.unionByName(inserts), "event_id", deletes,
+        targetFileBytes = LakeFixture.TargetFileBytes, recordChanges = true)
+      census(graft.streaming.LakeSink.tailChanges(s, lakeDir, -1L, stats.commitId),
+        col("_op").as("op"))
     }
   }
 
@@ -676,22 +636,11 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_evo_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 2).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
-      (2 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i)
-            .withColumn("quality", pmod(col("event_id"), lit(5)).cast("int")),
-          commitId = Some(i.toLong))
-      }
-      graft.streaming.LakeSink.readLake(s, lakeDir)
-        .groupBy(coalesce(col("quality").cast("long"), lit(-1L)).as("quality"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 2)
+      LakeFixture.layDown(s, lakeDir,
+        events.withColumn("quality", pmod(col("event_id"), lit(5)).cast("int")), 4, 2 until 4)
+      census(graft.streaming.LakeSink.readLake(s, lakeDir),
+        coalesce(col("quality").cast("long"), lit(-1L)).as("quality"))
     }
   }
 
@@ -718,21 +667,8 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_dv_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
-      def layout(): Map[String, Set[String]] = {
-        val root = new org.apache.hadoop.fs.Path(lakeDir)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
-          .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.getName).toSet)
-          .toMap
-      }
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 4)
+      def layout() = LakeFixture.leafFiles(s, lakeDir, _.endsWith(".parquet"))
       val before = layout()
       val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
         .select("event_id", "ts")
@@ -741,11 +677,8 @@ object FormatQueries {
       require(stats.deletedRows > 0, "fixture must delete rows")
       require(layout() == before,
         "merge-on-read stopped merge-on-reading: the delete moved data files")
-      graft.streaming.LakeSink.readLake(s, lakeDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(graft.streaming.LakeSink.readLake(s, lakeDir),
+        col("event_date"), col("event_type"))
     }
   }
 
@@ -791,29 +724,20 @@ object FormatQueries {
     val (u1, u2) = (umin + (umax - umin + 1) / 4, umin + (umax - umin + 1) / 2)
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_zorder_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 4)
       graft.streaming.LakeSink.compactPartitions(s, lakeDir,
         targetFileBytes = 8L << 10, minFiles = 2,
         statsCols = Seq("event_id", "user_id"),
         zorderBy = Seq("event_id", "user_id"))
-      def census(dim: String, statsCol: String, lo: Long, hi: Long) = {
+      def rangeCensus(dim: String, statsCol: String, lo: Long, hi: Long) = {
         val (pruned, report) = graft.streaming.LakeSink.readPruned(
           s, lakeDir, statsCol, BigDecimal(lo), BigDecimal(hi))
         require(report.scannedFiles < report.totalFiles,
           s"z-order skipping stopped skipping on $statsCol: $report")
-        pruned.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            round(sum(col("value")), 2).as("total_value"),
-            sum(col("event_id")).as("id_checksum"))
-          .select(lit(dim).as("dim"), col("event_type"), col("n"),
-            col("total_value"), col("id_checksum"))
+        census(pruned, lit(dim).as("dim"), col("event_type"))
       }
-      census("by_event_id", "event_id", q1, q2 - 1)
-        .unionByName(census("by_user_id", "user_id", u1, u2 - 1))
+      rangeCensus("by_event_id", "event_id", q1, q2 - 1)
+        .unionByName(rangeCensus("by_user_id", "user_id", u1, u2 - 1))
     }
   }
 
@@ -855,25 +779,14 @@ object FormatQueries {
     val events = Tables.load(s, dir, "events")
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_purge_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
-      val upserts = events.filter(pmod(col("event_id"), lit(10)) === 7)
-        .withColumn("value", col("value") + 1000.0)
-        .withColumn("event_type", lit("updated"))
-        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-          .withColumn("event_id", col("event_id") + 10000000L)
-          .withColumn("value", col("value") * 2.0)
-          .withColumn("event_type", lit("inserted")))
-      val deletes = events.filter(pmod(col("event_id"), lit(10)) === 3)
-        .select("event_id", "ts")
-      val merged = graft.streaming.LakeSink.mergeInto(s, lakeDir, upserts,
-        "event_id", deletes, targetFileBytes = 512L << 10, recordChanges = true)
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 4)
+      val (updates, inserts, deletes) = LakeFixture.changeSet(events)
+      val merged = graft.streaming.LakeSink.mergeInto(s, lakeDir,
+        updates.unionByName(inserts), "event_id", deletes,
+        targetFileBytes = LakeFixture.TargetFileBytes, recordChanges = true)
       val stats = graft.streaming.LakeSink.purgeKeys(s, lakeDir,
         events.filter(pmod(col("user_id"), lit(25)) === 3).select("user_id"),
-        "user_id", targetFileBytes = 512L << 10)
+        "user_id", targetFileBytes = LakeFixture.TargetFileBytes)
       require(stats.purgedRows > 0 && stats.historyLeavesDropped > 0 &&
         stats.cdcRecordsRewritten > 0, s"purge fixture drift: $stats")
       // time travel into the erased window must fail LOUDLY, never resurrect
@@ -886,11 +799,8 @@ object FormatQueries {
         .tailChanges(s, lakeDir, merged.commitId - 1, merged.commitId)
         .filter(pmod(col("user_id"), lit(25)) === 3).isEmpty,
         "purged keys survived in the change feed")
-      graft.streaming.LakeSink.readLake(s, lakeDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(graft.streaming.LakeSink.readLake(s, lakeDir),
+        col("event_date"), col("event_type"))
     }
   }
 
@@ -927,10 +837,9 @@ object FormatQueries {
     val leakObs = org.apache.spark.sql.Observation()
     val census = graft.streaming.ReplayHarness.pinnedScratch(s, "graft_expect_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 4).foreach { i =>
-        graft.streaming.LakeSink.appendWithExpectations(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i), rules,
-          commitId = Some(i.toLong))
+      LakeFixture.layDown(events, 4, 0 until 4) { (slice, i) =>
+        graft.streaming.LakeSink.appendWithExpectations(s, lakeDir, slice, rules,
+          commitId = Some(i)): Unit
       }
       val live = graft.streaming.LakeSink.readLake(s, lakeDir)
       val quarantined = graft.streaming.LakeSink.readQuarantine(s, lakeDir)
@@ -940,20 +849,13 @@ object FormatQueries {
       // certificate is an observed metric on the live census scan, and
       // conservation compares the census's own n column against one cheap
       // count of the input (guide §1.2 — don't compute things twice).
-      val liveCensus = live
+      val liveCensus = LakeFixture.census(live
         .observe(leakObs, coalesce(sum(when(
           col("value") > 300 || col("event_type") === "error", 1L).otherwise(0L)),
-          lit(0L)).as("leaked"))
-        .groupBy(lit("live").as("disposition"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
-      val qCensus = quarantined
-        .groupBy(col("_violations").as("disposition"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
-      liveCensus.unionByName(qCensus)
+          lit(0L)).as("leaked")),
+        lit("live").as("disposition"), col("event_type"))
+      liveCensus.unionByName(LakeFixture.census(quarantined,
+        col("_violations").as("disposition"), col("event_type")))
     }
     require(census.collect().map(_.getAs[Long]("n")).sum == events.count(),
       "expectations gate lost or duplicated rows")
@@ -988,25 +890,13 @@ object FormatQueries {
     val sink = graft.streaming.LakeSink
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_restore_") { base =>
       val lakeDir = base.resolve("lake").toString
-      (0 until 3).foreach { i =>
-        sink.appendBatch(s, lakeDir,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
+      LakeFixture.layDown(s, lakeDir, events, 4, 0 until 3)
       val goodCount = sink.readLake(s, lakeDir).count()
       // the bad era: merge (3), DV delete (4), backfill onto new dates (5)
       val present = pmod(col("event_id"), lit(4)) < 3
-      val upserts = events.filter(present && pmod(col("event_id"), lit(10)) === 7)
-        .withColumn("value", col("value") + 1000.0)
-        .withColumn("event_type", lit("updated"))
-        .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-          .withColumn("event_id", col("event_id") + 10000000L)
-          .withColumn("value", col("value") * 2.0)
-          .withColumn("event_type", lit("inserted")))
-      val merged = sink.mergeInto(s, lakeDir, upserts, "event_id",
-        events.filter(present && pmod(col("event_id"), lit(10)) === 3)
-          .select("event_id", "ts"),
-        targetFileBytes = 512L << 10)
+      val (updates, inserts, deletes) = LakeFixture.changeSet(events, present)
+      val merged = sink.mergeInto(s, lakeDir, updates.unionByName(inserts), "event_id",
+        deletes, targetFileBytes = LakeFixture.TargetFileBytes)
       require(merged.commitId == 3L, s"fixture drift: merge at ${merged.commitId}")
       val dv = sink.deleteVectors(s, lakeDir,
         events.filter(present && pmod(col("event_id"), lit(10)) === 9)
@@ -1035,11 +925,7 @@ object FormatQueries {
       // ingestion continues on the restored timeline
       sink.appendBatch(s, lakeDir,
         events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(7L))
-      sink.readLake(s, lakeDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(sink.readLake(s, lakeDir), col("event_date"), col("event_type"))
     }
   }
 
@@ -1087,24 +973,11 @@ object FormatQueries {
     graft.streaming.ReplayHarness.pinnedScratch(s, "graft_clone_") { base =>
       val src = base.resolve("source").toString
       val cln = base.resolve("clone").toString
-      (0 until 3).foreach { i =>
-        sink.appendBatch(s, src,
-          events.filter(pmod(col("event_id"), lit(4)) === i),
-          commitId = Some(i.toLong))
-      }
+      LakeFixture.layDown(s, src, events, 4, 0 until 3)
       require(sink.cloneTable(s, src, cln) == 2L, "clone pinned at wrong head")
-      def srcFiles(): Map[String, Set[String]] = {
-        val root = new org.apache.hadoop.fs.Path(src)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("event_date="))
-          .map(l => l.getPath.getName -> fs.listStatus(l.getPath).toSeq
-            .filter(_.isFile).map(_.getPath.getName).toSet).toMap
-      }
       // the source diverges AFTER the pin — invisible to the clone
-      sink.appendBatch(s, src,
-        events.filter(pmod(col("event_id"), lit(4)) === 3), commitId = Some(3L))
-      val srcBefore = srcFiles()
+      LakeFixture.layDown(s, src, events, 4, 3 until 4)
+      val srcBefore = LakeFixture.leafFiles(s, src)
       // clone-local append: union overlay, no CoW
       sink.appendBatch(s, cln,
         events.filter(pmod(col("event_id"), lit(4)) === 3)
@@ -1115,25 +988,14 @@ object FormatQueries {
       // half-scoped merge: CoW + shadow exactly the early-date leaves
       val h = (events.agg(max(col("event_id"))).head.getLong(0) + 1) / 2
       val early = pmod(col("event_id"), lit(4)) < 3 && col("event_id") < h
-      sink.cloneMerge(s, cln,
-        events.filter(early && pmod(col("event_id"), lit(10)) === 7)
-          .withColumn("event_type", lit("updated"))
-          .withColumn("value", col("value") + 1000.0),
-        "event_id",
-        events.filter(early && pmod(col("event_id"), lit(10)) === 3)
-          .select("event_id", "ts"),
-        targetFileBytes = 512L << 10)
+      val (updates, _, deletes) = LakeFixture.changeSet(events, early)
+      sink.cloneMerge(s, cln, updates, "event_id", deletes,
+        targetFileBytes = LakeFixture.TargetFileBytes)
       // zero-copy claim: every clone write left the source byte-untouched
-      require(srcFiles() == srcBefore, "a clone write touched the source")
-      def census(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.groupBy(col("event_date"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            round(sum(col("value")), 2).as("total_value"),
-            sum(col("event_id")).as("id_checksum"))
-          .select(lit(tag).as("tbl"), col("event_date"), col("event_type"),
-            col("n"), col("total_value"), col("id_checksum"))
-      census(sink.readLake(s, cln), "clone")
-        .unionByName(census(sink.readLake(s, src), "source"))
+      require(LakeFixture.leafFiles(s, src) == srcBefore, "a clone write touched the source")
+      def tagged(tag: String, lake: String) =
+        census(sink.readLake(s, lake), lit(tag).as("tbl"), col("event_date"), col("event_type"))
+      tagged("clone", cln).unionByName(tagged("source", src))
     }
   }
 
@@ -1185,15 +1047,9 @@ object FormatQueries {
         .withColumn("event_type", lit("tail"))
       val tailId = sink.appendBatchOcc(s, lake, tailRows, writerId = "tail",
         faultInjector = p => if (p == "placed") {
-          val m = sink.mergeInto(s, lake,
-            events.filter(pmod(col("event_id"), lit(3)) === 0 &&
-                pmod(col("event_id"), lit(10)) === 7)
-              .withColumn("event_type", lit("updated"))
-              .withColumn("value", col("value") + 1000.0),
-            "event_id",
-            events.filter(pmod(col("event_id"), lit(3)) === 0 &&
-                pmod(col("event_id"), lit(10)) === 3)
-              .select("event_id", "ts"),
+          val (updates, _, deletes) =
+            LakeFixture.changeSet(events, pmod(col("event_id"), lit(3)) === 0)
+          val m = sink.mergeInto(s, lake, updates, "event_id", deletes,
             fenceEpoch = Some(epoch))
           require(m.commitId == 1L, s"merge expected commit 1, got ${m.commitId}")
         })
@@ -1204,11 +1060,7 @@ object FormatQueries {
           .withColumn("event_type", lit("backfill")),
         writerId = "backfill", dedupKey = Some("bf1"))
       require(bfId == 3L, s"OCC backfill expected commit 3, got $bfId")
-      sink.readLake(s, lake)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(sink.readLake(s, lake), col("event_date"), col("event_type"))
     }
   }
 

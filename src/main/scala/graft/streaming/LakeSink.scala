@@ -2011,7 +2011,7 @@ object LakeSink {
   }
 
   /** Max committed id in the lake's ledger, -1 when none (or no ledger). */
-  private def maxCommittedId(fs: FileSystem, root: Path): Long =
+  private[graft] def maxCommittedId(fs: FileSystem, root: Path): Long =
     ledgerIds(fs, root).lastOption.getOrElse(-1L)
 
   /** Batch append with a LAKE-ALLOCATED commit id (`max committed + 1`) —

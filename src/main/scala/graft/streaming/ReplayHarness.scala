@@ -131,7 +131,7 @@ object ReplayHarness {
     * driver sorts before hashing), so per-batch file count is not
     * observable in any result. `enrich` maps each batch before the write.
     */
-  private def startBatchDirSink(stream: DataFrame, outputMode: String, ckpt: Path,
+  private[graft] def startBatchDirSink(stream: DataFrame, outputMode: String, ckpt: Path,
       outDir: Path, enrich: (DataFrame, Long) => DataFrame = (b, _) => b): StreamingQuery =
     stream.writeStream
       .outputMode(outputMode)
@@ -147,7 +147,7 @@ object ReplayHarness {
     * lazily with `recursiveFileLookup` (the dirs are not key=value
     * partitions) — or an empty frame when no batch landed.
     */
-  private def readBatchDirs(spark: SparkSession, outDir: Path, schema: StructType): DataFrame =
+  private[graft] def readBatchDirs(spark: SparkSession, outDir: Path, schema: StructType): DataFrame =
     if (Files.exists(outDir))
       spark.read.schema(schema).option("recursiveFileLookup", "true")
         .parquet(outDir.toString)
@@ -341,8 +341,8 @@ object ReplayHarness {
     * read-back uses phase 2's schema: phase-1 batch files lack the new
     * columns and surface them as null — exactly the "old emissions
     * predate the upgrade" shape a production lake would show.
-    */
-  /** `transform1 == transform2` degenerates to a pure deterministic-restart
+    *
+    * `transform1 == transform2` degenerates to a pure deterministic-restart
     * certification (no schema change): the second instance must resume
     * whatever operator state the first checkpointed — window partial sums,
     * join buffers, dedup sets — which is how st27/st28 extend st10's
@@ -473,8 +473,8 @@ object ReplayHarness {
     * alive per run and accumulate across a long session (st36 pins its
     * census for the same reason). Callers therefore pass a row-bounded
     * `finish` (a census) at verification scale.
-    */
-  /** With `crashSinkAt = Some((batchId, point))`, the sink's fault injector
+    *
+    * With `crashSinkAt = Some((batchId, point))`, the sink's fault injector
     * throws ONCE at that exact instant of the staged-commit protocol
     * ([[LakeSink.datePartitioned]]'s `faultInjector` points — "staged",
     * "committed:<leaf>", "pre-marker"), killing the first query run
@@ -496,11 +496,7 @@ object ReplayHarness {
     pinnedScratch(spark, "graft_lake_") { base =>
       val lakeDir = base.resolve("lake").toString
       val crash = new CrashScenario("lake", crashSinkAt)
-      // small target size so the mid-stream sweeps really rewrite leaves at
-      // fixture scale; production would keep the 128 MiB default
-      val sink = LakeSink.datePartitioned(lakeDir, tsCol = "ts",
-        compactEvery = compactEvery, targetFileBytes = 512L << 10,
-        minFilesToCompact = 2, faultInjector = crash.inject)
+      val sink = LakeFixture.fixtureSink(lakeDir, compactEvery, crash.inject)
       isolated(spark) { s =>
         crash.run(s, base, Tables.load(s, sfDir, "events"), chunks, phase1Chunks,
           transform)(sink)
@@ -535,10 +531,8 @@ object ReplayHarness {
     pinnedScratch(spark, "graft_fanout_") { base =>
       val lakeA = base.resolve("lake_raw").toString
       val lakeB = base.resolve("lake_derived").toString
-      val sinkA = LakeSink.datePartitioned(lakeA, tsCol = "ts",
-        compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      val sinkB = LakeSink.datePartitioned(lakeB, tsCol = "ts",
-        compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+      val sinkA = LakeFixture.fixtureSink(lakeA, 3L)
+      val sinkB = LakeFixture.fixtureSink(lakeB, 3L)
       // recovery of the between-sinks crash: A's ledger skips the batch, B
       // commits it; the dropped commit record at the phase boundary (st32's
       // engine-crash window) must then be a skip in BOTH ledgers
@@ -649,6 +643,23 @@ object ReplayHarness {
     }
   }
 
+  /** Shared CDC-source lay-down for the change-feed consumers (st47,
+    * st48): three appends (commits 0-2: the `id % 4 < 3` quarters) and one
+    * RECORDED merge (commit 3: [[LakeFixture.changeSet]] scoped to the
+    * appended rows). Later commits differ per consumer and are appended by
+    * the caller.
+    */
+  private def layDownCdcSource(
+      spark: SparkSession, events: DataFrame, src: String): Unit = {
+    LakeFixture.layDown(spark, src, events, 4, 0 until 3)
+    val (updates, inserts, deletes) =
+      LakeFixture.changeSet(events, pmod(col("event_id"), lit(4)) < 3)
+    val merged = LakeSink.mergeInto(spark, src, updates.unionByName(inserts),
+      "event_id", deletes, targetFileBytes = LakeFixture.TargetFileBytes,
+      recordChanges = true)
+    require(merged.commitId == 3L, s"fixture drift: merge landed at ${merged.commitId}")
+  }
+
   /** st47's harness: a REPLICA table maintained purely from the source
     * lake's change feed — the cross-table CDC pipeline Delta runs with
     * CDF + MERGE, here composed entirely from LakeSink verbs:
@@ -674,36 +685,6 @@ object ReplayHarness {
     * state: a dropped delete, a pre-image applied as post, a double-
     * applied range, or a leaked `_op` column each shift a census cell.
     */
-  /** Shared CDC-source lay-down for the change-feed consumers (st47,
-    * st48): three appends (commits 0-2: the `id % 4 < 3` quarters) and one
-    * RECORDED merge (commit 3: `id % 10 == 7` updated in place,
-    * `id % 10 == 3` deleted, a `+10M`-shifted copy of every `id % 10 == 2`
-    * row inserted). Later commits differ per consumer and are appended by
-    * the caller.
-    */
-  private def layDownCdcSource(
-      spark: SparkSession, events: DataFrame, src: String): Unit = {
-    val sink = LakeSink
-    (0 until 3).foreach { i =>
-      sink.appendBatch(spark, src,
-        events.filter(pmod(col("event_id"), lit(4)) === i),
-        commitId = Some(i.toLong))
-    }
-    val present = pmod(col("event_id"), lit(4)) < 3
-    val upserts = events.filter(present && pmod(col("event_id"), lit(10)) === 7)
-      .withColumn("value", col("value") + 1000.0)
-      .withColumn("event_type", lit("updated"))
-      .unionByName(events.filter(pmod(col("event_id"), lit(10)) === 2)
-        .withColumn("event_id", col("event_id") + 10000000L)
-        .withColumn("value", col("value") * 2.0)
-        .withColumn("event_type", lit("inserted")))
-    val deletes = events.filter(present && pmod(col("event_id"), lit(10)) === 3)
-      .select("event_id", "ts")
-    val merged = sink.mergeInto(spark, src, upserts, "event_id", deletes,
-      targetFileBytes = 512L << 10, recordChanges = true)
-    require(merged.commitId == 3L, s"fixture drift: merge landed at ${merged.commitId}")
-  }
-
   def replayCdcApply(
       spark: SparkSession,
       sfDir: String,
@@ -734,7 +715,7 @@ object ReplayHarness {
           sink.appendBatch(spark, dst, ups, commitId = Some(0L))
         } else {
           sink.mergeInto(spark, dst, ups, "event_id", dels,
-            targetFileBytes = 512L << 10)
+            targetFileBytes = LakeFixture.TargetFileBytes)
         }
       }
       applyRange(-1L, 2L) // bootstrap: the three appends
@@ -920,7 +901,7 @@ object ReplayHarness {
           val ups = closeOuts.unionByName(newVers)
           sink.mergeInto(spark, dim, ups, "skey",
             deletes = ups.filter(lit(false)).select("skey", "ts"),
-            targetFileBytes = 512L << 10)
+            targetFileBytes = LakeFixture.TargetFileBytes)
         }
       }
 
@@ -972,10 +953,7 @@ object ReplayHarness {
       val dataCols = events.columns.toSeq.map(col)
 
       // source: three good appends
-      (0 until 3).foreach { i =>
-        sink.appendBatch(spark, src,
-          events.filter(pmod(col("event_id"), lit(4)) === i), commitId = Some(i.toLong))
-      }
+      LakeFixture.layDown(spark, src, events, 4, 0 until 3)
       // replica v1 bootstraps, then dutifully propagates the BAD deploy
       sink.appendBatch(spark, replica(1),
         sink.tailCommits(spark, src, -1L, 2L).select(dataCols: _*),
@@ -1222,9 +1200,8 @@ object ReplayHarness {
         // the tail attaches. Live mode: lay down FRAGMENTED and let the
         // between-drain sweep rewrite leaves the tail has already consumed.
         (0 until segmentChunks).foreach(publishChunk(0, _))
-        runBronze(LakeSink.datePartitioned(bronzeDir, tsCol = "ts",
-          compactEvery = if (liveCompaction) 0L else segmentChunks.toLong,
-          targetFileBytes = 512L << 10, minFilesToCompact = 2))
+        runBronze(LakeFixture.fixtureSink(bronzeDir,
+          compactEvery = if (liveCompaction) 0L else segmentChunks.toLong))
         val bronzeReplayed = dropLastCommitRecord(ckptB)
         System.err.println(s"[b2g] bronze: dropped commit $bronzeReplayed; " +
           "segment-2 run must recover via the ledger")
@@ -1233,8 +1210,7 @@ object ReplayHarness {
         stampBronzeByDate()
         // the tail re-discovers event_date from the Hive leaves (st36's shape)
         val bronzeReadSchema = bronzeSchema.add("event_date", DateType)
-        val silverSink = LakeSink.datePartitioned(silverDir, tsCol = "ts",
-          compactEvery = 3L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
+        val silverSink = LakeFixture.fixtureSink(silverDir, 3L)
         def runSilver(): Unit = {
           val in = s.readStream.schema(bronzeReadSchema)
             .option("maxFilesPerTrigger", "5")
@@ -1264,7 +1240,7 @@ object ReplayHarness {
         // re-delivers the whole leaf; the hardened silver hop must shed it
         def sweepBronze(): Unit = {
           val done = LakeSink.compactPartitions(s, bronzeDir,
-            targetFileBytes = 512L << 10, minFiles = 2)
+            targetFileBytes = LakeFixture.TargetFileBytes, minFiles = 2)
           System.err.println(s"[b2g] live-compacted ${done.size} tailed bronze leaves")
           stampBronzeByDate() // rewrites carry fresh mod times; restore date order
         }
@@ -1442,11 +1418,8 @@ object ReplayHarness {
       }
       // gold census under the union schema: phase-1 batch files lack
       // `channel` and null-fill — surfaced as the 'legacy' bucket
-      readBatchDirs(spark, outDir, schema2)
-        .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      LakeFixture.census(readBatchDirs(spark, outDir, schema2),
+        coalesce(col("channel"), lit("legacy")).as("channel"), col("event_type"))
     }
   }
 
@@ -1491,11 +1464,7 @@ object ReplayHarness {
 
       // bronze: batches 0..5 through the production sink, one sweep at the
       // snapshot horizon (compactEvery=4) — leaves then hold gc3 + gb4 + gb5
-      val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
-        targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      (0 until 6).foreach { i =>
-        sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-      }
+      LakeFixture.layDown(events, 8, 0 until 6)(LakeFixture.fixtureSink(lakeDir, 4L))
 
       // BOOTSTRAP: batch-load the snapshot once; this is the whole history
       // scan a tail-from-zero would otherwise re-stream
@@ -1519,21 +1488,17 @@ object ReplayHarness {
         s"tail drained in a single micro-batch ($replayedId) — the replay probe needs a longer tail")
       // two more commits land before the restart (a fresh sink generation;
       // no sweep — live-rewrite re-delivery is st40's certified concern)
-      val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
-      (6 until 8).foreach { i =>
-        sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-      }
+      LakeFixture.layDown(events, 8, 6 until 8)(
+        LakeSink.datePartitioned(lakeDir, compactEvery = 0L))
       System.err.println(s"[snaptail] dropped commit $replayedId; restarting the " +
         "tail across the replay + two new commits")
       drain()
 
-      spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
+      LakeFixture.census(spark.read.parquet(snapDir).withColumn("phase", lit("snapshot"))
         .unionByName(readBatchDirs(spark, tailOut,
             StructType(schema.filter(f => f.name != "ts" && f.name != "user_id")))
-          .withColumn("phase", lit("tail")))
-        .groupBy(col("event_date"), col("event_type"), col("phase"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+          .withColumn("phase", lit("tail"))),
+        col("event_date"), col("event_type"), col("phase"))
     }
   }
 
@@ -1571,11 +1536,7 @@ object ReplayHarness {
       val hwPath = base.resolve("hw")
       Files.createDirectories(silver)
 
-      val sink = LakeSink.datePartitioned(lakeDir, compactEvery = 4L,
-        targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      (0 until 6).foreach { i =>
-        sink(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-      }
+      LakeFixture.layDown(events, 8, 0 until 6)(LakeFixture.fixtureSink(lakeDir, 4L))
 
       // bootstrap: snapshot + high-water mark
       LakeSink.readAsOf(spark, lakeDir, 3L)
@@ -1584,17 +1545,12 @@ object ReplayHarness {
       def writeHw(v: Long): Unit = { Files.writeString(hwPath, v.toString); () }
       def readHw(): Long = Files.readString(hwPath).trim.toLong
       writeHw(3L)
-      def maxMarker(): Long = {
-        val l = Files.list(base.resolve("lake").resolve("_graft_commits"))
-        try l.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-          .foldLeft(-1L)(math.max)
-        finally l.close()
-      }
+      val lakeRoot = new org.apache.hadoop.fs.Path(lakeDir)
+      val lakeFs = lakeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def rangeCols(df: DataFrame): DataFrame =
         df.select("event_id", "event_date", "event_type", "value")
       def consume(): (Long, Long) = {
-        val from = readHw(); val to = maxMarker()
+        val from = readHw(); val to = LakeSink.maxCommittedId(lakeFs, lakeRoot)
         if (to > from) {
           rangeCols(LakeSink.tailCommits(spark, lakeDir, from, to))
             .write.mode("overwrite")
@@ -1616,7 +1572,7 @@ object ReplayHarness {
           .select("event_id").collect().map(_.getLong(0)).toSet
       val preSweep = rangeIds(3L, 5L)
       val epoch = LakeSink.claimWriterEpoch(spark, lakeDir)
-      val swept = LakeSink.compactPartitions(spark, lakeDir, 512L << 10,
+      val swept = LakeSink.compactPartitions(spark, lakeDir, LakeFixture.TargetFileBytes,
         minFiles = 2, fenceEpoch = Some(epoch))
       require(swept.nonEmpty, "immunity probe vacuous: the sweep rewrote nothing")
       val postSweep = rangeIds(3L, 5L)
@@ -1625,22 +1581,18 @@ object ReplayHarness {
           s"${(postSweep -- preSweep).size} gained")
 
       // a successor generation appends two more commits; consume them
-      val sink2 = LakeSink.datePartitioned(lakeDir, compactEvery = 0L)
-      (6 until 8).foreach { i =>
-        sink2(events.filter(pmod(col("event_id"), lit(8)) === i), i.toLong)
-      }
+      LakeFixture.layDown(events, 8, 6 until 8)(
+        LakeSink.datePartitioned(lakeDir, compactEvery = 0L))
       require(consume() == ((5L, 7L)), "post-sweep appends not tailed")
 
-      spark.read
+      LakeFixture.census(spark.read
         .parquet(silver.resolve("snapshot").toString)
         .withColumn("phase", lit("snapshot"))
         .unionByName(spark.read
           .parquet(silver.resolve("range_3_5").toString,
             silver.resolve("range_5_7").toString)
-          .withColumn("phase", lit("tail")))
-        .groupBy(col("event_date"), col("event_type"), col("phase"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+          .withColumn("phase", lit("tail"))),
+        col("event_date"), col("event_type"), col("phase"))
     }
   }
 
@@ -1792,14 +1744,9 @@ object ReplayHarness {
           require(Option(committedIds.get(1L)).map(_.longValue).contains(1L),
             s"replayed batch 1 landed at ${committedIds.get(1L)} — the dedupKey " +
               "did not short-circuit")
-          val inPhase1 = pmod(col("event_id"), lit(chunks)) < phase1Chunks
-          val m = LakeSink.mergeInto(s, lakeDir,
-            events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 7)
-              .withColumn("event_type", lit("updated"))
-              .withColumn("value", col("value") + 1000.0),
-            "event_id",
-            events.filter(inPhase1 && pmod(col("event_id"), lit(10)) === 3)
-              .select("event_id", "ts"))
+          val (updates, _, deletes) = LakeFixture.changeSet(events,
+            pmod(col("event_id"), lit(chunks)) < phase1Chunks)
+          val m = LakeSink.mergeInto(s, lakeDir, updates, "event_id", deletes)
           require(m.commitId == phase1Chunks.toLong,
             s"merge expected commit $phase1Chunks, got ${m.commitId}")
         }
@@ -1814,11 +1761,8 @@ object ReplayHarness {
           .contains(chunks.toLong),
         s"tail did not resume past the merge: last batch landed at " +
           s"${committedIds.get(chunks - 1L)}, expected $chunks")
-      LakeSink.readLake(spark, lakeDir)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      LakeFixture.census(LakeSink.readLake(spark, lakeDir),
+        col("event_date"), col("event_type"))
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.core.Q
+import graft.streaming.LakeFixture.census
 import graft.streaming.ReplayHarness.{replayEvents, SentinelType}
 
 /** Oracle-checked STREAMING queries (SURVEY §2.2 stateful rows): each runs a
@@ -992,14 +993,11 @@ object StreamingQueries {
       ev.union(ev.withColumn("ts",
         timestamp_millis(unix_millis(col("ts")) + shift)))
     }
-    ReplayHarness.replayEventsTwoPhase(s, dir, outputMode = "append",
+    census(ReplayHarness.replayEventsTwoPhase(s, dir, outputMode = "append",
       prep = doubleSpan)(
       _.dropDuplicates("event_id"))(
-      _.dropDuplicates("event_id"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
+      _.dropDuplicates("event_id")),
+      col("event_type"))
   }
 
   /** st30: SESSION-WINDOW state across a deterministic restart — the last
@@ -1137,10 +1135,7 @@ object StreamingQueries {
     // the census rides in as `finish` so the harness can pin its k rows and
     // reclaim the RAM-backed lake tree before returning (st36's discipline)
     ReplayHarness.replayEventsToLake(s, dir,
-      finish = _.groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum")))(
+      finish = census(_, col("event_date"), col("event_type")))(
       _.select("event_id", "ts", "user_id", "event_type", "value"))
   }
 
@@ -1181,7 +1176,7 @@ object StreamingQueries {
       |WHERE wm.wm_ms IS NOT NULL AND epoch_ms(t.ts) < wm.wm_ms
       |GROUP BY 1""".stripMargin) { (s, dir) =>
     val ledger = ReplayHarness.scratchDir("graft_wmledger_")
-    val out = replayEvents(s, dir, "append", chunks = 3,
+    val out = census(replayEvents(s, dir, "append", chunks = 3,
       sentinelTypes = Seq(SentinelType),
       chunkBy = Some((minMs, maxMs) =>
         when(unix_millis(col("ts")) >= lit((minMs + maxMs) / 2), lit(1))
@@ -1189,11 +1184,8 @@ object StreamingQueries {
           .otherwise(lit(0))),
       sinkEnrich = Some(graft.streaming.LateAudit.quarantine(ledger.toString)))(
       identity)
-      .filter(col("event_type") =!= SentinelType)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        round(sum(col("value")), 2).as("total_value"),
-        sum(col("event_id")).as("id_checksum"))
+      .filter(col("event_type") =!= SentinelType),
+      col("event_type"))
     // the returned frame reads only the harness's sunk batches; the
     // watermark ledger is dead weight once the replay has drained
     ReplayHarness.cleanupScratch(ledger)
@@ -1402,37 +1394,19 @@ object StreamingQueries {
       // batches (every batch touches every date leaf) with a compaction
       // sweep after batches 1 and 3, so the streamed files are the
       // compacted rewrites, not the original appends
-      val sink = graft.streaming.LakeSink.datePartitioned(lakeDir,
-        compactEvery = 2L, targetFileBytes = 512L << 10, minFilesToCompact = 2)
-      (0 until 4).foreach { i =>
-        sink(events.filter(pmod(col("event_id"), lit(4)) === i), i.toLong)
-      }
+      LakeFixture.layDown(events, 4, 0 until 4)(LakeFixture.fixtureSink(lakeDir, 2L))
       // stream-read: schema = data columns + the partition column; the
       // source discovers event_date from the directory names
-      val schema = org.apache.spark.sql.types.StructType(events.schema.fields :+
-        org.apache.spark.sql.types.StructField("event_date",
-          org.apache.spark.sql.types.DateType))
+      val schema = events.schema.add("event_date", org.apache.spark.sql.types.DateType)
       val in = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "7").parquet(lakeDir)
-      val q = in.select("event_id", "event_date", "event_type", "value")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // batch's own partitioning — no coalesce(1): see replayEvents' sink
-          batch.write.mode("overwrite")
-            .parquet(outDir.resolve(s"b$batchId").toString)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .select("event_id", "event_date", "event_type", "value")
+      ReplayHarness.startBatchDirSink(in, "append", base.resolve("ckpt"), outDir)
+        .awaitTermination()
       // pin the k-row census (dates × types) so the RAM-backed lake + out +
       // ckpt trees are reclaimed before returning
-      s.read.option("recursiveFileLookup", "true")
-        .parquet(outDir.toString)
-        .groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
+      census(ReplayHarness.readBatchDirs(s, outDir, in.schema),
+        col("event_date"), col("event_type"))
     }
   }
 
@@ -1459,31 +1433,11 @@ object StreamingQueries {
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     ReplayHarness.replayEventsToLake(s, dir, chunks = 4, phase1Chunks = 2,
       compactEvery = 2L,
-      finish = _.groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum")),
+      finish = census(_, col("event_date"), col("event_type")),
       crashSinkAt = Some((1L, "pre-marker")))(
       _.select("event_id", "ts", "user_id", "event_type", "value"))
   }
 
-  /** st37: BRONZE → SILVER → GOLD — st32 (lake sink) and st36 (lake source)
-    * composed into the reference's actual end-to-end topology
-    * (Kafka → stateful transform → Cassandra, spark-streaming.py:150–221)
-    * with a kill+restart on EACH hop: events → production lake sink
-    * (staged commit + ledger + compaction, engine commit record dropped
-    * mid-lay-down) → a second checkpointed stream tails the bronze lake
-    * incrementally and runs a watermarked 6h-window × type aggregation →
-    * second lake sink (its own commit record dropped and replayed) → batch
-    * gold census. The oracle reproduces gold straight from the raw fixture:
-    * a window double-flushed across the silver restart, a bronze batch
-    * replayed into duplicate rows, a late-dropped row, or a lost window
-    * each shift (n_windows, n_events, total_value, id_checksum) for some
-    * (event_date, event_type) cell. See
-    * [[ReplayHarness.replayBronzeSilverGold]] for the two production
-    * disciplines (date-ordered tail + compact-before-tail) that make the
-    * composite exact.
-    */
   /** st40: st37 with the compact-before-tail restriction LIFTED — the
     * bronze leaves the silver tail has ALREADY consumed are compacted
     * in place between drains (twice: once before segment 2, once right
@@ -1601,15 +1555,9 @@ object StreamingQueries {
       |SELECT 'raw' AS sink, event_date, n, total_value, id_checksum FROM raw
       |UNION ALL
       |SELECT 'derived' AS sink, event_date, n, total_value, id_checksum FROM der""".stripMargin) { (s, dir) =>
-    def census(df: org.apache.spark.sql.DataFrame, tag: String) =
-      df.groupBy(col("event_date"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum"))
-        .select(lit(tag).as("sink"), col("event_date"), col("n"),
-          col("total_value"), col("id_checksum"))
     ReplayHarness.replayEventsFanOut(s, dir,
-      finish = (raw, derived) => census(raw, "raw").unionByName(census(derived, "derived")))
+      finish = (raw, derived) => census(raw, lit("raw").as("sink"), col("event_date"))
+        .unionByName(census(derived, lit("derived").as("sink"), col("event_date"))))
   }
 
   /** st47: CDC-APPLY REPLICATION — a replica table maintained PURELY from
@@ -1642,10 +1590,7 @@ object StreamingQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM merged GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     ReplayHarness.replayCdcApply(s, dir,
-      finish = _.groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum")))
+      finish = census(_, col("event_date"), col("event_type")))
   }
 
   /** st48: INCREMENTAL VIEW MAINTENANCE from the change feed — the other
@@ -1731,12 +1676,26 @@ object StreamingQueries {
       |  round(sum(value), 2) AS total_value, sum(event_id)::BIGINT AS id_checksum
       |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
     ReplayHarness.replayRestoreResync(s, dir,
-      finish = _.groupBy(col("event_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"),
-          sum(col("event_id")).as("id_checksum")))
+      finish = census(_, col("event_date"), col("event_type")))
   }
 
+  /** st37: BRONZE → SILVER → GOLD — st32 (lake sink) and st36 (lake source)
+    * composed into the reference's actual end-to-end topology
+    * (Kafka → stateful transform → Cassandra, spark-streaming.py:150–221)
+    * with a kill+restart on EACH hop: events → production lake sink
+    * (staged commit + ledger + compaction, engine commit record dropped
+    * mid-lay-down) → a second checkpointed stream tails the bronze lake
+    * incrementally and runs a watermarked 6h-window × type aggregation →
+    * second lake sink (its own commit record dropped and replayed) → batch
+    * gold census. The oracle reproduces gold straight from the raw fixture:
+    * a window double-flushed across the silver restart, a bronze batch
+    * replayed into duplicate rows, a late-dropped row, or a lost window
+    * each shift (n_windows, n_events, total_value, id_checksum) for some
+    * (event_date, event_type) cell. See
+    * [[ReplayHarness.replayBronzeSilverGold]] for the two production
+    * disciplines (date-ordered tail + compact-before-tail) that make the
+    * composite exact.
+    */
   val st37 = Q("st37_stream_bronze_silver_gold",
     """WITH w AS (
       |  SELECT time_bucket(INTERVAL 6 HOUR, ts) AS ws, event_type,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.LakeSink
+import graft.streaming.{LakeFixture, LakeSink}
 import graft.streaming.StatefulOps.Event
 
 /** [[LakeSink]]: streaming append into a date-partitioned lake with
@@ -941,5 +941,27 @@ class LakeSinkSpec extends AnyFunSuite {
       "lake ids are not exactly the fixture ids")
     assert(lake.filter(col("event_date") =!= to_date(col("ts"))).isEmpty,
       "partition value disagrees with to_date(ts)")
+
+    // value level: the st32 census, passed as `finish` and pinned by the
+    // harness, equals the same census of the raw fixture per
+    // (event_date, event_type) — counts and id checksums exactly, value
+    // totals to the cent
+    def cells(census: org.apache.spark.sql.DataFrame) =
+      census.withColumn("event_date", col("event_date").cast("string")).collect()
+        .map(r => (r.getAs[String]("event_date"), r.getAs[String]("event_type")) ->
+          ((r.getAs[Long]("n"), r.getAs[Long]("id_checksum")), r.getAs[Double]("total_value")))
+        .toMap
+    val got = cells(graft.streaming.ReplayHarness.replayEventsToLake(
+      spark, GraftTestSpark.sf, chunks = 4, phase1Chunks = 2,
+      finish = LakeFixture.census(_, col("event_date"), col("event_type")))(
+      _.select("event_id", "ts", "user_id", "event_type", "value")))
+    val want = cells(LakeFixture.census(
+      events.withColumn("event_date", to_date(col("ts"))),
+      col("event_date"), col("event_type")))
+    assert(got.keySet === want.keySet, "census cells differ from the fixture's")
+    want.foreach { case (cell, ((n, checksum), total)) =>
+      assert(got(cell)._1 === ((n, checksum)), s"count or id checksum drifted in $cell")
+      assert(math.abs(got(cell)._2 - total) <= 0.01, s"value total drifted in $cell")
+    }
   }
 }
